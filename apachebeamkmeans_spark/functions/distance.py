@@ -7,7 +7,9 @@ norms ``point_distance_with_zero`` (SparKMeansGroupByPlusPlusInitMax.java:80)
 and ``point_abs_sum`` (L1, ...InitMaxFarthestManhattan.java:79-80).
 
 Here every distance is a pure Spark column expression — no UDFs, so
-everything stays JVM-side. Two families:
+everything stays JVM-side. Two families, plus SQL-text builders
+(`sql_*`) that emit the higher-order form against literal centers as
+one parsed string:
 
 - **higher-order** (`F.zip_with`/`F.aggregate`): works for any runtime
   array length; used by the general library surface.
@@ -21,6 +23,8 @@ everything stays JVM-side. Two families:
 
 from __future__ import annotations
 
+import math
+import numbers
 from functools import reduce
 
 from pyspark.sql import Column
@@ -99,6 +103,42 @@ def dot(a: Column, b: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+# --------------------------------------------------------- SQL text family
+# One `F.expr` call parses a whole expression, where the Column API pays
+# a py4j round trip per node. A parsed complex-type literal is kept in
+# the codegen reference array, so the generated code is the same for
+# any literal values and compiles once.
+
+
+def sql_array_literal(values) -> str:
+    """`values` — a number, or a (nested) sequence of numbers — as a SQL
+    DOUBLE literal: [[1, 2], [3, 4]] → `array(array(1.0D, 2.0D),
+    array(3.0D, 4.0D))`. `repr` round-trips, so Spark parses the very
+    same doubles. Raises ValueError on NaN or ±inf, which have no SQL
+    literal form."""
+    if isinstance(values, numbers.Real):
+        x = float(values)
+        if not math.isfinite(x):
+            raise ValueError(f"non-finite value {x!r} in a SQL double literal")
+        return f"{x!r}D"
+    return "array(" + ", ".join(sql_array_literal(v) for v in values) + ")"
+
+
+def sql_pow_sum(a: str, b: str, p: float) -> str:
+    """Σ_j |a[j] - b[j]|^p between two ARRAY<DOUBLE> SQL expressions as
+    one lambda fold: the Minkowski-p distance without its root, so the
+    squared distance for p=2. The fold seeds with 0.0D (0.0 + t₀ == t₀)
+    and adds left to right, giving the same doubles as the unrolled
+    family and the HOF family."""
+    if p == 2:
+        term = "(x - y) * (x - y)"
+    elif p == 1:
+        term = "abs(x - y)"
+    else:
+        term = f"pow(abs(x - y), {float(p)!r}D)"
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), 0.0D, (acc, v) -> acc + v)"
 
 
 # ----------------------------------------------------------- unrolled family

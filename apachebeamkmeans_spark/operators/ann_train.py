@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 
@@ -297,17 +298,10 @@ def _pq_train_loop(ex, codebooks, m, ksub, dsub, n_iters, aggs):
         # identical across iterations and compiles once; the struct
         # argmin is the same first-minimum tie-break as
         # array_position(dists, array_min(dists)).
-        cb_sql = "array(" + ", ".join(
-            "array(" + ", ".join(
-                "array(" + ", ".join(f"{float(x)!r}D" for x in cent) + ")"
-                for cent in book
-            ) + ")"
-            for book in codebooks
-        ) + ")"
         code = F.expr(
-            f"array_min(transform(element_at({cb_sql}, s + 1), (cent, i) -> "
-            "struct(aggregate(zip_with(sub, cent, (x, y) -> (x - y) * (x - y)),"
-            " 0.0D, (a, v) -> a + v) AS dist, CAST(i AS INT) AS idx)))"
+            f"array_min(transform(element_at({D.sql_array_literal(codebooks)}, s + 1),"
+            f" (cent, i) -> struct({D.sql_pow_sum('sub', 'cent', 2)} AS dist,"
+            " CAST(i AS INT) AS idx)))"
         )["idx"]
         rows = ex.withColumn("code", code).groupBy("s", "code").agg(*aggs).collect()
         by_key = {(r["s"], r["code"]): [r[f"c{j}"] for j in range(dsub)] for r in rows}

@@ -22,6 +22,11 @@ Scale posture — two reference anti-patterns are replaced:
   one-pass weighted sampling (P(win) ∝ w_i), needs only an
   orderBy+limit(1) TakeOrdered, and is deterministic cross-engine.
 
+Every draw after the first seed — roulette and farthest point alike —
+measures D(x) with `lloyd.min_dist_col`, the shared parsed-literal
+center expression: one py4j call to build, and one codegen compile
+for all draws, fits and seeds (lloyd module docstring).
+
 Every strategy returns a k×dim Python list — O(k·dim) driver data.
 """
 
@@ -69,7 +74,7 @@ def _roulette_next(df: DataFrame, centers: list[list[float]], p: float, weight: 
     docstring). weight='d' reproduces the reference's D-weighting
     (SURVEY.md §8.4); 'd2' is classic k-means++ D²."""
     feats = F.col(features_col)
-    d = min_dist_col(feats, centers, p)  # squared for p=2 — exactly D² weighting
+    d = min_dist_col(centers, p, features_col)  # squared for p=2 — exactly D² weighting
     if p == 2 and weight == "d":
         w = F.sqrt(d)
     elif p != 2 and weight == "d2":

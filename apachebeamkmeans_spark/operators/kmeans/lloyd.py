@@ -5,9 +5,9 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
 - assign = broadcast nested-loop argmin over the current centers
   (`mapToPair` closing over the broadcast list with an inner for-loop,
   SparKMeansGroupBy.java:77-98). Here the centers are a *plan-time
-  literal* (k×dim doubles): each point evaluates k unrolled distance
-  expressions and takes the argmin — zero join, zero shuffle, fully
-  whole-stage-codegen'd. At 100 TB this is a pure map stage.
+  literal* (k×dim doubles) and each point takes the argmin of its k
+  distances — zero join, zero shuffle. At 100 TB this is a pure map
+  stage.
 - recenter = per-cluster element-wise mean. The reference shuffles every
   point string through `groupByKey` with no map-side combine
   (SparKMeansGroupBy.java:102-114). Here: one `groupBy(center_id)` with
@@ -16,6 +16,18 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
 - convergence = max movement between *index-matched* old/new centers
   (textbook; the reference's any-match + index bug, SURVEY.md §8.1-8.2,
   is deliberately not reproduced).
+
+Every per-round center expression — seeding draws, the fit loop's
+assignment, farthest-point reseeds, model assignment and SSE — comes
+from one builder, `_nearest_center`: ONE parsed SQL string holding the
+centers as a nested `array(array(…D), …)` literal and the Minkowski-p
+fold as a lambda. Building it costs one py4j call whatever k and dim,
+and the literal lands in the codegen reference array, so one compile
+serves every draw, iteration and seed. The one other form is
+`assign(mode="unrolled")`: k×dim explicit expressions, the structural
+twin of the generated oracle SQL for the single-step queries. Both
+give bit-identical results (same left-to-right sums, first-minimum
+ties).
 
 Centers live on the driver as a k×dim Python list (≤ a few KB) —
 the only data that ever crosses to the driver.
@@ -41,24 +53,19 @@ def _dist_col(features, center: list[float], p: float):
     return D.minkowski(features, D.lit_vec(center), p)
 
 
-def _hof_dist_fn(feats, p: float):
-    if p == 2:
-        return lambda c: F.aggregate(
-            F.zip_with(feats, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-    if p == 1:
-        return lambda c: F.aggregate(
-            F.zip_with(feats, c, lambda x, y: F.abs(x - y)),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-    pw = float(p)
-    return lambda c: (
-        F.aggregate(
-            F.zip_with(feats, c, lambda x, y: F.abs(x - y) ** pw),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-        ** (1.0 / pw)
+def _nearest_center(centers: list[list[float]], p: float,
+                    features_col: str = "features", root: bool = True):
+    """struct(dist, idx) of the nearest literal center (ties → lowest
+    idx) as ONE parsed SQL expression (see module docstring). `dist`
+    is squared for p=2 and plain for p=1; other p take the 1/p root
+    unless `root` is False — an argmin alone can skip the monotone
+    root."""
+    dist = D.sql_pow_sum(features_col, "c", p)
+    if root and p not in (1, 2):
+        dist = f"pow({dist}, {1.0 / float(p)!r}D)"
+    return F.expr(
+        f"array_min(transform({D.sql_array_literal(centers)}, (c, i) -> "
+        f"struct({dist} AS dist, CAST(i AS INT) AS idx)))"
     )
 
 
@@ -70,28 +77,23 @@ def assign(df: DataFrame, centers: list[list[float]], p: float = 2.0,
     J1 in SURVEY.md §2.3 — the reference's only "join", expressed as a
     narrow map over a plan-time center literal; zero join, zero shuffle.
 
-    Two physical forms with identical results (same left-to-right
-    summation order):
-    - `unrolled`: k×dim explicit expressions — maximal codegen, and the
-      structural twin of the generated oracle SQL (single-step queries).
-    - `hof`: one nested ARRAY<ARRAY<DOUBLE>> literal + transform/
-      zip_with — a compact plan whose generated code is identical
-      across changing center values, so the iterative Lloyd loop pays
-      no per-iteration codegen recompile (~4× faster per iteration).
+    Two physical forms with bit-identical results (same left-to-right
+    sums, first-minimum ties):
+    - `hof`: the shared parsed-literal expression (`_nearest_center`) —
+      one py4j call to build, and one codegen compile for any center
+      values. Every engine path uses it.
+    - `unrolled`: k×dim explicit expressions, the structural twin of
+      the generated oracle SQL; kept as the oracle-exact form behind
+      the single-step `kmeans_assign` query. Its generated code embeds
+      the center values, so each new set of centers compiles anew.
     """
-    feats = F.col(features_col)
     if mode == "hof":
-        dfn = _hof_dist_fn(feats, p)
-        best = F.array_min(
-            F.transform(
-                F.lit([list(map(float, c)) for c in centers]),
-                lambda c, i: F.struct(dfn(c).alias("dist"), i.cast("int").alias("idx")),
-            )
-        )
+        best = _nearest_center(centers, p, features_col)
         out = df.withColumn("center_id", best["idx"])
         if keep_dist:
             out = out.withColumn("dist", best["dist"])
         return out
+    feats = F.col(features_col)
     dists = F.array(*[_dist_col(feats, c, p) for c in centers])
     out = df.withColumn("__dists", dists).withColumn(
         "center_id",
@@ -126,16 +128,12 @@ def recenter_to_list(assigned: DataFrame, dim: int, k: int,
     return centers, sizes
 
 
-def min_dist_col(features, centers: list[list[float]], p: float = 2.0,
-                 mode: str = "unrolled"):
+def min_dist_col(centers: list[list[float]], p: float = 2.0,
+                 features_col: str = "features"):
     """min over current centers of distance(point, center) — seeding's
-    D(x) quantity (SparKMeansGroupByPlusPlus.java:82-96)."""
-    if mode == "hof":
-        dfn = _hof_dist_fn(features, p)
-        return F.array_min(
-            F.transform(F.lit([list(map(float, c)) for c in centers]), dfn)
-        )
-    return F.array_min(F.array(*[_dist_col(features, c, p) for c in centers]))
+    D(x) quantity (SparKMeansGroupByPlusPlus.java:82-96); squared for
+    p=2."""
+    return _nearest_center(centers, p, features_col)["dist"]
 
 
 def farthest_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
@@ -145,7 +143,7 @@ def farthest_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
     top-1 then driver merge), not a full sort."""
     row = (
         df.select(F.col("id"), F.col(features_col).alias("f"),
-                  min_dist_col(F.col(features_col), centers, p, mode="hof").alias("d"))
+                  min_dist_col(centers, p, features_col).alias("d"))
         .orderBy(F.desc("d"), F.asc("id"))
         .limit(1)
         .collect()[0]
@@ -174,27 +172,10 @@ def sse(assigned_with_dist: DataFrame) -> float:
 
 def sql_assign_expr(centers: list[list[float]], p: float,
                     features_col: str = "features"):
-    """Argmin center id as ONE parsed SQL expression (ties → lowest id).
-
-    Same result as `assign(mode='hof')` but built with a single
-    `F.expr` call instead of hundreds of py4j lambda round-trips —
-    the fit loop rebuilds this every iteration, and on a driver the
-    expression-construction cost is pure per-iteration overhead.
-    For argmin the Minkowski root is skipped (monotone transform)."""
-    c_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")" for c in centers
-    ) + ")"
-    if p == 2:
-        term = "(x - y) * (x - y)"
-    elif p == 1:
-        term = "abs(x - y)"
-    else:
-        term = f"pow(abs(x - y), {float(p)!r}D)"
-    return F.expr(
-        f"array_min(transform({c_sql}, (c, i) -> struct("
-        f"aggregate(zip_with({features_col}, c, (x, y) -> {term}), 0.0D,"
-        " (a, v) -> a + v) AS dist, CAST(i AS INT) AS idx)))"
-    )["idx"]
+    """Argmin center id (ties → lowest id) of the fit loop: the shared
+    parsed expression without the Minkowski root (monotone, so the
+    argmin is unchanged)."""
+    return _nearest_center(centers, p, features_col, root=False)["idx"]
 
 
 def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
@@ -204,17 +185,17 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
     """The dynamic driver loop (SURVEY.md §2.6 C5): assign → recenter →
     converge, centers re-literalized each iteration.
 
-    Because each iteration's plan is rebuilt from the cached base frame
-    + literal centers, there is no lineage growth — no checkpointing
-    needed (the reference accidentally achieved the same by collecting
-    every iteration).
+    Each iteration re-scans `df`, so the caller caches it (`KMeans.fit`
+    does). Because each iteration's plan is rebuilt from that base
+    frame + literal centers, there is no lineage growth — no
+    checkpointing needed (the reference accidentally achieved the same
+    by collecting every iteration).
 
     Loop physical strategy (~3× per-iteration speedup over the naive
     loop, measured at sf0.1):
-    - assign via `sql_assign_expr` — one parsed expression, and the
-      generated code is structurally identical across iterations
-      (complex-type literals land in the codegen reference array, not
-      the source), so whole-stage codegen compiles once;
+    - assign via `sql_assign_expr` — the shared parsed-literal
+      expression, so whole-stage codegen compiles once for the whole
+      loop;
     - recenter via MLlib `Summarizer.mean` over a vector column — a
       single partial-aggregating vector aggregate instead of `dim`
       scalar avgs, so plan analysis is O(1) in dimensionality. The
@@ -238,7 +219,9 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
 
     k = len(init_centers)
     centers = [list(c) for c in init_centers]
-    vpts = df.withColumn("__fvec", array_to_vector(features_col)).cache()
+    # derived per iteration from the caller's (cached) frame: a second
+    # cached copy would only double the fit's storage
+    vpts = df.withColumn("__fvec", array_to_vector(features_col))
     aggs = [
         Summarizer.mean(F.col("__fvec")).alias("mean"),
         F.count(F.lit(1)).alias("size"),
@@ -246,40 +229,36 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
     n_iter = 0
     from apachebeamkmeans_spark.session import driver_loop_conf
 
-    try:
-        # AQE off for the iteration loop: each iteration's k-row
-        # aggregate otherwise schedules as two jobs (see
-        # session.driver_loop_conf; r18)
-        with driver_loop_conf(df.sparkSession):
-            for _ in range(max_iter):
-                n_iter += 1
-                frame = vpts.withColumn(
-                    "center_id", sql_assign_expr(centers, p, features_col)
+    # AQE off for the iteration loop: each iteration's k-row
+    # aggregate otherwise schedules as two jobs (see
+    # session.driver_loop_conf; r18)
+    with driver_loop_conf(df.sparkSession):
+        for _ in range(max_iter):
+            n_iter += 1
+            frame = vpts.withColumn(
+                "center_id", sql_assign_expr(centers, p, features_col)
+            )
+            ag = aggs
+            if sse_log is not None:
+                frame = frame.withColumn(
+                    "__md", min_dist_col(centers, p, features_col)
                 )
-                ag = aggs
-                if sse_log is not None:
-                    frame = frame.withColumn(
-                        "__md",
-                        min_dist_col(F.col(features_col), centers, p, mode="hof"),
+                ag = aggs + [F.sum("__md").alias("__sse")]
+            rows = frame.groupBy("center_id").agg(*ag).collect()
+            if sse_log is not None:
+                sse_log.append(float(sum(r["__sse"] for r in rows)))
+            by_id = {r["center_id"]: list(r["mean"]) for r in rows}
+            new_centers: list[list[float] | None] = [by_id.get(i) for i in range(k)]
+            for i in range(k):
+                if new_centers[i] is None:
+                    new_centers[i] = farthest_point(
+                        df,
+                        [c for c in new_centers if c is not None] or centers,
+                        p,
+                        features_col,
                     )
-                    ag = aggs + [F.sum("__md").alias("__sse")]
-                rows = frame.groupBy("center_id").agg(*ag).collect()
-                if sse_log is not None:
-                    sse_log.append(float(sum(r["__sse"] for r in rows)))
-                by_id = {r["center_id"]: list(r["mean"]) for r in rows}
-                new_centers: list[list[float] | None] = [by_id.get(i) for i in range(k)]
-                for i in range(k):
-                    if new_centers[i] is None:
-                        new_centers[i] = farthest_point(
-                            df,
-                            [c for c in new_centers if c is not None] or centers,
-                            p,
-                            features_col,
-                        )
-                delta = movement(centers, new_centers, p)  # matched pairs, not any-match
-                centers = new_centers
-                if delta <= threshold:
-                    break
-    finally:
-        vpts.unpersist()
+            delta = movement(centers, new_centers, p)  # matched pairs, not any-match
+            centers = new_centers
+            if delta <= threshold:
+                break
     return centers, n_iter

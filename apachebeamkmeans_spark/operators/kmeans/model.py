@@ -16,9 +16,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 from apachebeamkmeans_spark.operators.kmeans.init import initial_centers
 from apachebeamkmeans_spark.operators.kmeans.params import KMeansParams
@@ -73,18 +75,9 @@ class KMeansModel:
         assigned = lloyd.assign(df, self.centers, p, features_col,
                                 keep_dist=(p == 2), mode="hof")
         if p != 2:
-            feats = F.col(features_col)
-            sq = F.element_at(
-                F.transform(
-                    F.lit([list(map(float, c)) for c in self.centers]),
-                    lambda c: F.aggregate(
-                        F.zip_with(feats, c, lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0), lambda a, v: a + v,
-                    ),
-                ),
-                F.col("center_id") + 1,
-            )
-            assigned = assigned.withColumn("dist", sq)
+            centers = D.sql_array_literal(self.centers)
+            assigned = assigned.withColumn("dist", F.expr(D.sql_pow_sum(
+                features_col, f"element_at({centers}, center_id + 1)", 2)))
         return lloyd.sse(assigned)
 
     def format_clusters(self, df: DataFrame, features_col: str = "features") -> DataFrame:
@@ -112,9 +105,19 @@ class KMeans:
     params: KMeansParams = field(default_factory=KMeansParams)
 
     def fit(self, df: DataFrame, features_col: str = "features") -> KMeansModel:
-        df = df.cache()  # C3: input reused every iteration
-        init = initial_centers(df, self.params, features_col)
-        centers, n_iter = lloyd.lloyd_fit(
-            df, init, self.params.p, self.params.threshold, self.params.max_iter, features_col
-        )
+        # C3: every seeding draw and iteration re-scans the input. Cache
+        # it for the fit unless the caller already has, and release only
+        # what this fit cached.
+        owned = df.storageLevel == StorageLevel.NONE
+        if owned:
+            df = df.cache()
+        try:
+            init = initial_centers(df, self.params, features_col)
+            centers, n_iter = lloyd.lloyd_fit(
+                df, init, self.params.p, self.params.threshold, self.params.max_iter,
+                features_col,
+            )
+        finally:
+            if owned:
+                df.unpersist()
         return KMeansModel(centers=centers, n_iter=n_iter, params=self.params)

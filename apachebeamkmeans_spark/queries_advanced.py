@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark import fixtures
 from apachebeamkmeans_spark import oraclegen as OG
+from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.rangejoin import trailing_range_join
 from apachebeamkmeans_spark.sources import io
 
@@ -139,10 +140,6 @@ DIM = fixtures.EMBEDDING_DIM
 CENTER = fixtures.fixed_centers()[0]
 
 
-def _center_sql_literal(center: list[float]) -> str:
-    return "array(" + ", ".join(f"{float(c)!r}D" for c in center) + ")"
-
-
 def q_sql_udf_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's scalars invoked from plain SQL text through the
     registered SQL-UDF surface (functions/sqludfs.py) — declarative
@@ -153,7 +150,7 @@ def q_sql_udf_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     io.read_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
         "embeddings_sqludf"
     )
-    c = _center_sql_literal(CENTER)
+    c = D.sql_array_literal(CENTER)
     return spark.sql(f"""
         SELECT vec_id,
                round(l1_norm(e), 6) AS l1,

@@ -201,7 +201,7 @@ def q_kmeans_gonzalez_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         centers = [list(first["f"])]
         for r in range(1, K):
             row = (
-                pts.select("id", f.alias("f"), lloyd.min_dist_col(f, centers, 2.0, mode="hof").alias("d"))
+                pts.select("id", f.alias("f"), lloyd.min_dist_col(centers, 2.0).alias("d"))
                 .orderBy(F.desc("d"), F.asc("id"))
                 .limit(1)
                 .collect()[0]
@@ -269,7 +269,7 @@ def q_kmeans_plusplus_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         chosen = [(0, first["id"])]
         centers = [list(first["f"])]
         for r in range(1, K):
-            dcol = lloyd.min_dist_col(f, centers, 2.0, mode="hof")  # squared L2 = D² weight
+            dcol = lloyd.min_dist_col(centers, 2.0)  # squared L2 = D² weight
             u = hash01(F.col("id"), f"{SEED}-{r}")
             t = F.when(dcol > 0, -F.log(u) / dcol).otherwise(F.lit(float("inf")))
             row = (
@@ -339,7 +339,7 @@ def q_kmeans_plusplus_seeds_dweight(spark: SparkSession, sf_dir: str) -> DataFra
         chosen = [(0, first["id"])]
         centers = [list(first["f"])]
         for r in range(1, K):
-            d = lloyd.min_dist_col(f, centers, 2.0, mode="hof")  # squared
+            d = lloyd.min_dist_col(centers, 2.0)  # squared
             w = F.sqrt(d)  # D weighting (reference semantics)
             u = hash01(F.col("id"), f"{SEED}-{r}")
             t = F.when(w > 0, -F.log(u) / w).otherwise(F.lit(float("inf")))
@@ -635,9 +635,7 @@ def q_kmeans_fit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             lloyd.assign(pts, centers, params.p, keep_dist=True, mode="hof")
             .withColumn(
                 "__twin_d",
-                lloyd.min_dist_col(
-                    F.col("features"), fixed, params.p, mode="hof"
-                ),
+                lloyd.min_dist_col(fixed, params.p),
             )
             .groupBy("center_id")
             .agg(
@@ -723,7 +721,7 @@ def q_mllib_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             lloyd.assign(pts, centers, 2.0, keep_dist=True, mode="hof")
             .withColumn(
                 "__twin_d",
-                lloyd.min_dist_col(F.col("features"), fixed, 2.0, mode="hof"),
+                lloyd.min_dist_col(fixed, 2.0),
             )
             .agg(F.sum("dist"), F.sum("__twin_d"))
             .collect()[0]

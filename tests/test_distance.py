@@ -55,3 +55,16 @@ def test_dot_cosine(row):
     assert _val(row, D.cosine(F.col("a"), F.col("b"))) == pytest.approx(dot / (na * nb))
     assert _val(row, D.cosine_unrolled(F.col("a"), B, 3)) == pytest.approx(dot / (na * nb))
     assert _val(row, D.dot_unrolled(F.col("a"), B)) == pytest.approx(dot)
+
+
+def test_sql_array_literal_round_trips(spark):
+    vals = [[0.1, -2.5e-300], [1e300, 3.0]]
+    lit = D.sql_array_literal(vals)
+    assert lit.startswith("array(array(0.1D, ")
+    assert spark.range(1).select(F.expr(lit).alias("v")).collect()[0]["v"] == vals
+
+
+@pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf])
+def test_sql_array_literal_rejects_non_finite(bad):
+    with pytest.raises(ValueError, match="non-finite"):
+        D.sql_array_literal([[1.0, 2.0], [3.0, bad]])

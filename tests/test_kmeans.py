@@ -7,8 +7,10 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansModel, KMeansParams, lloyd
 from apachebeamkmeans_spark.operators.kmeans.init import STRATEGIES, initial_centers
 from apachebeamkmeans_spark.operators.kmeans.mllib import mllib_kmeans_fit
@@ -42,6 +44,52 @@ def test_assign_tie_breaks_low_center(spark):
     assert out[0]["center_id"] == 0  # equidistant → first center
 
 
+# Row 60 is equidistant (1.0 under every p) from centers 0 and 1.
+TIE_CENTERS = [[0.0, 0.0, 0.0], [2.0, 0.0, 0.0], [0.5, -1.25, 3.0]]
+TIE_ROW = 60
+
+
+@pytest.fixture(scope="module")
+def scatter(spark):
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-3.0, 3.0) for _ in range(3)]) for i in range(TIE_ROW)]
+    rows.append((TIE_ROW, [1.0, 0.0, 0.0]))
+    return spark.createDataFrame(rows, "id long, features array<double>")
+
+
+@pytest.mark.parametrize("p", [1.0, 2.0, 3.0])
+def test_parsed_min_dist_is_bit_identical(scatter, p):
+    """The shared parsed-literal D(x) equals, row for row and to the
+    last bit, the unrolled form (p=1, 2) and the HOF `D.minkowski`."""
+    feats = F.col("features")
+    parsed = lloyd.min_dist_col(TIE_CENTERS, p)
+    mink = F.array_min(F.array(*[D.minkowski(feats, D.lit_vec(c), p) for c in TIE_CENTERS]))
+    cols = [(F.sqrt(parsed) if p == 2 else parsed).alias("parsed"), mink.alias("mink")]
+    if p in (1, 2):
+        unrolled = D.l2_sq_unrolled if p == 2 else D.l1_unrolled
+        cols += [
+            parsed.alias("raw"),
+            F.array_min(F.array(*[unrolled(feats, c) for c in TIE_CENTERS])).alias("unrolled"),
+        ]
+    rows = scatter.select("id", *cols).collect()
+    assert len(rows) == TIE_ROW + 1
+    for r in rows:
+        assert r["parsed"] == r["mink"], r
+        if p in (1, 2):
+            assert r["raw"] == r["unrolled"], r
+
+
+@pytest.mark.parametrize("p", [1.0, 2.0, 3.0])
+def test_assign_hof_matches_unrolled(scatter, p):
+    def run(mode):
+        out = lloyd.assign(scatter, TIE_CENTERS, p, keep_dist=True, mode=mode).collect()
+        return {r["id"]: (r["center_id"], r["dist"]) for r in out}
+
+    hof = run("hof")
+    assert hof == run("unrolled")
+    assert hof[TIE_ROW] == (0, 1.0)
+
+
 def test_recenter_means(spark):
     df = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [2.0, 4.0]), (2, [100.0, 100.0])],
@@ -60,6 +108,39 @@ def test_empty_cluster_reseeded(blobs):
     centers, _ = lloyd.lloyd_fit(blobs, init, p=2.0, threshold=1e-4, max_iter=5)
     assert len(centers) == 4
     assert all(c is not None and max(map(abs, c)) < 100 for c in centers)
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_fit_leaves_cache_state_as_found(spark, blobs):
+    """A fit caches an uncached input only for its own duration, and
+    leaves a frame the caller cached cached."""
+    plain = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 3)]) for i in range(40)], "id long, features array<double>"
+    )
+    before = _persisted_rdds(spark)
+    KMeans(KMeansParams(k=3, seed=2, max_iter=3)).fit(plain)
+    assert _persisted_rdds(spark) <= before
+    assert plain.storageLevel == StorageLevel.NONE
+    KMeans(KMeansParams(k=4, seed=2, max_iter=3)).fit(blobs)
+    assert blobs.storageLevel != StorageLevel.NONE
+
+
+@pytest.mark.parametrize("init", ["random", "max_farthest"])
+def test_fit_rejects_non_finite_features(spark, init):
+    """A NaN feature reaches a center literal within two iterations (as
+    a seed, or through its cluster's mean) and fails there as a
+    ValueError; the fit still releases its cache."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, float("nan")]), (2, [5.0, 5.0]), (3, [6.0, 5.0])],
+        "id long, features array<double>",
+    )
+    before = _persisted_rdds(spark)
+    with pytest.raises(ValueError, match="non-finite"):
+        KMeans(KMeansParams(k=2, seed=1, init=init, max_iter=3)).fit(df)
+    assert _persisted_rdds(spark) <= before
 
 
 def test_fit_recovers_blobs(blobs):
