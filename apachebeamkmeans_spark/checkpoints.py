@@ -15,9 +15,9 @@ engine (unpersisting a lineage-truncated frame before its consumer
 runs would lose the data) and remain the ContextCleaner's/harness's
 job.
 
-`release_blocks` finds the checkpoint's RDD through the analyzed
-plan's LogicalRDD leaves — the only handle PySpark exposes; `df.rdd`
-would build a NEW conversion RDD, not the persisted one.
+`release_blocks` finds the checkpoint's RDD as the analyzed plan's
+LogicalRDD root — the only handle PySpark exposes; `df.rdd` would
+build a NEW conversion RDD, not the persisted one.
 """
 
 from __future__ import annotations
@@ -33,15 +33,13 @@ def release_blocks(df: DataFrame | None) -> None:
     No-op on None, on never-materialized lazy checkpoints (nothing
     persisted yet is still registered — unpersist is idempotent), and
     on errors (release is an optimization, never a correctness
-    dependency)."""
+    dependency). Only the frame's OWN checkpoint is released: a frame
+    derived from checkpoints (e.g. a join) releases nothing."""
     if df is None:
         return
     try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        it = leaves.iterator()
-        while it.hasNext():
-            leaf = it.next()
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
+        root = df._jdf.queryExecution().analyzed()
+        if root.getClass().getSimpleName() == "LogicalRDD":
+            root.rdd().unpersist(False)
     except Exception:  # noqa: BLE001 — best-effort by design
         pass

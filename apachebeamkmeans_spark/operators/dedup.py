@@ -579,6 +579,10 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
         .coalesce(n_parts)
         .localCheckpoint()
     )
+    # `ckpt` is the round's checkpoint itself; `labels` may be a
+    # projection over it, and release_blocks frees only a frame whose
+    # root IS the checkpoint
+    ckpt = labels
     converged = False
     from apachebeamkmeans_spark.session import driver_loop_conf
 
@@ -630,19 +634,21 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             # the convergence test is a predicate over the frame this round
             # materializes anyway — no extra new⨝old join.
             changed = new_labels.filter("changed").limit(1).count()
-            release_blocks(labels)  # superseded by this round's checkpoint
+            release_blocks(ckpt)  # superseded by this round's checkpoint
+            ckpt = new_labels
             labels = new_labels.drop("changed")
             if changed == 0:
                 converged = True
                 break
+    release_blocks(edges)  # fully consumed; only `labels` is returned
     if not converged:
+        release_blocks(ckpt)  # the partial labels are never returned
         # Never return partially-propagated labels silently: they would
         # split one true component into several keepers.
         raise RuntimeError(
             f"duplicate_clusters: min-label propagation did not converge in "
             f"{max_rounds} rounds (component diameter > 2^{max_rounds})"
         )
-    release_blocks(edges)  # fully consumed; only `labels` is returned
     return labels
 
 

@@ -8,6 +8,8 @@ multi-executor cluster (AQE, shuffle partitions, Arrow).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -45,10 +47,47 @@ def get_spark(
     return spark
 
 
-from contextlib import contextmanager
+# (id(session), key) -> [held value, value before the scope, depth]
+_held: dict[tuple[int, str], list] = {}
+_held_lock = threading.Lock()
 
 
 @contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Hold SQL conf `key` at `value` inside the block, then restore the
+    session's previous value (unsetting a key that was unset).
+
+    The conf is session-global, so overlapping scopes share one hold:
+    the first entrant saves and sets, same-value entrants from any
+    thread only join, and the last one out restores. A different value
+    requested while the key is held raises RuntimeError, conf untouched.
+    """
+    slot = (id(spark), key)
+    with _held_lock:
+        held = _held.get(slot)
+        if held is None:
+            prev = spark.conf.get(key, None)
+            spark.conf.set(key, value)
+            held = _held[slot] = [value, prev, 0]
+        elif held[0] != value:
+            raise RuntimeError(
+                f"{key} is held at {held[0]!r} by another scope; "
+                f"cannot scope it to {value!r}"
+            )
+        held[2] += 1
+    try:
+        yield
+    finally:
+        with _held_lock:
+            held[2] -= 1
+            if held[2] == 0:
+                del _held[slot]
+                if held[1] is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, held[1])
+
+
 def driver_loop_conf(spark: SparkSession):
     """Scope `spark.sql.adaptive.enabled=false` around a sequential
     driver-loop trainer (Lloyd / PQ iterations — r18, guide §2.4
@@ -63,22 +102,5 @@ def driver_loop_conf(spark: SparkSession):
     are unchanged; values are partitioning-independent k-row means,
     re-verified by the oracle gate). This is not a local-mode
     constant: any cluster pays one extra scheduling round-trip per
-    iteration for a shuffle that cannot need adaptation.
-
-    Thread note: the conf is session-global. Overlapped trainers
-    (guide §2.6 ThreadPoolExecutor patterns) may nest this scope
-    concurrently — both want the same value, and each restores what it
-    read on entry, so the worst interleaving briefly re-enables AQE
-    for a surviving loop's tail: a latency wobble, never a value
-    change. Batch queries planned outside trainer loops are unaffected
-    (the scope is released before any consumer plan is built)."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    iteration for a shuffle that cannot need adaptation."""
+    return scoped_conf(spark, "spark.sql.adaptive.enabled", "false")

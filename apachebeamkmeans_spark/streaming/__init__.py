@@ -19,15 +19,16 @@ count, read driver-side with no Spark job, bounds the distinct-key
 state any of these operators can accumulate, and one state store
 comfortably holds tens of thousands of keys per commit — below that,
 per-store commit overhead dominates (the 32→8 measurement above).
-`SPARK_GRAFT_STREAM_SHUFFLE` remains the explicit override
-(validated: a non-integer value fails at the dial, not mid-plan —
-r17 ADVICE).
 """
 
 from __future__ import annotations
 
+import logging
 import os
-from contextlib import contextmanager
+
+from apachebeamkmeans_spark.session import scoped_conf
+
+_log = logging.getLogger(__name__)
 
 # One state store is comfortable holding this many keys per commit;
 # stores beyond rows/KEYS_PER_STORE only add per-commit overhead. At
@@ -77,7 +78,6 @@ def derived_stream_partitions(source_dir: str | None) -> int:
                       -(-rows // STREAM_KEYS_PER_STORE)))
 
 
-@contextmanager
 def stream_shuffle_partitions(spark, source_dir: str | None = None):
     """Scope `spark.sql.shuffle.partitions` to the streaming-state dial
     for the duration of one streaming query run (set before `start()`,
@@ -85,42 +85,16 @@ def stream_shuffle_partitions(spark, source_dir: str | None = None):
     at the first micro-batch, and batch queries planned afterwards must
     see the session default again).
 
-    Precedence: `SPARK_GRAFT_STREAM_SHUFFLE` (explicit, validated) >
-    derivation from `source_dir`'s footer row count > 8.
+    The dial is `derived_stream_partitions(source_dir)`.
 
-    Concurrency assumption (r17 ADVICE): the conf is session-global —
-    a batch query PLANNED concurrently with the scoped stream would
-    silently pick up the stream's partitioning. Every engine caller
-    drives its stream to completion inside the scope with no
-    concurrent batch planning; keep it that way.
+    Concurrency: the conf is session-global, so a batch query PLANNED
+    while the scope is held still picks up the stream's partitioning;
+    engine callers plan nothing else inside it. Overlapping scopes
+    share one hold (`session.scoped_conf`): a conflicting count raises.
     """
-    key = "spark.sql.shuffle.partitions"
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env is not None:
-        try:
-            target = int(env)
-            if target < 1:
-                raise ValueError(env)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_SHUFFLE must be a positive int, "
-                f"got {env!r}"
-            ) from None
-    else:
-        target = derived_stream_partitions(source_dir)
-        import sys
-
-        print(
-            f"[streaming] state partitions derived: {target} "
-            f"(source={source_dir!r})",
-            file=sys.stderr,
-        )
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(target))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    target = derived_stream_partitions(source_dir)
+    _log.info(
+        "state partitions derived: %d (source=%r)", target, source_dir,
+        extra={"partitions": target, "source": source_dir},
+    )
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(target))

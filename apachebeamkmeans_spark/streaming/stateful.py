@@ -182,29 +182,24 @@ def run_session_counts_tws_to_table(spark, sf_dir: str,
                                     gap_minutes: int = 30) -> DataFrame:
     from apachebeamkmeans_spark.streaming.events import read_events_stream
 
+    from apachebeamkmeans_spark.session import scoped_conf
     from apachebeamkmeans_spark.streaming import stream_shuffle_partitions
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        with stream_shuffle_partitions(spark, f"{sf_dir}/events.parquet"):
-            out = session_counts_stream_tws(
-                read_events_stream(spark, sf_dir), gap_minutes
-            )
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    with scoped_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass",
+        _ROCKSDB_PROVIDER,
+    ), stream_shuffle_partitions(spark, f"{sf_dir}/events.parquet"):
+        out = session_counts_stream_tws(
+            read_events_stream(spark, sf_dir), gap_minutes
+        )
+        q = (
+            out.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     return spark.table(name)

@@ -47,3 +47,42 @@ def test_trainers_leave_no_persistent_blocks(spark, sf_dir):
     assert _n_persisted(spark) == base
     ANN.pca_train(pts, 2)
     assert _n_persisted(spark) == base
+
+
+def test_release_blocks_of_derived_frame_releases_neither_checkpoint(spark):
+    base = _n_persisted(spark)
+    a = spark.range(100).localCheckpoint(eager=True)
+    b = spark.range(50).localCheckpoint(eager=True)
+    assert _n_persisted(spark) == base + 2
+    release_blocks(a.join(b, "id"))  # root is a Join, not a checkpoint
+    assert _n_persisted(spark) == base + 2
+    assert a.join(b, "id").count() == 50
+    release_blocks(a)
+    release_blocks(b)
+    assert _n_persisted(spark) == base
+
+
+def test_duplicate_clusters_keeps_only_the_returned_checkpoint(spark):
+    """Each propagation round supersedes the previous round's
+    checkpoint; the loop's `labels` is a projection over it, so the
+    release must target the checkpoint itself. Only the checkpoint
+    under the returned labels may stay persisted, and a run that does
+    not converge keeps none."""
+    import pytest
+
+    from apachebeamkmeans_spark.operators import dedup as DD
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(31)], "doc_a long, doc_b long"
+    )
+    base = _n_persisted(spark)
+    # the 32-node path needs more than two rounds to converge; the
+    # failed run releases every checkpoint it made
+    with pytest.raises(RuntimeError, match="did not converge"):
+        DD.duplicate_clusters(pairs, max_rounds=2)
+    assert _n_persisted(spark) == base
+    labels = DD.duplicate_clusters(pairs)
+    assert _n_persisted(spark) == base + 1
+    assert {r["doc_id"]: r["cluster_id"] for r in labels.collect()} == {
+        i: 0 for i in range(32)
+    }
