@@ -346,10 +346,10 @@ def coarse_residuals(vecs: DataFrame, centers: list[list[float]],
     nested center literal. Centers should be the ROUNDED trained
     literals so the Spark frame, the numpy twin, and the generated
     oracle all subtract identical doubles."""
-    lit_centers = F.lit([[float(v) for v in c] for c in centers])
+    lit_centers = D.lit_array(centers)
     assigned = lloyd.assign(
         vecs.select(F.col(id_col).alias("id"), F.col(features_col).alias("features")),
-        [[float(v) for v in c] for c in centers], 2.0, mode="hof",
+        centers, 2.0,
     )
     return assigned.select(
         "id",

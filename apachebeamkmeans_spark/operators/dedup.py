@@ -698,7 +698,7 @@ def hyperplane_signature(vecs: DataFrame, planes: list[list[float]],
     weights = [1 << i for i in range(len(planes))]
     sig = F.aggregate(
         F.transform(
-            F.lit([list(map(float, p)) for p in planes]),
+            D.lit_array(planes),
             lambda p, i: F.when(D.dot(f, p) >= 0, F.element_at(F.lit(weights), i + 1)).otherwise(
                 F.lit(0)
             ),

@@ -17,17 +17,16 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
   (textbook; the reference's any-match + index bug, SURVEY.md §8.1-8.2,
   is deliberately not reproduced).
 
-Every per-round center expression — seeding draws, the fit loop's
-assignment, farthest-point reseeds, model assignment and SSE — comes
-from one builder, `_nearest_center`: ONE parsed SQL string holding the
-centers as a nested `array(array(…D), …)` literal and the Minkowski-p
-fold as a lambda. Building it costs one py4j call whatever k and dim,
-and the literal lands in the codegen reference array, so one compile
-serves every draw, iteration and seed. The one other form is
-`assign(mode="unrolled")`: k×dim explicit expressions, the structural
-twin of the generated oracle SQL for the single-step queries. Both
-give bit-identical results (same left-to-right sums, first-minimum
-ties).
+Every center expression — seeding draws, the fit loop's assignment,
+farthest-point reseeds, model assignment, SSE and the single-step
+`kmeans_*` queries — comes from one builder, `_nearest_center`: ONE
+parsed SQL string holding the centers as one folded literal
+(`distance.sql_array_literal`) and the Minkowski-p fold as a lambda.
+Building it costs one py4j call whatever k and dim, and the literal
+lands in the codegen reference array, so one compile serves every
+draw, iteration and seed. It is the one physical form of assignment:
+its left-to-right sums and first-minimum ties give the same doubles as
+the unrolled oracle SQL.
 
 Centers live on the driver as a k×dim Python list (≤ a few KB) —
 the only data that ever crosses to the driver.
@@ -41,16 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.functions import distance as D
-
-
-def _dist_col(features, center: list[float], p: float):
-    """Distance expression point↔literal-center. For p=2 the *squared*
-    distance is used (same argmin, avoids k sqrts per row)."""
-    if p == 2:
-        return D.l2_sq_unrolled(features, center)
-    if p == 1:
-        return D.l1_unrolled(features, center)
-    return D.minkowski(features, D.lit_vec(center), p)
 
 
 def _nearest_center(centers: list[list[float]], p: float,
@@ -70,38 +59,20 @@ def _nearest_center(centers: list[list[float]], p: float,
 
 
 def assign(df: DataFrame, centers: list[list[float]], p: float = 2.0,
-           features_col: str = "features", keep_dist: bool = False,
-           mode: str = "unrolled") -> DataFrame:
-    """Add `center_id` (argmin over literal centers; ties → lowest id).
+           features_col: str = "features", keep_dist: bool = False) -> DataFrame:
+    """Add `center_id` (argmin over literal centers; ties → lowest id),
+    and with `keep_dist` the distance to it as `dist` (squared for p=2).
 
     J1 in SURVEY.md §2.3 — the reference's only "join", expressed as a
     narrow map over a plan-time center literal; zero join, zero shuffle.
-
-    Two physical forms with bit-identical results (same left-to-right
-    sums, first-minimum ties):
-    - `hof`: the shared parsed-literal expression (`_nearest_center`) —
-      one py4j call to build, and one codegen compile for any center
-      values. Every engine path uses it.
-    - `unrolled`: k×dim explicit expressions, the structural twin of
-      the generated oracle SQL; kept as the oracle-exact form behind
-      the single-step `kmeans_assign` query. Its generated code embeds
-      the center values, so each new set of centers compiles anew.
+    One physical form, the shared `_nearest_center` expression: one
+    py4j call to build and one codegen compile for any center values.
     """
-    if mode == "hof":
-        best = _nearest_center(centers, p, features_col)
-        out = df.withColumn("center_id", best["idx"])
-        if keep_dist:
-            out = out.withColumn("dist", best["dist"])
-        return out
-    feats = F.col(features_col)
-    dists = F.array(*[_dist_col(feats, c, p) for c in centers])
-    out = df.withColumn("__dists", dists).withColumn(
-        "center_id",
-        (F.array_position(F.col("__dists"), F.array_min(F.col("__dists"))) - 1).cast("int"),
-    )
+    best = _nearest_center(centers, p, features_col)
+    out = df.withColumn("center_id", best["idx"])
     if keep_dist:
-        out = out.withColumn("dist", F.array_min(F.col("__dists")))
-    return out.drop("__dists")
+        out = out.withColumn("dist", best["dist"])
+    return out
 
 
 def recenter(assigned: DataFrame, dim: int, features_col: str = "features") -> DataFrame:

@@ -63,8 +63,7 @@ class KMeansModel:
     def transform(self, df: DataFrame, features_col: str = "features",
                   keep_dist: bool = False) -> DataFrame:
         """Assign each point to its nearest center (adds `center_id`)."""
-        return lloyd.assign(df, self.centers, self.params.p, features_col, keep_dist,
-                            mode="hof")
+        return lloyd.assign(df, self.centers, self.params.p, features_col, keep_dist)
 
     def sse(self, df: DataFrame, features_col: str = "features") -> float:
         """Sum of squared (L2) errors to each point's assigned center.
@@ -73,7 +72,7 @@ class KMeansModel:
         squared L2 — SSE is squared error by definition."""
         p = self.params.p
         assigned = lloyd.assign(df, self.centers, p, features_col,
-                                keep_dist=(p == 2), mode="hof")
+                                keep_dist=(p == 2))
         if p != 2:
             centers = D.sql_array_literal(self.centers)
             assigned = assigned.withColumn("dist", F.expr(D.sql_pow_sum(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.functions import distance as D
+
 
 def feature_moments(df: DataFrame, features_col: str = "features") -> tuple[list[float], list[float]]:
     """Per-dimension (mean, std) in one distributed vector aggregate."""
@@ -43,5 +45,5 @@ def standardize(df: DataFrame, features_col: str = "features",
     ms = [[float(m), float(s) if s > 0 else 1.0] for m, s in zip(mu, sd)]
     return df.withColumn(
         features_col,
-        F.zip_with(F.col(features_col), F.lit(ms), lambda x, p: (x - p[0]) / p[1]),
+        F.zip_with(F.col(features_col), D.lit_array(ms), lambda x, p: (x - p[0]) / p[1]),
     )

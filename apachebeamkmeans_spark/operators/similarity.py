@@ -33,7 +33,6 @@ def cosine_topk(vecs: DataFrame, queries: list[list[float]], k: int = 10,
     plan time), posexplode fans out (qid, cosine), and a per-qid window
     ranks. Arithmetic structure matches the unrolled/oracle form
     (same left-to-right sums), so values are bit-identical."""
-    dim = len(queries[0])
     f = F.col(features_col)
     qnorms = [sum(float(v) * float(v) for v in q) ** 0.5 for q in queries]
     vnorm = F.sqrt(
@@ -42,8 +41,8 @@ def cosine_topk(vecs: DataFrame, queries: list[list[float]], k: int = 10,
     # row norm materialized once (HOF lambdas get no CSE — inlining
     # `vnorm` here would recompute it n_queries times per row)
     cos_arr = F.transform(
-        F.lit([list(map(float, q)) for q in queries]),
-        lambda q, i: D.dot(f, q) / (F.col("__vnorm") * F.element_at(F.lit(qnorms), i + 1)),
+        D.lit_array(queries),
+        lambda q, i: D.dot(f, q) / (F.col("__vnorm") * F.element_at(D.lit_array(qnorms), i + 1)),
     )
     exploded = vecs.select(
         F.col(id_col).alias("vec_id"), f, vnorm.alias("__vnorm")
@@ -76,8 +75,8 @@ def cosine_range_search(vecs: DataFrame, queries: list[list[float]],
     # lambdas are NOT common-subexpression-eliminated, so referencing
     # `vnorm` in the per-query lambda would recompute it n_queries times
     cos_arr = F.transform(
-        F.lit([list(map(float, q)) for q in queries]),
-        lambda q, i: D.dot(f, q) / (F.col("__vnorm") * F.element_at(F.lit(qnorms), i + 1)),
+        D.lit_array(queries),
+        lambda q, i: D.dot(f, q) / (F.col("__vnorm") * F.element_at(D.lit_array(qnorms), i + 1)),
     )
     return (
         vecs.select(F.col(id_col).alias("vec_id"), f, vnorm.alias("__vnorm"))
@@ -150,7 +149,7 @@ def pq_encode(vecs: DataFrame, codebooks: list[list[list[float]]],
         F.col(id_col).alias("vec_id"), subs.alias("__subs"), *[F.col(c) for c in carry]
     )
     dmat = F.zip_with(
-        F.col("__subs"), F.lit(codebooks),
+        F.col("__subs"), D.lit_array(codebooks),
         lambda sub, cb_s: F.transform(
             cb_s,
             lambda cent: F.aggregate(
@@ -191,7 +190,7 @@ def pq_encode_lut(vecs: DataFrame, codebooks: list[list[list[float]]],
         F.col(id_col).alias("vec_id"), subs.alias("__subs"), *[F.col(c) for c in carry]
     )
     dmat = F.zip_with(
-        F.col("__subs"), F.lit(codebooks),
+        F.col("__subs"), D.lit_array(codebooks),
         lambda sub, cb_s: F.transform(
             cb_s,
             lambda cent: F.aggregate(
@@ -355,7 +354,7 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
     )
     cells = F.array_sort(
         F.transform(
-            F.lit([[float(v) for v in c] for c in centers]),
+            D.lit_array(centers),
             lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
         )
     )
@@ -366,7 +365,7 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
         "f",
         F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe).alias("probes"),
     ).localCheckpoint(eager=True)
-    lit_centers = F.lit([[float(v) for v in c] for c in centers])
+    lit_centers = D.lit_array(centers)
     ex = probed.select(
         "vec_id", "probes", F.explode("probes").alias("coarse_id"),
         F.col("f"),
@@ -501,7 +500,7 @@ def pq_adc_topk(encoded: DataFrame, queries: list[list[float]],
     def _adc(lut_q):
         return _adc_expr(lut_q, codes, m)
 
-    adc_arr = F.transform(F.lit(luts), _adc)
+    adc_arr = F.transform(D.lit_array(luts), _adc)
     exploded = encoded.select("vec_id", F.posexplode(adc_arr).alias("qid", "_d"))
     w = Window.partitionBy("qid").orderBy(F.asc("_d"), F.asc("vec_id"))
     return (
@@ -571,7 +570,7 @@ def ivfpq_topk(vecs: DataFrame, queries: list[list[float]],
     # full embedding per row and defeat PQ's m-bytes-per-row serving
     # economics at 100 TB). Vectors are re-fetched below for the
     # shortlist only.
-    adc_arr = F.transform(F.lit(luts), _adc)
+    adc_arr = F.transform(D.lit_array(luts), _adc)
     exploded = encoded.select(
         "vec_id", "probe_cell", F.posexplode(adc_arr).alias("qid", "_d")
     )
@@ -654,7 +653,7 @@ def ivfpq_batch_topk(vecs: DataFrame, queries: DataFrame,
         F.lit(0.0), lambda a, v: a + v,
     )
     scored_cells = F.transform(
-        F.lit([[float(v) for v in c] for c in coarse_centers]),
+        D.lit_array(coarse_centers),
         lambda c, i: F.struct(cdist(c).alias("d"), i.cast("int").alias("i")),
     )
     with_probes = normed_q.select(
@@ -800,7 +799,7 @@ def ivfpq_batch_probe_topk(index: DataFrame, queries: DataFrame,
         F.lit(0.0), lambda a, v: a + v,
     )
     scored_cells = F.transform(
-        F.lit([[float(v) for v in c] for c in centers]),
+        D.lit_array(centers),
         lambda c, i: F.struct(cdist(c).alias("d"), i.cast("int").alias("i")),
     )
     with_probes = normed_q.select(
@@ -916,7 +915,7 @@ def ivfpq_residual_topk(vecs: DataFrame, queries: list[list[float]],
         if len(all_cells) == len(coarse_centers)
         else assigned.filter(F.col("coarse_id").isin(all_cells))
     )
-    lit_centers = F.lit([[float(v) for v in c] for c in coarse_centers])
+    lit_centers = D.lit_array(coarse_centers)
     res = pruned.select(
         "vec_id",
         F.col("coarse_id").cast("int").alias("probe_cell"),
@@ -990,12 +989,7 @@ def _refine_exact_literal(pruned: DataFrame, shortlist: DataFrame,
     pruned cells, score cosine = dot / |f| (the serving-matrix-wide
     convention, ADVICE r11; |f| staged as a column — no CSE inside HOF
     lambdas), one per-qid window for the final top-k."""
-    from apachebeamkmeans_spark.functions import distance as D
-
-    dots = F.transform(
-        F.lit([list(map(float, q)) for q in queries]),
-        lambda q: D.dot(F.col("f"), q),
-    )
+    dots = F.transform(D.lit_array(queries), lambda q: D.dot(F.col("f"), q))
     vn = F.sqrt(
         F.aggregate(
             F.transform(F.col("f"), lambda x: x * x),
@@ -1169,7 +1163,7 @@ def maxsim_topk(vecs: DataFrame, queries: list[list[list[float]]],
         s = None
         for tok in q:
             qn = sum(float(v) * float(v) for v in tok) ** 0.5
-            tok_lit = F.lit(list(map(float, tok)))
+            tok_lit = D.lit_array(tok)
 
             # one-arg closure factory: a defaulted second parameter
             # would make F.transform pass (element, INDEX) and the
@@ -1307,10 +1301,7 @@ def binary_hamming_topk(vecs: DataFrame, queries: list[list[float]],
     # while the HOF dot is bit-identical to the oracle's unrolled chain
     # (0.0 + x == x) — the same pairing cosine_topk certifies.
     qnorms = [sum(float(v) * float(v) for v in q) ** 0.5 for q in queries]
-    dots = F.transform(
-        F.lit([list(map(float, q)) for q in queries]),
-        lambda q: D.dot(F.col("__f"), q),
-    )
+    dots = F.transform(D.lit_array(queries), lambda q: D.dot(F.col("__f"), q))
     vn = F.sqrt(F.aggregate(
         F.transform(F.col("__f"), lambda x: x * x),
         F.lit(0.0), lambda a, v: a + v,
@@ -1322,7 +1313,7 @@ def binary_hamming_topk(vecs: DataFrame, queries: list[list[float]],
     ).withColumn(
         "_c",
         F.element_at(dots, F.col("qid") + 1)
-        / (F.col("__vn") * F.element_at(F.lit(qnorms), F.col("qid") + 1)),
+        / (F.col("__vn") * F.element_at(D.lit_array(qnorms), F.col("qid") + 1)),
     )
     wc = Window.partitionBy("qid").orderBy(F.desc("_c"), F.asc("vec_id"))
     return (
@@ -1357,7 +1348,7 @@ def coarse_assign(vecs: DataFrame, centers: list[list[float]],
     return lloyd.assign(
         vecs.select(F.col(id_col).alias("vec_id"), F.col(features_col).alias("f"),
                     *[F.col(c) for c in carry]),
-        centers, 2.0, features_col="f", mode="hof",
+        centers, 2.0, features_col="f",
     ).withColumnRenamed("center_id", "coarse_id")
 
 
@@ -1415,8 +1406,8 @@ def ivf_probe_topk(index: DataFrame, queries: list[list[float]],
     )
     # row norm materialized once (no CSE inside HOF lambdas)
     cos_arr = F.transform(
-        F.lit([list(map(float, q)) for q in queries]),
-        lambda q, i: D.dot(f, q) / (F.col("__vnorm") * F.element_at(F.lit(qnorms), i + 1)),
+        D.lit_array(queries),
+        lambda q, i: D.dot(f, q) / (F.col("__vnorm") * F.element_at(D.lit_array(qnorms), i + 1)),
     )
     exploded = pruned.select(
         F.col("vec_id"),
@@ -1508,7 +1499,7 @@ def ivf_batch_topk(index: DataFrame, queries: DataFrame,
         F.lit(0.0), lambda a, v: a + v,
     )
     scored_cells = F.transform(
-        F.lit([[float(v) for v in c] for c in centers]),
+        D.lit_array(centers),
         lambda c, i: F.struct(cdist(c).alias("d"), i.cast("int").alias("i")),
     )
     probes = normed.select(
@@ -1644,7 +1635,7 @@ def ivfpq_probe_topk(index: DataFrame, queries: list[list[float]],
     def _adc(lut_q):
         return _adc_expr(lut_q, codes, m)
 
-    adc_arr = F.transform(F.lit(luts), _adc)
+    adc_arr = F.transform(D.lit_array(luts), _adc)
     exploded = pruned.select(
         "vec_id", F.col("coarse_id").cast("int").alias("probe_cell"),
         F.posexplode(adc_arr).alias("qid", "_d"),
@@ -1708,7 +1699,7 @@ def semantic_prune(normed: DataFrame, centers: list[list[float]], tau: float,
     )
     nearest = F.array_min(
         F.transform(
-            F.lit([[float(v) for v in c] for c in centers]),
+            D.lit_array(centers),
             lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
         )
     )
@@ -1768,7 +1759,7 @@ def coverage_sample(normed: DataFrame, centers: list[list[float]],
     )
     nearest = F.array_min(
         F.transform(
-            F.lit([[float(v) for v in c] for c in centers]),
+            D.lit_array(centers),
             lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
         )
     )
@@ -1869,7 +1860,7 @@ def pca_project(vecs: DataFrame, mean: list[float],
     if impl != "fold":
         raise ValueError(f"pca_project: unknown impl {impl!r}")
     centered = F.zip_with(
-        F.col(features_col), F.lit([float(m) for m in mean]),
+        F.col(features_col), D.lit_array(mean),
         lambda x, m: x - m,
     )
     staged = vecs.select(
@@ -1878,7 +1869,7 @@ def pca_project(vecs: DataFrame, mean: list[float],
     dims = [
         F.aggregate(
             F.zip_with(
-                F.col("__c"), F.lit([float(w) for w in wrow]),
+                F.col("__c"), D.lit_array(wrow),
                 lambda a, b: a * b,
             ),
             F.lit(0.0),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators import indexcommit as IC
 from apachebeamkmeans_spark.operators.textstats import bm25_stage
 
@@ -1439,7 +1440,7 @@ def bm25_indexed_topk_wand(spark, index_path: str,
     # low: stopword-heavy multi-term queries retain almost every doc
     # under `__s + bq >= θ`). Doomed queries keep ONLY their θ row.
     bound_lit = F.element_at(
-        F.array(*[F.lit(float(bound[i])) for i in range(len(queries))]),
+        D.lit_array([bound[i] for i in range(len(queries))]),
         F.col("qid") + 1,
     )
     cand_cond = (

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators import timeseries as TS
 from apachebeamkmeans_spark.sources import io
 
@@ -758,7 +759,7 @@ def q_user_decayed_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = _events(spark, sf_dir)
-    wlit = F.lit(_WEIGHTS)
+    wlit = D.lit_array(_WEIGHTS)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros("ts").asc(), F.col("event_id").asc())

@@ -57,7 +57,9 @@ def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One argmin assignment step against the frozen centers (J1), with distance."""
+    """One argmin assignment step against the frozen centers (J1), with
+    distance, on the shared center expression: its left-to-right sums
+    and first-minimum ties reproduce the unrolled oracle SQL exactly."""
     assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0, keep_dist=True)
     return assigned.select(
         F.col("id").alias("vec_id"),
@@ -91,7 +93,7 @@ FROM d
 
 def q_kmeans_recenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One recenter step: per-cluster size + per-dimension means (A1/A2)."""
-    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0, mode="hof")
+    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0)
     f = F.col("features")
     return assigned.groupBy("center_id").agg(
         F.count(F.lit(1)).alias("size"),
@@ -116,7 +118,7 @@ GROUP BY a.center_id
 
 def q_kmeans_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global SSE of the fixed-center assignment (A3 global sum)."""
-    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0, keep_dist=True, mode="hof")
+    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0, keep_dist=True)
     return assigned.agg(
         F.round(F.sum("dist"), 4).alias("sse"), F.count(F.lit(1)).alias("n_points")
     )
@@ -396,7 +398,7 @@ def q_kmeans_cluster_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     format (FormatAsTextFn, BeamKmeansSideInput.java:22-32), distributed
     (collect_list per cluster, never a driver loop), members identified
     by stable id (§8.10)."""
-    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0, mode="hof")
+    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0)
     return (
         assigned.groupBy("center_id")
         .agg(F.array_sort(F.collect_list("id")).alias("members"))
@@ -429,7 +431,7 @@ def q_kmeans_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     validation the reference performed by hand on UCI data."""
     from apachebeamkmeans_spark.operators.kmeans.evaluation import quality_metrics
 
-    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0, mode="hof")
+    assigned = lloyd.assign(_pts(spark, sf_dir), CENTERS, 2.0)
     return quality_metrics(assigned)
 
 
@@ -493,7 +495,7 @@ def q_kmeans_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration seeded Lloyd fit over the raw embeddings:
     one row per center with its final member count and the rounded
     center coordinates. The final assignment (for the counts) runs
-    against the ROUNDED centers with the unrolled oracle-exact
+    against the ROUNDED centers with the oracle-exact shared
     distance form — the oracle assigns with the same rounded literals
     and identical expression structure, so counts can't flip on
     ULP-level trainer drift; the only cross-engine dependence is the
@@ -505,11 +507,9 @@ def q_kmeans_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _pts(spark, sf_dir)
     centers = ANN.ivf_train(pts, K, FIT_FIXED_ITERS, FIT_FIXED_SEED)
     rounded = ANN.round_mat(centers)
-    # hof mode: the zip_with fold (0.0 + Σ left-to-right) produces the
-    # same floats as the unrolled left-associated oracle sum, without
-    # the k·dim-term codegen compile (same pairing as kmeans_recenter's
-    # green hof-vs-sql_l2_sq oracle)
-    assigned = lloyd.assign(pts, rounded, 2.0, mode="hof")
+    # the zip_with fold (0.0 + Σ left-to-right) produces the same floats
+    # as the unrolled left-associated oracle sum
+    assigned = lloyd.assign(pts, rounded, 2.0)
     sizes = assigned.groupBy("center_id").agg(F.count(F.lit(1)).alias("size"))
     cdf = spark.createDataFrame(
         [(i, *c) for i, c in enumerate(rounded)],
@@ -632,7 +632,7 @@ def q_kmeans_fit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # to the twin's, and the argmin id — three expressions over one
         # cached scan instead of three separate jobs
         row = (
-            lloyd.assign(pts, centers, params.p, keep_dist=True, mode="hof")
+            lloyd.assign(pts, centers, params.p, keep_dist=True)
             .withColumn(
                 "__twin_d",
                 lloyd.min_dist_col(fixed, params.p),
@@ -718,7 +718,7 @@ def q_mllib_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             fixed = fut_fixed.result()
         centers = [list(map(float, c)) for c in model.clusterCenters()]
         row = (
-            lloyd.assign(pts, centers, 2.0, keep_dist=True, mode="hof")
+            lloyd.assign(pts, centers, 2.0, keep_dist=True)
             .withColumn(
                 "__twin_d",
                 lloyd.min_dist_col(fixed, 2.0),

@@ -930,7 +930,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = F.array_sort(
         F.transform(
-            F.lit([[float(v) for v in c] for c in centers]),
+            D.lit_array(centers),
             lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
         )
     )
@@ -2003,7 +2003,7 @@ def q_sim_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nearest = F.array_min(
         F.transform(
-            F.lit([[float(v) for v in c] for c in centers]),
+            D.lit_array(centers),
             lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
         )
     )

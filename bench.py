@@ -436,17 +436,10 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_LATEST.json"), "w") as f:
         f.write(json.dumps(record) + "\n")
-    stdout_record = {
-        k: v for k, v in record.items()
-        if k not in ("warmup_pass", "session_warmup_sec")
-    }
-    print(json.dumps(stdout_record))
-    # second, COMPACT line (r17 verdict item 5): the full record line is
-    # one long JSON object, and twice now (r5, r16) a driver-side stdout
-    # tail window clipped it mid-line, voiding the round-over-round
-    # comparison. This line is short enough to survive any tail and
-    # carries the totals a comparison minimally needs; BENCH_LATEST.json
-    # remains the full authoritative record.
+    # a COMPACT totals line first, short enough to survive a clipped
+    # stdout tail (r5 and r16 lost the long record that way), then the
+    # full timed-only record as the LAST line: stdout parsers read the
+    # last line. BENCH_LATEST.json remains the authoritative record.
     print(json.dumps({
         "metric": "headline_total_compact",
         "value": record["value"],
@@ -454,6 +447,10 @@ def main() -> None:
         "sf": sf,
         "n_completed": len(timings),
         "n_errors": len(errors),
+    }))
+    print(json.dumps({
+        k: v for k, v in record.items()
+        if k not in ("warmup_pass", "session_warmup_sec")
     }))
 
 

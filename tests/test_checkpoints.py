@@ -72,17 +72,22 @@ def test_duplicate_clusters_keeps_only_the_returned_checkpoint(spark):
 
     from apachebeamkmeans_spark.operators import dedup as DD
 
+    def new_persisted():
+        # ids, not a count: the context cleaner may unpersist an earlier
+        # test's garbage-collected frame while this test runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - base
+
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(31)], "doc_a long, doc_b long"
     )
-    base = _n_persisted(spark)
+    base = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     # the 32-node path needs more than two rounds to converge; the
     # failed run releases every checkpoint it made
     with pytest.raises(RuntimeError, match="did not converge"):
         DD.duplicate_clusters(pairs, max_rounds=2)
-    assert _n_persisted(spark) == base
+    assert new_persisted() == set()
     labels = DD.duplicate_clusters(pairs)
-    assert _n_persisted(spark) == base + 1
+    assert len(new_persisted()) == 1
     assert {r["doc_id"]: r["cluster_id"] for r in labels.collect()} == {
         i: 0 for i in range(32)
     }

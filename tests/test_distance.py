@@ -57,11 +57,33 @@ def test_dot_cosine(row):
     assert _val(row, D.dot_unrolled(F.col("a"), B)) == pytest.approx(dot)
 
 
+EDGE_DOUBLES = [0.1, -0.0, 5e-324, 2.2250738585072014e-308,
+                1.7976931348623157e308, -2.5e-300]
+
+
+def _flat(v):
+    return [y for x in v for y in _flat(x)] if isinstance(v, list) else [v]
+
+
+def _scaled(v, s):
+    return [_scaled(x, s) for x in v] if isinstance(v, list) else v * s
+
+
 def test_sql_array_literal_round_trips(spark):
-    vals = [[0.1, -2.5e-300], [1e300, 3.0]]
-    lit = D.sql_array_literal(vals)
-    assert lit.startswith("array(array(0.1D, ")
-    assert spark.range(1).select(F.expr(lit).alias("v")).collect()[0]["v"] == vals
+    """Every double comes back bit-exact (sign of zero, subnormals, the
+    extremes) at nesting depths 1-3 — depth 3 is the PQ codebooks — and
+    the optimized plan holds one folded Literal, not the JSON parse."""
+    vals = EDGE_DOUBLES
+    for depth in (1, 2, 3):
+        df = spark.range(1).select(F.expr(D.sql_array_literal(vals)).alias("v"))
+        got = df.collect()[0]["v"]
+        assert got == vals, depth
+        assert [x.hex() for x in _flat(got)] == [x.hex() for x in _flat(vals)], depth
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.projectList().size() == 1
+        assert plan.projectList().apply(0).child().getClass().getSimpleName() == "Literal"
+        assert "json" not in plan.toString().lower(), plan.toString()
+        vals = [vals, _scaled(vals, -0.5)]
 
 
 @pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf])

@@ -63,7 +63,7 @@ def test_parsed_min_dist_is_bit_identical(scatter, p):
     last bit, the unrolled form (p=1, 2) and the HOF `D.minkowski`."""
     feats = F.col("features")
     parsed = lloyd.min_dist_col(TIE_CENTERS, p)
-    mink = F.array_min(F.array(*[D.minkowski(feats, D.lit_vec(c), p) for c in TIE_CENTERS]))
+    mink = F.array_min(F.array(*[D.minkowski(feats, D.lit_array(c), p) for c in TIE_CENTERS]))
     cols = [(F.sqrt(parsed) if p == 2 else parsed).alias("parsed"), mink.alias("mink")]
     if p in (1, 2):
         unrolled = D.l2_sq_unrolled if p == 2 else D.l1_unrolled
@@ -80,14 +80,27 @@ def test_parsed_min_dist_is_bit_identical(scatter, p):
 
 
 @pytest.mark.parametrize("p", [1.0, 2.0, 3.0])
-def test_assign_hof_matches_unrolled(scatter, p):
-    def run(mode):
-        out = lloyd.assign(scatter, TIE_CENTERS, p, keep_dist=True, mode=mode).collect()
-        return {r["id"]: (r["center_id"], r["dist"]) for r in out}
-
-    hof = run("hof")
-    assert hof == run("unrolled")
-    assert hof[TIE_ROW] == (0, 1.0)
+def test_assign_matches_argmin_twin(scatter, p):
+    """`assign` equals, center_id and dist to the last bit, a
+    first-minimum argmin over per-center distances built here from the
+    unrolled family (p=1, 2) and the HOF `D.minkowski` (other p)."""
+    feats = F.col("features")
+    if p == 2:
+        dists = [D.l2_sq_unrolled(feats, c) for c in TIE_CENTERS]
+    elif p == 1:
+        dists = [D.l1_unrolled(feats, c) for c in TIE_CENTERS]
+    else:
+        dists = [D.minkowski(feats, D.lit_array(c), p) for c in TIE_CENTERS]
+    darr = F.array(*dists)
+    twin = scatter.select(
+        "id",
+        (F.array_position(darr, F.array_min(darr)) - 1).cast("int").alias("center_id"),
+        F.array_min(darr).alias("dist"),
+    ).collect()
+    out = lloyd.assign(scatter, TIE_CENTERS, p, keep_dist=True).collect()
+    got = {r["id"]: (r["center_id"], r["dist"]) for r in out}
+    assert got == {r["id"]: (r["center_id"], r["dist"]) for r in twin}
+    assert got[TIE_ROW] == (0, 1.0)
 
 
 def test_recenter_means(spark):

@@ -19,11 +19,9 @@ CENTERS = fixed_centers()
 
 
 def test_assign_is_shuffle_free(spark, sf_dir):
-    """J1 assignment is a pure map — no Exchange in either mode."""
-    pts = io.load_points(spark, sf_dir)
-    for mode in ("unrolled", "hof"):
-        assigned = lloyd.assign(pts, CENTERS, 2.0, mode=mode)
-        assert X.n_exchanges(assigned) == 0, mode
+    """J1 assignment is a pure map — no Exchange."""
+    assigned = lloyd.assign(io.load_points(spark, sf_dir), CENTERS, 2.0)
+    assert X.n_exchanges(assigned) == 0
 
 
 def test_recenter_is_partially_aggregated(spark, sf_dir):

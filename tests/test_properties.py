@@ -74,7 +74,7 @@ def test_unrolled_equals_hof(spark, v):
     df = spark.createDataFrame([(list(map(float, v)),)], "a array<double>")
     unrolled, hof = df.select(
         D.l2_sq_unrolled(F.col("a"), center).alias("u"),
-        D.l2_sq(F.col("a"), D.lit_vec(center)).alias("h"),
+        D.l2_sq(F.col("a"), D.lit_array(center)).alias("h"),
     ).collect()[0]
     assert unrolled == hof  # exact equality, not approx
 

@@ -75,9 +75,9 @@ def test_sql_udfs_match_expression_api(spark):
     sdf.createOrReplaceTempView("sqludf_vecs")
     expr_rows = sdf.select(
         D.abs_sum(F.col("v")).alias("l1"),
-        D.l2_sq(F.col("v"), D.lit_vec(center)).alias("d2"),
-        D.dot(F.col("v"), D.lit_vec(center)).alias("dp"),
-        D.minkowski(F.col("v"), D.lit_vec(center), 1).alias("m1"),
+        D.l2_sq(F.col("v"), D.lit_array(center)).alias("d2"),
+        D.dot(F.col("v"), D.lit_array(center)).alias("dp"),
+        D.minkowski(F.col("v"), D.lit_array(center), 1).alias("m1"),
     ).collect()
     c = "array(" + ", ".join(f"{x!r}D" for x in center) + ")"
     sql_rows = spark.sql(
