@@ -35,6 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.operators import ann_train as ANN
 from apachebeamkmeans_spark.operators import indexcommit as IC
 from apachebeamkmeans_spark.operators import similarity as SIM
@@ -242,26 +243,16 @@ class AnnIndex:
         reaches the parquet scan as a data filter inside the probed
         partitions — the filtered-search shape (filter first, rank
         within the matching rows)."""
-        vecs = _normalize(embeddings, id_col, vec_col, meta_cols
-                          ).localCheckpoint(eager=False)
         meta = [
             (c, embeddings.schema[c].dataType.simpleString())
             for c in meta_cols
         ]
-        if k is None:
-            from apachebeamkmeans_spark.operators.ann_train import knn_cells
-
-            k = knn_cells(vecs.count())
-        try:
+        with staged(_normalize(embeddings, id_col, vec_col, meta_cols)) as vecs:
+            if k is None:
+                k = ANN.knn_cells(vecs.count())
             centers, books = AnnIndex._train_and_build(
                 vecs, path, k, n_iters, pq_m, pq_ksub, meta_cols
             )
-        finally:
-            # trainers and the layout write have all materialized —
-            # release the normalized-corpus checkpoint (r18, guide §5)
-            from apachebeamkmeans_spark.checkpoints import release_blocks
-
-            release_blocks(vecs)
         # the sidecar write is `adopt`'s job — train IS an adopt of the
         # layout it just built, under the parameters it just trained
         return AnnIndex.adopt(spark, path, centers, books, meta)
@@ -579,13 +570,13 @@ class AnnIndex:
             ts = self._tombstones()
             if ts is not None:
                 ids = ids.join(F.broadcast(ts), "vec_id", "left_anti")
-            ids = ids.localCheckpoint()
-            n_dead = ids.count()
-            if n_dead == 0:
-                return 0
-            nm = f"ts-{uuid.uuid4().hex[:12]}"
-            dest = os.path.join(local, AnnIndex._TOMBSTONES, nm)
-            ids.coalesce(1).write.parquet(dest)
+            with staged(ids, eager=True) as ids:
+                n_dead = ids.count()
+                if n_dead == 0:
+                    return 0
+                nm = f"ts-{uuid.uuid4().hex[:12]}"
+                dest = os.path.join(local, AnnIndex._TOMBSTONES, nm)
+                ids.coalesce(1).write.parquet(dest)
             # counted entry (r17): the dead-doc count rides in the
             # commit so compact_on_pressure's fraction dimension reads
             # no sidecar (bare-string pre-r17 entries normalize in
@@ -608,12 +599,6 @@ class AnnIndex:
 
                 shutil.rmtree(dest, ignore_errors=True)
                 raise
-            finally:
-                # count + sidecar write have materialized — release
-                # the matched-ids checkpoint's blocks (r18, guide §5)
-                from apachebeamkmeans_spark.checkpoints import release_blocks
-
-                release_blocks(ids)
             return n_dead
         layout = self._layout()
         cells = sorted(
@@ -637,12 +622,17 @@ class AnnIndex:
         # when duplicate vec_id rows exist (ADVICE r16 low); the
         # physical rewrite below still drops every matching ROW
         n_del = matched.select("vec_id").distinct().count()
-        # eager snapshot BEFORE the write: Spark (correctly) refuses to
-        # overwrite a path its own plan reads from, and the post-write
-        # emptied-cell check below must see the pre-delete survivors,
-        # not a re-read of the mutated layout. The checkpoint holds the
-        # AFFECTED cells' survivors only — the delete's working set.
-        survivors = affected.filter(~pred).localCheckpoint()
+        with staged(affected.filter(~pred), eager=True) as survivors:
+            self._rewrite_cells(survivors, cells)
+        return n_del
+
+    def _rewrite_cells(self, survivors: DataFrame, cells: list[int]) -> None:
+        """Overwrite `cells` with `survivors`, an EAGER snapshot taken
+        before the write: Spark (correctly) refuses to overwrite a
+        path its own plan reads from, and the emptied-cell check must
+        see the pre-write survivors, not a re-read of the mutated
+        layout. The snapshot holds the affected cells' survivors only
+        — the rewrite's working set."""
         (
             survivors.repartition(len(cells), "coarse_id")
             .write.partitionBy("coarse_id")
@@ -662,10 +652,6 @@ class AnnIndex:
                     self._spark,
                     os.path.join(self.data_root, f"coarse_id={c}"),
                 )
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(survivors)  # write + kept-collect materialized
-        return n_del
 
     def upsert(self, embeddings: DataFrame,
                id_col: str = "vec_id", vec_col: str = "embedding") -> int:
@@ -714,30 +700,9 @@ class AnnIndex:
         if cells:
             affected = layout.filter(F.col("coarse_id").isin(cells))
             n_replaced = affected.join(ids, "vec_id").count()
-            # eager snapshot before the self-overwrite (see `delete`)
-            survivors = affected.join(
-                ids, "vec_id", "left_anti"
-            ).localCheckpoint()
-            (
-                survivors.repartition(len(cells), "coarse_id")
-                .write.partitionBy("coarse_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(self.data_root)
-            )
-            kept = {
-                r["coarse_id"]
-                for r in survivors.select("coarse_id").distinct().collect()
-            }
-            for c in cells:
-                if c not in kept:
-                    _fs_delete(
-                        self._spark,
-                        os.path.join(self.data_root, f"coarse_id={c}"),
-                    )
-            from apachebeamkmeans_spark.checkpoints import release_blocks
-
-            release_blocks(survivors)  # write + kept-collect done
+            with staged(affected.join(ids, "vec_id", "left_anti"),
+                        eager=True) as survivors:
+                self._rewrite_cells(survivors, cells)
         if self.codebooks is None:
             SIM.append_to_ivf_index(vecs, self.centers, self.data_root,
                                     carry=names)
@@ -757,19 +722,20 @@ class AnnIndex:
             local = _local_path(self.path)
             commit, fence = IC.read_commit(local, missing_ok=True)
             commit = dict(commit or {})
-            surv = ts.join(ids, "vec_id", "left_anti").localCheckpoint()
             old_names = [
                 t if isinstance(t, str) else t["file"]
                 for t in commit.get("tombstones", [])
             ]
             new_names: list[str] = []
-            n_surv = surv.count()
-            if n_surv > 0:
-                nm = f"ts-{uuid.uuid4().hex[:12]}"
-                surv.coalesce(1).write.parquet(
-                    os.path.join(local, AnnIndex._TOMBSTONES, nm)
-                )
-                new_names = [nm]
+            with staged(ts.join(ids, "vec_id", "left_anti"),
+                        eager=True) as surv:
+                n_surv = surv.count()
+                if n_surv > 0:
+                    nm = f"ts-{uuid.uuid4().hex[:12]}"
+                    surv.coalesce(1).write.parquet(
+                        os.path.join(local, AnnIndex._TOMBSTONES, nm)
+                    )
+                    new_names = [nm]
             commit["tombstones"] = [
                 {"file": nm, "n": int(n_surv)} for nm in new_names
             ]
@@ -932,45 +898,37 @@ class AnnIndex:
         names = tuple(n for n, _ in self.meta)
         # one logical read of the current generation; Lloyd's driver
         # loop re-reads it per iteration, so stage it once
-        vecs = self._live_layout().select(
+        live = self._live_layout().select(
             F.col("vec_id").alias("id"), F.col("f").alias("features"),
             *[F.col(n) for n in names],
-        ).localCheckpoint(eager=False)
-        if k is None:
-            from apachebeamkmeans_spark.operators.ann_train import knn_cells
-
-            k = knn_cells(vecs.count())
-        centers = [
-            [ANN.round_param(v) for v in c]
-            for c in ANN.ivf_train(vecs, k, n_iters)
-        ]
-        if self.codebooks is None:
-            books = None
-
-            def build(dest: str) -> None:
-                SIM.build_ivf_index(vecs, centers, dest, carry=names)
-        else:
-            books = [
-                [[ANN.round_param(v) for v in cent] for cent in book]
-                for book in ANN.pq_train(
-                    vecs, len(self.codebooks), len(self.codebooks[0]),
-                    n_iters,
-                )
+        )
+        with staged(live) as vecs:
+            if k is None:
+                k = ANN.knn_cells(vecs.count())
+            centers = [
+                [ANN.round_param(v) for v in c]
+                for c in ANN.ivf_train(vecs, k, n_iters)
             ]
+            if self.codebooks is None:
+                books = None
 
-            def build(dest: str) -> None:
-                SIM.build_ivfpq_index(vecs, centers, books, dest,
-                                      carry=names)
+                def build(dest: str) -> None:
+                    SIM.build_ivf_index(vecs, centers, dest, carry=names)
+            else:
+                books = [
+                    [[ANN.round_param(v) for v in cent] for cent in book]
+                    for book in ANN.pq_train(
+                        vecs, len(self.codebooks), len(self.codebooks[0]),
+                        n_iters,
+                    )
+                ]
 
-        try:
+                def build(dest: str) -> None:
+                    SIM.build_ivfpq_index(vecs, centers, books, dest,
+                                          carry=names)
+
             self._rewrite_generation(build, centers, books, strategy,
                                      "retrain", retain)
-        finally:
-            # trainers + the generation build have materialized —
-            # release the staged-corpus checkpoint (r18, guide §5)
-            from apachebeamkmeans_spark.checkpoints import release_blocks
-
-            release_blocks(vecs)
         self.centers = centers
         self.codebooks = books
 

@@ -1,26 +1,31 @@
-"""Scoped release of localCheckpoint storage blocks (r17 verdict
-"What's wrong" #1 / r18 item 3).
+"""Checkpoint storage: one rule for who releases a `localCheckpoint`.
 
 Operators checkpoint intermediates (`localCheckpoint`) to cut lineage
-and share materializations; the blocks are RDD-level persists that
-`spark.catalog.clearCache()` never touches and that the GC-driven
-ContextCleaner releases only when the driver-side object happens to be
-collected. A long-lived session — the 100 TB posture — accumulates
-them (measured r17: 4-6× late-suite inflation across 197 queries in
-one JVM before the bench-side sweep). The ENGINE owns the fix now:
-every checkpoint whose consumers all materialize before its operator
-returns is released explicitly via `release_blocks` in a try/finally;
-checkpoints that feed a RETURNED lazy plan cannot be released by the
-engine (unpersisting a lineage-truncated frame before its consumer
-runs would lose the data) and remain the ContextCleaner's/harness's
-job.
+and to share one materialization among several jobs. The blocks are
+RDD-level persists: `spark.catalog.clearCache()` never touches them,
+and the GC-driven ContextCleaner releases them only when the
+driver-side object happens to be collected, so a long-lived session
+accumulates them. Every checkpoint falls under exactly one case:
+
+- **Consumed inside the function** (every consumer materializes before
+  it returns): stage it with `with staged(df) as x:`, which releases
+  the blocks when the block exits, by return or by exception.
+- **Feeds the returned lazy plan**: left to the ContextCleaner.
+  Unpersisting a lineage-truncated frame before its consumer runs
+  would lose the data.
+- **Rolling loop** (each round's checkpoint supersedes the previous
+  one, and the last one is returned): the loop calls `release_blocks`
+  on each superseded checkpoint itself.
 
 `release_blocks` finds the checkpoint's RDD as the analyzed plan's
-LogicalRDD root — the only handle PySpark exposes; `df.rdd` would
+LogicalRDD root, the only handle PySpark exposes; `df.rdd` would
 build a NEW conversion RDD, not the persisted one.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -43,3 +48,15 @@ def release_blocks(df: DataFrame | None) -> None:
             root.rdd().unpersist(False)
     except Exception:  # noqa: BLE001 — best-effort by design
         pass
+
+
+@contextmanager
+def staged(df: DataFrame, eager: bool = False) -> Iterator[DataFrame]:
+    """Yield `df.localCheckpoint(eager=eager)` and release its blocks
+    on exit. Nothing read from the staged frame may outlive the block:
+    collect or write every consumer inside it."""
+    ckpt = df.localCheckpoint(eager=eager)
+    try:
+        yield ckpt
+    finally:
+        release_blocks(ckpt)

@@ -906,12 +906,6 @@ def _curate_run(args, spark) -> int:
     return 0
 
 
-def _normalize(argv: list[str]) -> list[str]:
-    # accept the reference's `--key=value` form verbatim (argparse
-    # already handles it) and its no-space variants
-    return argv
-
-
 def main(argv: list[str] | None = None, spark=None) -> int:
     raw = argv if argv is not None else sys.argv[1:]
     if raw and raw[0] == "curate":
@@ -920,7 +914,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         return ann_main(raw[1:], spark=spark)
     if raw and raw[0] == "retrieve":
         return retrieve_main(raw[1:], spark=spark)
-    args = build_parser().parse_args(_normalize(raw))
+    args = build_parser().parse_args(raw)
     owns_session = spark is None
     if owns_session:
         spark = get_spark("abk-kmeans-cli")
@@ -935,18 +929,21 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         max_iter=args.max_iteration, seed=args.seed, init=args.init,
         weight=args.weight,
     )
-    for exp in range(args.experiments):
-        t0 = time.perf_counter()  # per-run timer (not cumulative — §8.8)
-        model = KMeans(params).fit(pts)
-        io.write_text_single(model.format_clusters(pts), f"{args.output}{exp}")
-        elapsed = time.perf_counter() - t0
-        if args.time_file:
-            with open(args.time_file, "a") as f:
-                f.write(f"{elapsed}\n")
-        if args.iteration_file:
-            with open(args.iteration_file, "a") as f:
-                f.write(f"{model.n_iter}\n")
-        print(f"experiment {exp}: {model.n_iter} iterations, {elapsed:.2f}s")
+    try:
+        for exp in range(args.experiments):
+            t0 = time.perf_counter()  # per-run timer (not cumulative — §8.8)
+            model = KMeans(params).fit(pts)
+            io.write_text_single(model.format_clusters(pts), f"{args.output}{exp}")
+            elapsed = time.perf_counter() - t0
+            if args.time_file:
+                with open(args.time_file, "a") as f:
+                    f.write(f"{elapsed}\n")
+            if args.iteration_file:
+                with open(args.iteration_file, "a") as f:
+                    f.write(f"{model.n_iter}\n")
+            print(f"experiment {exp}: {model.n_iter} iterations, {elapsed:.2f}s")
+    finally:
+        pts.unpersist()
     if owns_session:
         spark.stop()
     return 0

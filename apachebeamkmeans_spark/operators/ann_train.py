@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import lloyd
@@ -170,33 +171,24 @@ def ivf_train(vecs: DataFrame, k: int, n_iters: int = 5, seed="ivf",
     base = vecs.select(
         F.col(id_col).alias("id"), F.col(features_col).alias("features")
     ).withColumn("__fvec", array_to_vector("features"))
-    base = base.localCheckpoint(eager=False)
     mean_agg = Summarizer.mean(F.col("__fvec")).alias("mean")
     from apachebeamkmeans_spark.session import driver_loop_conf
 
-    try:
-        # AQE off for the iteration loop: one scheduled job per
-        # iteration instead of two (see driver_loop_conf's rationale)
-        with driver_loop_conf(vecs.sparkSession):
-            for _ in range(n_iters):
-                rows = (
-                    base.withColumn(
-                        "center_id",
-                        lloyd.sql_assign_expr(centers, 2.0, "features"),
-                    )
-                    .groupBy("center_id")
-                    .agg(mean_agg)
-                    .collect()
+    # AQE off for the iteration loop: one scheduled job per
+    # iteration instead of two (see driver_loop_conf's rationale)
+    with staged(base) as base, driver_loop_conf(vecs.sparkSession):
+        for _ in range(n_iters):
+            rows = (
+                base.withColumn(
+                    "center_id",
+                    lloyd.sql_assign_expr(centers, 2.0, "features"),
                 )
-                by_id = {r["center_id"]: list(r["mean"]) for r in rows}
-                centers = [by_id.get(i, centers[i]) for i in range(k)]
-    finally:
-        # every consumer (the iteration collects) has materialized —
-        # release the checkpoint's storage blocks instead of waiting
-        # for driver GC + ContextCleaner (r18, guide §5)
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(base)
+                .groupBy("center_id")
+                .agg(mean_agg)
+                .collect()
+            )
+            by_id = {r["center_id"]: list(r["mean"]) for r in rows}
+            centers = [by_id.get(i, centers[i]) for i in range(k)]
     return centers
 
 
@@ -271,23 +263,15 @@ def pq_train(vecs: DataFrame, m: int, ksub: int, n_iters: int = 5, seed="pq",
     ]
     subs = F.array(*[F.slice(f, s * dsub + 1, dsub) for s in range(m)])
     ex = vecs.select(F.posexplode(subs).alias("s", "sub"))
-    ex = ex.localCheckpoint(eager=False)  # reused every iteration
     aggs = [F.avg(F.col("sub")[j]).alias(f"c{j}") for j in range(dsub)] + [
         F.count(F.lit(1)).alias("n")
     ]
     from apachebeamkmeans_spark.session import driver_loop_conf
 
-    try:
-        # AQE off for the iteration loop (driver_loop_conf rationale)
-        with driver_loop_conf(vecs.sparkSession):
-            codebooks = _pq_train_loop(
-                ex, codebooks, m, ksub, dsub, n_iters, aggs
-            )
-    finally:
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(ex)
-    return codebooks
+    # the exploded frame is reused every iteration; AQE off for the
+    # iteration loop (driver_loop_conf rationale)
+    with staged(ex) as ex, driver_loop_conf(vecs.sparkSession):
+        return _pq_train_loop(ex, codebooks, m, ksub, dsub, n_iters, aggs)
 
 
 def _pq_train_loop(ex, codebooks, m, ksub, dsub, n_iters, aggs):
@@ -432,10 +416,9 @@ def pca_train(vecs: DataFrame, out_dim: int,
     from pyspark.ml.functions import array_to_vector
     from pyspark.ml.stat import Correlation, Summarizer
 
-    base = vecs.select(
+    with staged(vecs.select(
         array_to_vector(F.col(features_col)).alias("__fvec")
-    ).localCheckpoint(eager=False)
-    try:
+    )) as base:
         if not base.head(1):
             raise ValueError("pca_train requires a non-empty points frame")
         row = base.agg(
@@ -445,11 +428,6 @@ def pca_train(vecs: DataFrame, out_dim: int,
         mean = [round_param(v) for v in row["m"]]
         std = list(row["s"])
         corr = Correlation.corr(base, "__fvec").collect()[0][0].toArray()
-    finally:
-        # all consumers (head/agg/corr collects) have materialized
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(base)
     dim = len(std)
     # Pearson corr is NaN for a zero-variance dimension; its TRUE
     # covariance with anything is exactly 0.0 (x − mean ≡ 0), which is

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import text as T
 from apachebeamkmeans_spark.operators import textstats as TX
 
@@ -155,19 +156,19 @@ def quality_classifier_report(docs: DataFrame, train_mod: int = 5,
     # checkpoint: the verdict touches the frame ~5 times (two counts,
     # the fit's passes, two accuracy scans) — without it each one
     # re-tokenizes every document from scratch
-    feats = feature_frame(docs).localCheckpoint(eager=False)
-    train = feats.filter(F.col("doc_id") % train_mod != 0)
-    holdout = feats.filter(F.col("doc_id") % train_mod == 0)
-    model = fit_quality_model(train)
-    spark = docs.sparkSession
-    return spark.createDataFrame(
-        [(
+    with staged(feature_frame(docs)) as feats:
+        train = feats.filter(F.col("doc_id") % train_mod != 0)
+        holdout = feats.filter(F.col("doc_id") % train_mod == 0)
+        model = fit_quality_model(train)
+        row = (
             train.count(),
             holdout.count(),
             len(FEATURE_NAMES),
             _accuracy(model, train) >= train_floor,
             _accuracy(model, holdout) >= holdout_floor,
-        )],
+        )
+    return docs.sparkSession.createDataFrame(
+        [row],
         "n_train long, n_holdout long, n_features int, "
         "train_acc_ok boolean, holdout_acc_ok boolean",
     )

@@ -23,8 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import release_blocks, staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions import text as T
+from apachebeamkmeans_spark.session import driver_loop_conf
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -551,27 +553,41 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
         )
         .select("__e.*")
         .distinct()
-        # eager=False: the count below materializes the checkpoint in
-        # the SAME job it counts it — the eager form paid a separate
-        # materialization job first (r18, guide §1.2 fewer passes)
-        .localCheckpoint(eager=False)
     )
-    # localCheckpoint (not cache): each round's frame feeds the next
-    # round's joins, so without truncation the plan nests one join
-    # deeper per round and planning blows up — the iterative-lineage
-    # hazard of SURVEY §7.5. Checkpointing keeps every round's plan
-    # flat and the convergence check O(1) to plan.
+    # Staged lazily: the count below materializes the checkpoint in
+    # the SAME job it counts it (r18, guide §1.2 fewer passes).
     #
     # The edge set after verification is orders of magnitude smaller
     # than the corpus, so the loop's partitioning follows the EDGE
     # count, not the session default — a dedup graph of a few thousand
     # edges rounds through 1-partition tasks; a 100 TB corpus's edge
-    # set still fans out.
-    from apachebeamkmeans_spark.checkpoints import release_blocks
+    # set still fans out. The coalesce is narrow: every round reads
+    # the staged blocks through it, no second copy of the edges.
+    with staged(raw_edges) as raw_edges:
+        n_parts = max(1, min(raw_edges.count() // 100_000 + 1, 200))
+        edges = raw_edges.coalesce(n_parts)
+        labels = _propagate_min_labels(edges, n_parts, max_rounds)
+    if labels is None:
+        # Never return partially-propagated labels silently: they would
+        # split one true component into several keepers.
+        raise RuntimeError(
+            f"duplicate_clusters: min-label propagation did not converge in "
+            f"{max_rounds} rounds (component diameter > 2^{max_rounds})"
+        )
+    return labels
 
-    n_parts = max(1, min(raw_edges.count() // 100_000 + 1, 200))
-    edges = raw_edges.coalesce(n_parts).localCheckpoint()
-    release_blocks(raw_edges)  # superseded by the coalesced checkpoint
+
+def _propagate_min_labels(edges: DataFrame, n_parts: int,
+                          max_rounds: int) -> DataFrame | None:
+    """The rolling propagation loop of `duplicate_clusters` over the
+    symmetric `edges`. Returns the converged (doc_id, cluster_id)
+    labels, or None (keeping no checkpoint) if `max_rounds` rounds do
+    not converge."""
+    # localCheckpoint (not cache): each round's frame feeds the next
+    # round's joins, so without truncation the plan nests one join
+    # deeper per round and planning blows up — the iterative-lineage
+    # hazard of SURVEY §7.5. Checkpointing keeps every round's plan
+    # flat and the convergence check O(1) to plan.
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -583,14 +599,11 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     # projection over it, and release_blocks frees only a frame whose
     # root IS the checkpoint
     ckpt = labels
-    converged = False
-    from apachebeamkmeans_spark.session import driver_loop_conf
-
     # AQE off for the propagation loop: each round's checkpoint +
     # convergence count otherwise schedules extra re-planned jobs for
     # exchanges AQE can never improve (edge-count-sized frames; see
     # session.driver_loop_conf; r18)
-    with driver_loop_conf(pairs.sparkSession):
+    with driver_loop_conf(edges.sparkSession):
         for _ in range(max_rounds):
             neighbor_min = (
                 edges.join(labels, edges.dst == labels.doc_id)
@@ -638,18 +651,9 @@ def duplicate_clusters(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             ckpt = new_labels
             labels = new_labels.drop("changed")
             if changed == 0:
-                converged = True
-                break
-    release_blocks(edges)  # fully consumed; only `labels` is returned
-    if not converged:
-        release_blocks(ckpt)  # the partial labels are never returned
-        # Never return partially-propagated labels silently: they would
-        # split one true component into several keepers.
-        raise RuntimeError(
-            f"duplicate_clusters: min-label propagation did not converge in "
-            f"{max_rounds} rounds (component diameter > 2^{max_rounds})"
-        )
-    return labels
+                return labels
+    release_blocks(ckpt)  # the partial labels are never returned
+    return None
 
 
 def keeper_by_quality(clusters: DataFrame, quality: DataFrame,

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
+
 DAMPING = 0.85
 ITERATIONS = 5
 
@@ -40,8 +42,6 @@ def pagerank(
     # symmetrize with one explode instead of pairs ∪ pairs.swapped —
     # the union form re-executes the upstream pair subtree per branch
     # (r17's duplicate_clusters fix, guide §2.4, applied here in r18);
-    # eager=False so the count below materializes the checkpoint in
-    # the same job it counts it
     raw_edges = (
         pairs.select(
             F.explode(
@@ -59,15 +59,14 @@ def pagerank(
         )
         .select("__e.*")
         .distinct()
-        .localCheckpoint(eager=False)
     )
+    # lazy, so the count below materializes the checkpoint in the same
+    # job it counts it; the coalesced (eager) checkpoint supersedes it.
     # Like duplicate_clusters: the verified pair graph is far smaller
     # than the corpus, so partition by edge count, not session default.
-    from apachebeamkmeans_spark.checkpoints import release_blocks
-
-    n_parts = max(1, min(raw_edges.count() // 100_000 + 1, 200))
-    edges = raw_edges.coalesce(n_parts).localCheckpoint()
-    release_blocks(raw_edges)  # superseded by the coalesced checkpoint
+    with staged(raw_edges) as raw_edges:
+        n_parts = max(1, min(raw_edges.count() // 100_000 + 1, 200))
+        edges = raw_edges.coalesce(n_parts).localCheckpoint()
 
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("src").alias("doc_id"))

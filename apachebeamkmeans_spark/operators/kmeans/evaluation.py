@@ -33,8 +33,10 @@ def contingency(assigned: DataFrame, cluster_col: str = "center_id",
 
 def quality_metrics(assigned: DataFrame, cluster_col: str = "center_id",
                     label_col: str = "label") -> DataFrame:
-    """One row: (n, purity, ari) — rounded to 6 for oracle hashing."""
-    cont = contingency(assigned, cluster_col, label_col).cache()
+    """One row: (n, purity, ari) — rounded to 6 for oracle hashing.
+    Returned lazy, so nothing is cached: the three aggregates share one
+    contingency exchange (ReusedExchange)."""
+    cont = contingency(assigned, cluster_col, label_col)
 
     sum_nij = cont.agg(
         F.sum(_c2(F.col("n_ij"))).alias("s_ij"), F.sum("n_ij").alias("n")

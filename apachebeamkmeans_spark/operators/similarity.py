@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 
@@ -360,34 +361,32 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
     )
     # cut the assign tree before the explode — same 181 s codegen trap
     # the flat build documents (queries_similarity.q_sim_knn_graph)
-    probed = pts.select(
-        "vec_id",
-        "f",
-        F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe).alias("probes"),
-    ).localCheckpoint(eager=True)
-    lit_centers = D.lit_array(centers)
-    ex = probed.select(
-        "vec_id", "probes", F.explode("probes").alias("coarse_id"),
-        F.col("f"),
-    ).select(
-        "vec_id", "probes", "coarse_id",
-        F.zip_with(
+    probes = F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe)
+    with staged(pts.select("vec_id", "f", probes.alias("probes")),
+                eager=True) as probed:
+        lit_centers = D.lit_array(centers)
+        ex = probed.select(
+            "vec_id", "probes", F.explode("probes").alias("coarse_id"),
             F.col("f"),
-            F.element_at(lit_centers, F.col("coarse_id") + 1),
-            lambda x, c: x - c,
-        ).alias("r"),
-    )
-    # (vec_id, codes, lut, coarse_id, probes): ~m·ksub doubles per row
-    # instead of the raw vector — checkpointed so the self-join fans
-    # out a materialized table, not the encode tree, to both sides.
-    # Arrow/numpy encode (r17, guide §4.2): this is the one consumer
-    # that encodes the n·nprobe EXPLODED fan-out, where the HOF form's
-    # interpreted m·ksub·dsub ops/row dominate; bit-identical by the
-    # column-order-accumulation argument on pq_encode_lut_arrow.
-    enc = pq_encode_lut_arrow(
-        ex, codebooks, id_col="vec_id", features_col="r",
-        carry=("coarse_id", "probes"),
-    ).localCheckpoint(eager=True)
+        ).select(
+            "vec_id", "probes", "coarse_id",
+            F.zip_with(
+                F.col("f"),
+                F.element_at(lit_centers, F.col("coarse_id") + 1),
+                lambda x, c: x - c,
+            ).alias("r"),
+        )
+        # (vec_id, codes, lut, coarse_id, probes): ~m·ksub doubles per row
+        # instead of the raw vector — checkpointed so the self-join fans
+        # out a materialized table, not the encode tree, to both sides.
+        # Arrow/numpy encode (r17, guide §4.2): this is the one consumer
+        # that encodes the n·nprobe EXPLODED fan-out, where the HOF form's
+        # interpreted m·ksub·dsub ops/row dominate; bit-identical by the
+        # column-order-accumulation argument on pq_encode_lut_arrow.
+        enc = pq_encode_lut_arrow(
+            ex, codebooks, id_col="vec_id", features_col="r",
+            carry=("coarse_id", "probes"),
+        ).localCheckpoint(eager=True)
 
     def _adc(lut_col, codes_col):
         return _adc_expr(lut_col, codes_col, m)

@@ -16,9 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators import indexcommit as IC
-from apachebeamkmeans_spark.operators.textstats import bm25_stage
+from apachebeamkmeans_spark.operators.textstats import bm25_tokens
 
 BM25_INDEX_BUCKETS = 32
 
@@ -474,18 +475,17 @@ def bm25_index_delete(spark, index_path: str,
     if mode == "tombstone":
         import uuid
 
-        matched = (
-            posts.join(ids, "doc_id", "semi")
-            .select("doc_id", "dl").distinct()
-            .localCheckpoint()
-        )
-        n_dead = matched.count()
-        if n_dead == 0:
-            return 0
-        name = f"ts-{uuid.uuid4().hex[:12]}"
-        matched.coalesce(1).write.parquet(
-            os.path.join(index_path, "tombstones", name)
-        )
+        with staged(
+            posts.join(ids, "doc_id", "semi").select("doc_id", "dl").distinct(),
+            eager=True,
+        ) as matched:
+            n_dead = matched.count()
+            if n_dead == 0:
+                return 0
+            name = f"ts-{uuid.uuid4().hex[:12]}"
+            matched.coalesce(1).write.parquet(
+                os.path.join(index_path, "tombstones", name)
+            )
         # the dead-doc count rides in the commit entry (r17) so the
         # compact-pressure heuristic can compute the tombstoned
         # FRACTION from the commit alone — no sidecar read. Pre-r17
@@ -601,27 +601,45 @@ def _bm25_survivor_rewrite(spark, index_path: str, commit: dict, posts,
     entry is kept even at n=0 when the affected segments carried
     replay tags (dropping them would let a re-delivered batch
     resurrect deleted docs)."""
+    # pinned eagerly: the affected collect, the count, and the
+    # survivor anti-join must see one consistent snapshot
+    with staged(
+        posts.join(ids, "doc_id", "semi").select("seg", "doc_id").distinct(),
+        eager=True,
+    ) as matched:
+        affected = sorted({r["seg"] for r in matched.select("seg")
+                           .distinct().collect()})
+        if not affected:
+            return [], None, 0
+        n_deleted = matched.select("doc_id").distinct().count()
+        new_id = 1 + max(s["id"] for s in commit["segments"])
+        with staged(
+            posts.filter(F.col("seg").isin(affected))
+            .join(matched.select("doc_id").distinct(), "doc_id", "left_anti"),
+            eager=True,
+        ) as surv:
+            srow = _bm25_write_survivor_segment(index_path, surv, new_id)
+    n_surv, sdl_surv = int(srow["n"]), int(srow["sdl"] or 0)
+    entry = {"id": new_id, "n": n_surv, "sdl": sdl_surv, "impact": True}
+    if srow["dmin"] is not None:
+        entry["dmin"] = int(srow["dmin"])
+        entry["dmax"] = int(srow["dmax"])
+    tags = _bm25_seen_tags(
+        s for s in commit["segments"] if s["id"] in set(affected)
+    )
+    if tags:
+        entry["batch_tags"] = sorted(tags)
+    if n_surv == 0 and not tags:
+        entry = None
+    return affected, entry, n_deleted
+
+
+def _bm25_write_survivor_segment(index_path: str, surv, new_id: int):
+    """Write the staged survivor postings `surv` as segment `new_id`
+    (uncommitted) and return its (n, sdl, dmin, dmax) row."""
     import os
     import shutil
 
-    # pinned eagerly: the affected collect, the count, and the
-    # survivor anti-join must see one consistent snapshot
-    matched = (
-        posts.join(ids, "doc_id", "semi")
-        .select("seg", "doc_id").distinct()
-        .localCheckpoint()
-    )
-    affected = sorted({r["seg"] for r in matched.select("seg")
-                       .distinct().collect()})
-    if not affected:
-        return [], None, 0
-    n_deleted = matched.select("doc_id").distinct().count()
-    surv = (
-        posts.filter(F.col("seg").isin(affected))
-        .join(matched.select("doc_id").distinct(), "doc_id", "left_anti")
-        .localCheckpoint()
-    )
-    new_id = 1 + max(s["id"] for s in commit["segments"])
     for layout in ("postings", "df"):
         # crashed-prior-attempt retry contract (as _bm25_write_segment)
         shutil.rmtree(
@@ -632,8 +650,7 @@ def _bm25_survivor_rewrite(spark, index_path: str, commit: dict, posts,
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"),
         F.min("doc_id").alias("dmin"), F.max("doc_id").alias("dmax"),
     ).collect()[0]
-    n_surv, sdl_surv = int(srow["n"]), int(srow["sdl"] or 0)
-    if n_surv > 0:
+    if srow["n"] > 0:
         write_shards = 8
         surv_posts = surv.withColumn("seg", F.lit(new_id)).repartition(
             F.col("tbucket"),
@@ -641,7 +658,7 @@ def _bm25_survivor_rewrite(spark, index_path: str, commit: dict, posts,
         )
         # callers read through _bm25_read_postings_maintenance, so
         # impact_key is always present and non-null here — the
-        # survivor segment is full-impact-layout (and marked so below)
+        # survivor segment is full-impact-layout (the caller marks it)
         surv_posts = surv_posts.sortWithinPartitions(
             "tbucket", "term", F.desc("impact_key"),
         )
@@ -659,18 +676,7 @@ def _bm25_survivor_rewrite(spark, index_path: str, commit: dict, posts,
             .partitionBy("seg", "tbucket")
             .parquet(f"{index_path}/df")
         )
-    entry = {"id": new_id, "n": n_surv, "sdl": sdl_surv, "impact": True}
-    if srow["dmin"] is not None:
-        entry["dmin"] = int(srow["dmin"])
-        entry["dmax"] = int(srow["dmax"])
-    tags = _bm25_seen_tags(
-        s for s in commit["segments"] if s["id"] in set(affected)
-    )
-    if tags:
-        entry["batch_tags"] = sorted(tags)
-    if n_surv == 0 and not tags:
-        entry = None
-    return affected, entry, n_deleted
+    return srow
 
 
 def _bm25_seen_tags(segments) -> set:
@@ -800,16 +806,15 @@ def bm25_index_upsert(docs: DataFrame, index_path: str,
 
         bids = docs.select("doc_id").distinct()
         if existing_ts.join(bids, "doc_id", "semi").count() > 0:
-            surv_ts = existing_ts.join(
-                bids, "doc_id", "left_anti"
-            ).localCheckpoint()
             new_entries = []
-            if surv_ts.count() > 0:
-                nm = f"ts-{uuid.uuid4().hex[:12]}"
-                surv_ts.coalesce(1).write.parquet(
-                    os.path.join(index_path, "tombstones", nm)
-                )
-                new_entries = [{"file": nm}]
+            with staged(existing_ts.join(bids, "doc_id", "left_anti"),
+                        eager=True) as surv_ts:
+                if surv_ts.count() > 0:
+                    nm = f"ts-{uuid.uuid4().hex[:12]}"
+                    surv_ts.coalesce(1).write.parquet(
+                        os.path.join(index_path, "tombstones", nm)
+                    )
+                    new_entries = [{"file": nm}]
             reap_ts = [t["file"] for t in commit.get("tombstones", [])]
             commit["tombstones"] = new_entries
     segs = [s["id"] for s in commit["segments"]]
@@ -887,60 +892,60 @@ def _bm25_write_segment(docs: DataFrame, out_path: str, seg: int,
             os.path.join(out_path, layout, f"seg={seg}"),
             ignore_errors=True,
         )
-    staged = bm25_stage(docs)
-    tf = (
-        staged.select(
-            "doc_id", F.col("__dl").alias("dl"),
-            F.explode("__toks").alias("term"),
+    with staged(bm25_tokens(docs)) as toks:
+        tf = (
+            toks.select(
+                "doc_id", F.col("__dl").alias("dl"),
+                F.explode("__toks").alias("term"),
+            )
+            .groupBy("term", "doc_id", "dl")
+            .agg(F.count(F.lit(1)).alias("tf"))
         )
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    if meta_cols:
-        tf = tf.join(docs.select("doc_id", *meta_cols), "doc_id")
-    # impact_key = tf/dl, the scale-free surrogate for the row's score
-    # contribution (monotone bound: contribution < idf·(k1+1)·avgdl·
-    # (tf/dl)/(k1·b) — see bm25_indexed_topk's pruned mode). Stored so
-    # the impact-ordered layout below gives parquet row-group stats the
-    # serve-side `impact_key >= r0` filter can skip on.
-    tf = tf.withColumn(
-        "impact_key",
-        F.col("tf").cast("double") / F.col("dl").cast("double"),
-    )
-    mode = "overwrite" if overwrite else "append"
-    write_shards = 8
-    tbucket = (F.crc32(F.col("term")) % n_buckets).cast("int")
-    (
-        tf.withColumn("seg", F.lit(seg))
-        .withColumn("tbucket", tbucket)
-        .repartition(
-            F.col("tbucket"),
-            F.pmod(F.hash("doc_id"), F.lit(write_shards)),
+        if meta_cols:
+            tf = tf.join(docs.select("doc_id", *meta_cols), "doc_id")
+        # impact_key = tf/dl, the scale-free surrogate for the row's score
+        # contribution (monotone bound: contribution < idf·(k1+1)·avgdl·
+        # (tf/dl)/(k1·b) — see bm25_indexed_topk's pruned mode). Stored so
+        # the impact-ordered layout below gives parquet row-group stats the
+        # serve-side `impact_key >= r0` filter can skip on.
+        tf = tf.withColumn(
+            "impact_key",
+            F.col("tf").cast("double") / F.col("dl").cast("double"),
         )
-        # impact-ordered within each file: (term, impact DESC) makes a
-        # big term's posting run contiguous with DESCENDING row-group
-        # impact stats — the Block-Max layout, in parquet terms: a
-        # pruned serve reads the high-impact head blocks of a stopword
-        # run and SKIPS the tail on row-group min/max alone
-        .sortWithinPartitions(
-            "tbucket", "term", F.desc("impact_key"),
+        mode = "overwrite" if overwrite else "append"
+        write_shards = 8
+        tbucket = (F.crc32(F.col("term")) % n_buckets).cast("int")
+        (
+            tf.withColumn("seg", F.lit(seg))
+            .withColumn("tbucket", tbucket)
+            .repartition(
+                F.col("tbucket"),
+                F.pmod(F.hash("doc_id"), F.lit(write_shards)),
+            )
+            # impact-ordered within each file: (term, impact DESC) makes a
+            # big term's posting run contiguous with DESCENDING row-group
+            # impact stats — the Block-Max layout, in parquet terms: a
+            # pruned serve reads the high-impact head blocks of a stopword
+            # run and SKIPS the tail on row-group min/max alone
+            .sortWithinPartitions(
+                "tbucket", "term", F.desc("impact_key"),
+            )
+            .write.mode(mode)
+            .partitionBy("seg", "tbucket")
+            .parquet(f"{out_path}/postings")
         )
-        .write.mode(mode)
-        .partitionBy("seg", "tbucket")
-        .parquet(f"{out_path}/postings")
-    )
-    (
-        tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("seg", F.lit(seg))
-        .withColumn("tbucket", tbucket)
-        .write.mode(mode)
-        .partitionBy("seg", "tbucket")
-        .parquet(f"{out_path}/df")
-    )
-    srow = staged.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("__dl").alias("sdl"),
-        F.min("doc_id").alias("dmin"), F.max("doc_id").alias("dmax"),
-    ).collect()[0]
+        (
+            tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+            .withColumn("seg", F.lit(seg))
+            .withColumn("tbucket", tbucket)
+            .write.mode(mode)
+            .partitionBy("seg", "tbucket")
+            .parquet(f"{out_path}/df")
+        )
+        srow = toks.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("__dl").alias("sdl"),
+            F.min("doc_id").alias("dmin"), F.max("doc_id").alias("dmax"),
+        ).collect()[0]
     entry = {
         "id": seg, "n": int(srow["n"]), "sdl": int(srow["sdl"] or 0),
         # r16 layout marker: this writer materializes impact_key on

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import release_blocks
 from apachebeamkmeans_spark.fixtures import STOPWORDS
 from apachebeamkmeans_spark.functions import hashing as H
 from apachebeamkmeans_spark.functions import text as T
@@ -298,7 +299,6 @@ def _bpe_fit_vocab(vocab: DataFrame, n_merges: int,
     tests/test_text_ops (including an adversarial vocab built to
     trigger every rejection rule). Measured at sf0.1: 50 rounds in 32
     counting jobs."""
-    from apachebeamkmeans_spark.checkpoints import release_blocks
     from apachebeamkmeans_spark.session import driver_loop_conf
 
     # eager=False: the count below materializes the checkpoint in the
@@ -544,18 +544,23 @@ def bpe_encode_stats(docs: DataFrame, n_merges: int = 50,
     )
 
 
-def bm25_stage(docs: DataFrame) -> DataFrame:
-    """The tokenize pass BM25 (and consumers composing with it) read:
-    tokens staged ONCE per doc behind a lazy localCheckpoint — both the
-    stats aggregate and the scoring scan read this frame, and without
-    the checkpoint each would re-tokenize the corpus (measured ~40% of
-    the query at sf0.1). `retrieval_mrr` derives its relevance scan
-    from the same frame, sharing the pass."""
+def bm25_tokens(docs: DataFrame) -> DataFrame:
+    """The tokenize pass BM25 reads: (doc_id, __toks, __dl)."""
     toks = T.tokens(F.col("text"))
     return docs.select(
         F.col("doc_id"), toks.alias("__toks"),
         F.size(toks).alias("__dl"),
-    ).localCheckpoint(eager=False)
+    )
+
+
+def bm25_stage(docs: DataFrame) -> DataFrame:
+    """`bm25_tokens` staged ONCE per doc behind a lazy localCheckpoint
+    that feeds the returned plan — both the stats aggregate and the
+    scoring scan read this frame, and without the checkpoint each
+    would re-tokenize the corpus (measured ~40% of the query at
+    sf0.1). `retrieval_mrr` derives its relevance scan from the same
+    frame, sharing the pass."""
+    return bm25_tokens(docs).localCheckpoint(eager=False)
 
 
 def bm25_topk(docs: DataFrame, queries: list[list[str]], k: int = 10,

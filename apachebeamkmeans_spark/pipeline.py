@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.operators import dedup as DD
 from apachebeamkmeans_spark.operators import textstats as TX
 
@@ -179,14 +180,14 @@ class CurationPipeline:
         from apachebeamkmeans_spark.operators import ann_train as ANN
         from apachebeamkmeans_spark.operators.ann_train import knn_cells
 
-        vecs = ANN.l2_normalize(
+        with staged(ANN.l2_normalize(
             embeddings.select(
                 F.col(id_col).alias("id"),
                 F.col(vec_col).cast("array<double>").alias("features"),
             )
-        ).localCheckpoint(eager=False)
-        kk = k if k is not None else knn_cells(vecs.count())
-        return ANN.ivf_train(vecs, kk)
+        )) as vecs:
+            kk = k if k is not None else knn_cells(vecs.count())
+            return ANN.ivf_train(vecs, kk)
 
     def semantic_dedup(
         self,

@@ -12,6 +12,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from apachebeamkmeans_spark import oraclegen as OG
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.fixtures import lsh_hyperplanes
 from apachebeamkmeans_spark.operators import dedup as DD
 from apachebeamkmeans_spark.sources import io
@@ -1312,31 +1313,30 @@ def q_curation_model_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.pipeline import CurationPipeline
 
     docs = _docs(spark, sf_dir)
-    feats = CLF.feature_frame(docs).localCheckpoint(eager=False)
-    train = feats.filter(F.col("doc_id") % 5 != 0)
-    model = CLF.fit_quality_model(train)
-    # checkpoint the deduped frame: the verdict row reads it three
-    # ways (count, gate survivors, agreement scan) and each would
-    # otherwise re-run the window-keeper dedup from the raw scan
-    deduped = (
-        CurationPipeline(docs).exact_dedup().df().localCheckpoint(eager=False)
-    )
-    survivors = CurationPipeline(deduped).model_gate(model, min_p=0.5).df()
-    agreement = (
-        CLF.score_docs(model, deduped)
-        .agg(
-            F.avg(
-                (F.col("prediction") == F.col("label")).cast("double")
-            ).alias("a")
+    with staged(CLF.feature_frame(docs)) as feats:
+        train = feats.filter(F.col("doc_id") % 5 != 0)
+        model = CLF.fit_quality_model(train)
+        n_train = train.count()
+    # stage the deduped frame: the verdict row reads it three ways
+    # (count, gate survivors, agreement scan) and each would otherwise
+    # re-run the window-keeper dedup from the raw scan
+    with staged(CurationPipeline(docs).exact_dedup().df()) as deduped:
+        survivors = CurationPipeline(deduped).model_gate(model, min_p=0.5).df()
+        agreement = (
+            CLF.score_docs(model, deduped)
+            .agg(
+                F.avg(
+                    (F.col("prediction") == F.col("label")).cast("double")
+                ).alias("a")
+            )
+            .collect()[0]["a"]
         )
-        .collect()[0]["a"]
-    )
-    n_dedup = deduped.count()
-    n_surv = survivors.count()
+        n_dedup = deduped.count()
+        n_surv = survivors.count()
     return spark.createDataFrame(
         [(
             n_dedup,
-            train.count(),
+            n_train,
             n_surv > 0,
             n_surv < n_dedup,
             agreement >= MODEL_GATE_AGREEMENT_FLOOR,

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark import fixtures, oraclegen as OG
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansParams, lloyd
@@ -181,42 +182,46 @@ ORACLE_INIT_EXTREMES = " UNION ALL ".join(
 # ------------------------------------- Gonzalez farthest-point seeding (§3.2)
 
 
-def q_kmeans_gonzalez_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """max_farthest seeding trace: k seed picks, each one TakeOrdered
-    job; driver holds only k×dim doubles."""
-    # localCheckpoint, not cache; since r18 the blocks are released
-    # explicitly in the finally below (checkpoints.release_blocks) —
-    # every consumer is a driver collect inside this function.
-    pts = _pts(spark, sf_dir).localCheckpoint(eager=False)
+def _seed_trace(spark: SparkSession, sf_dir: str, first_key, round_key,
+                desc: bool) -> DataFrame:
+    """k seed picks over one staged points frame, each one TakeOrdered
+    job; driver holds only k×dim doubles. Pick 0 is the point first in
+    `first_key` order, pick r the point first in `round_key(centers,
+    r)` order, both sorted descending when `desc`, ties to the
+    smaller id."""
     f = F.col("features")
-    try:
-        try:
-            first = (
-                pts.select("id", f.alias("f"), F.sqrt(D.norm_sq_unrolled(f, DIM)).alias("n"))
-                .orderBy(F.desc("n"), F.asc("id"))
-                .limit(1)
-                .collect()[0]
-            )
-        except IndexError:
-            raise ValueError("k-means seeding requires a non-empty points frame") from None
-        chosen = [(0, first["id"])]
-        centers = [list(first["f"])]
+    order = F.desc if desc else F.asc
+
+    def pick(pts: DataFrame, key):
+        return (
+            pts.select("id", f.alias("f"), key.alias("k"))
+            .orderBy(order("k"), F.asc("id"))
+            .limit(1)
+            .collect()
+        )
+
+    with staged(_pts(spark, sf_dir)) as pts:
+        rows = pick(pts, first_key)
+        if not rows:
+            raise ValueError("k-means seeding requires a non-empty points frame")
+        chosen = [(0, rows[0]["id"])]
+        centers = [list(rows[0]["f"])]
         for r in range(1, K):
-            row = (
-                pts.select("id", f.alias("f"), lloyd.min_dist_col(centers, 2.0).alias("d"))
-                .orderBy(F.desc("d"), F.asc("id"))
-                .limit(1)
-                .collect()[0]
-            )
+            row = pick(pts, round_key(centers, r))[0]
             chosen.append((r, row["id"]))
             centers.append(list(row["f"]))
-    finally:
-        # all consumers (the K seed collects) materialized — release
-        # the checkpoint's blocks now instead of at driver GC (r18)
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(pts)
     return spark.createDataFrame(chosen, "seed_rank INT, vec_id BIGINT")
+
+
+def q_kmeans_gonzalez_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """max_farthest seeding trace: the largest-L2-norm point, then each
+    round the point farthest from its nearest chosen seed."""
+    return _seed_trace(
+        spark, sf_dir,
+        F.sqrt(D.norm_sq_unrolled(F.col("features"), DIM)),
+        lambda centers, r: lloyd.min_dist_col(centers, 2.0),
+        desc=True,
+    )
 
 
 def _oracle_gonzalez() -> str:
@@ -248,47 +253,25 @@ ORACLE_GONZALEZ = _oracle_gonzalez()
 # ------------------------- k-means++ roulette via exponential race (§2.6 C7)
 
 
+def _race_key(weight):
+    """The seeded exponential-race key: -ln(hash01(id, seed⊕round)) /
+    weight(D²), infinite for a zero weight. The minimum wins."""
+    def key(centers, r):
+        w = weight(lloyd.min_dist_col(centers, 2.0))  # D², squared L2
+        u = hash01(F.col("id"), f"{SEED}-{r}")
+        return F.when(w > 0, -F.log(u) / w).otherwise(F.lit(float("inf")))
+    return key
+
+
 def q_kmeans_plusplus_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded k-means++ (D² weight): distributed one-pass weighted
     sampling — winner = argmin -ln(hash01(id, seed⊕round))/D²(x).
     Replaces the reference's whole-dataset collect + linear roulette
     scan (SparKMeansGroupByPlusPlus.java:105, SURVEY.md §8.6)."""
-    # localCheckpoint, not cache; since r18 the blocks are released
-    # explicitly in the finally below (checkpoints.release_blocks) —
-    # every consumer is a driver collect inside this function.
-    pts = _pts(spark, sf_dir).localCheckpoint(eager=False)
-    f = F.col("features")
-    try:
-        try:
-            first = (
-                pts.select("id", f.alias("f"), hash01(F.col("id"), SEED).alias("h"))
-                .orderBy(F.asc("h"), F.asc("id"))
-                .limit(1)
-                .collect()[0]
-            )
-        except IndexError:
-            raise ValueError("k-means seeding requires a non-empty points frame") from None
-        chosen = [(0, first["id"])]
-        centers = [list(first["f"])]
-        for r in range(1, K):
-            dcol = lloyd.min_dist_col(centers, 2.0)  # squared L2 = D² weight
-            u = hash01(F.col("id"), f"{SEED}-{r}")
-            t = F.when(dcol > 0, -F.log(u) / dcol).otherwise(F.lit(float("inf")))
-            row = (
-                pts.select("id", f.alias("f"), t.alias("t"))
-                .orderBy(F.asc("t"), F.asc("id"))
-                .limit(1)
-                .collect()[0]
-            )
-            chosen.append((r, row["id"]))
-            centers.append(list(row["f"]))
-    finally:
-        # all consumers (the K seed collects) materialized — release
-        # the checkpoint's blocks now instead of at driver GC (r18)
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(pts)
-    return spark.createDataFrame(chosen, "seed_rank INT, vec_id BIGINT")
+    return _seed_trace(
+        spark, sf_dir, hash01(F.col("id"), SEED),
+        _race_key(lambda d2: d2), desc=False,
+    )
 
 
 def _oracle_plusplus() -> str:
@@ -323,43 +306,10 @@ def q_kmeans_plusplus_seeds_dweight(spark: SparkSession, sf_dir: str) -> DataFra
     """The reference's exact k-means++ variant — roulette weighted by D
     (distance), not classic D² (SparKMeansGroupByPlusPlus.java:82-114,
     SURVEY.md §8.4) — as a distributed seeded race."""
-    # localCheckpoint, not cache; since r18 the blocks are released
-    # explicitly in the finally below (checkpoints.release_blocks) —
-    # every consumer is a driver collect inside this function.
-    pts = _pts(spark, sf_dir).localCheckpoint(eager=False)
-    f = F.col("features")
-    try:
-        try:
-            first = (
-                pts.select("id", f.alias("f"), hash01(F.col("id"), SEED).alias("h"))
-                .orderBy(F.asc("h"), F.asc("id"))
-                .limit(1)
-                .collect()[0]
-            )
-        except IndexError:
-            raise ValueError("k-means seeding requires a non-empty points frame") from None
-        chosen = [(0, first["id"])]
-        centers = [list(first["f"])]
-        for r in range(1, K):
-            d = lloyd.min_dist_col(centers, 2.0)  # squared
-            w = F.sqrt(d)  # D weighting (reference semantics)
-            u = hash01(F.col("id"), f"{SEED}-{r}")
-            t = F.when(w > 0, -F.log(u) / w).otherwise(F.lit(float("inf")))
-            row = (
-                pts.select("id", f.alias("f"), t.alias("t"))
-                .orderBy(F.asc("t"), F.asc("id"))
-                .limit(1)
-                .collect()[0]
-            )
-            chosen.append((r, row["id"]))
-            centers.append(list(row["f"]))
-    finally:
-        # all consumers (the K seed collects) materialized — release
-        # the checkpoint's blocks now instead of at driver GC (r18)
-        from apachebeamkmeans_spark.checkpoints import release_blocks
-
-        release_blocks(pts)
-    return spark.createDataFrame(chosen, "seed_rank INT, vec_id BIGINT")
+    return _seed_trace(
+        spark, sf_dir, hash01(F.col("id"), SEED),
+        _race_key(F.sqrt), desc=False,
+    )
 
 
 def _oracle_plusplus_dweight() -> str:

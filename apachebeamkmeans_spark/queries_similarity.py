@@ -8,6 +8,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from apachebeamkmeans_spark import fixtures, oraclegen as OG
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.operators import similarity as SIM
 from apachebeamkmeans_spark.sources import io
 
@@ -907,45 +908,43 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.operators.dedup import salted_self_pairs
 
     _warn_if_not_train_sf(sf_dir, "sim_knn_graph")
-    base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
-    n = base.count()
-    k = knn_cells(n)
-    nprobe = knn_nprobe(k)
-    # in-query quantizer training (raises the documented ValueError on
-    # an empty corpus — no centers of no points); rounded to the same
-    # 4-decimal literal form the numpy-twin oracle embeds
-    centers = _knn_quantizer(base, sf_dir, k)
-    pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
-    # nprobe nearest trained cells per vector: sort (distance, cell)
-    # structs — ties break toward the lower cell id, matching the
-    # oracle's (d, c) window order. The hof form (one ARRAY<ARRAY>
-    # literal + transform) keeps generated code size independent of k —
-    # k is now data-derived, and √n × 64-term unrolled projections
-    # would outgrow JVM method limits.
-    dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-        F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    cells = F.array_sort(
-        F.transform(
-            D.lit_array(centers),
-            lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
+    with staged(ANN.l2_normalize(io.load_points(spark, sf_dir))) as base:
+        n = base.count()
+        k = knn_cells(n)
+        nprobe = knn_nprobe(k)
+        # in-query quantizer training (raises the documented ValueError on
+        # an empty corpus — no centers of no points); rounded to the same
+        # 4-decimal literal form the numpy-twin oracle embeds
+        centers = _knn_quantizer(base, sf_dir, k)
+        pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
+        # nprobe nearest trained cells per vector: sort (distance, cell)
+        # structs — ties break toward the lower cell id, matching the
+        # oracle's (d, c) window order. The hof form (one ARRAY<ARRAY>
+        # literal + transform) keeps generated code size independent of k —
+        # k is now data-derived, and √n × 64-term unrolled projections
+        # would outgrow JVM method limits.
+        dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
+            F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0), lambda a, v: a + v,
         )
-    )
-    # Materialize the probe assignment BEFORE the explode: a Generate
-    # whose child inlines the (cells × 64-term × sort) assign tree
-    # sends codegen compilation pathological (measured 181 s for the
-    # compile alone vs 0.8 s with the tree cut here), and an eager cut
-    # is also what keeps the tree out of both self-join sides.
-    probed = pts.select(
-        "vec_id",
-        "f",
-        F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe).alias(
-            "probes"
-        ),
-    ).localCheckpoint(eager=True)
+        cells = F.array_sort(
+            F.transform(
+                D.lit_array(centers),
+                lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
+            )
+        )
+        # Materialize the probe assignment BEFORE the explode: a Generate
+        # whose child inlines the (cells × 64-term × sort) assign tree
+        # sends codegen compilation pathological (measured 181 s for the
+        # compile alone vs 0.8 s with the tree cut here), and an eager cut
+        # is also what keeps the tree out of both self-join sides.
+        probed = pts.select(
+            "vec_id",
+            "f",
+            F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe).alias(
+                "probes"
+            ),
+        ).localCheckpoint(eager=True)
     # no second checkpoint: `probed` is already the materialized cut
     # (the codegen trap lives in the assign tree, not the explode), so
     # fanning the trivial Generate to the join sides beats paying
@@ -1990,28 +1989,26 @@ def q_sim_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.operators.dedup import salted_self_pairs
 
     _warn_if_not_train_sf(sf_dir, "sim_curation_pipeline")
-    base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
-    n = base.count()
-    k = knn_cells(n)
-    centers = _knn_quantizer(base, sf_dir, k)
-    pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
-    dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-        F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    nearest = F.array_min(
-        F.transform(
-            D.lit_array(centers),
-            lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
+    with staged(ANN.l2_normalize(io.load_points(spark, sf_dir))) as base:
+        n = base.count()
+        k = knn_cells(n)
+        centers = _knn_quantizer(base, sf_dir, k)
+        pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
+        dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
+            F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0), lambda a, v: a + v,
         )
-    )
-    assigned = pts.select(
-        "vec_id", "f", nearest.alias("s")
-    ).select(
-        "vec_id", "f", F.col("s")["i"].alias("cell"), F.col("s")["d"].alias("d2")
-    ).localCheckpoint(eager=True)
+        nearest = F.array_min(
+            F.transform(
+                D.lit_array(centers),
+                lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
+            )
+        )
+        assigned = pts.select(
+            "vec_id", "f", nearest.alias("s")
+        ).select(
+            "vec_id", "f", F.col("s")["i"].alias("cell"), F.col("s")["d"].alias("d2")
+        ).localCheckpoint(eager=True)
     shadow = (
         salted_self_pairs(assigned, ["cell"], "vec_id")
         .select(
