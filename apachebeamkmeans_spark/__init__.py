@@ -17,7 +17,12 @@ Design rules (see SURVEY.md §7):
 - every operator is a declarative DataFrame/SQL plan — Catalyst does
   pushdown/pruning/join-selection; no hand-scheduled execution;
 - no row-at-a-time Python UDFs in hot paths; higher-order functions
-  or unrolled column expressions keep work JVM-side and codegen'd;
+  or unrolled column expressions keep lazy query plans JVM-side;
+- driver-loop steps that collect a result (a Lloyd iteration, a
+  seeding draw, an SSE) run as Arrow-batched numpy (`mapInArrow`), one
+  job each: `session.get_spark` starts zip-free Python workers, so a
+  Python task no longer pays to re-read Spark's zips, and the
+  interpreted higher-order lambdas cost more than the batch does;
 - driver traffic is O(k) (centers) — never O(n) collects;
 - every random choice flows from an explicit seed through a
   cross-engine-reproducible hash (functions.hashing) so the DuckDB

@@ -19,13 +19,14 @@ Scale posture — two reference anti-patterns are replaced:
   driver every round (SparKMeansGroupByPlusPlus.java:105, O(n·k) driver
   traffic) → a distributed **exponential race**: winner =
   argmin_i  -ln(U_i)/w_i  with U_i = hash01(id, seed⊕round). This is
-  one-pass weighted sampling (P(win) ∝ w_i), needs only an
-  orderBy+limit(1) TakeOrdered, and is deterministic cross-engine.
+  one-pass weighted sampling (P(win) ∝ w_i), needs only each task's
+  minimum and a driver merge, and is deterministic cross-engine.
 
 Every draw after the first seed — roulette and farthest point alike —
-measures D(x) with `lloyd.min_dist_col`, the shared parsed-literal
-center expression: one py4j call to build, and one codegen compile
-for all draws, fits and seeds (lloyd module docstring).
+is one job of `lloyd.best_point`: D(x) comes from the numpy batch
+kernel over Arrow batches, each task keeps its best row, and the driver
+picks among those (lloyd module docstring). The race's -ln(u) stays a
+JVM column, so the JVM's `log` decides it exactly as before.
 
 Every strategy returns a k×dim Python list — O(k·dim) driver data.
 """
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions.hashing import hash01
-from apachebeamkmeans_spark.operators.kmeans.lloyd import farthest_point, min_dist_col
+from apachebeamkmeans_spark.operators.kmeans.lloyd import best_point, farthest_point
 from apachebeamkmeans_spark.operators.kmeans.params import KMeansParams
 
 
@@ -73,21 +74,10 @@ def _roulette_next(df: DataFrame, centers: list[list[float]], p: float, weight: 
     """One k-means++ roulette draw via the exponential race (see module
     docstring). weight='d' reproduces the reference's D-weighting
     (SURVEY.md §8.4); 'd2' is classic k-means++ D²."""
-    feats = F.col(features_col)
-    d = min_dist_col(centers, p, features_col)  # squared for p=2 — exactly D² weighting
-    if p == 2 and weight == "d":
-        w = F.sqrt(d)
-    elif p != 2 and weight == "d2":
-        w = d * d
-    else:
-        w = d
-    u = hash01(F.col("id"), f"{seed}-{rnd}")
     # t = -ln(u)/w : Exp(rate=w) arrival time; min t wins with P ∝ w.
     # w=0 (point equals an existing center) → t=+inf, never selected.
-    t = F.when(w > 0, -F.log(u) / w).otherwise(F.lit(float("inf")))
-    return _take1(
-        df.select(feats.alias("f"), t.alias("t"), "id"), [F.asc("t"), F.asc("id")]
-    )
+    nlu = -F.log(hash01(F.col("id"), f"{seed}-{rnd}"))
+    return best_point(df, centers, p, features_col, race=(nlu, weight))
 
 
 def init_plusplus(df: DataFrame, params: KMeansParams,

@@ -5,41 +5,54 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
 - assign = broadcast nested-loop argmin over the current centers
   (`mapToPair` closing over the broadcast list with an inner for-loop,
   SparKMeansGroupBy.java:77-98). Here the centers are a *plan-time
-  literal* (k×dim doubles) and each point takes the argmin of its k
-  distances — zero join, zero shuffle. At 100 TB this is a pure map
+  constant* (k×dim doubles, a SQL literal or a kernel closure) and
+  each point takes the argmin of its k distances — zero join, zero
+  shuffle. At 100 TB this is a pure map
   stage.
 - recenter = per-cluster element-wise mean. The reference shuffles every
   point string through `groupByKey` with no map-side combine
-  (SparKMeansGroupBy.java:102-114). Here: one `groupBy(center_id)` with
-  `dim` scalar `avg` aggregates → Catalyst HashAggregate with partial
-  (map-side) aggregation, so only k×dim partial sums cross the shuffle.
+  (SparKMeansGroupBy.java:102-114). Here each task emits one partial
+  (size, Σx, Σdist) per center and one `groupBy(center_id)` reduces
+  them, so only k partial rows per task cross the shuffle.
 - convergence = max movement between *index-matched* old/new centers
   (textbook; the reference's any-match + index bug, SURVEY.md §8.1-8.2,
   is deliberately not reproduced).
 
-Every center expression — seeding draws, the fit loop's assignment,
-farthest-point reseeds, model assignment, SSE and the single-step
-`kmeans_*` queries — comes from one builder, `_nearest_center`: ONE
-parsed SQL string holding the centers as one folded literal
-(`distance.sql_array_literal`) and the Minkowski-p fold as a lambda.
-Building it costs one py4j call whatever k and dim, and the literal
-lands in the codegen reference array, so one compile serves every
-draw, iteration and seed. It is the one physical form of assignment:
-its left-to-right sums and first-minimum ties give the same doubles as
-the unrolled oracle SQL.
+Two forms of "nearest center", one per kind of consumer:
 
-Centers live on the driver as a k×dim Python list (≤ a few KB) —
-the only data that ever crosses to the driver.
+- **Column form** for lazy plans that queries compose (`assign`,
+  `min_dist_col`, `sql_assign_expr`): `_nearest_center`, ONE parsed
+  SQL string holding the centers as one folded literal
+  (`distance.sql_array_literal`) and the Minkowski-p fold as a lambda.
+  One py4j call to build, one codegen compile for any center values;
+  its left-to-right sums and first-minimum ties give the same doubles
+  as the unrolled oracle SQL.
+- **Batch kernel** for the driver-loop steps that collect a result —
+  a Lloyd iteration (`lloyd_fit`), a farthest-point or roulette draw
+  (`best_point`) and a model's SSE (`total_sse`): `_batch_kernel`, the
+  same fold in numpy over whole Arrow batches (`mapInArrow`). The
+  higher-order functions of the Column form never compile to Java
+  (`CodegenFallback`) and are interpreted per (row, center); the kernel
+  makes each step one job of vectorized numpy. It gives the Column
+  form's doubles and ties for p ∈ {1, 2}, and `tests/test_kmeans.py`
+  pins the two to each other.
+
+Centers live on the driver as a k×dim Python list (≤ a few KB); the
+driver receives O(k·dim) per step (one partial row per task for a
+draw).
 """
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.functions import distance as D
+
+log = logging.getLogger(__name__)
 
 
 def _nearest_center(centers: list[list[float]], p: float,
@@ -75,51 +88,12 @@ def assign(df: DataFrame, centers: list[list[float]], p: float = 2.0,
     return out
 
 
-def recenter(assigned: DataFrame, dim: int, features_col: str = "features") -> DataFrame:
-    """New centroid per cluster: groupBy(center_id) + dim scalar avgs +
-    count. One shuffle, map-side partial aggregation, k rows out."""
-    feats = F.col(features_col)
-    aggs = [F.avg(feats[j]).alias(f"c{j}") for j in range(dim)] + [
-        F.count(F.lit(1)).alias("size")
-    ]
-    return assigned.groupBy("center_id").agg(*aggs)
-
-
-def recenter_to_list(assigned: DataFrame, dim: int, k: int,
-                     features_col: str = "features") -> tuple[list[list[float] | None], list[int]]:
-    """Collect the k new centers (k rows — O(k·dim) driver traffic).
-    Returns (centers, sizes); empty clusters yield None / 0."""
-    rows = recenter(assigned, dim, features_col).collect()
-    centers: list[list[float] | None] = [None] * k
-    sizes = [0] * k
-    for r in rows:
-        cid = r["center_id"]
-        centers[cid] = [r[f"c{j}"] for j in range(dim)]
-        sizes[cid] = r["size"]
-    return centers, sizes
-
-
 def min_dist_col(centers: list[list[float]], p: float = 2.0,
                  features_col: str = "features"):
     """min over current centers of distance(point, center) — seeding's
     D(x) quantity (SparKMeansGroupByPlusPlus.java:82-96); squared for
     p=2."""
     return _nearest_center(centers, p, features_col)["dist"]
-
-
-def farthest_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
-                   features_col: str = "features") -> list[float]:
-    """argmax_x min_c dist(x, c) — Gonzalez scattering step and the
-    empty-cluster re-seed. orderBy+limit(1) is TakeOrdered (per-partition
-    top-1 then driver merge), not a full sort."""
-    row = (
-        df.select(F.col("id"), F.col(features_col).alias("f"),
-                  min_dist_col(centers, p, features_col).alias("d"))
-        .orderBy(F.desc("d"), F.asc("id"))
-        .limit(1)
-        .collect()[0]
-    )
-    return list(row["f"])
 
 
 def movement(old: list[list[float]], new: list[list[float]], p: float = 2.0) -> float:
@@ -136,17 +110,228 @@ def movement(old: list[list[float]], new: list[list[float]], p: float = 2.0) -> 
     return worst
 
 
-def sse(assigned_with_dist: DataFrame) -> float:
-    """Total within-cluster squared error (expects `dist` = squared L2)."""
-    return assigned_with_dist.agg(F.sum("dist").alias("sse")).collect()[0]["sse"]
-
-
 def sql_assign_expr(centers: list[list[float]], p: float,
                     features_col: str = "features"):
-    """Argmin center id (ties → lowest id) of the fit loop: the shared
-    parsed expression without the Minkowski root (monotone, so the
-    argmin is unchanged)."""
+    """Argmin center id (ties → lowest id) for plans that assign inside
+    their own aggregate (`ann_train`'s IVF loop): the shared parsed
+    expression without the Minkowski root (monotone, so the argmin is
+    unchanged)."""
     return _nearest_center(centers, p, features_col, root=False)["idx"]
+
+
+# ------------------------------------------------------ batch kernel (driver loops)
+
+
+def _batch_kernel(centers: list[list[float]], p: float):
+    """The numpy twin of `_nearest_center`, as closures that cloudpickle
+    ships by value (workers of a session not built by `get_spark` cannot
+    import this package; compare `similarity.pq_encode_lut_arrow`). Raises ValueError before any job
+    when a center is NaN or ±inf, as the SQL literal does.
+
+    Returns (matrix, nearest):
+    - `matrix(list_array)`: an Arrow ARRAY<DOUBLE> column as an n×dim
+      float64 matrix;
+    - `nearest(X)`: (idx, dist) per row. For each center the distance
+      accumulates dimension by dimension, left to right, from 0.0 —
+      the fold `sql_pow_sum` runs — and a strict `<` keeps the first
+      minimum, so p ∈ {1, 2} give the same doubles and ties as the
+      Column form. Other p use numpy's `pow`, not the JVM's, and may
+      differ from it in the last bits.
+    """
+    cents = [[float(x) for x in c] for c in centers]
+    if not all(math.isfinite(x) for c in cents for x in c):
+        raise ValueError("non-finite value in the k-means centers")
+    dim, pf = len(cents[0]), float(p)
+
+    def matrix(col):
+        lens = col.value_lengths().to_numpy(zero_copy_only=False)
+        if col.null_count or (lens != dim).any():
+            raise ValueError(f"features must be non-null arrays of {dim} doubles")
+        return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), dim)
+
+    def nearest(X):
+        import numpy as np
+
+        best = idx = None
+        for c, cen in enumerate(np.asarray(cents, dtype=np.float64)):
+            t = X - cen
+            t = t * t if pf == 2 else np.abs(t) if pf == 1 else np.abs(t) ** pf
+            acc = np.zeros(len(X))
+            for j in range(dim):
+                acc += t[:, j]
+            if best is None:
+                best, idx = acc, np.zeros(len(X), dtype=np.int32)
+            else:
+                better = acc < best
+                best[better], idx[better] = acc[better], c
+        if pf not in (1, 2):
+            best = best ** (1.0 / pf)
+        return idx, best
+
+    return matrix, nearest
+
+
+def _lloyd_step(df: DataFrame, centers: list[list[float]], p: float,
+                features_col: str):
+    """One Lloyd iteration as one job: each task assigns its Arrow
+    batches with the batch kernel and emits one partial row per
+    non-empty center, (center_id, size, Σx, Σdist); one
+    groupBy(center_id) reduces them in the JVM, so k rows reach the
+    driver. Σx sums in the order the partials arrive, so the last bits
+    of a center may vary from run to run, as a shuffled `avg` does."""
+    k, dim = len(centers), len(centers[0])
+    matrix, nearest = _batch_kernel(centers, p)
+
+    def partials(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        size, sd = np.zeros(k, dtype=np.int64), np.zeros(k)
+        sx = np.zeros((k, dim))
+        for b in batches:
+            X = matrix(b.column(0))
+            idx, dist = nearest(X)
+            size += np.bincount(idx, minlength=k)
+            sd += np.bincount(idx, weights=dist, minlength=k)
+            for c in np.unique(idx):
+                sx[c] += X[idx == c].sum(axis=0)
+        nz = np.flatnonzero(size)
+        if nz.size:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(nz, pa.int32()), pa.array(size[nz]),
+                 pa.array(sx[nz].tolist(), pa.list_(pa.float64())), pa.array(sd[nz])],
+                names=["center_id", "size", "sx", "sd"],
+            )
+
+    sx = F.expr(f"aggregate(collect_list(sx), array_repeat(0D, {dim}), "
+                "(acc, x) -> zip_with(acc, x, (a, b) -> a + b))")
+    return (
+        df.select(features_col)
+        .mapInArrow(partials, "center_id int, size bigint, sx array<double>, sd double")
+        # at most k rows per task: one reduce task, not one per shuffle
+        # partition (a third less CPU per iteration on local[4])
+        .repartition(1)
+        .groupBy("center_id")
+        .agg(F.sum("size").alias("size"), sx.alias("sx"), F.sum("sd").alias("sd"))
+        .collect()
+    )
+
+
+def best_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
+               features_col: str = "features", race=None) -> list[float]:
+    """The features of one point chosen by its distance D(x) to the
+    nearest center (squared for p=2), as one job: each task keeps its
+    best row (key, id, f) and the driver picks among those.
+
+    - `race=None`: the point farthest from the centers, ties to the
+      smallest id — Gonzalez scattering and the empty-cluster reseed.
+    - `race=(nlu, weight)`: the exponential-race winner, smallest
+      t = nlu / w (+inf where w = 0), ties to the smallest id. `nlu`
+      is the column -ln(u), computed in the JVM; w is D(x), its square
+      root for p=2 and weight 'd', or its square for p≠2 and weight
+      'd2' (see `init` for the race).
+
+    Raises ValueError on an empty frame."""
+    import numpy as np
+
+    matrix, nearest = _batch_kernel(centers, p)
+    cols = [F.col("id"), F.col(features_col).alias("f")]
+    largest = race is None
+    nlu, weight = race or (None, None)
+    if not largest:
+        cols.append(nlu.alias("nlu"))
+    dtypes = dict(df.select(*cols).dtypes)
+
+    def first_best(keys, ids):
+        """Index of the largest (or smallest) key, NaN ordered greatest
+        as Spark orders doubles, ties to the smallest id:
+        `orderBy(key, id).limit(1)`."""
+        import numpy as np
+
+        nan = np.isnan(keys)
+        if nan.all() or (largest and nan.any()):
+            top = nan
+        else:
+            rest = keys[~nan]
+            top = keys == (rest.max() if largest else rest.min())
+        cand = np.flatnonzero(top)
+        return int(cand[np.argmin(ids[cand])])
+
+    def best(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        keys, rows = [], []
+        for b in batches:
+            if not b.num_rows:
+                continue
+            _, d = nearest(matrix(b.column(1)))
+            if largest:
+                key = d
+            else:
+                w = (np.sqrt(d) if p == 2 and weight == "d"
+                     else d * d if p != 2 and weight == "d2" else d)
+                nl = b.column(2).to_numpy(zero_copy_only=False)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    key = np.where(w > 0, nl / w, np.inf)
+            j = first_best(key, b.column(0).to_numpy(zero_copy_only=False))
+            keys.append(key[j])
+            rows.append(b.slice(j, 1))
+        if rows:
+            ids = pa.concat_arrays([r.column(0) for r in rows])
+            j = first_best(np.asarray(keys), ids.to_numpy(zero_copy_only=False))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([keys[j]], pa.float64()), rows[j].column(0), rows[j].column(1)],
+                names=["key", "id", "f"],
+            )
+
+    rows = (
+        df.select(*cols)
+        .mapInArrow(best, f"key double, id {dtypes['id']}, f {dtypes['f']}")
+        .collect()
+    )
+    if not rows:
+        raise ValueError("k-means seeding requires a non-empty points frame")
+    j = first_best(np.array([r["key"] for r in rows]),
+                   np.array([r["id"] for r in rows], dtype=object))
+    return list(rows[j]["f"])
+
+
+def farthest_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
+                   features_col: str = "features") -> list[float]:
+    """argmax_x min_c dist(x, c), ties to the smallest id — Gonzalez
+    scattering step and the empty-cluster re-seed (`best_point`)."""
+    return best_point(df, centers, p, features_col)
+
+
+def total_sse(df: DataFrame, centers: list[list[float]], p: float = 2.0,
+              features_col: str = "features") -> float:
+    """Σ over points of the squared L2 distance to the center nearest
+    under metric p, as one job: one partial sum per task, summed on the
+    driver."""
+    import numpy as np
+
+    matrix, nearest = _batch_kernel(centers, p)
+    cents = np.asarray(centers, dtype=np.float64)
+
+    def partial(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        s = 0.0
+        for b in batches:
+            X = matrix(b.column(0))
+            idx, dist = nearest(X)
+            if p != 2:
+                t = X - cents[idx]
+                dist = np.zeros(len(X))
+                for j in range(X.shape[1]):
+                    dist += t[:, j] * t[:, j]
+            s += float(dist.sum())
+        yield pa.RecordBatch.from_arrays([pa.array([s], pa.float64())], names=["sse"])
+
+    rows = df.select(features_col).mapInArrow(partial, "sse double").collect()
+    return float(sum(r["sse"] for r in rows))
 
 
 def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
@@ -154,72 +339,41 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
               features_col: str = "features",
               sse_log: list[float] | None = None) -> tuple[list[list[float]], int]:
     """The dynamic driver loop (SURVEY.md §2.6 C5): assign → recenter →
-    converge, centers re-literalized each iteration.
+    converge, one job per iteration (`_lloyd_step`, under
+    `session.driver_loop_conf`); the new center is Σx / size.
 
     Each iteration re-scans `df`, so the caller caches it (`KMeans.fit`
-    does). Because each iteration's plan is rebuilt from that base
-    frame + literal centers, there is no lineage growth — no
-    checkpointing needed (the reference accidentally achieved the same
-    by collecting every iteration).
-
-    Loop physical strategy (~3× per-iteration speedup over the naive
-    loop, measured at sf0.1):
-    - assign via `sql_assign_expr` — the shared parsed-literal
-      expression, so whole-stage codegen compiles once for the whole
-      loop;
-    - recenter via MLlib `Summarizer.mean` over a vector column — a
-      single partial-aggregating vector aggregate instead of `dim`
-      scalar avgs, so plan analysis is O(1) in dimensionality. The
-      per-dimension `avg` form (`recenter`) remains the oracle-exact
-      twin for the single-step queries; the fit loop is rows-only
-      checked, where summation-order differences are immaterial.
+    does). Each iteration's plan is built from that base frame and the
+    current centers, so lineage never grows — no checkpointing needed
+    (the reference accidentally achieved the same by collecting every
+    iteration).
 
     Empty clusters are re-seeded from the current farthest point
     (documented divergence from the reference, which silently shrank k —
-    SURVEY.md §8.3).
+    SURVEY.md §8.3). Every iteration is logged with `extra` fields
+    `iteration`, `delta` (max center movement) and `reseeded`.
 
-    `sse_log`: pass a list to receive the per-iteration SSE (sum over
-    points of the min distance to the CURRENT centers, measured at the
-    assignment step — squared for p=2, matching `sse()`); the extra
-    sum rides the same per-iteration aggregate, no extra job. Used by
-    the `kmeans_fit_clusters` property oracle (Lloyd's monotonic
-    descent is a theorem, so a non-increasing log certifies the loop).
+    `sse_log`: pass a list to receive one entry per iteration: the sum
+    over points of the distance to the nearest CURRENT center, measured
+    at the assignment step (squared for p=2) — it rides the same
+    partials. Lloyd's descent makes it non-increasing for p=2; the
+    `kmeans_fit_clusters` property oracle checks that.
     """
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.stat import Summarizer
+    from apachebeamkmeans_spark.session import driver_loop_conf
 
     k = len(init_centers)
     centers = [list(c) for c in init_centers]
-    # derived per iteration from the caller's (cached) frame: a second
-    # cached copy would only double the fit's storage
-    vpts = df.withColumn("__fvec", array_to_vector(features_col))
-    aggs = [
-        Summarizer.mean(F.col("__fvec")).alias("mean"),
-        F.count(F.lit(1)).alias("size"),
-    ]
     n_iter = 0
-    from apachebeamkmeans_spark.session import driver_loop_conf
-
-    # AQE off for the iteration loop: each iteration's k-row
-    # aggregate otherwise schedules as two jobs (see
-    # session.driver_loop_conf; r18)
     with driver_loop_conf(df.sparkSession):
         for _ in range(max_iter):
             n_iter += 1
-            frame = vpts.withColumn(
-                "center_id", sql_assign_expr(centers, p, features_col)
-            )
-            ag = aggs
+            rows = _lloyd_step(df, centers, p, features_col)
             if sse_log is not None:
-                frame = frame.withColumn(
-                    "__md", min_dist_col(centers, p, features_col)
-                )
-                ag = aggs + [F.sum("__md").alias("__sse")]
-            rows = frame.groupBy("center_id").agg(*ag).collect()
-            if sse_log is not None:
-                sse_log.append(float(sum(r["__sse"] for r in rows)))
-            by_id = {r["center_id"]: list(r["mean"]) for r in rows}
-            new_centers: list[list[float] | None] = [by_id.get(i) for i in range(k)]
+                sse_log.append(float(sum(r["sd"] for r in rows)))
+            new_centers: list[list[float] | None] = [None] * k
+            for r in rows:
+                new_centers[r["center_id"]] = [x / r["size"] for x in r["sx"]]
+            reseeded = 0
             for i in range(k):
                 if new_centers[i] is None:
                     new_centers[i] = farthest_point(
@@ -228,8 +382,11 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
                         p,
                         features_col,
                     )
+                    reseeded += 1
             delta = movement(centers, new_centers, p)  # matched pairs, not any-match
             centers = new_centers
+            log.info("lloyd iteration %d: delta %.6g, reseeded %d", n_iter, delta, reseeded,
+                     extra={"iteration": n_iter, "delta": delta, "reseeded": reseeded})
             if delta <= threshold:
                 break
     return centers, n_iter

@@ -20,7 +20,6 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 from apachebeamkmeans_spark.operators.kmeans.init import initial_centers
 from apachebeamkmeans_spark.operators.kmeans.params import KMeansParams
@@ -70,14 +69,7 @@ class KMeansModel:
         Assignment uses the MODEL's metric (`params.p`, so a Manhattan
         model scores its own assignments); the error value itself stays
         squared L2 — SSE is squared error by definition."""
-        p = self.params.p
-        assigned = lloyd.assign(df, self.centers, p, features_col,
-                                keep_dist=(p == 2))
-        if p != 2:
-            centers = D.sql_array_literal(self.centers)
-            assigned = assigned.withColumn("dist", F.expr(D.sql_pow_sum(
-                features_col, f"element_at({centers}, center_id + 1)", 2)))
-        return lloyd.sse(assigned)
+        return lloyd.total_sse(df, self.centers, self.params.p, features_col)
 
     def format_clusters(self, df: DataFrame, features_col: str = "features") -> DataFrame:
         """One line per cluster: `center_id:id1;id2;...;` — the

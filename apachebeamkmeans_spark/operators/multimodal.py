@@ -15,8 +15,10 @@ wiring) stays identical.
 Every function handed to mapInPandas/applyInPandas here is defined
 INSIDE its operator (closure) so cloudpickle ships it by value —
 module-level functions are pickled by reference and would force the
-executor's Python worker to import this package, which the driver
-contract does not guarantee is importable there.
+executor's Python worker to import this package. Sessions from
+`session.get_spark` put the package on the workers' PYTHONPATH (their
+zip-free daemon lives in it), but the driver contract's sessions are
+not built there and make no such promise.
 """
 
 from __future__ import annotations

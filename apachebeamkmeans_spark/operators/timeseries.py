@@ -172,6 +172,13 @@ def mad_outliers(events: DataFrame, threshold: float = 3.0) -> DataFrame:
     sorts only — no further Exchange), where the grouped-map form paid
     the same shuffle plus an Arrow round-trip of every row through a
     Python worker.
+
+    Precondition: every `value` is finite and non-null. The window
+    ranks a NaN above every number and a null first, while np.median
+    (the pandas twin) propagates NaN, so for a user holding such a
+    value the two forms — and the DuckDB oracle — may disagree. Other
+    users' rows are unaffected. The events source satisfies it
+    (`tests/test_timeseries.py` checks both).
     """
     w_all = Window.partitionBy("user_id")
     base = events.select("user_id", "value")

@@ -7,11 +7,65 @@ multi-executor cluster (AQE, shuffle partitions, Arrow).
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
+import re
 import threading
+import zipfile
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+WORKER_DAEMON = "apachebeamkmeans_spark._worker"
+
+
+def worker_conf(installed: str, bundled: str | None, package_parent: str) -> dict[str, str]:
+    """Spark conf for zip-free Python workers (`_worker`): the daemon
+    module, and the directory holding this package on the workers'
+    PYTHONPATH so the daemon starts whatever the cwd. Empty unless the
+    installed pyspark version equals the one bundled in Spark's worker
+    zip, because the workers then import the installed one."""
+    if bundled != installed:
+        return {}
+    return {
+        "spark.python.daemon.module": WORKER_DAEMON,
+        "spark.executorEnv.PYTHONPATH": package_parent,
+    }
+
+
+def _bundled_pyspark_version() -> str | None:
+    """`__version__` of `$SPARK_HOME/python/lib/pyspark.zip`, or None."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    path = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
+    try:
+        with zipfile.ZipFile(path) as z:
+            text = z.read("pyspark/version.py").decode()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+    m = re.search(r"__version__\b[^=]*=\s*['\"]([^'\"]+)['\"]", text)
+    return m.group(1) if m else None
+
+
+@functools.lru_cache(maxsize=1)
+def _zip_free_conf() -> tuple[tuple[str, str], ...]:
+    import pyspark
+
+    installed, bundled = pyspark.__version__, _bundled_pyspark_version()
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf = worker_conf(installed, bundled, parent)
+    if conf:
+        log.info("zip-free python workers on", extra={"zip_free_workers": True})
+    else:
+        log.info(
+            "zip-free python workers off: pyspark %s, bundled %s", installed, bundled,
+            extra={"zip_free_workers": False, "pyspark_installed": installed,
+                   "pyspark_bundled": bundled},
+        )
+    return tuple(conf.items())
 
 
 def get_spark(
@@ -25,6 +79,9 @@ def get_spark(
     AQE is on so runtime statistics can coalesce shuffle partitions,
     convert sort-merge joins to broadcast, and split skewed partitions
     — the knobs that matter most at 100 TB.
+
+    Python workers start zip-free (`worker_conf`) when the installed
+    pyspark matches the one Spark bundles.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
@@ -40,7 +97,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in [*_zip_free_conf(), *(extra_conf or {}).items()]:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

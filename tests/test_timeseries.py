@@ -162,3 +162,24 @@ def test_mad_outliers_window_equals_pandas_twin(spark, sf_dir):
             assert ha[uid][c] == hb[uid][c], (uid, c)
     assert ha[7]["median"] == 6.0 and ha[9]["mad"] == 0.0
     assert ha[9]["n_outliers"] == 0 and ha[10]["n_outliers"] == 1
+
+
+def test_mad_outliers_precondition_finite_non_null(spark, sf_dir):
+    """`mad_outliers` requires finite, non-null values: the events table
+    holds none other, and a user breaking it leaves every other user's
+    row equal across the window form and the pandas twin."""
+    from apachebeamkmeans_spark.sources import io
+
+    ev = io.read_table(spark, sf_dir, "events")
+    v = F.col("value")
+    assert ev.filter(v.isNull() | F.isnan(v) | (F.abs(v) == float("inf"))).count() == 0
+
+    t = datetime(2024, 1, 1, 10, 0)
+    rows = [(i, t, 1, "x", x) for i, x in enumerate([1.0, 2.0, 10.0, 100.0])]
+    rows += [(10, t, 2, "x", 1.0), (11, t, 2, "x", float("nan")), (12, t, 2, "x", 3.0)]
+    rows += [(20, t, 3, "x", 1.0), (21, t, 3, "x", None), (22, t, 3, "x", 3.0)]
+    hand = _ev(spark, rows)
+    a = {r["user_id"]: r for r in TS.mad_outliers(hand, 3.0).collect()}
+    b = {r["user_id"]: r for r in TS.mad_outliers_pandas(hand, 3.0).collect()}
+    assert a.keys() == b.keys() == {1, 2, 3}
+    assert a[1] == b[1] and a[1]["median"] == 6.0
