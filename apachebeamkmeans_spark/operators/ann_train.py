@@ -5,18 +5,19 @@ were fixture literals (`fixtures.py`) — oracle-convenient but not
 self-contained. This module trains them with the engine itself:
 
 - `ivf_train` — Lloyd's k-means over (L2-normalized) embeddings for the
-  IVF coarse quantizer: the same literal-center argmin assign map as
-  K-Means assignment (the reference's J1 join,
-  /root/reference/SparKMeansGroupBy.java:77-98) + partial-agg recenter,
-  generalized per SURVEY.md §2.3-2.4.
-- `pq_train` — Lloyd per PQ subspace, ALL `m` subspaces in one
-  distributed job per iteration: vectors explode to (subspace, subvec)
-  rows once, each iteration assigns against the current codebooks (one
-  nested literal) and recenters with a single groupBy(subspace, code)
-  — m independent k-means runs for the price of one shuffle per
-  iteration. This is the training step of IVF-PQ
-  (/root/reference/SparKMeansGroupByPlusPlus.java:73-151 is the Lloyd
-  loop it generalizes).
+  IVF coarse quantizer.
+- `pq_train` — Lloyd per PQ subspace: m independent k-means runs, one
+  per `dsub`-wide column block of the vectors. This is the training
+  step of IVF-PQ.
+
+Both run the package's one Lloyd iteration, `lloyd._lloyd_step` (the
+reference's loop, SparKMeansGroupBy.java:73-151,
+generalized per SURVEY.md §2.3-2.4): IVF with one center set over the
+whole vector, PQ with m codebooks over m column blocks, so all m
+subspaces train in one job per iteration. Each task assigns its Arrow
+batches with the numpy batch kernel and ships only its partial
+(size, Σx, Σdist) rows, at most m·ksub of them (m = 1, ksub = k for
+IVF); one groupBy(s, center_id) reduces them.
 
 Determinism contract: seeds come from the engine's md5 `hash01` order
 (lowest hash wins, ties by id); iteration count is FIXED (no float
@@ -27,16 +28,16 @@ training to float-rounding precision, which lets the driver
 oracle-check the Spark-trained values against numpy-trained literals
 (see queries_similarity).
 
-100 TB posture: per iteration the only driver traffic is k·dim (IVF)
-or m·ksub·dsub (PQ) partial means; the exploded PQ frame shuffles
-m·ksub·(dsub+2) partial aggregates, never rows. Training normally runs
-on a sample (here: the sf0.01 reference slice) — codebooks do not need
-the full corpus.
+100 TB posture: per iteration the shuffle and the driver traffic are
+the partial rows above — k·dim (IVF) or m·ksub·dsub (PQ) sums, never
+points. Training normally runs on a sample (here: the sf0.01 reference
+slice) — codebooks do not need the full corpus.
 """
 
 from __future__ import annotations
 
 import hashlib
+import logging
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -48,6 +49,8 @@ from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 
 TWO32 = 4294967296.0
+
+log = logging.getLogger(__name__)
 
 
 # ------------------------------------------------------------ shared helpers
@@ -139,58 +142,49 @@ def knn_refine(n: int, nprobe: int, cells: int) -> int:
     )
 
 
+def _fixed_lloyd(vecs: DataFrame, blocks: list[list[list[float]]],
+                 n_iters: int, features_col: str) -> list[list[list[float]]]:
+    """`n_iters` Lloyd iterations of the center sets `blocks` (block s
+    over the s-th column block of `features_col`, see
+    `lloyd._lloyd_step`), one job each; the new center is Σx / size and
+    an empty cluster keeps its previous centroid. Each iteration is
+    logged with `extra` fields `iteration` and `delta`, the largest
+    center movement over the blocks."""
+    from apachebeamkmeans_spark.session import driver_loop_conf
+
+    base = vecs.select(features_col)
+    # the staged frame is re-scanned every iteration; AQE off for the
+    # loop (driver_loop_conf rationale)
+    with staged(base) as base, driver_loop_conf(vecs.sparkSession):
+        for it in range(1, n_iters + 1):
+            new = [list(b) for b in blocks]
+            for r in lloyd._lloyd_step(base, blocks, 2.0, features_col):
+                new[r["s"]][r["center_id"]] = [x / r["size"] for x in r["sx"]]
+            delta = max(lloyd.movement(a, b) for a, b in zip(blocks, new))
+            blocks = new
+            log.info("trainer iteration %d: delta %.6g", it, delta,
+                     extra={"iteration": it, "delta": delta})
+    return blocks
+
+
 def ivf_train(vecs: DataFrame, k: int, n_iters: int = 5, seed="ivf",
               id_col: str = "id", features_col: str = "features") -> list[list[float]]:
-    """k coarse centers by Lloyd: literal-center argmin assign (zero
-    shuffle) → vector-mean recenter (map-side partial agg, k rows to
-    the driver per iteration). Fixed iteration count; empty clusters
-    keep their previous centroid.
-
-    Iteration physical strategy of `lloyd.lloyd_fit`'s Column-form
-    loop before its numpy batch kernel (measured ~3× over the naive
-    loop): assign via `sql_assign_expr` — ONE
-    parsed expression whose generated code is structurally identical
-    across iterations (the center literals land in the codegen
-    reference array), so whole-stage codegen compiles once per
-    training run instead of once per iteration, which matters when k
-    is data-derived (√n cells) — and recenter via MLlib
-    `Summarizer.mean`, one vector aggregate instead of `dim` scalar
-    avgs. The assign arithmetic is the identical zip_with fold, so
-    assignments are bit-equal to the hof form; the mean's summation
-    order differs only at ulp level, absorbed by the `round_param`
-    rounding the numpy-twin contract already relies on (asserted in
-    tests/test_ann_train.py)."""
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.stat import Summarizer
-
+    """k coarse centers by Lloyd, seeded with the k rows of smallest
+    hash01(id, seed): `n_iters` iterations of `lloyd._lloyd_step` over
+    one center set, one job each (k partial rows per task, k rows to
+    the driver). Fixed iteration count; empty clusters keep their
+    previous centroid. The kernel's distances and first-minimum ties
+    are those of the Column-form assign; the mean's summation order
+    differs from numpy's only at ulp level, absorbed by the
+    `round_param` rounding the numpy-twin contract relies on (asserted
+    in tests/test_ann_train.py)."""
     # dimensionality comes from the seed rows — no separate probe job
     centers = seed_rows(vecs, k, seed, id_col, features_col)
     if not centers:
         raise ValueError("ivf_train requires a non-empty points frame")
     if len(centers) < k:
         raise ValueError(f"ivf_train: need >= {k} rows, got {len(centers)}")
-    base = vecs.select(
-        F.col(id_col).alias("id"), F.col(features_col).alias("features")
-    ).withColumn("__fvec", array_to_vector("features"))
-    mean_agg = Summarizer.mean(F.col("__fvec")).alias("mean")
-    from apachebeamkmeans_spark.session import driver_loop_conf
-
-    # AQE off for the iteration loop: one scheduled job per
-    # iteration instead of two (see driver_loop_conf's rationale)
-    with staged(base) as base, driver_loop_conf(vecs.sparkSession):
-        for _ in range(n_iters):
-            rows = (
-                base.withColumn(
-                    "center_id",
-                    lloyd.sql_assign_expr(centers, 2.0, "features"),
-                )
-                .groupBy("center_id")
-                .agg(mean_agg)
-                .collect()
-            )
-            by_id = {r["center_id"]: list(r["mean"]) for r in rows}
-            centers = [by_id.get(i, centers[i]) for i in range(k)]
-    return centers
+    return _fixed_lloyd(vecs, [centers], n_iters, features_col)[0]
 
 
 def load_embeddings_np(sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
@@ -241,13 +235,12 @@ def ivf_train_np(ids: np.ndarray, mat: np.ndarray, k: int,
 def pq_train(vecs: DataFrame, m: int, ksub: int, n_iters: int = 5, seed="pq",
              id_col: str = "id", features_col: str = "features") -> list[list[list[float]]]:
     """PQ codebooks: m×ksub×dsub centroids, trained as m concurrent
-    Lloyd runs over ONE exploded (subspace, subvec) frame — per
-    iteration a single assign map (nested codebook literal, per-row
-    argmin within the row's subspace) and a single
-    groupBy(subspace, code) partial-agg recenter; m·ksub mean rows to
-    the driver. Init: codebook c of every subspace = the c-th seed
-    row's slice (same seeded sample for all subspaces)."""
-    f = F.col(features_col)
+    Lloyd runs, one per `dsub`-wide column block: `n_iters` iterations
+    of `lloyd._lloyd_step` over the m codebooks, one job each
+    (m·ksub partial rows per task, m·ksub rows to the driver). Init:
+    codebook c of every subspace = the c-th seed row's slice (same
+    seeded sample for all subspaces). Empty clusters keep their
+    previous centroid."""
     # dimensionality comes from the seed rows — no separate probe job
     seeds = seed_rows(vecs, ksub, seed, id_col, features_col)
     if not seeds:
@@ -258,43 +251,8 @@ def pq_train(vecs: DataFrame, m: int, ksub: int, n_iters: int = 5, seed="pq",
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    codebooks = [
-        [[float(seeds[c][s * dsub + j]) for j in range(dsub)] for c in range(ksub)]
-        for s in range(m)
-    ]
-    subs = F.array(*[F.slice(f, s * dsub + 1, dsub) for s in range(m)])
-    ex = vecs.select(F.posexplode(subs).alias("s", "sub"))
-    aggs = [F.avg(F.col("sub")[j]).alias(f"c{j}") for j in range(dsub)] + [
-        F.count(F.lit(1)).alias("n")
-    ]
-    from apachebeamkmeans_spark.session import driver_loop_conf
-
-    # the exploded frame is reused every iteration; AQE off for the
-    # iteration loop (driver_loop_conf rationale)
-    with staged(ex) as ex, driver_loop_conf(vecs.sparkSession):
-        return _pq_train_loop(ex, codebooks, m, ksub, dsub, n_iters, aggs)
-
-
-def _pq_train_loop(ex, codebooks, m, ksub, dsub, n_iters, aggs):
-    for _ in range(n_iters):
-        # ONE parsed expression per iteration (the `sql_assign_expr`
-        # discipline): the nested codebook literal lands in the codegen
-        # reference array, so the generated code is structurally
-        # identical across iterations and compiles once; the struct
-        # argmin is the same first-minimum tie-break as
-        # array_position(dists, array_min(dists)).
-        code = F.expr(
-            f"array_min(transform(element_at({D.sql_array_literal(codebooks)}, s + 1),"
-            f" (cent, i) -> struct({D.sql_pow_sum('sub', 'cent', 2)} AS dist,"
-            " CAST(i AS INT) AS idx)))"
-        )["idx"]
-        rows = ex.withColumn("code", code).groupBy("s", "code").agg(*aggs).collect()
-        by_key = {(r["s"], r["code"]): [r[f"c{j}"] for j in range(dsub)] for r in rows}
-        codebooks = [
-            [by_key.get((s, c), codebooks[s][c]) for c in range(ksub)]
-            for s in range(m)
-        ]
-    return codebooks
+    codebooks = [[row[s * dsub:(s + 1) * dsub] for row in seeds] for s in range(m)]
+    return _fixed_lloyd(vecs, codebooks, n_iters, features_col)
 
 
 def pq_train_np(ids: np.ndarray, mat: np.ndarray, m: int, ksub: int,

@@ -21,15 +21,17 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
 Two forms of "nearest center", one per kind of consumer:
 
 - **Column form** for lazy plans that queries compose (`assign`,
-  `min_dist_col`, `sql_assign_expr`): `_nearest_center`, ONE parsed
+  `min_dist_col`): `_nearest_center`, ONE parsed
   SQL string holding the centers as one folded literal
   (`distance.sql_array_literal`) and the Minkowski-p fold as a lambda.
   One py4j call to build, one codegen compile for any center values;
   its left-to-right sums and first-minimum ties give the same doubles
   as the unrolled oracle SQL.
 - **Batch kernel** for the driver-loop steps that collect a result —
-  a Lloyd iteration (`lloyd_fit`), a farthest-point or roulette draw
-  (`best_point`) and a model's SSE (`total_sse`): `_batch_kernel`, the
+  a Lloyd iteration (`_lloyd_step`, run by `lloyd_fit` and by the ANN
+  trainers `ann_train.ivf_train` and `ann_train.pq_train`), a
+  farthest-point or roulette draw (`best_point`) and a model's SSE
+  (`total_sse`): `_batch_kernel`, the
   same fold in numpy over whole Arrow batches (`mapInArrow`). The
   higher-order functions of the Column form never compile to Java
   (`CodegenFallback`) and are interpreted per (row, center); the kernel
@@ -56,14 +58,12 @@ log = logging.getLogger(__name__)
 
 
 def _nearest_center(centers: list[list[float]], p: float,
-                    features_col: str = "features", root: bool = True):
+                    features_col: str = "features"):
     """struct(dist, idx) of the nearest literal center (ties → lowest
     idx) as ONE parsed SQL expression (see module docstring). `dist`
-    is squared for p=2 and plain for p=1; other p take the 1/p root
-    unless `root` is False — an argmin alone can skip the monotone
-    root."""
+    is squared for p=2, plain for p=1, and the 1/p root for other p."""
     dist = D.sql_pow_sum(features_col, "c", p)
-    if root and p not in (1, 2):
+    if p not in (1, 2):
         dist = f"pow({dist}, {1.0 / float(p)!r}D)"
     return F.expr(
         f"array_min(transform({D.sql_array_literal(centers)}, (c, i) -> "
@@ -110,16 +110,20 @@ def movement(old: list[list[float]], new: list[list[float]], p: float = 2.0) -> 
     return worst
 
 
-def sql_assign_expr(centers: list[list[float]], p: float,
-                    features_col: str = "features"):
-    """Argmin center id (ties → lowest id) for plans that assign inside
-    their own aggregate (`ann_train`'s IVF loop): the shared parsed
-    expression without the Minkowski root (monotone, so the argmin is
-    unchanged)."""
-    return _nearest_center(centers, p, features_col, root=False)["idx"]
-
-
 # ------------------------------------------------------ batch kernel (driver loops)
+
+
+def _arrow_matrix(dim: int):
+    """`matrix(list_array)`: an Arrow ARRAY<DOUBLE> column as an n×dim
+    float64 matrix, as a closure that cloudpickle ships by value."""
+
+    def matrix(col):
+        lens = col.value_lengths().to_numpy(zero_copy_only=False)
+        if col.null_count or (lens != dim).any():
+            raise ValueError(f"features must be non-null arrays of {dim} doubles")
+        return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), dim)
+
+    return matrix
 
 
 def _batch_kernel(centers: list[list[float]], p: float):
@@ -129,8 +133,7 @@ def _batch_kernel(centers: list[list[float]], p: float):
     when a center is NaN or ±inf, as the SQL literal does.
 
     Returns (matrix, nearest):
-    - `matrix(list_array)`: an Arrow ARRAY<DOUBLE> column as an n×dim
-      float64 matrix;
+    - `matrix(list_array)`: `_arrow_matrix` at the centers' width;
     - `nearest(X)`: (idx, dist) per row. For each center the distance
       accumulates dimension by dimension, left to right, from 0.0 —
       the fold `sql_pow_sum` runs — and a strict `<` keeps the first
@@ -142,12 +145,6 @@ def _batch_kernel(centers: list[list[float]], p: float):
     if not all(math.isfinite(x) for c in cents for x in c):
         raise ValueError("non-finite value in the k-means centers")
     dim, pf = len(cents[0]), float(p)
-
-    def matrix(col):
-        lens = col.value_lengths().to_numpy(zero_copy_only=False)
-        if col.null_count or (lens != dim).any():
-            raise ValueError(f"features must be non-null arrays of {dim} doubles")
-        return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), dim)
 
     def nearest(X):
         import numpy as np
@@ -168,50 +165,60 @@ def _batch_kernel(centers: list[list[float]], p: float):
             best = best ** (1.0 / pf)
         return idx, best
 
-    return matrix, nearest
+    return _arrow_matrix(dim), nearest
 
 
-def _lloyd_step(df: DataFrame, centers: list[list[float]], p: float,
+def _lloyd_step(df: DataFrame, center_sets: list[list[list[float]]], p: float,
                 features_col: str):
-    """One Lloyd iteration as one job: each task assigns its Arrow
-    batches with the batch kernel and emits one partial row per
-    non-empty center, (center_id, size, Σx, Σdist); one
-    groupBy(center_id) reduces them in the JVM, so k rows reach the
-    driver. Σx sums in the order the partials arrive, so the last bits
-    of a center may vary from run to run, as a shuffled `avg` does."""
-    k, dim = len(centers), len(centers[0])
-    matrix, nearest = _batch_kernel(centers, p)
+    """One Lloyd iteration as one job, over `m = len(center_sets)` sets
+    of k centers: set s owns the s-th of m equal, consecutive column
+    blocks of `features` (m = 1 for plain k-means; the m subspaces of a
+    product quantizer). Each task assigns every block of its Arrow
+    batches with that block's batch kernel and emits one partial row
+    per non-empty center, (s, center_id, size, Σx, Σdist); one
+    groupBy(s, center_id) reduces them in the JVM, so at most m·k rows
+    reach the driver. Σx sums in the order the partials arrive, so the
+    last bits of a center may vary from run to run, as a shuffled `avg`
+    does."""
+    m, k, dsub = len(center_sets), len(center_sets[0]), len(center_sets[0][0])
+    matrix = _arrow_matrix(m * dsub)
+    kernels = [_batch_kernel(c, p)[1] for c in center_sets]
 
     def partials(batches):
         import numpy as np
         import pyarrow as pa
 
-        size, sd = np.zeros(k, dtype=np.int64), np.zeros(k)
-        sx = np.zeros((k, dim))
+        size, sd = np.zeros((m, k), dtype=np.int64), np.zeros((m, k))
+        sx = np.zeros((m, k, dsub))
         for b in batches:
             X = matrix(b.column(0))
-            idx, dist = nearest(X)
-            size += np.bincount(idx, minlength=k)
-            sd += np.bincount(idx, weights=dist, minlength=k)
-            for c in np.unique(idx):
-                sx[c] += X[idx == c].sum(axis=0)
-        nz = np.flatnonzero(size)
-        if nz.size:
+            for s, nearest in enumerate(kernels):
+                B = X[:, s * dsub:(s + 1) * dsub]
+                idx, dist = nearest(B)
+                size[s] += np.bincount(idx, minlength=k)
+                sd[s] += np.bincount(idx, weights=dist, minlength=k)
+                for c in np.unique(idx):
+                    sx[s, c] += B[idx == c].sum(axis=0)
+        ss, cs = np.nonzero(size)
+        if ss.size:
+            offsets = pa.array(np.arange(0, (ss.size + 1) * dsub, dsub, dtype=np.int32))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(nz, pa.int32()), pa.array(size[nz]),
-                 pa.array(sx[nz].tolist(), pa.list_(pa.float64())), pa.array(sd[nz])],
-                names=["center_id", "size", "sx", "sd"],
+                [pa.array(ss, pa.int32()), pa.array(cs, pa.int32()), pa.array(size[ss, cs]),
+                 pa.ListArray.from_arrays(offsets, pa.array(sx[ss, cs].ravel())),
+                 pa.array(sd[ss, cs])],
+                names=["s", "center_id", "size", "sx", "sd"],
             )
 
-    sx = F.expr(f"aggregate(collect_list(sx), array_repeat(0D, {dim}), "
+    sx = F.expr(f"aggregate(collect_list(sx), array_repeat(0D, {dsub}), "
                 "(acc, x) -> zip_with(acc, x, (a, b) -> a + b))")
     return (
         df.select(features_col)
-        .mapInArrow(partials, "center_id int, size bigint, sx array<double>, sd double")
-        # at most k rows per task: one reduce task, not one per shuffle
-        # partition (a third less CPU per iteration on local[4])
+        .mapInArrow(partials,
+                    "s int, center_id int, size bigint, sx array<double>, sd double")
+        # at most m·k rows per task: one reduce task, not one per
+        # shuffle partition (a third less CPU per iteration on local[4])
         .repartition(1)
-        .groupBy("center_id")
+        .groupBy("s", "center_id")
         .agg(F.sum("size").alias("size"), sx.alias("sx"), F.sum("sd").alias("sd"))
         .collect()
     )
@@ -367,7 +374,7 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
     with driver_loop_conf(df.sparkSession):
         for _ in range(max_iter):
             n_iter += 1
-            rows = _lloyd_step(df, centers, p, features_col)
+            rows = _lloyd_step(df, [centers], p, features_col)
             if sse_log is not None:
                 sse_log.append(float(sum(r["sd"] for r in rows)))
             new_centers: list[list[float] | None] = [None] * k

@@ -196,12 +196,40 @@ def test_model_sse_matches_column_reference(scatter, p):
 
 
 def test_lloyd_step_matches_column_reference(scatter):
-    rows = lloyd._lloyd_step(scatter, TIE_CENTERS, 2.0, "features")
+    rows = lloyd._lloyd_step(scatter, [TIE_CENTERS], 2.0, "features")
     ref, sizes = recenter_to_list(lloyd.assign(scatter, TIE_CENTERS, 2.0), dim=3, k=3)
     assert sorted(r["center_id"] for r in rows) == [i for i in range(3) if sizes[i]]
     for r in rows:
         assert r["size"] == sizes[r["center_id"]]
         assert [x / r["size"] for x in r["sx"]] == pytest.approx(ref[r["center_id"]], rel=1e-12)
+
+
+def test_block_step_equals_single_block_steps(spark):
+    """An m-block step equals m one-block steps over the column slices:
+    the same (block, center) keys and sizes, and Σx, Σdist within
+    1e-12. Block 1's last center lies far from every point and gets no
+    members."""
+    rng = random.Random(5)
+    m, dsub, n = 3, 2, 80
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(m * dsub)]) for i in range(n)],
+        "id long, features array<double>")
+    sets = [[[rng.uniform(-1, 1) for _ in range(dsub)] for _ in range(3)] for _ in range(m)]
+    sets[1][2] = [50.0, 50.0]
+    got = {(r["s"], r["center_id"]): r for r in lloyd._lloyd_step(df, sets, 2.0, "features")}
+    want = {}
+    for s in range(m):
+        block = df.select(F.slice("features", s * dsub + 1, dsub).alias("features"))
+        for r in lloyd._lloyd_step(block, [sets[s]], 2.0, "features"):
+            assert r["s"] == 0
+            want[(s, r["center_id"])] = r
+    assert (1, 2) not in want
+    assert sorted(got) == sorted(want)
+    for key, r in want.items():
+        assert got[key]["size"] == r["size"]
+        assert got[key]["sx"] == pytest.approx(r["sx"], rel=1e-12)
+        assert got[key]["sd"] == pytest.approx(r["sd"], rel=1e-12)
+    assert all(sum(r["size"] for (s, _), r in got.items() if s == b) == n for b in range(m))
 
 
 def test_lloyd_fit_sse_log_has_one_entry_per_iteration(blobs):
