@@ -17,6 +17,10 @@ accumulates them. Every checkpoint falls under exactly one case:
   one, and the last one is returned): the loop calls `release_blocks`
   on each superseded checkpoint itself.
 
+A function that holds its input for repeated scans holds it only when
+`is_held(input)` is false: a cached frame or a checkpoint is already
+stored once, and a second copy only doubles the blocks.
+
 `release_blocks` finds the checkpoint's RDD as the analyzed plan's
 LogicalRDD root, the only handle PySpark exposes; `df.rdd` would
 build a NEW conversion RDD, not the persisted one.
@@ -27,7 +31,28 @@ from __future__ import annotations
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The RDD of `df`'s own checkpoint (its analyzed plan's LogicalRDD
+    root), or None when `df` is not a checkpoint root."""
+    root = df._jdf.queryExecution().analyzed()
+    return root.rdd() if root.getClass().getSimpleName() == "LogicalRDD" else None
+
+
+def is_held(df: DataFrame) -> bool:
+    """True when `df` is stored already: cached, or a checkpoint root
+    whose RDD is persisted. A LogicalRDD over an unpersisted RDD (a
+    frame made from local rows) is not held."""
+    if df.storageLevel != StorageLevel.NONE:
+        return True
+    rdd = _checkpoint_rdd(df)
+    if rdd is None:
+        return False
+    level = rdd.getStorageLevel()
+    return level.useMemory() or level.useDisk()
 
 
 def release_blocks(df: DataFrame | None) -> None:
@@ -43,9 +68,9 @@ def release_blocks(df: DataFrame | None) -> None:
     if df is None:
         return
     try:
-        root = df._jdf.queryExecution().analyzed()
-        if root.getClass().getSimpleName() == "LogicalRDD":
-            root.rdd().unpersist(False)
+        rdd = _checkpoint_rdd(df)
+        if rdd is not None:
+            rdd.unpersist(False)
     except Exception:  # noqa: BLE001 — best-effort by design
         pass
 

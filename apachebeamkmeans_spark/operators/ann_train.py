@@ -14,10 +14,10 @@ Both run the package's one Lloyd iteration, `lloyd._lloyd_step` (the
 reference's loop, SparKMeansGroupBy.java:73-151,
 generalized per SURVEY.md §2.3-2.4): IVF with one center set over the
 whole vector, PQ with m codebooks over m column blocks, so all m
-subspaces train in one job per iteration. Each task assigns its Arrow
-batches with the numpy batch kernel and ships only its partial
-(size, Σx, Σdist) rows, at most m·ksub of them (m = 1, ksub = k for
-IVF); one groupBy(s, center_id) reduces them.
+subspaces train in one single-stage job per iteration. Each task
+assigns its Arrow batches with the numpy batch kernel and ships one row
+of dense partials (size, Σx, Σdist) over all m·ksub centers (m = 1,
+ksub = k for IVF); the driver sums the rows.
 
 Determinism contract: seeds come from the engine's md5 `hash01` order
 (lowest hash wins, ties by id); iteration count is FIXED (no float
@@ -28,8 +28,8 @@ training to float-rounding precision, which lets the driver
 oracle-check the Spark-trained values against numpy-trained literals
 (see queries_similarity).
 
-100 TB posture: per iteration the shuffle and the driver traffic are
-the partial rows above — k·dim (IVF) or m·ksub·dsub (PQ) sums, never
+100 TB posture: an iteration shuffles nothing; its driver traffic is
+tasks × m·ksub·(dsub+2) values (k·(dim+2) per task for IVF), never
 points. Training normally runs on a sample (here: the sf0.01 reference
 slice) — codebooks do not need the full corpus.
 """
@@ -38,12 +38,13 @@ from __future__ import annotations
 
 import hashlib
 import logging
+from contextlib import nullcontext
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from apachebeamkmeans_spark.checkpoints import staged
+from apachebeamkmeans_spark.checkpoints import is_held, staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import lloyd
@@ -146,20 +147,19 @@ def _fixed_lloyd(vecs: DataFrame, blocks: list[list[list[float]]],
                  n_iters: int, features_col: str) -> list[list[list[float]]]:
     """`n_iters` Lloyd iterations of the center sets `blocks` (block s
     over the s-th column block of `features_col`, see
-    `lloyd._lloyd_step`), one job each; the new center is Σx / size and
-    an empty cluster keeps its previous centroid. Each iteration is
-    logged with `extra` fields `iteration` and `delta`, the largest
+    `lloyd._lloyd_step`), one single-stage job each; the new center is
+    Σx / size and an empty cluster (size 0) keeps its previous
+    centroid. `vecs` is re-scanned every iteration, so it is staged
+    unless it is held already (`checkpoints.is_held`). Each iteration
+    is logged with `extra` fields `iteration` and `delta`, the largest
     center movement over the blocks."""
-    from apachebeamkmeans_spark.session import driver_loop_conf
-
     base = vecs.select(features_col)
-    # the staged frame is re-scanned every iteration; AQE off for the
-    # loop (driver_loop_conf rationale)
-    with staged(base) as base, driver_loop_conf(vecs.sparkSession):
+    with nullcontext(base) if is_held(vecs) else staged(base) as base:
         for it in range(1, n_iters + 1):
-            new = [list(b) for b in blocks]
-            for r in lloyd._lloyd_step(base, blocks, 2.0, features_col):
-                new[r["s"]][r["center_id"]] = [x / r["size"] for x in r["sx"]]
+            size, sx, _ = lloyd._lloyd_step(base, blocks, 2.0, features_col)
+            new = [[(sx[s, c] / size[s, c]).tolist() if size[s, c] else list(center)
+                    for c, center in enumerate(block)]
+                   for s, block in enumerate(blocks)]
             delta = max(lloyd.movement(a, b) for a, b in zip(blocks, new))
             blocks = new
             log.info("trainer iteration %d: delta %.6g", it, delta,
@@ -171,13 +171,13 @@ def ivf_train(vecs: DataFrame, k: int, n_iters: int = 5, seed="ivf",
               id_col: str = "id", features_col: str = "features") -> list[list[float]]:
     """k coarse centers by Lloyd, seeded with the k rows of smallest
     hash01(id, seed): `n_iters` iterations of `lloyd._lloyd_step` over
-    one center set, one job each (k partial rows per task, k rows to
-    the driver). Fixed iteration count; empty clusters keep their
-    previous centroid. The kernel's distances and first-minimum ties
-    are those of the Column-form assign; the mean's summation order
-    differs from numpy's only at ulp level, absorbed by the
-    `round_param` rounding the numpy-twin contract relies on (asserted
-    in tests/test_ann_train.py)."""
+    one center set, one job each (one row of k partials per task).
+    Fixed iteration count; empty clusters keep their previous
+    centroid. The kernel's distances and first-minimum ties are those
+    of the Column-form assign; the mean's summation order differs from
+    numpy's only at ulp level, absorbed by the `round_param` rounding
+    the numpy-twin contract relies on (asserted in
+    tests/test_ann_train.py)."""
     # dimensionality comes from the seed rows — no separate probe job
     centers = seed_rows(vecs, k, seed, id_col, features_col)
     if not centers:
@@ -236,11 +236,10 @@ def pq_train(vecs: DataFrame, m: int, ksub: int, n_iters: int = 5, seed="pq",
              id_col: str = "id", features_col: str = "features") -> list[list[list[float]]]:
     """PQ codebooks: m×ksub×dsub centroids, trained as m concurrent
     Lloyd runs, one per `dsub`-wide column block: `n_iters` iterations
-    of `lloyd._lloyd_step` over the m codebooks, one job each
-    (m·ksub partial rows per task, m·ksub rows to the driver). Init:
-    codebook c of every subspace = the c-th seed row's slice (same
-    seeded sample for all subspaces). Empty clusters keep their
-    previous centroid."""
+    of `lloyd._lloyd_step` over the m codebooks, one job each (one row
+    of m·ksub partials per task). Init: codebook c of every subspace =
+    the c-th seed row's slice (same seeded sample for all subspaces).
+    Empty clusters keep their previous centroid."""
     # dimensionality comes from the seed rows — no separate probe job
     seeds = seed_rows(vecs, ksub, seed, id_col, features_col)
     if not seeds:

@@ -11,9 +11,10 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
   stage.
 - recenter = per-cluster element-wise mean. The reference shuffles every
   point string through `groupByKey` with no map-side combine
-  (SparKMeansGroupBy.java:102-114). Here each task emits one partial
-  (size, Σx, Σdist) per center and one `groupBy(center_id)` reduces
-  them, so only k partial rows per task cross the shuffle.
+  (SparKMeansGroupBy.java:102-114). Here nothing is shuffled: each task
+  emits one row of dense partials (size, Σx, Σdist over all k centers)
+  and the driver sums the rows in partition order, so an iteration is
+  one job of one stage and its centers are the same bits on every run.
 - convergence = max movement between *index-matched* old/new centers
   (textbook; the reference's any-match + index bug, SURVEY.md §8.1-8.2,
   is deliberately not reproduced).
@@ -40,8 +41,8 @@ Two forms of "nearest center", one per kind of consumer:
   pins the two to each other.
 
 Centers live on the driver as a k×dim Python list (≤ a few KB); the
-driver receives O(k·dim) per step (one partial row per task for a
-draw).
+driver receives one partial row per task per step: k·(dim+2) values
+for a Lloyd iteration, one point for a draw.
 """
 
 from __future__ import annotations
@@ -170,16 +171,20 @@ def _batch_kernel(centers: list[list[float]], p: float):
 
 def _lloyd_step(df: DataFrame, center_sets: list[list[list[float]]], p: float,
                 features_col: str):
-    """One Lloyd iteration as one job, over `m = len(center_sets)` sets
-    of k centers: set s owns the s-th of m equal, consecutive column
-    blocks of `features` (m = 1 for plain k-means; the m subspaces of a
-    product quantizer). Each task assigns every block of its Arrow
-    batches with that block's batch kernel and emits one partial row
-    per non-empty center, (s, center_id, size, Σx, Σdist); one
-    groupBy(s, center_id) reduces them in the JVM, so at most m·k rows
-    reach the driver. Σx sums in the order the partials arrive, so the
-    last bits of a center may vary from run to run, as a shuffled `avg`
-    does."""
+    """One Lloyd iteration as one single-stage job, over `m =
+    len(center_sets)` sets of k centers: set s owns the s-th of m
+    equal, consecutive column blocks of `features` (m = 1 for plain
+    k-means; the m subspaces of a product quantizer). Each task assigns
+    every block of its Arrow batches with that block's batch kernel and
+    emits ONE row of dense partials over all m·k centers (a center with
+    no members stays at zero); `collect` returns the rows in partition
+    order and the driver sums them in that order, so the result is the
+    same from run to run.
+
+    Returns numpy arrays (size[m, k], Σx[m, k, dsub], Σdist[m, k]); a
+    center with size 0 got no members."""
+    import numpy as np
+
     m, k, dsub = len(center_sets), len(center_sets[0]), len(center_sets[0][0])
     matrix = _arrow_matrix(m * dsub)
     kernels = [_batch_kernel(c, p)[1] for c in center_sets]
@@ -199,29 +204,22 @@ def _lloyd_step(df: DataFrame, center_sets: list[list[list[float]]], p: float,
                 sd[s] += np.bincount(idx, weights=dist, minlength=k)
                 for c in np.unique(idx):
                     sx[s, c] += B[idx == c].sum(axis=0)
-        ss, cs = np.nonzero(size)
-        if ss.size:
-            offsets = pa.array(np.arange(0, (ss.size + 1) * dsub, dsub, dtype=np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ss, pa.int32()), pa.array(cs, pa.int32()), pa.array(size[ss, cs]),
-                 pa.ListArray.from_arrays(offsets, pa.array(sx[ss, cs].ravel())),
-                 pa.array(sd[ss, cs])],
-                names=["s", "center_id", "size", "sx", "sd"],
-            )
 
-    sx = F.expr(f"aggregate(collect_list(sx), array_repeat(0D, {dsub}), "
-                "(acc, x) -> zip_with(acc, x, (a, b) -> a + b))")
-    return (
-        df.select(features_col)
-        .mapInArrow(partials,
-                    "s int, center_id int, size bigint, sx array<double>, sd double")
-        # at most m·k rows per task: one reduce task, not one per
-        # shuffle partition (a third less CPU per iteration on local[4])
-        .repartition(1)
-        .groupBy("s", "center_id")
-        .agg(F.sum("size").alias("size"), sx.alias("sx"), F.sum("sd").alias("sd"))
-        .collect()
-    )
+        def row(a):
+            return pa.ListArray.from_arrays(pa.array([0, a.size], pa.int32()), pa.array(a.ravel()))
+
+        yield pa.RecordBatch.from_arrays([row(size), row(sx), row(sd)],
+                                         names=["size", "sx", "sd"])
+
+    size, sd = np.zeros((m, k), dtype=np.int64), np.zeros((m, k))
+    sx = np.zeros((m, k, dsub))
+    for r in (df.select(features_col)
+              .mapInArrow(partials, "size array<bigint>, sx array<double>, sd array<double>")
+              .collect()):
+        size += np.asarray(r["size"], dtype=np.int64).reshape(m, k)
+        sx += np.asarray(r["sx"]).reshape(m, k, dsub)
+        sd += np.asarray(r["sd"]).reshape(m, k)
+    return size, sx, sd
 
 
 def best_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
@@ -346,8 +344,9 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
               features_col: str = "features",
               sse_log: list[float] | None = None) -> tuple[list[list[float]], int]:
     """The dynamic driver loop (SURVEY.md §2.6 C5): assign → recenter →
-    converge, one job per iteration (`_lloyd_step`, under
-    `session.driver_loop_conf`); the new center is Σx / size.
+    converge, one single-stage job per iteration (`_lloyd_step`: no
+    shuffle, so nothing for AQE to re-plan and no conf scope); the new
+    center is Σx / size.
 
     Each iteration re-scans `df`, so the caller caches it (`KMeans.fit`
     does). Each iteration's plan is built from that base frame and the
@@ -355,10 +354,11 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
     (the reference accidentally achieved the same by collecting every
     iteration).
 
-    Empty clusters are re-seeded from the current farthest point
-    (documented divergence from the reference, which silently shrank k —
-    SURVEY.md §8.3). Every iteration is logged with `extra` fields
-    `iteration`, `delta` (max center movement) and `reseeded`.
+    Empty clusters (size 0) are re-seeded from the current farthest
+    point (documented divergence from the reference, which silently
+    shrank k — SURVEY.md §8.3), one more job each. Every iteration is
+    logged with `extra` fields `iteration`, `delta` (max center
+    movement) and `reseeded`.
 
     `sse_log`: pass a list to receive one entry per iteration: the sum
     over points of the distance to the nearest CURRENT center, measured
@@ -366,34 +366,31 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
     partials. Lloyd's descent makes it non-increasing for p=2; the
     `kmeans_fit_clusters` property oracle checks that.
     """
-    from apachebeamkmeans_spark.session import driver_loop_conf
-
     k = len(init_centers)
     centers = [list(c) for c in init_centers]
     n_iter = 0
-    with driver_loop_conf(df.sparkSession):
-        for _ in range(max_iter):
-            n_iter += 1
-            rows = _lloyd_step(df, [centers], p, features_col)
-            if sse_log is not None:
-                sse_log.append(float(sum(r["sd"] for r in rows)))
-            new_centers: list[list[float] | None] = [None] * k
-            for r in rows:
-                new_centers[r["center_id"]] = [x / r["size"] for x in r["sx"]]
-            reseeded = 0
-            for i in range(k):
-                if new_centers[i] is None:
-                    new_centers[i] = farthest_point(
-                        df,
-                        [c for c in new_centers if c is not None] or centers,
-                        p,
-                        features_col,
-                    )
-                    reseeded += 1
-            delta = movement(centers, new_centers, p)  # matched pairs, not any-match
-            centers = new_centers
-            log.info("lloyd iteration %d: delta %.6g, reseeded %d", n_iter, delta, reseeded,
-                     extra={"iteration": n_iter, "delta": delta, "reseeded": reseeded})
-            if delta <= threshold:
-                break
+    for _ in range(max_iter):
+        n_iter += 1
+        size, sx, sd = _lloyd_step(df, [centers], p, features_col)
+        if sse_log is not None:
+            sse_log.append(float(sd.sum()))
+        new_centers: list[list[float] | None] = [
+            (sx[0, i] / size[0, i]).tolist() if size[0, i] else None for i in range(k)
+        ]
+        reseeded = 0
+        for i in range(k):
+            if new_centers[i] is None:
+                new_centers[i] = farthest_point(
+                    df,
+                    [c for c in new_centers if c is not None] or centers,
+                    p,
+                    features_col,
+                )
+                reseeded += 1
+        delta = movement(centers, new_centers, p)  # matched pairs, not any-match
+        centers = new_centers
+        log.info("lloyd iteration %d: delta %.6g, reseeded %d", n_iter, delta, reseeded,
+                 extra={"iteration": n_iter, "delta": delta, "reseeded": reseeded})
+        if delta <= threshold:
+            break
     return centers, n_iter

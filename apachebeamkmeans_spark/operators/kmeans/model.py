@@ -16,10 +16,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import is_held
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 from apachebeamkmeans_spark.operators.kmeans.init import initial_centers
 from apachebeamkmeans_spark.operators.kmeans.params import KMeansParams
@@ -97,9 +97,9 @@ class KMeans:
 
     def fit(self, df: DataFrame, features_col: str = "features") -> KMeansModel:
         # C3: every seeding draw and iteration re-scans the input. Cache
-        # it for the fit unless the caller already has, and release only
-        # what this fit cached.
-        owned = df.storageLevel == StorageLevel.NONE
+        # it for the fit unless it is held already (cached or a
+        # checkpoint), and release only what this fit cached.
+        owned = not is_held(df)
         if owned:
             df = df.cache()
         try:

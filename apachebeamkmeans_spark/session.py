@@ -147,17 +147,18 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
 
 def driver_loop_conf(spark: SparkSession):
     """Scope `spark.sql.adaptive.enabled=false` around a sequential
-    driver-loop trainer (Lloyd / PQ iterations — r18, guide §2.4
-    "remove shuffles/stages outright" applied to scheduling rounds).
+    driver loop whose every round runs a small aggregate exchange
+    (`dedup` label propagation, the `textstats` BPE trainer — r18,
+    guide §2.4 "remove shuffles/stages outright" applied to scheduling
+    rounds).
 
-    Rationale: each trainer iteration is one k-row-class aggregate
-    whose exchange carries k·dim partial means — nothing AQE can ever
-    re-optimize — yet under AQE every iteration's collect runs as TWO
-    scheduled jobs (the materialized map stage, then the re-planned
-    result stage). Measured at sf0.1: ivf_train 11 jobs → 6 at
-    identical results (the aggregate's arithmetic and exchange count
-    are unchanged; values are partitioning-independent k-row means,
-    re-verified by the oracle gate). This is not a local-mode
-    constant: any cluster pays one extra scheduling round-trip per
-    iteration for a shuffle that cannot need adaptation."""
+    Rationale: such an exchange carries a few rows per task — nothing
+    AQE can ever re-optimize — yet under AQE each collect of it runs
+    as TWO scheduled jobs (the materialized map stage, then the
+    re-planned result stage). Measured at sf0.1 when the Lloyd step
+    still shuffled: ivf_train 11 jobs → 6 at identical results. This is
+    not a local-mode constant: any cluster pays one extra scheduling
+    round-trip per round for a shuffle that cannot need adaptation. A
+    loop without an exchange (the Lloyd step, `lloyd._lloyd_step`)
+    needs no scope."""
     return scoped_conf(spark, "spark.sql.adaptive.enabled", "false")

@@ -12,6 +12,7 @@ import pytest
 
 from apachebeamkmeans_spark.operators import ann_train as ANN
 from apachebeamkmeans_spark.sources import io
+from job_ledger import jobs_and_stages
 
 SEED = "dup"
 K = 3
@@ -52,28 +53,17 @@ def test_pq_duplicate_seed_keeps_its_seed_value(dup_seeds):
     assert [ANN.round_mat(b) for b in books] == [ANN.round_mat(b) for b in want]
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 @pytest.mark.parametrize("n_iters", [1, 3])
 def test_trainers_run_one_job_per_iteration(spark, sf_dir, n_iters):
-    """The seed draw is one job and every iteration one more: the
-    staged input materializes inside the first iteration's job, and
-    the step's exchange runs in the same job with AQE off."""
+    """The seed draw is one job of one stage and every iteration one
+    more: the staged input materializes inside the first iteration's
+    job, and the step has no exchange, so AQE has nothing to split."""
     pts = io.load_points(spark, sf_dir)
-    budget = 1 + n_iters
-    assert _jobs(spark, f"ivf_train.{n_iters}",
-                 lambda: ANN.ivf_train(pts, 4, n_iters)) == budget
-    assert _jobs(spark, f"pq_train.{n_iters}",
-                 lambda: ANN.pq_train(pts, 8, 4, n_iters)) == budget
+    budget = (1 + n_iters, 1 + n_iters)
+    assert jobs_and_stages(spark, f"ivf_train.{n_iters}",
+                           lambda: ANN.ivf_train(pts, 4, n_iters)) == budget
+    assert jobs_and_stages(spark, f"pq_train.{n_iters}",
+                           lambda: ANN.pq_train(pts, 8, 4, n_iters)) == budget
 
 
 def test_trainer_loop_logs_each_iteration(dup_seeds, caplog):

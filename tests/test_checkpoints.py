@@ -198,6 +198,54 @@ def test_trainers_leave_no_persistent_blocks(spark, sf_dir):
     assert _n_persisted(spark) == base
 
 
+def test_is_held(spark):
+    """Cached frames and checkpoint roots are held; a frame over local
+    rows, a plain plan and a projection of a checkpoint are not."""
+    rows = spark.createDataFrame([(1,), (2,)], "id long")
+    assert not C.is_held(rows) and not C.is_held(spark.range(3))
+    with C.staged(spark.range(3)) as lazy, C.staged(spark.range(3), eager=True) as eager:
+        assert C.is_held(lazy) and C.is_held(eager)
+        assert not C.is_held(eager.select("id"))
+    cached = spark.range(4).cache()
+    try:
+        assert C.is_held(cached)
+    finally:
+        cached.unpersist()
+
+
+def test_trainer_does_not_restage_a_checkpoint(spark, sf_dir):
+    """`ivf_train` and `pq_train` over an eager checkpoint scan it as
+    it is: no iteration holds a persisted RDD that was not there when
+    the trainer started."""
+    import logging
+
+    from apachebeamkmeans_spark.operators import ann_train as ANN
+    from apachebeamkmeans_spark.sources import io
+
+    seen: list[set] = []
+
+    class Census(logging.Handler):
+        def emit(self, record):
+            if hasattr(record, "iteration"):
+                seen.append(_persisted_ids(spark))
+
+    census = Census()
+    logger = logging.getLogger(ANN.__name__)
+    level = logger.level
+    logger.addHandler(census)
+    logger.setLevel(logging.INFO)
+    try:
+        with C.staged(io.load_points(spark, sf_dir), eager=True) as pts:
+            base = _persisted_ids(spark)
+            ANN.ivf_train(pts, 4, 2)
+            ANN.pq_train(pts, 8, 4, 2)
+    finally:
+        logger.removeHandler(census)
+        logger.setLevel(level)
+    assert len(seen) == 4
+    assert all(ids <= base for ids in seen), [ids - base for ids in seen]
+
+
 def test_release_blocks_of_derived_frame_releases_neither_checkpoint(spark):
     base = _n_persisted(spark)
     a = spark.range(100).localCheckpoint(eager=True)

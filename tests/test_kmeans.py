@@ -9,15 +9,18 @@ from __future__ import annotations
 import logging
 import random
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansModel, KMeansParams, lloyd
 from apachebeamkmeans_spark.operators.kmeans.init import STRATEGIES, initial_centers
 from apachebeamkmeans_spark.operators.kmeans.mllib import mllib_kmeans_fit
+from job_ledger import jobs_and_stages
 from kmeans_reference import farthest_point, recenter_to_list, roulette_point
 from kmeans_reference import sse as sse_of
 
@@ -196,19 +199,17 @@ def test_model_sse_matches_column_reference(scatter, p):
 
 
 def test_lloyd_step_matches_column_reference(scatter):
-    rows = lloyd._lloyd_step(scatter, [TIE_CENTERS], 2.0, "features")
+    size, sx, _ = lloyd._lloyd_step(scatter, [TIE_CENTERS], 2.0, "features")
     ref, sizes = recenter_to_list(lloyd.assign(scatter, TIE_CENTERS, 2.0), dim=3, k=3)
-    assert sorted(r["center_id"] for r in rows) == [i for i in range(3) if sizes[i]]
-    for r in rows:
-        assert r["size"] == sizes[r["center_id"]]
-        assert [x / r["size"] for x in r["sx"]] == pytest.approx(ref[r["center_id"]], rel=1e-12)
+    assert size.tolist() == [sizes]
+    for c in np.flatnonzero(size[0]):
+        assert (sx[0, c] / size[0, c]).tolist() == pytest.approx(ref[c], rel=1e-12)
 
 
 def test_block_step_equals_single_block_steps(spark):
     """An m-block step equals m one-block steps over the column slices:
-    the same (block, center) keys and sizes, and Σx, Σdist within
-    1e-12. Block 1's last center lies far from every point and gets no
-    members."""
+    the same sizes, and Σx, Σdist within 1e-12. Block 1's last center
+    lies far from every point and gets no members."""
     rng = random.Random(5)
     m, dsub, n = 3, 2, 80
     df = spark.createDataFrame(
@@ -216,20 +217,71 @@ def test_block_step_equals_single_block_steps(spark):
         "id long, features array<double>")
     sets = [[[rng.uniform(-1, 1) for _ in range(dsub)] for _ in range(3)] for _ in range(m)]
     sets[1][2] = [50.0, 50.0]
-    got = {(r["s"], r["center_id"]): r for r in lloyd._lloyd_step(df, sets, 2.0, "features")}
-    want = {}
+    size, sx, sd = lloyd._lloyd_step(df, sets, 2.0, "features")
     for s in range(m):
         block = df.select(F.slice("features", s * dsub + 1, dsub).alias("features"))
-        for r in lloyd._lloyd_step(block, [sets[s]], 2.0, "features"):
-            assert r["s"] == 0
-            want[(s, r["center_id"])] = r
-    assert (1, 2) not in want
-    assert sorted(got) == sorted(want)
-    for key, r in want.items():
-        assert got[key]["size"] == r["size"]
-        assert got[key]["sx"] == pytest.approx(r["sx"], rel=1e-12)
-        assert got[key]["sd"] == pytest.approx(r["sd"], rel=1e-12)
-    assert all(sum(r["size"] for (s, _), r in got.items() if s == b) == n for b in range(m))
+        bsize, bsx, bsd = lloyd._lloyd_step(block, [sets[s]], 2.0, "features")
+        assert bsize.shape == (1, 3)
+        if s == 1:
+            assert bsize[0, 2] == 0
+        assert size[s].tolist() == bsize[0].tolist()
+        assert sx[s].ravel().tolist() == pytest.approx(bsx[0].ravel().tolist(), rel=1e-12)
+        assert sd[s].tolist() == pytest.approx(bsd[0].tolist(), rel=1e-12)
+    assert size.sum(axis=1).tolist() == [n] * m
+
+
+def test_lloyd_step_is_one_stage(spark, monkeypatch):
+    """With AQE at the session default, each step over a checkpointed
+    multi-partition frame is one job of one stage, and its executed
+    plan has no Exchange: each task ships one row of dense partials
+    and the driver sums them."""
+    rng = random.Random(2)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(200)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+                               "id long, features array<double>")
+    plans = []
+    collect = type(df).collect
+
+    def recording_collect(self):
+        out = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    n = 3
+    centers = [r[1] for r in rows[:3]]
+    with staged(df, eager=True) as pts:
+        assert pts.rdd.getNumPartitions() == 4
+        monkeypatch.setattr(type(df), "collect", recording_collect)
+        got = jobs_and_stages(spark, "lloyd_step.stages", lambda: [
+            lloyd._lloyd_step(pts, [centers], 2.0, "features") for _ in range(n)])
+    assert got == (n, n)
+    assert len(plans) == n and not any("Exchange" in plan for plan in plans)
+
+
+def test_lloyd_fit_runs_one_job_per_iteration(spark, blobs):
+    """With no empty cluster, `lloyd_fit` runs one job of one stage per
+    iteration at the session's own AQE setting."""
+    n = 3
+    got = jobs_and_stages(spark, "lloyd_fit.jobs", lambda: lloyd.lloyd_fit(
+        blobs, BLOB_CENTERS, p=2.0, threshold=-1.0, max_iter=n))
+    assert got == (n, n)
+
+
+def test_lloyd_fit_is_deterministic(spark):
+    """The driver sums the per-task partials in partition order, so a
+    fit over a 4-partition frame gives the same bits on every run."""
+    rng = random.Random(9)
+    rows = [(i, [rng.gauss(0, 1) * 10 ** rng.randint(-3, 3) for _ in range(5)])
+            for i in range(400)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+                               "id long, features array<double>")
+    init = [r[1] for r in rows[:4]]
+    runs = {
+        tuple(tuple(float.hex(x) for x in c)
+              for c in lloyd.lloyd_fit(df, init, p=2.0, threshold=-1.0, max_iter=5)[0])
+        for _ in range(3)
+    }
+    assert len(runs) == 1
 
 
 def test_lloyd_fit_sse_log_has_one_entry_per_iteration(blobs):

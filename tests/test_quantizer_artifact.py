@@ -13,6 +13,21 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
+
+@pytest.fixture(autouse=True)
+def _fresh_scratch(tmp_path, monkeypatch):
+    """Artifacts go under this test's own tmp tree. The artifact name
+    hashes the sf_dir's absolute path, and pytest reuses tmp paths
+    across runs (pytest-of-<user>/pytest-<n>), so a shared `.scratch/`
+    can already hold this test's artifact from an earlier run."""
+    from apachebeamkmeans_spark import scratch
+
+    root = tmp_path / "repo"
+    root.mkdir()
+    monkeypatch.setattr(scratch, "repo_root", lambda: str(root))
+
 
 def _write_embeddings(d, payload):
     import pyarrow as pa
