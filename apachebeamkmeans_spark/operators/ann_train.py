@@ -46,8 +46,8 @@ from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.checkpoints import is_held, staged
 from apachebeamkmeans_spark.functions import distance as D
-from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import lloyd
+from apachebeamkmeans_spark.operators.kmeans.init import seed_rows
 
 TWO32 = 4294967296.0
 
@@ -85,21 +85,6 @@ def l2_normalize(vecs: DataFrame, id_col: str = "id",
             *carry,
         )
     )
-
-
-def seed_rows(vecs: DataFrame, n: int, seed,
-              id_col: str = "id", features_col: str = "features") -> list[list[float]]:
-    """The n rows with the smallest hash01(id, seed) (ties → lowest id)
-    — the engine's deterministic seeded sample (TakeOrdered, no full
-    sort; O(n·dim) driver traffic)."""
-    rows = (
-        vecs.select(F.col(id_col).alias("i"), F.col(features_col).alias("f"),
-                    hash01(F.col(id_col), seed).alias("h"))
-        .orderBy(F.asc("h"), F.asc("i"))
-        .limit(n)
-        .collect()
-    )
-    return [list(r["f"]) for r in rows]
 
 
 # ------------------------------------------------------------- IVF training

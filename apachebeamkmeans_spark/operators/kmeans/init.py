@@ -28,7 +28,9 @@ kernel over Arrow batches, each task keeps its best row, and the driver
 picks among those (lloyd module docstring). The race's -ln(u) stays a
 JVM column, so the JVM's `log` decides it exactly as before.
 
-Every strategy returns a k×dim Python list — O(k·dim) driver data.
+Each seeded strategy is one (first seed, next draw) pair of `SEEDED`,
+run by the one loop in `initial_centers`. Every strategy returns a
+k×dim Python list — O(k·dim) driver data.
 """
 
 from __future__ import annotations
@@ -49,23 +51,34 @@ def _take1(df: DataFrame, order_cols) -> list[float]:
     return list(rows[0]["f"])
 
 
+def seed_rows(df: DataFrame, n: int, seed, id_col: str = "id",
+              features_col: str = "features") -> list[list[float]]:
+    """The n rows with the smallest hash01(id, seed) (ties → lowest id)
+    — the engine's deterministic seeded sample (TakeOrdered, no full
+    sort; O(n·dim) driver traffic). Shared by `init_random` and the
+    ANN trainers (`ann_train`)."""
+    rows = (
+        df.select(F.col(id_col).alias("i"), F.col(features_col).alias("f"),
+                  hash01(F.col(id_col), seed).alias("h"))
+        .orderBy(F.asc("h"), F.asc("i"))
+        .limit(n)
+        .collect()
+    )
+    return [list(r["f"]) for r in rows]
+
+
 def init_random(df: DataFrame, k: int, seed: int, features_col: str = "features") -> list[list[float]]:
     """Exact-k deterministic sample without replacement: order by a
     reproducible per-row hash, take k (O4 in SURVEY.md §2.5)."""
-    rows = (
-        df.select(F.col(features_col).alias("f"), hash01(F.col("id"), seed).alias("h"), "id")
-        .orderBy("h", "id")
-        .limit(k)
-        .collect()
-    )
-    if not rows:
+    feats = seed_rows(df, k, seed, features_col=features_col)
+    if not feats:
         raise ValueError("k-means seeding requires a non-empty points frame")
-    feats = [list(r["f"]) for r in rows]
     # k > n: cycle the available points rather than silently shrinking k
     # (the reference shrank — documented divergence, SURVEY.md §8.3);
     # the Lloyd loop's empty-cluster reseed takes it from here.
+    n = len(feats)
     while len(feats) < k:
-        feats.append(list(feats[len(feats) % len(rows)]))
+        feats.append(list(feats[len(feats) % n]))
     return feats
 
 
@@ -80,76 +93,56 @@ def _roulette_next(df: DataFrame, centers: list[list[float]], p: float, weight: 
     return best_point(df, centers, p, features_col, race=(nlu, weight))
 
 
-def init_plusplus(df: DataFrame, params: KMeansParams,
-                  features_col: str = "features") -> list[list[float]]:
-    first = init_random(df, 1, params.seed, features_col)
-    centers = first
-    for i in range(1, params.k):
-        centers = centers + [
-            _roulette_next(df, centers, params.p, params.weight, params.seed, i, features_col)
-        ]
-    return centers
+# ------------------------------------------- seeded strategies: (first, next)
 
 
-def _norm_first(df: DataFrame, p: float, desc: bool, manhattan: bool,
-                features_col: str = "features") -> list[float]:
-    feats = F.col(features_col)
-    if manhattan:
-        n = D.abs_sum(feats)
-    elif p == 2:
-        n = D.norm(feats, 2)
-    else:
-        n = D.norm(feats, p)
-    order = [F.desc("n") if desc else F.asc("n"), F.asc("id")]
-    return _take1(df.select(feats.alias("f"), n.alias("n"), "id"), order)
+def _random_first(df: DataFrame, params: KMeansParams, features_col: str) -> list[float]:
+    """Seeded random point."""
+    return init_random(df, 1, params.seed, features_col)[0]
 
 
-def init_max(df: DataFrame, params: KMeansParams, features_col: str = "features") -> list[list[float]]:
-    """Farthest-from-origin first seed + roulette rounds."""
-    centers = [_norm_first(df, params.p, desc=True, manhattan=False, features_col=features_col)]
-    for i in range(1, params.k):
-        centers.append(_roulette_next(df, centers, params.p, params.weight, params.seed, i, features_col))
-    return centers
+def _norm_first(desc: bool, manhattan: bool):
+    """First seed by norm: farthest from (desc) or nearest to the
+    origin under the metric's norm, or by L1 norm (`manhattan`,
+    `Point.point_abs_sum`); ties → lowest id."""
+    def first(df: DataFrame, params: KMeansParams, features_col: str) -> list[float]:
+        feats = F.col(features_col)
+        n = D.abs_sum(feats) if manhattan else D.norm(feats, params.p)
+        order = [F.desc("n") if desc else F.asc("n"), F.asc("id")]
+        return _take1(df.select(feats.alias("f"), n.alias("n"), "id"), order)
+    return first
 
 
-def init_min(df: DataFrame, params: KMeansParams, features_col: str = "features") -> list[list[float]]:
-    """Nearest-to-origin first seed + roulette rounds."""
-    centers = [_norm_first(df, params.p, desc=False, manhattan=False, features_col=features_col)]
-    for i in range(1, params.k):
-        centers.append(_roulette_next(df, centers, params.p, params.weight, params.seed, i, features_col))
-    return centers
+def _roulette_draw(df: DataFrame, centers: list[list[float]], params: KMeansParams,
+                   rnd: int, features_col: str) -> list[float]:
+    return _roulette_next(df, centers, params.p, params.weight, params.seed, rnd,
+                          features_col)
 
 
-def init_max_farthest(df: DataFrame, params: KMeansParams,
-                      features_col: str = "features") -> list[list[float]]:
-    """Gonzalez / maximin scattering: farthest-from-origin seed, then
-    deterministically take the point farthest from the chosen set."""
-    centers = [_norm_first(df, params.p, desc=True, manhattan=False, features_col=features_col)]
-    for _ in range(1, params.k):
-        centers.append(farthest_point(df, centers, params.p, features_col))
-    return centers
+def _farthest_draw(df: DataFrame, centers: list[list[float]], params: KMeansParams,
+                   rnd: int, features_col: str) -> list[float]:
+    """Gonzalez / maximin scattering: the point farthest from the
+    chosen set, deterministically."""
+    return farthest_point(df, centers, params.p, features_col)
 
 
-def init_max_farthest_manhattan(df: DataFrame, params: KMeansParams,
-                                features_col: str = "features") -> list[list[float]]:
-    """Same as max_farthest but the first seed maximizes the L1 norm
-    (`Point.point_abs_sum`)."""
-    centers = [_norm_first(df, params.p, desc=True, manhattan=True, features_col=features_col)]
-    for _ in range(1, params.k):
-        centers.append(farthest_point(df, centers, params.p, features_col))
-    return centers
-
-
-STRATEGIES = {
-    "random": lambda df, p, fc: init_random(df, p.k, p.seed, fc),
-    "plusplus": init_plusplus,
-    "init_max": init_max,
-    "init_min": init_min,
-    "max_farthest": init_max_farthest,
-    "max_farthest_manhattan": init_max_farthest_manhattan,
+SEEDED = {
+    "plusplus": (_random_first, _roulette_draw),
+    "init_max": (_norm_first(desc=True, manhattan=False), _roulette_draw),
+    "init_min": (_norm_first(desc=False, manhattan=False), _roulette_draw),
+    "max_farthest": (_norm_first(desc=True, manhattan=False), _farthest_draw),
+    "max_farthest_manhattan": (_norm_first(desc=True, manhattan=True), _farthest_draw),
 }
+
+STRATEGIES = ("random", *SEEDED)
 
 
 def initial_centers(df: DataFrame, params: KMeansParams,
                     features_col: str = "features") -> list[list[float]]:
-    return STRATEGIES[params.init](df, params, features_col)
+    if params.init == "random":
+        return init_random(df, params.k, params.seed, features_col)
+    first, draw = SEEDED[params.init]
+    centers = [first(df, params, features_col)]
+    for rnd in range(1, params.k):
+        centers.append(draw(df, centers, params, rnd, features_col))
+    return centers

@@ -18,7 +18,7 @@ trades recall for scan cost exactly like FAISS IVF.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.checkpoints import staged
@@ -349,19 +349,9 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
         from apachebeamkmeans_spark.operators.ann_train import knn_refine
 
         refine = knn_refine(pts.count(), nprobe, len(centers))
-    dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-        F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    cells = F.array_sort(
-        F.transform(
-            D.lit_array(centers),
-            lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
-        )
-    )
     # cut the assign tree before the explode — same 181 s codegen trap
     # the flat build documents (queries_similarity.q_sim_knn_graph)
-    probes = F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe)
+    probes = probe_cells(F.col("f"), centers, nprobe)
     with staged(pts.select("vec_id", "f", probes.alias("probes")),
                 eager=True) as probed:
         lit_centers = D.lit_array(centers)
@@ -388,9 +378,6 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
             carry=("coarse_id", "probes"),
         ).localCheckpoint(eager=True)
 
-    def _adc(lut_col, codes_col):
-        return _adc_expr(lut_col, codes_col, m)
-
     from apachebeamkmeans_spark.operators.dedup import SALT_TARGET
 
     half = (
@@ -414,8 +401,8 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
         .select(
             F.col("a.vec_id").alias("aid"),
             F.col("b.vec_id").alias("bid"),
-            _adc(F.col("a.lut"), F.col("b.codes")).alias("d_ab"),
-            _adc(F.col("b.lut"), F.col("a.codes")).alias("d_ba"),
+            _adc_expr(F.col("a.lut"), F.col("b.codes"), m).alias("d_ab"),
+            _adc_expr(F.col("b.lut"), F.col("a.codes"), m).alias("d_ba"),
         )
     )
     # Deliberately a two-branch union (the join subtree executes once
@@ -494,12 +481,9 @@ def pq_adc_topk(encoded: DataFrame, queries: list[list[float]],
     ranks ascending (ties → lowest vec_id)."""
     m = len(codebooks)
     luts = [pq_adc_lut(q, codebooks) for q in queries]
-    codes = F.col("codes")
-
-    def _adc(lut_q):
-        return _adc_expr(lut_q, codes, m)
-
-    adc_arr = F.transform(D.lit_array(luts), _adc)
+    adc_arr = F.transform(
+        D.lit_array(luts), lambda lut_q: _adc_expr(lut_q, F.col("codes"), m)
+    )
     exploded = encoded.select("vec_id", F.posexplode(adc_arr).alias("qid", "_d"))
     w = Window.partitionBy("qid").orderBy(F.asc("_d"), F.asc("vec_id"))
     return (
@@ -515,83 +499,31 @@ def ivfpq_topk(vecs: DataFrame, queries: list[list[float]],
                nprobe: int = 2, refine: int = 50, id_col: str = "id",
                features_col: str = "features") -> DataFrame:
     """IVF-PQ serving with exact re-rank, ONE plan — the FAISS
-    IVF-PQ+refine search shape: coarse-quantize each (already
-    normalized) vector to its nearest trained center, keep only the
-    union of all queries' probe cells, PQ-encode the survivors
-    (m codes/row), ADC-rank per query with a (qid, cell) membership
-    filter, keep the top-`refine` shortlist, then re-rank the shortlist
-    by EXACT cosine (dot / |f|, the one convention every serving path
-    shares) for the final top-k. With a
-    materialized coarse-partitioned layout (`build_ivf_index`) the cell
-    filter becomes partition pruning, so at 100 TB the scan touches
-    nprobe/k of the data; the ADC stage reads m bytes per row, and the
-    exact distance is computed for only `refine` rows per query.
-    No residual encoding (codes are over raw normalized vectors, not
-    center residuals) — one codebook serves all cells, the common
-    memory/simplicity trade."""
-    m = len(codebooks)
-    probe_cells = [nearest_centers(q, coarse_centers, nprobe) for q in queries]
-    all_cells = sorted({c for cells in probe_cells for c in cells})
-    # Materialize the coarse assignment ONCE, then filter the stored
-    # column. Two traps avoided: (a) filtering `coarse_id IN (...)`
-    # directly on the computed argmin column double-evaluates the
-    # whole assign expression tree — HOF lambdas get no CSE across the
-    # Filter/Project boundary (measured 2.2× on the encode stage);
-    # (b) the ADC stage and the refine-time vector fetch both read
-    # this frame — without the checkpoint the assign map would run
-    # again for the refine branch. localCheckpoint rather than cache:
-    # blocks release when the frame is GC'd. (At 100 TB the inline
-    # path is the ad-hoc one — production serving reads the
-    # `build_ivf_index` layout, where this filter is partition
-    # pruning on the scan, not expression evaluation.)
-    assigned = coarse_assign(vecs, coarse_centers, id_col, features_col).localCheckpoint(
-        eager=False
-    )
-    pruned = (
-        assigned
-        if len(all_cells) == len(coarse_centers)
-        else assigned.filter(F.col("coarse_id").isin(all_cells))
-    )
-    encoded = pq_encode(
-        pruned.withColumn("probe_cell", F.col("coarse_id").cast("int")),
-        codebooks, id_col="vec_id", features_col="f",
-        carry=("probe_cell",),
-    )
-    luts = [pq_adc_lut(q, codebooks) for q in queries]
-    codes = F.col("codes")
+    IVF-PQ+refine search shape without a materialized layout:
+    `ivfpq_probe_topk` over the `_ivfpq_layout` frame of the inline
+    coarse assignment (as `ivf_topk` is `ivf_probe_topk` over
+    `coarse_assign`). Each (already normalized) vector is
+    coarse-quantized to its nearest trained center; only the union of
+    all queries' probe cells is PQ-encoded (m codes/row), ADC-ranked
+    per query, cut to the top-`refine` shortlist and re-ranked by
+    EXACT cosine for the final top-k. No residual encoding (codes are
+    over raw normalized vectors, not center residuals) — one codebook
+    serves all cells, the common memory/simplicity trade.
 
-    def _adc(lut_q):
-        return _adc_expr(lut_q, codes, m)
-
-    # ADC stage ships NARROW rows only — (vec_id, probe_cell, qid, d):
-    # the raw vector must NOT ride through the posexplode fan-out and
-    # the ranking shuffle (that would move n_queries copies of the
-    # full embedding per row and defeat PQ's m-bytes-per-row serving
-    # economics at 100 TB). Vectors are re-fetched below for the
-    # shortlist only.
-    adc_arr = F.transform(D.lit_array(luts), _adc)
-    exploded = encoded.select(
-        "vec_id", "probe_cell", F.posexplode(adc_arr).alias("qid", "_d")
+    The coarse assignment is checkpointed before the encode. Two traps
+    avoided: (a) the probe filter `coarse_id IN (...)` reads the stored
+    column and lands below the encode projection, so unprobed cells are
+    never encoded and the assign tree is never evaluated twice — HOF
+    lambdas get no CSE across the Filter/Project boundary (measured
+    2.2× on the encode stage); (b) the ADC pass and the refine fetch
+    both read this frame — without the checkpoint the assign map would
+    run again for the refine branch. localCheckpoint rather than cache:
+    blocks release when the frame is GC'd."""
+    assigned = coarse_assign(vecs, coarse_centers, id_col, features_col)
+    return ivfpq_probe_topk(
+        _ivfpq_layout(assigned.localCheckpoint(eager=False), codebooks),
+        queries, coarse_centers, codebooks, k, nprobe, refine,
     )
-    hits = exploded.filter(
-        F.array_contains(
-            F.element_at(F.lit(probe_cells), F.col("qid") + 1), F.col("probe_cell")
-        )
-    )
-    wa = Window.partitionBy("qid").orderBy(F.asc("_d"), F.asc("vec_id"))
-    shortlist = (
-        hits.withColumn("adc_rank", F.row_number().over(wa))
-        .filter(F.col("adc_rank") <= refine)
-    )
-    # exact refine: the shared literal-refine implementation — a
-    # broadcast fetch of raw vectors for shortlist rows against the
-    # pruned cells (a second column-pruned scan of nprobe/k of the
-    # corpus — with a materialized IVF layout this scan
-    # partition-prunes too), cosine = dot / |f| (ONE convention across
-    # the whole serving matrix, ADVICE r11: with |f| = 1 by the
-    # normalization contract the values agree to ~1e-16, but the
-    # facade must report the SAME number through every entry point).
-    return _refine_exact_literal(pruned, shortlist, queries, k)
 
 
 def ivfpq_batch_topk(vecs: DataFrame, queries: DataFrame,
@@ -603,137 +535,18 @@ def ivfpq_batch_topk(vecs: DataFrame, queries: DataFrame,
                      prune_scan: bool = True) -> DataFrame:
     """IVF-PQ serving driven by a query TABLE — `ivfpq_topk`'s batch
     twin, completing the serving matrix ({literal, table} ×
-    {flat IVF, IVF-PQ}): when the queries are data, the per-query ADC
-    lookup tables cannot be plan literals, so each query row computes
-    its OWN m×ksub LUT in-plan (`pq_encode_lut`'s dmat trick — the
-    same distance matrix that encodes a database row IS the ADC table
-    of a query row) and the probe-cell choice is an in-plan argsort
-    over the literal trained centers (`ivf_batch_topk`'s rule, ties →
-    lowest cell).
-
-    Shape: index side = coarse assign (checkpointed once, reused by
-    the refine fetch) → PQ encode to narrow (vec_id, codes,
-    probe_cell) rows; query side = fold-normalize (zero-norm rows
-    drop) → checkpoint → LUT + probe cells → explode; ONE join on the
-    cell id; ADC = m lookups per candidate; per-qid row_number
-    shortlist ≤ `refine`; exact cosine re-rank joins the raw vectors
-    back for shortlist rows only. The raw embedding never rides the
-    candidate fan-out — candidates carry m codes one way and m·ksub
-    LUT doubles the other, the PQ serving economics at 100 TB. Like
-    `ivfpq_topk`, codes are non-residual (one codebook for all
-    cells); `vecs` must be L2-normalized."""
-    m = len(codebooks)
-    assigned = coarse_assign(
-        vecs, coarse_centers, id_col, features_col
-    ).localCheckpoint(eager=False)
-
-    qv = F.col(qvec_col).cast("array<double>")
-    nsq = F.aggregate(
-        F.transform(qv, lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-    )
-    normed_q = (
-        queries.select(
-            F.col(qid_col).cast("long").alias("qid"), qv.alias("__q"),
-            nsq.alias("__nsq"),
-        )
-        .filter(F.col("__nsq") > 0)
-        .select(
-            "qid",
-            F.transform(
-                F.col("__q"), lambda x: x / F.sqrt(F.col("__nsq"))
-            ).alias("__q"),
-        )
-        # cut the normalize tree before the LUT/probe HOFs (no CSE
-        # inside lambdas — the same codegen discipline as pca/knn)
-        .localCheckpoint(eager=False)
-    )
-    cdist = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("__q"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    scored_cells = F.transform(
-        D.lit_array(coarse_centers),
-        lambda c, i: F.struct(cdist(c).alias("d"), i.cast("int").alias("i")),
-    )
-    with_probes = normed_q.select(
-        "qid", "__q",
-        F.transform(
-            F.slice(F.array_sort(scored_cells), 1, nprobe), lambda s: s["i"]
-        ).alias("probes"),
-    )
-    # pq_encode_lut renames the id column to vec_id; restore qid after
-    qside = (
-        pq_encode_lut(
-            with_probes, codebooks, id_col="qid", features_col="__q",
-            carry=("probes",),
-        )
-        .withColumnRenamed("vec_id", "qid")
-        .select("qid", "lut", "probes")
-    )
-    probes = qside.select(
-        "qid", "lut", F.explode("probes").alias("q_cell")
-    )
-    # prune BEFORE the encode: the literal paths filter `coarse_id IN
-    # (plan-time cells)` before pq_encode; on the batch path the probe
-    # set is data, so collect the ≤ k distinct cells (same k-row-class
-    # collect as the indexed paths, r12) and skip encoding cells no
-    # query probes — at scale the encode is the dominant inline cost
-    # and unprobed cells are pure waste. Full-probe batches skip the
-    # no-op filter (identical plan to the pre-r12 shape).
-    if prune_scan:
-        cells = _collected_probe_cells(probes, "q_cell")
-        if cells and len(cells) < len(coarse_centers):
-            assigned = assigned.filter(F.col("coarse_id").isin(cells))
-    encoded = pq_encode(
-        assigned.withColumn("probe_cell", F.col("coarse_id").cast("int")),
-        codebooks, id_col="vec_id", features_col="f",
-        carry=("probe_cell",),
-    )
-
-    def _adc(lut_col, codes_col):
-        return _adc_expr(lut_col, codes_col, m)
-
-    cand = encoded.join(probes, F.col("probe_cell") == F.col("q_cell"))
-    adc = cand.select(
-        "qid", "probe_cell", "vec_id",
-        _adc(F.col("lut"), F.col("codes")).alias("_d"),
-    )
-    wa = Window.partitionBy("qid").orderBy(F.asc("_d"), F.asc("vec_id"))
-    shortlist = (
-        adc.withColumn("adc_rank", F.row_number().over(wa))
-        .filter(F.col("adc_rank") <= refine)
-        .select("qid", "probe_cell", "vec_id")
-    )
-    # exact refine: raw vectors for shortlist rows only; __q is unit,
-    # so cosine = dot / |f| (the ivf_batch_topk fold structure)
-    qvecs = normed_q  # (qid, __q)
-    f = F.col("f")
-    vnorm = F.sqrt(
-        F.aggregate(F.transform(f, lambda x: x * x), F.lit(0.0), lambda a, v: a + v)
-    )
-    dot = F.aggregate(
-        F.zip_with(f, F.col("__q"), lambda a, b: a * b),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    scored = (
-        shortlist
-        .join(assigned.select("vec_id", "f"), "vec_id")
-        .join(qvecs, "qid")
-        .select(
-            "qid", "probe_cell", "vec_id",
-            dot.alias("__dot"), vnorm.alias("__vn"),
-        )
-        .select(
-            "qid", "probe_cell", "vec_id",
-            (F.col("__dot") / F.col("__vn")).alias("_c"),
-        )
-    )
-    wc = Window.partitionBy("qid").orderBy(F.desc("_c"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wc))
-        .filter(F.col("rank") <= k)
-        .select("qid", "probe_cell", "vec_id",
-                F.round("_c", 6).alias("cosine"), "rank")
+    {flat IVF, IVF-PQ}): `ivfpq_batch_probe_topk` over the same inline
+    layout frame (coarse assignment checkpointed once, read by both the
+    ADC pass and the refine fetch). With `prune_scan` the collected
+    probe cells filter `coarse_id` below the encode projection, so
+    cells no query probes are never encoded — at scale the encode is
+    the dominant inline cost. Like `ivfpq_topk`, codes are non-residual
+    (one codebook for all cells); `vecs` must be L2-normalized."""
+    assigned = coarse_assign(vecs, coarse_centers, id_col, features_col)
+    return ivfpq_batch_probe_topk(
+        _ivfpq_layout(assigned.localCheckpoint(eager=False), codebooks),
+        queries, coarse_centers, codebooks, k, nprobe, refine,
+        qid_col, qvec_col, prune_scan,
     )
 
 
@@ -747,9 +560,7 @@ def ivfpq_batch_topk_indexed(spark, index_path: str, queries: DataFrame,
     """`ivfpq_batch_topk` over a materialized `build_ivfpq_index`
     layout: assign/encode already paid at build time, candidates come
     from the codes scan joined to the in-plan per-query LUTs, the
-    refine re-reads raw vectors from the layout. Query-side shape is
-    identical to the inline batch operator (fold-normalize →
-    checkpoint → probes + LUT via `pq_encode_lut`). With `prune_scan`
+    refine re-reads raw vectors from the layout. With `prune_scan`
     (default) the distinct probed-cell set is collected (≤ k cells)
     and pushed as a static `coarse_id IN (...)` filter, so BOTH layout
     reads — the codes scan and the refine raw-vector fetch — partition
@@ -772,44 +583,24 @@ def ivfpq_batch_probe_topk(index: DataFrame, queries: DataFrame,
     """`ivfpq_batch_topk_indexed` over an already-constructed layout
     FRAME — the filtered-search seam (see `ivfpq_probe_topk`): a
     caller-applied metadata predicate on `index` reaches BOTH layout
-    reads (codes scan and refine fetch) as a parquet data filter."""
-    m = len(codebooks)
+    reads (codes scan and refine fetch) as a parquet data filter.
 
-    qv = F.col(qvec_col).cast("array<double>")
-    nsq = F.aggregate(
-        F.transform(qv, lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-    )
-    normed_q = (
-        queries.select(
-            F.col(qid_col).cast("long").alias("qid"), qv.alias("__q"),
-            nsq.alias("__nsq"),
-        )
-        .filter(F.col("__nsq") > 0)
-        .select(
-            "qid",
-            F.transform(
-                F.col("__q"), lambda x: x / F.sqrt(F.col("__nsq"))
-            ).alias("__q"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    cdist = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("__q"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    scored_cells = F.transform(
-        D.lit_array(centers),
-        lambda c, i: F.struct(cdist(c).alias("d"), i.cast("int").alias("i")),
-    )
-    with_probes = normed_q.select(
-        "qid", "__q",
-        F.transform(
-            F.slice(F.array_sort(scored_cells), 1, nprobe), lambda s: s["i"]
-        ).alias("probes"),
-    )
+    The queries are data, so their ADC lookup tables cannot be plan
+    literals: each query row computes its OWN m×ksub LUT in-plan
+    (`pq_encode_lut`'s dmat trick — the distance matrix that encodes a
+    database row IS the ADC table of a query row). Shape: query side =
+    `_probed_queries` → LUT → explode; ONE join on the cell id; ADC = m
+    lookups per candidate; per-qid row_number shortlist ≤ `refine`;
+    `_refine_exact_batch` joins the raw vectors back for shortlist rows
+    only. The raw embedding never rides the candidate fan-out —
+    candidates carry m codes one way and m·ksub LUT doubles the other,
+    the PQ serving economics at 100 TB."""
+    m = len(codebooks)
+    probed_q = _probed_queries(queries, centers, nprobe, qid_col, qvec_col)
+    # pq_encode_lut renames the id column to vec_id; restore qid after
     qside = (
         pq_encode_lut(
-            with_probes, codebooks, id_col="qid", features_col="__q",
+            probed_q, codebooks, id_col="qid", features_col="__q",
             carry=("probes",),
         )
         .withColumnRenamed("vec_id", "qid")
@@ -820,16 +611,12 @@ def ivfpq_batch_probe_topk(index: DataFrame, queries: DataFrame,
         cells = _collected_probe_cells(probes, "q_cell")
         if cells and len(cells) < len(centers):
             index = index.filter(F.col("coarse_id").isin(cells))
-
-    def _adc(lut_col, codes_col):
-        return _adc_expr(lut_col, codes_col, m)
-
     cand = index.select("vec_id", "codes", "coarse_id").join(
         probes, F.col("coarse_id") == F.col("q_cell")
     )
     adc = cand.select(
         "qid", F.col("coarse_id").cast("int").alias("probe_cell"), "vec_id",
-        _adc(F.col("lut"), F.col("codes")).alias("_d"),
+        _adc_expr(F.col("lut"), F.col("codes"), m).alias("_d"),
     )
     wa = Window.partitionBy("qid").orderBy(F.asc("_d"), F.asc("vec_id"))
     shortlist = (
@@ -837,20 +624,12 @@ def ivfpq_batch_probe_topk(index: DataFrame, queries: DataFrame,
         .filter(F.col("adc_rank") <= refine)
         .select("qid", "probe_cell", "vec_id")
     )
-    f = F.col("f")
-    vnorm = F.sqrt(
-        F.aggregate(F.transform(f, lambda x: x * x), F.lit(0.0), lambda a, v: a + v)
-    )
-    dot = F.aggregate(
-        F.zip_with(f, F.col("__q"), lambda a, b: a * b),
-        F.lit(0.0), lambda a, v: a + v,
-    )
     # refine join includes the partition column: probe_cell IS the
     # shortlist row's coarse_id, so joining on (vec_id, probe_cell)
     # lets partition pruning / DPP cut the raw-vector re-read to the
     # probed directories instead of scanning f corpus-wide (r11
     # review) — the batch twin of ivfpq_topk_indexed's pruned refine
-    scored = (
+    return _refine_exact_batch(
         shortlist
         .join(
             index.select(
@@ -859,22 +638,8 @@ def ivfpq_batch_probe_topk(index: DataFrame, queries: DataFrame,
             ),
             ["vec_id", "probe_cell"],
         )
-        .join(normed_q, "qid")
-        .select(
-            "qid", "probe_cell", "vec_id",
-            dot.alias("__dot"), vnorm.alias("__vn"),
-        )
-        .select(
-            "qid", "probe_cell", "vec_id",
-            (F.col("__dot") / F.col("__vn")).alias("_c"),
-        )
-    )
-    wc = Window.partitionBy("qid").orderBy(F.desc("_c"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wc))
-        .filter(F.col("rank") <= k)
-        .select("qid", "probe_cell", "vec_id",
-                F.round("_c", 6).alias("cosine"), "rank")
+        .join(probed_q.select("qid", "__q"), "qid"),
+        k,
     )
 
 
@@ -904,8 +669,8 @@ def ivfpq_residual_topk(vecs: DataFrame, queries: list[list[float]],
     per cell and this path wins; both are certified so the choice is
     a config, not a rewrite."""
     m = len(codebooks)
-    probe_cells = [nearest_centers(q, coarse_centers, nprobe) for q in queries]
-    all_cells = sorted({c for cells in probe_cells for c in cells})
+    qcells = [nearest_centers(q, coarse_centers, nprobe) for q in queries]
+    all_cells = sorted({c for cells in qcells for c in cells})
     assigned = coarse_assign(vecs, coarse_centers, id_col, features_col).localCheckpoint(
         eager=False
     )
@@ -945,19 +710,15 @@ def ivfpq_residual_topk(vecs: DataFrame, queries: list[list[float]],
             ),
         )
         for qid, q in enumerate(queries)
-        for c in probe_cells[qid]
+        for c in qcells[qid]
     ]
     lut_df = vecs.sparkSession.createDataFrame(
         lut_rows, "qid INT, probe_cell INT, lut ARRAY<ARRAY<DOUBLE>>"
     )
-    hits_wide = encoded.join(F.broadcast(lut_df), "probe_cell")
-    codes = F.col("codes")
-    d = None
-    for s in range(m):
-        term = F.element_at(F.element_at(F.col("lut"), s + 1),
-                            F.element_at(codes, s + 1) + 1)
-        d = term if d is None else d + term
-    hits = hits_wide.select("vec_id", "probe_cell", "qid", d.alias("_d"))
+    hits = encoded.join(F.broadcast(lut_df), "probe_cell").select(
+        "vec_id", "probe_cell", "qid",
+        _adc_expr(F.col("lut"), F.col("codes"), m).alias("_d"),
+    )
     wa = Window.partitionBy("qid").orderBy(F.asc("_d"), F.asc("vec_id"))
     shortlist = (
         hits.withColumn("adc_rank", F.row_number().over(wa))
@@ -976,6 +737,61 @@ def _collected_probe_cells(probes: DataFrame, cell_col: str) -> list[int]:
     fire on the probe-join shape, so the plan needs the constant)."""
     return sorted(
         r[cell_col] for r in probes.select(cell_col).distinct().collect()
+    )
+
+
+def _probed_queries(queries: DataFrame, centers: list[list[float]],
+                    nprobe: int, qid_col: str, qvec_col: str) -> DataFrame:
+    """(qid, __q, probes) of a query TABLE — the prelude of every batch
+    search: cast the vectors to doubles, fold-normalize (zero-norm rows
+    drop: no direction, no probe), checkpoint, then the `probe_cells`
+    column. The checkpoint cuts the normalize tree: HOF lambdas get no
+    CSE, so the center-distance transform would inline the per-row
+    normalization into every one of its k×dim distance terms."""
+    qv = F.col(qvec_col).cast("array<double>")
+    nsq = F.aggregate(
+        F.transform(qv, lambda x: x * x), F.lit(0.0), lambda a, v: a + v
+    )
+    normed = (
+        queries.select(
+            F.col(qid_col).cast("long").alias("qid"), qv.alias("__q"),
+            nsq.alias("__nsq"),
+        )
+        .filter(F.col("__nsq") > 0)
+        .select(
+            "qid",
+            F.transform(
+                F.col("__q"), lambda x: x / F.sqrt(F.col("__nsq"))
+            ).alias("__q"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    return normed.select(
+        "qid", "__q", probe_cells(F.col("__q"), centers, nprobe).alias("probes")
+    )
+
+
+def _refine_exact_batch(cand: DataFrame, k: int) -> DataFrame:
+    """Exact rank of query-TABLE candidates — the batch twin of
+    `_refine_exact_literal`: `cand` rows carry (qid, probe_cell,
+    vec_id, f, __q) with __q unit-norm, so cosine = dot / |f|; |f| is
+    staged as a column (no CSE inside HOF lambdas), one per-qid window
+    keeps rank ≤ k. The window shuffles by qid — k rows per query
+    survive the map-side WindowGroupLimit."""
+    f = F.col("f")
+    scored = cand.select(
+        "qid", "probe_cell", "vec_id",
+        D.dot(f, F.col("__q")).alias("__dot"), D.norm(f, 2).alias("__vn"),
+    ).select(
+        "qid", "probe_cell", "vec_id",
+        (F.col("__dot") / F.col("__vn")).alias("_c"),
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("_c"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "probe_cell", "vec_id",
+                F.round("_c", 6).alias("cosine"), "rank")
     )
 
 
@@ -1337,6 +1153,24 @@ def nearest_center(q: list[float], centers: list[list[float]]) -> int:
     return nearest_centers(q, centers, 1)[0]
 
 
+def probe_cells(vec: Column, centers: list[list[float]],
+                nprobe: int) -> Column:
+    """The `nprobe` nearest cells of a vector column, nearest first
+    (ties → lowest cell id) — the Column twin of `nearest_centers` and
+    the one probe rule of every in-plan IVF probe: sort (distance,
+    cell) structs over the literal center matrix. The HOF form (one
+    ARRAY<ARRAY> literal + transform) keeps generated code size
+    independent of the cell count. Callers that explode the probes
+    checkpoint this column first: a Generate whose child inlines the
+    (cells × dim × sort) tree sends codegen compilation pathological
+    (queries_similarity.q_sim_knn_graph)."""
+    scored = F.transform(
+        D.lit_array(centers),
+        lambda c, i: F.struct(D.l2_sq(vec, c).alias("d"), i.cast("int").alias("i")),
+    )
+    return F.slice(F.array_sort(scored), 1, nprobe)["i"]
+
+
 def coarse_assign(vecs: DataFrame, centers: list[list[float]],
                   id_col: str = "id", features_col: str = "features",
                   carry: tuple[str, ...] = ()) -> DataFrame:
@@ -1395,8 +1229,8 @@ def ivf_probe_topk(index: DataFrame, queries: list[list[float]],
     a literal-map membership filter keeps only (qid, cell) matches, and
     one per-qid window ranks. `probe_cell` is the cell the hit came
     from. `index` must carry (vec_id, f ARRAY<DOUBLE>, coarse_id)."""
-    probe_cells = [nearest_centers(q, centers, nprobe) for q in queries]
-    all_cells = sorted({c for cells in probe_cells for c in cells})
+    qcells = [nearest_centers(q, centers, nprobe) for q in queries]
+    all_cells = sorted({c for cells in qcells for c in cells})
     pruned = index.filter(F.col("coarse_id").isin(all_cells))
     f = F.col("f")
     qnorms = [sum(float(v) * float(v) for v in q) ** 0.5 for q in queries]
@@ -1416,7 +1250,7 @@ def ivf_probe_topk(index: DataFrame, queries: list[list[float]],
     ).select("vec_id", "probe_cell", F.posexplode(cos_arr).alias("qid", "_c"))
     hits = exploded.filter(
         F.array_contains(
-            F.element_at(F.lit(probe_cells), F.col("qid") + 1), F.col("probe_cell")
+            F.element_at(F.lit(qcells), F.col("qid") + 1), F.col("probe_cell")
         )
     )
     w = Window.partitionBy("qid").orderBy(F.desc("_c"), F.asc("vec_id"))
@@ -1447,14 +1281,13 @@ def ivf_batch_topk(index: DataFrame, queries: DataFrame,
     rows: an embedding batch to retrieve context for, a dedup probe
     set), so the search must be a JOIN, not a plan constant.
 
-    Plan: normalize each query row (zero-norm queries drop — no
-    direction, no probe), pick its `nprobe` nearest coarse cells via
-    one array_sort over the literal center matrix (ties → lowest cell
-    id, the `nearest_centers` rule), explode to (qid, probe_cell),
-    join the index on `coarse_id == probe_cell`, cosine per candidate
-    (one HOF fold each for dot and row norm), one per-qid window for
-    rank ≤ k. Output matches `ivf_probe_topk`'s shape: (qid,
-    probe_cell, vec_id, cosine, rank).
+    Plan: normalize each query row and pick its `nprobe` nearest
+    coarse cells (`_probed_queries`: zero-norm queries drop — no
+    direction, no probe; cells by `probe_cells`, ties → lowest cell
+    id), explode to (qid, probe_cell), join the index on
+    `coarse_id == probe_cell`, then `_refine_exact_batch`: cosine per
+    candidate, one per-qid window for rank ≤ k. Output matches
+    `ivf_probe_topk`'s shape: (qid, probe_cell, vec_id, cosine, rank).
 
     Scale posture: candidate volume is inherently Σ_cells
     n_cell·q_cell — the real IVF work — and the join key has only
@@ -1469,75 +1302,16 @@ def ivf_batch_topk(index: DataFrame, queries: DataFrame,
     does not fire on this join shape, the data-dependent probe set
     must be made a plan constant to prune). The one extra pass over
     the query table is a normalize + k-distance argsort — paid once,
-    vs scanning (k − probed)/k of the layout for nothing. The window
-    shuffles by qid — k rows per query survive the map-side
-    WindowGroupLimit."""
-    qn = F.col(qvec_col).cast("array<double>")
-    nsq = F.aggregate(
-        F.transform(qn, lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-    )
-    normed = (
-        queries.select(
-            F.col(qid_col).cast("long").alias("qid"), qn.alias("__q"),
-            nsq.alias("__nsq"),
-        )
-        .filter(F.col("__nsq") > 0)
-        .select(
-            "qid",
-            F.transform(
-                F.col("__q"), lambda x: x / F.sqrt(F.col("__nsq"))
-            ).alias("__q"),
-        )
-        # cut the normalize tree: HOF lambdas get no CSE, so the
-        # center-distance transform below would inline the per-row
-        # normalization into every one of the k×dim distance terms
-        .localCheckpoint(eager=False)
-    )
-    cdist = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("__q"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    scored_cells = F.transform(
-        D.lit_array(centers),
-        lambda c, i: F.struct(cdist(c).alias("d"), i.cast("int").alias("i")),
-    )
-    probes = normed.select(
-        "qid", "__q",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(scored_cells), 1, nprobe),
-                lambda s: s["i"],
-            )
-        ).alias("probe_cell"),
+    vs scanning (k − probed)/k of the layout for nothing."""
+    probes = _probed_queries(queries, centers, nprobe, qid_col, qvec_col).select(
+        "qid", "__q", F.explode("probes").alias("probe_cell")
     )
     if prune_scan:
         cells = _collected_probe_cells(probes, "probe_cell")
         if cells and len(cells) < len(centers):
             index = index.filter(F.col("coarse_id").isin(cells))
-    cand = index.join(probes, F.col("coarse_id") == F.col("probe_cell"))
-    f = F.col("f")
-    vnorm = F.sqrt(
-        F.aggregate(F.transform(f, lambda x: x * x), F.lit(0.0), lambda a, v: a + v)
-    )
-    dot = F.aggregate(
-        F.zip_with(f, F.col("__q"), lambda a, b: a * b),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    # __q is unit-norm, so cosine = dot / |f|; vnorm staged as a column
-    # (same no-CSE discipline as above)
-    scored = cand.select(
-        "qid", F.col("probe_cell").cast("int").alias("probe_cell"),
-        "vec_id", dot.alias("__dot"), vnorm.alias("__vn"),
-    ).select(
-        "qid", "probe_cell", "vec_id",
-        (F.col("__dot") / F.col("__vn")).alias("_c"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("_c"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "probe_cell", "vec_id",
-                F.round("_c", 6).alias("cosine"), "rank")
+    return _refine_exact_batch(
+        index.join(probes, F.col("coarse_id") == F.col("probe_cell")), k
     )
 
 
@@ -1545,6 +1319,21 @@ INDEX_SCHEMA = "vec_id bigint, f array<double>, coarse_id int"
 PQ_INDEX_SCHEMA = (
     "vec_id bigint, f array<double>, codes array<int>, coarse_id int"
 )
+
+
+def _ivfpq_layout(assigned: DataFrame, codebooks: list[list[list[float]]],
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """The IVF-PQ layout frame (vec_id, f, codes, *carry, coarse_id) of
+    a `coarse_assign` frame: the rows `build_ivfpq_index` writes and
+    the inline searches probe. The encode is a projection over the
+    assignment, so a `coarse_id` filter on this frame lands below it
+    and only the surviving cells are encoded."""
+    return pq_encode(
+        assigned.withColumnRenamed("coarse_id", "__cell"),
+        codebooks, id_col="vec_id", features_col="f",
+        carry=("f", "__cell", *carry),
+    ).select("vec_id", "f", "codes", *carry,
+             F.col("__cell").alias("coarse_id"))
 
 
 def build_ivfpq_index(vecs: DataFrame, centers: list[list[float]],
@@ -1561,13 +1350,8 @@ def build_ivfpq_index(vecs: DataFrame, centers: list[list[float]],
     from apachebeamkmeans_spark.sources import io
 
     assigned = coarse_assign(vecs, centers, id_col, features_col, carry)
-    encoded = pq_encode(
-        assigned.withColumnRenamed("coarse_id", "__cell"),
-        codebooks, id_col="vec_id", features_col="f",
-        carry=("f", "__cell", *carry),
-    ).select("vec_id", "f", "codes", *carry,
-             F.col("__cell").alias("coarse_id"))
-    io.write_parquet(encoded, path, partition_by=["coarse_id"])
+    io.write_parquet(_ivfpq_layout(assigned, codebooks, carry), path,
+                     partition_by=["coarse_id"])
 
 
 def append_to_ivfpq_index(vecs: DataFrame, centers: list[list[float]],
@@ -1581,13 +1365,8 @@ def append_to_ivfpq_index(vecs: DataFrame, centers: list[list[float]],
     from apachebeamkmeans_spark.sources import io
 
     assigned = coarse_assign(vecs, centers, id_col, features_col, carry)
-    encoded = pq_encode(
-        assigned.withColumnRenamed("coarse_id", "__cell"),
-        codebooks, id_col="vec_id", features_col="f",
-        carry=("f", "__cell", *carry),
-    ).select("vec_id", "f", "codes", *carry,
-             F.col("__cell").alias("coarse_id"))
-    io.write_parquet(encoded, path, mode="append", partition_by=["coarse_id"])
+    io.write_parquet(_ivfpq_layout(assigned, codebooks, carry), path,
+                     mode="append", partition_by=["coarse_id"])
 
 
 def ivfpq_topk_indexed(spark, index_path: str, queries: list[list[float]],
@@ -1620,28 +1399,30 @@ def ivfpq_probe_topk(index: DataFrame, queries: list[list[float]],
     same filtered frame. `index` must carry (vec_id, f, codes,
     coarse_id) at least."""
     m = len(codebooks)
-    probe_cells = [nearest_centers(q, centers, nprobe) for q in queries]
-    all_cells = sorted({c for cells in probe_cells for c in cells})
-    # no checkpoint here, unlike inline ivfpq_topk: there `assigned` is
-    # EXPRESSION work worth staging; this is a partition-pruned SCAN —
-    # the ADC pass and the refine fetch each re-read nprobe/k of the
+    qcells = [nearest_centers(q, centers, nprobe) for q in queries]
+    all_cells = sorted({c for cells in qcells for c in cells})
+    # no checkpoint here: over a layout this is a partition-pruned SCAN
+    # — the ADC pass and the refine fetch each re-read nprobe/k of the
     # directories, which is the cheap, scale-honest choice (and keeps
-    # PartitionFilters visible/plan-lockable)
+    # PartitionFilters visible/plan-lockable); the inline `ivfpq_topk`
+    # checkpoints its coarse assignment before calling here
     pruned = index.filter(F.col("coarse_id").isin(all_cells))
+    # ADC stage ships NARROW rows only — (vec_id, probe_cell, qid, d):
+    # the raw vector must NOT ride through the posexplode fan-out and
+    # the ranking shuffle (n_queries copies of the full embedding per
+    # row would defeat PQ's m-bytes-per-row serving economics at
+    # 100 TB); the refine re-fetches vectors for the shortlist only
     luts = [pq_adc_lut(q, codebooks) for q in queries]
-    codes = F.col("codes")
-
-    def _adc(lut_q):
-        return _adc_expr(lut_q, codes, m)
-
-    adc_arr = F.transform(D.lit_array(luts), _adc)
+    adc_arr = F.transform(
+        D.lit_array(luts), lambda lut_q: _adc_expr(lut_q, F.col("codes"), m)
+    )
     exploded = pruned.select(
         "vec_id", F.col("coarse_id").cast("int").alias("probe_cell"),
         F.posexplode(adc_arr).alias("qid", "_d"),
     )
     hits = exploded.filter(
         F.array_contains(
-            F.element_at(F.lit(probe_cells), F.col("qid") + 1),
+            F.element_at(F.lit(qcells), F.col("qid") + 1),
             F.col("probe_cell"),
         )
     )

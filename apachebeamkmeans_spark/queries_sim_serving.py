@@ -57,6 +57,7 @@ from apachebeamkmeans_spark.queries_similarity import (  # noqa: F401
     _train_np,
     _warn_if_not_train_sf,
     _write_layout_fp,
+    warn_training_fallback,
 )
 
 # this module contributes its own registry entries (merged by
@@ -1334,21 +1335,10 @@ def _oracle_maxsim_indexed() -> str:
 try:
     ORACLE_SIM_MAXSIM_INDEXED = _oracle_maxsim_indexed()
 except (FileNotFoundError, OSError) as _e:
-    # same import-survival contract as _train_np above (ADVICE r14):
-    # ONLY the missing-testdata case falls back to fixture token
-    # centers (8 deterministic dsub-wide literals) so importing this
-    # module never requires /root/testdata; a trainer bug must still
-    # propagate. The fallback oracle cannot certify — nothing can, on
-    # a machine without the driver's tables.
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: maxsim token-center training "
-        f"fell back to fixture literals ({_e!r}); the "
-        f"sim_maxsim_indexed oracle is NOT data-trained in this "
-        f"environment",
-        file=sys.stderr,
-    )
+    # fixture token centers: 8 deterministic dsub-wide literals. The
+    # fallback oracle cannot certify — nothing can, on a machine
+    # without the driver's tables.
+    warn_training_fallback("maxsim token-center", "fixture", _e)
     _MSIM_TOK_CENTERS_MEMO = [
         [float(v) for v in tok]
         for q in fixtures.maxsim_query_tokens(MSIM_TOK_K, 1, MAXSIM_DSUB)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 
@@ -20,6 +21,21 @@ IVF_K = 5
 IVF_NPROBE = 2
 
 _E2 = "(SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)"
+
+log = logging.getLogger(__name__)
+
+
+def warn_training_fallback(what: str, fallback: str, err: Exception) -> None:
+    """Import-time oracle training fell back to `fallback` literals.
+    ONLY the missing-testdata case (FileNotFoundError / OSError) comes
+    here, which keeps imports alive on machines without the tables; a
+    bug in a trainer must propagate — silently certifying the fallback
+    path would mask it (ADVICE r4)."""
+    log.warning(
+        "%s training fell back to %s literals (%r); its oracles are NOT "
+        "data-trained in this environment", what, fallback, err,
+        extra={"training": what, "fallback": fallback, "error": repr(err)},
+    )
 
 
 def q_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,18 +261,7 @@ def _train_np() -> tuple[list[list[float]], list[list[list[float]]]]:
 try:
     TRAINED_CENTERS, TRAINED_CODEBOOKS = _train_np()
 except (FileNotFoundError, OSError) as _e:
-    # ONLY the missing-testdata case falls back to fixture literals
-    # (keeps imports alive on machines without /root/testdata); a bug
-    # in the trainer itself must propagate — silently certifying the
-    # fixture path would mask it (ADVICE r4).
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: numpy ANN training fell back to "
-        f"fixture literals ({_e!r}); trained-query oracles are NOT "
-        f"data-trained in this environment",
-        file=sys.stderr,
-    )
+    warn_training_fallback("numpy ANN", "fixture", _e)
     TRAINED_CENTERS, TRAINED_CODEBOOKS = CENTERS, PQ_CODEBOOKS
 
 
@@ -268,13 +273,12 @@ def _warn_if_not_train_sf(sf_dir: str, name: str) -> None:
     mismatch look like an engine bug (ADVICE r4). Not an exception: the
     empty-input sweep and ad-hoc runs at other sfs are valid."""
     if os.path.abspath(sf_dir) != os.path.abspath(TRAIN_SF_DIR):
-        import sys
-
-        print(
-            f"[queries_similarity] NOTE: {name} running at sf_dir={sf_dir!r} "
-            f"but its registered oracle literals were trained at "
-            f"{TRAIN_SF_DIR!r}; oracle comparison is only valid there",
-            file=sys.stderr,
+        log.warning(
+            "%s running at sf_dir=%r but its registered oracle literals "
+            "were trained at %r; oracle comparison is only valid there",
+            name, sf_dir, TRAIN_SF_DIR,
+            extra={"query": name, "sf_dir": sf_dir,
+                   "train_sf_dir": TRAIN_SF_DIR},
         )
 
 
@@ -406,9 +410,10 @@ def q_sim_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sim_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PQ codebook training — m=8 concurrent Lloyd runs in
-    one exploded frame, one shuffle per iteration. Output = trained
-    codebooks, one row per (subspace, code, pos); oracle = numpy twin."""
+    """Distributed PQ codebook training — m=8 concurrent Lloyd runs, one
+    per subspace, all in one single-stage `lloyd._lloyd_step` job per
+    iteration. Output = trained codebooks, one row per (subspace, code,
+    pos); oracle = numpy twin."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
     _warn_if_not_train_sf(sf_dir, "sim_pq_train")
@@ -690,13 +695,7 @@ def _res_train_np() -> list[list[list[float]]]:
 try:
     TRAINED_RES_CODEBOOKS = _res_train_np()
 except (FileNotFoundError, OSError) as _e:
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: numpy residual-PQ training fell "
-        f"back to fixture literals ({_e!r})",
-        file=sys.stderr,
-    )
+    warn_training_fallback("numpy residual-PQ", "fixture", _e)
     TRAINED_RES_CODEBOOKS = PQ_CODEBOOKS
 
 
@@ -917,33 +916,16 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 4-decimal literal form the numpy-twin oracle embeds
         centers = _knn_quantizer(base, sf_dir, k)
         pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
-        # nprobe nearest trained cells per vector: sort (distance, cell)
-        # structs — ties break toward the lower cell id, matching the
-        # oracle's (d, c) window order. The hof form (one ARRAY<ARRAY>
-        # literal + transform) keeps generated code size independent of k —
-        # k is now data-derived, and √n × 64-term unrolled projections
-        # would outgrow JVM method limits.
-        dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-            F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-        cells = F.array_sort(
-            F.transform(
-                D.lit_array(centers),
-                lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
-            )
-        )
+        # nprobe nearest trained cells per vector — ties break toward the
+        # lower cell id, matching the oracle's (d, c) window order.
         # Materialize the probe assignment BEFORE the explode: a Generate
         # whose child inlines the (cells × 64-term × sort) assign tree
         # sends codegen compilation pathological (measured 181 s for the
         # compile alone vs 0.8 s with the tree cut here), and an eager cut
         # is also what keeps the tree out of both self-join sides.
         probed = pts.select(
-            "vec_id",
-            "f",
-            F.slice(F.transform(cells, lambda s: s["i"]), 1, nprobe).alias(
-                "probes"
-            ),
+            "vec_id", "f",
+            SIM.probe_cells(F.col("f"), centers, nprobe).alias("probes"),
         ).localCheckpoint(eager=True)
     # no second checkpoint: `probed` is already the materialized cut
     # (the codegen trap lives in the assign tree, not the explode), so
@@ -1038,14 +1020,7 @@ def _knn_train_np() -> tuple[list[list[float]], int, int]:
 try:
     KNN_TRAINED_CENTERS, KNN_TRAIN_CELLS, KNN_TRAIN_N = _knn_train_np()
 except (FileNotFoundError, OSError) as _e:
-    # same missing-testdata-only fallback contract as _train_np above
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: numpy KNN quantizer training fell "
-        f"back to fixture literals ({_e!r})",
-        file=sys.stderr,
-    )
+    warn_training_fallback("numpy KNN quantizer", "fixture", _e)
     # n = 0 keeps the derived refine at its floor in the fallback
     KNN_TRAINED_CENTERS, KNN_TRAIN_CELLS, KNN_TRAIN_N = CENTERS, len(CENTERS), 0
 
@@ -1251,16 +1226,9 @@ def _knnpq_train_np() -> list[list[list[float]]]:
 try:
     KNNPQ_TRAINED_BOOKS = _knnpq_train_np()
 except (FileNotFoundError, OSError) as _e:
-    # same missing-testdata-only fallback contract as _train_np: a
-    # shape-correct deterministic literal (the m=8 fixture books split
-    # into dsub=4 halves) keeps imports alive; training bugs propagate
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: numpy KNN-PQ codebook training "
-        f"fell back to fixture-derived literals ({_e!r})",
-        file=sys.stderr,
-    )
+    # a shape-correct deterministic literal: the m=8 fixture books split
+    # into dsub=4 halves
+    warn_training_fallback("numpy KNN-PQ codebook", "fixture-derived", _e)
     KNNPQ_TRAINED_BOOKS = [
         [cent[:4] for cent in book] for book in PQ_CODEBOOKS
     ] + [[cent[4:] for cent in book] for book in PQ_CODEBOOKS]
@@ -1414,16 +1382,7 @@ def _pca_train_np() -> tuple[list[float], list[list[float]]]:
 try:
     PCA_TRAINED_MEAN, PCA_TRAINED_COMPONENTS = _pca_train_np()
 except (FileNotFoundError, OSError) as _e:
-    # missing-testdata-only fallback (the _train_np contract): a
-    # shape-correct deterministic literal keeps imports alive;
-    # training bugs must propagate, not be masked
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: numpy PCA training fell back "
-        f"to identity literals ({_e!r})",
-        file=sys.stderr,
-    )
+    warn_training_fallback("numpy PCA", "identity", _e)
     PCA_TRAINED_MEAN = [0.0] * DIM
     PCA_TRAINED_COMPONENTS = [
         [1.0 if j == c else 0.0 for j in range(DIM)] for c in range(PCA_DIM)
@@ -1585,13 +1544,7 @@ def _pca_space_centers_np() -> list[list[float]]:
 try:
     PCA_IVF_CENTERS = _pca_space_centers_np()
 except (FileNotFoundError, OSError) as _e:
-    import sys
-
-    print(
-        f"[queries_similarity] WARNING: PCA-space IVF training fell back "
-        f"to identity-ish literals ({_e!r})",
-        file=sys.stderr,
-    )
+    warn_training_fallback("numpy PCA-space IVF", "identity-ish", _e)
     PCA_IVF_CENTERS = [
         [0.1 if j == c else 0.0 for j in range(PCA_DIM)]
         for c in range(PCA_IVF_K)
