@@ -164,7 +164,7 @@ def ivf_train(vecs: DataFrame, k: int, n_iters: int = 5, seed="ivf",
     the numpy-twin contract relies on (asserted in
     tests/test_ann_train.py)."""
     # dimensionality comes from the seed rows — no separate probe job
-    centers = seed_rows(vecs, k, seed, id_col, features_col)
+    centers = [f for _, f in seed_rows(vecs, k, seed, id_col, features_col)]
     if not centers:
         raise ValueError("ivf_train requires a non-empty points frame")
     if len(centers) < k:
@@ -226,7 +226,7 @@ def pq_train(vecs: DataFrame, m: int, ksub: int, n_iters: int = 5, seed="pq",
     the c-th seed row's slice (same seeded sample for all subspaces).
     Empty clusters keep their previous centroid."""
     # dimensionality comes from the seed rows — no separate probe job
-    seeds = seed_rows(vecs, ksub, seed, id_col, features_col)
+    seeds = [f for _, f in seed_rows(vecs, ksub, seed, id_col, features_col)]
     if not seeds:
         raise ValueError("pq_train requires a non-empty points frame")
     if len(seeds) < ksub:

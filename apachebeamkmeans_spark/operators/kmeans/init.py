@@ -29,8 +29,13 @@ picks among those (lloyd module docstring). The race's -ln(u) stays a
 JVM column, so the JVM's `log` decides it exactly as before.
 
 Each seeded strategy is one (first seed, next draw) pair of `SEEDED`,
-run by the one loop in `initial_centers`. Every strategy returns a
-k×dim Python list — O(k·dim) driver data.
+run by the one loop in `seed_picks`. Every pick is the chosen row's
+(id, features), so a strategy returns k (id, features) pairs — O(k·dim)
+driver data — and `initial_centers` keeps their features. This loop is
+the engine's only seeding: `KMeans.fit` runs it, and so do the
+registered seed-trace queries (`queries_kmeans.q_kmeans_gonzalez_seeds`,
+`q_kmeans_plusplus_seeds`, `q_kmeans_plusplus_seeds_dweight`), which
+emit the picked ids for the DuckDB oracle to replay.
 """
 
 from __future__ import annotations
@@ -40,23 +45,23 @@ from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.functions.hashing import hash01
-from apachebeamkmeans_spark.operators.kmeans.lloyd import best_point, farthest_point
+from apachebeamkmeans_spark.operators.kmeans.lloyd import best_point
 from apachebeamkmeans_spark.operators.kmeans.params import KMeansParams
 
 
-def _take1(df: DataFrame, order_cols) -> list[float]:
+def _take1(df: DataFrame, order_cols) -> tuple:
     rows = df.orderBy(*order_cols).limit(1).collect()
     if not rows:
         raise ValueError("k-means seeding requires a non-empty points frame")
-    return list(rows[0]["f"])
+    return rows[0]["id"], list(rows[0]["f"])
 
 
 def seed_rows(df: DataFrame, n: int, seed, id_col: str = "id",
-              features_col: str = "features") -> list[list[float]]:
-    """The n rows with the smallest hash01(id, seed) (ties → lowest id)
-    — the engine's deterministic seeded sample (TakeOrdered, no full
-    sort; O(n·dim) driver traffic). Shared by `init_random` and the
-    ANN trainers (`ann_train`)."""
+              features_col: str = "features") -> list[tuple]:
+    """The (id, features) of the n rows with the smallest hash01(id,
+    seed) (ties → lowest id) — the engine's deterministic seeded sample
+    (TakeOrdered, no full sort; O(n·dim) driver traffic). Shared by
+    `init_random` and the ANN trainers (`ann_train`)."""
     rows = (
         df.select(F.col(id_col).alias("i"), F.col(features_col).alias("f"),
                   hash01(F.col(id_col), seed).alias("h"))
@@ -64,39 +69,29 @@ def seed_rows(df: DataFrame, n: int, seed, id_col: str = "id",
         .limit(n)
         .collect()
     )
-    return [list(r["f"]) for r in rows]
+    return [(r["i"], list(r["f"])) for r in rows]
 
 
-def init_random(df: DataFrame, k: int, seed: int, features_col: str = "features") -> list[list[float]]:
+def init_random(df: DataFrame, k: int, seed: int, features_col: str = "features") -> list[tuple]:
     """Exact-k deterministic sample without replacement: order by a
     reproducible per-row hash, take k (O4 in SURVEY.md §2.5)."""
-    feats = seed_rows(df, k, seed, features_col=features_col)
-    if not feats:
+    picks = seed_rows(df, k, seed, features_col=features_col)
+    if not picks:
         raise ValueError("k-means seeding requires a non-empty points frame")
     # k > n: cycle the available points rather than silently shrinking k
     # (the reference shrank — documented divergence, SURVEY.md §8.3);
     # the Lloyd loop's empty-cluster reseed takes it from here.
-    n = len(feats)
-    while len(feats) < k:
-        feats.append(list(feats[len(feats) % n]))
-    return feats
-
-
-def _roulette_next(df: DataFrame, centers: list[list[float]], p: float, weight: str,
-                   seed: int, rnd: int, features_col: str = "features") -> list[float]:
-    """One k-means++ roulette draw via the exponential race (see module
-    docstring). weight='d' reproduces the reference's D-weighting
-    (SURVEY.md §8.4); 'd2' is classic k-means++ D²."""
-    # t = -ln(u)/w : Exp(rate=w) arrival time; min t wins with P ∝ w.
-    # w=0 (point equals an existing center) → t=+inf, never selected.
-    nlu = -F.log(hash01(F.col("id"), f"{seed}-{rnd}"))
-    return best_point(df, centers, p, features_col, race=(nlu, weight))
+    n = len(picks)
+    while len(picks) < k:
+        i, f = picks[len(picks) % n]
+        picks.append((i, list(f)))
+    return picks
 
 
 # ------------------------------------------- seeded strategies: (first, next)
 
 
-def _random_first(df: DataFrame, params: KMeansParams, features_col: str) -> list[float]:
+def _random_first(df: DataFrame, params: KMeansParams, features_col: str) -> tuple:
     """Seeded random point."""
     return init_random(df, 1, params.seed, features_col)[0]
 
@@ -105,7 +100,7 @@ def _norm_first(desc: bool, manhattan: bool):
     """First seed by norm: farthest from (desc) or nearest to the
     origin under the metric's norm, or by L1 norm (`manhattan`,
     `Point.point_abs_sum`); ties → lowest id."""
-    def first(df: DataFrame, params: KMeansParams, features_col: str) -> list[float]:
+    def first(df: DataFrame, params: KMeansParams, features_col: str) -> tuple:
         feats = F.col(features_col)
         n = D.abs_sum(feats) if manhattan else D.norm(feats, params.p)
         order = [F.desc("n") if desc else F.asc("n"), F.asc("id")]
@@ -114,16 +109,21 @@ def _norm_first(desc: bool, manhattan: bool):
 
 
 def _roulette_draw(df: DataFrame, centers: list[list[float]], params: KMeansParams,
-                   rnd: int, features_col: str) -> list[float]:
-    return _roulette_next(df, centers, params.p, params.weight, params.seed, rnd,
-                          features_col)
+                   rnd: int, features_col: str) -> tuple:
+    """One k-means++ roulette draw via the exponential race (see module
+    docstring). weight='d' reproduces the reference's D-weighting
+    (SURVEY.md §8.4); 'd2' is classic k-means++ D²."""
+    # t = -ln(u)/w : Exp(rate=w) arrival time; min t wins with P ∝ w.
+    # w=0 (point equals an existing center) → t=+inf, never selected.
+    nlu = -F.log(hash01(F.col("id"), f"{params.seed}-{rnd}"))
+    return best_point(df, centers, params.p, features_col, race=(nlu, params.weight))
 
 
 def _farthest_draw(df: DataFrame, centers: list[list[float]], params: KMeansParams,
-                   rnd: int, features_col: str) -> list[float]:
+                   rnd: int, features_col: str) -> tuple:
     """Gonzalez / maximin scattering: the point farthest from the
     chosen set, deterministically."""
-    return farthest_point(df, centers, params.p, features_col)
+    return best_point(df, centers, params.p, features_col)
 
 
 SEEDED = {
@@ -137,12 +137,19 @@ SEEDED = {
 STRATEGIES = ("random", *SEEDED)
 
 
-def initial_centers(df: DataFrame, params: KMeansParams,
-                    features_col: str = "features") -> list[list[float]]:
+def seed_picks(df: DataFrame, params: KMeansParams,
+               features_col: str = "features") -> list[tuple]:
+    """The k picks of `params.init`, in order, each the chosen row's
+    (id, features). Raises ValueError on an empty frame."""
     if params.init == "random":
         return init_random(df, params.k, params.seed, features_col)
     first, draw = SEEDED[params.init]
-    centers = [first(df, params, features_col)]
+    picks = [first(df, params, features_col)]
     for rnd in range(1, params.k):
-        centers.append(draw(df, centers, params, rnd, features_col))
-    return centers
+        picks.append(draw(df, [f for _, f in picks], params, rnd, features_col))
+    return picks
+
+
+def initial_centers(df: DataFrame, params: KMeansParams,
+                    features_col: str = "features") -> list[list[float]]:
+    return [f for _, f in seed_picks(df, params, features_col)]

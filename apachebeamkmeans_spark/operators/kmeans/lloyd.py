@@ -22,9 +22,11 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
 Two forms of "nearest center", one per kind of consumer:
 
 - **Column form** for lazy plans that queries compose (`assign`,
-  `min_dist_col`): `_nearest_center`, ONE parsed
-  SQL string holding the centers as one folded literal
-  (`distance.sql_array_literal`) and the Minkowski-p fold as a lambda.
+  `min_dist_col`, the curation cells of `similarity.semantic_prune`,
+  `similarity.coverage_sample` and `q_sim_curation_pipeline`):
+  `nearest_center`, ONE parsed SQL string holding the centers as one
+  folded literal (`distance.sql_array_literal`) and the Minkowski-p
+  fold as a lambda.
   One py4j call to build, one codegen compile for any center values;
   its left-to-right sums and first-minimum ties give the same doubles
   as the unrolled oracle SQL.
@@ -58,8 +60,8 @@ from apachebeamkmeans_spark.functions import distance as D
 log = logging.getLogger(__name__)
 
 
-def _nearest_center(centers: list[list[float]], p: float,
-                    features_col: str = "features"):
+def nearest_center(centers: list[list[float]], p: float,
+                   features_col: str = "features"):
     """struct(dist, idx) of the nearest literal center (ties → lowest
     idx) as ONE parsed SQL expression (see module docstring). `dist`
     is squared for p=2, plain for p=1, and the 1/p root for other p."""
@@ -79,10 +81,10 @@ def assign(df: DataFrame, centers: list[list[float]], p: float = 2.0,
 
     J1 in SURVEY.md §2.3 — the reference's only "join", expressed as a
     narrow map over a plan-time center literal; zero join, zero shuffle.
-    One physical form, the shared `_nearest_center` expression: one
+    One physical form, the shared `nearest_center` expression: one
     py4j call to build and one codegen compile for any center values.
     """
-    best = _nearest_center(centers, p, features_col)
+    best = nearest_center(centers, p, features_col)
     out = df.withColumn("center_id", best["idx"])
     if keep_dist:
         out = out.withColumn("dist", best["dist"])
@@ -94,7 +96,7 @@ def min_dist_col(centers: list[list[float]], p: float = 2.0,
     """min over current centers of distance(point, center) — seeding's
     D(x) quantity (SparKMeansGroupByPlusPlus.java:82-96); squared for
     p=2."""
-    return _nearest_center(centers, p, features_col)["dist"]
+    return nearest_center(centers, p, features_col)["dist"]
 
 
 def movement(old: list[list[float]], new: list[list[float]], p: float = 2.0) -> float:
@@ -128,7 +130,7 @@ def _arrow_matrix(dim: int):
 
 
 def _batch_kernel(centers: list[list[float]], p: float):
-    """The numpy twin of `_nearest_center`, as closures that cloudpickle
+    """The numpy twin of `nearest_center`, as closures that cloudpickle
     ships by value (workers of a session not built by `get_spark` cannot
     import this package; compare `similarity.pq_encode_lut_arrow`). Raises ValueError before any job
     when a center is NaN or ±inf, as the SQL literal does.
@@ -223,10 +225,10 @@ def _lloyd_step(df: DataFrame, center_sets: list[list[list[float]]], p: float,
 
 
 def best_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
-               features_col: str = "features", race=None) -> list[float]:
-    """The features of one point chosen by its distance D(x) to the
-    nearest center (squared for p=2), as one job: each task keeps its
-    best row (key, id, f) and the driver picks among those.
+               features_col: str = "features", race=None) -> tuple:
+    """The (id, features) of one point chosen by its distance D(x) to
+    the nearest center (squared for p=2), as one job: each task keeps
+    its best row (key, id, f) and the driver picks among those.
 
     - `race=None`: the point farthest from the centers, ties to the
       smallest id — Gonzalez scattering and the empty-cluster reseed.
@@ -299,14 +301,7 @@ def best_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
         raise ValueError("k-means seeding requires a non-empty points frame")
     j = first_best(np.array([r["key"] for r in rows]),
                    np.array([r["id"] for r in rows], dtype=object))
-    return list(rows[j]["f"])
-
-
-def farthest_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
-                   features_col: str = "features") -> list[float]:
-    """argmax_x min_c dist(x, c), ties to the smallest id — Gonzalez
-    scattering step and the empty-cluster re-seed (`best_point`)."""
-    return best_point(df, centers, p, features_col)
+    return rows[j]["id"], list(rows[j]["f"])
 
 
 def total_sse(df: DataFrame, centers: list[list[float]], p: float = 2.0,
@@ -380,7 +375,7 @@ def lloyd_fit(df: DataFrame, init_centers: list[list[float]], p: float,
         reseeded = 0
         for i in range(k):
             if new_centers[i] is None:
-                new_centers[i] = farthest_point(
+                _, new_centers[i] = best_point(
                     df,
                     [c for c in new_centers if c is not None] or centers,
                     p,

@@ -1473,21 +1473,11 @@ def semantic_prune(normed: DataFrame, centers: list[list[float]], tau: float,
     pts = normed.select(
         F.col(id_col).alias("vec_id"), F.col(features_col).alias("f")
     )
-    dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-        F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    nearest = F.array_min(
-        F.transform(
-            D.lit_array(centers),
-            lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
-        )
-    )
-    # array_min of (d, i) structs = first-minimum with the oracle's
-    # (d, c) tie-break; checkpoint cuts the assign tree out of the
-    # plan before the self-join fans it out to both sides
+    # the nearest center (first minimum: the oracle's (d, c)
+    # tie-break); checkpoint cuts the assign tree out of the plan
+    # before the self-join fans it out to both sides
     assigned = pts.select(
-        "vec_id", "f", nearest["i"].alias("cell")
+        "vec_id", "f", lloyd.nearest_center(centers, 2, "f")["idx"].alias("cell")
     ).localCheckpoint(eager=True)
     pair_dot = (
         D.dot_cols_unrolled(F.col("a.f"), F.col("b.f"), dim)
@@ -1533,23 +1523,14 @@ def coverage_sample(normed: DataFrame, centers: list[list[float]],
     pts = normed.select(
         F.col(id_col).alias("vec_id"), F.col(features_col).alias("f")
     )
-    dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-        F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, v: a + v,
-    )
-    nearest = F.array_min(
-        F.transform(
-            D.lit_array(centers),
-            lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
-        )
-    )
-    # array_min = first-min with the oracle's (d, c) tie-break, O(k);
-    # cut the assign tree out of the plan before the window stage
+    # the nearest center (first minimum: the oracle's (d, c)
+    # tie-break), O(k); cut the assign tree out of the plan before the
+    # window stage
     assigned = pts.select(
         "vec_id",
-        nearest.alias("s"),
+        lloyd.nearest_center(centers, 2, "f").alias("s"),
     ).select(
-        "vec_id", F.col("s")["i"].alias("cell"), F.col("s")["d"].alias("d2")
+        "vec_id", F.col("s")["idx"].alias("cell"), F.col("s")["dist"].alias("d2")
     ).localCheckpoint(eager=True)
     w = Window.partitionBy("cell").orderBy(F.desc("d2"), F.asc("vec_id"))
     return (

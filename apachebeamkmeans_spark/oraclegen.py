@@ -83,16 +83,6 @@ def sql_norm_sq_slice(col: str, offset: int, dsub: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def sql_cosine_slice(col: str, vec: list[float], offset: int) -> str:
-    """cosine(col[offset:offset+len(vec)], literal vec) — the slice
-    twin of sql_cosine_lit (query norm folded at generation time)."""
-    vnorm = sum(float(v) * float(v) for v in vec) ** 0.5
-    return (
-        f"({sql_dot_slice(col, vec, offset)} / "
-        f"(sqrt({sql_norm_sq_slice(col, offset, len(vec))}) * ({vnorm!r})))"
-    )
-
-
 def sql_l2_sq_cols_unrolled(a: str, b: str, dim: int) -> str:
     """Squared L2 between two list columns, unrolled left-associated —
     exact twin of distance.l2_sq_unrolled when the Spark side's center
@@ -101,15 +91,6 @@ def sql_l2_sq_cols_unrolled(a: str, b: str, dim: int) -> str:
         f"({a}[{j + 1}] - {b}[{j + 1}])*({a}[{j + 1}] - {b}[{j + 1}])" for j in range(dim)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-def sql_l2_sq_cols(a: str, b: str) -> str:
-    """Squared L2 between two list columns — twin of distance.l2_sq
-    (zip_with + aggregate, list-order summation)."""
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"s -> (s[1] - s[2])*(s[1] - s[2])))"
-    )
 
 
 def sql_dot_cols(a: str, b: str) -> str:

@@ -12,7 +12,9 @@ Reference parity notes per query:
 - recenter    → A1+A2 group + per-dim mean (SparKMeansGroupBy.java:102-114)
 - sse         → the implicit quality measure of the Lloyd loop
 - init_extremes / gonzalez / plusplus → the six seeding strategies
-  (§2.5 O1-O4, §2.6 C7)
+  (§2.5 O1-O4, §2.6 C7). The three seed-trace queries run
+  `init.seed_picks`, the same draws `KMeans.fit` seeds with, and
+  emit the picked ids; their oracles replay the draws in DuckDB.
 - cluster_output → P8 "center:member;member;..." formatting
 """
 
@@ -24,10 +26,15 @@ from pyspark.sql import functions as F
 from apachebeamkmeans_spark import fixtures, oraclegen as OG
 from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
-from apachebeamkmeans_spark.functions.hashing import hash01
 from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansParams, lloyd
+from apachebeamkmeans_spark.operators.kmeans.init import initial_centers, seed_picks
 from apachebeamkmeans_spark.operators.kmeans.mllib import mllib_kmeans_fit
 from apachebeamkmeans_spark.sources import io
+from apachebeamkmeans_spark.trainsf import (
+    TRAIN_SF_DIR,
+    warn_if_not_train_sf,
+    warn_training_fallback,
+)
 
 DIM = fixtures.EMBEDDING_DIM
 K = fixtures.K
@@ -182,46 +189,23 @@ ORACLE_INIT_EXTREMES = " UNION ALL ".join(
 # ------------------------------------- Gonzalez farthest-point seeding (§3.2)
 
 
-def _seed_trace(spark: SparkSession, sf_dir: str, first_key, round_key,
-                desc: bool) -> DataFrame:
-    """k seed picks over one staged points frame, each one TakeOrdered
-    job; driver holds only k×dim doubles. Pick 0 is the point first in
-    `first_key` order, pick r the point first in `round_key(centers,
-    r)` order, both sorted descending when `desc`, ties to the
-    smaller id."""
-    f = F.col("features")
-    order = F.desc if desc else F.asc
-
-    def pick(pts: DataFrame, key):
-        return (
-            pts.select("id", f.alias("f"), key.alias("k"))
-            .orderBy(order("k"), F.asc("id"))
-            .limit(1)
-            .collect()
-        )
-
+def _seed_query(spark: SparkSession, sf_dir: str, init: str,
+                weight: str = "d2") -> DataFrame:
+    """The K picks of `init.seed_picks` (the loop `KMeans.fit` seeds
+    with) over one staged points frame, as (seed_rank, vec_id): one
+    job per pick; the driver holds only K×dim doubles."""
+    params = KMeansParams(k=K, seed=SEED, init=init, weight=weight)
     with staged(_pts(spark, sf_dir)) as pts:
-        rows = pick(pts, first_key)
-        if not rows:
-            raise ValueError("k-means seeding requires a non-empty points frame")
-        chosen = [(0, rows[0]["id"])]
-        centers = [list(rows[0]["f"])]
-        for r in range(1, K):
-            row = pick(pts, round_key(centers, r))[0]
-            chosen.append((r, row["id"]))
-            centers.append(list(row["f"]))
-    return spark.createDataFrame(chosen, "seed_rank INT, vec_id BIGINT")
+        picks = seed_picks(pts, params)
+    return spark.createDataFrame([(r, i) for r, (i, _) in enumerate(picks)],
+                                 "seed_rank INT, vec_id BIGINT")
 
 
 def q_kmeans_gonzalez_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """max_farthest seeding trace: the largest-L2-norm point, then each
-    round the point farthest from its nearest chosen seed."""
-    return _seed_trace(
-        spark, sf_dir,
-        F.sqrt(D.norm_sq_unrolled(F.col("features"), DIM)),
-        lambda centers, r: lloyd.min_dist_col(centers, 2.0),
-        desc=True,
-    )
+    """max_farthest seeding trace, as `KMeans.fit` draws it: the
+    largest-L2-norm point, then each round the point farthest from its
+    nearest chosen seed (`lloyd.best_point`), ties to the smaller id."""
+    return _seed_query(spark, sf_dir, "max_farthest")
 
 
 def _oracle_gonzalez() -> str:
@@ -253,25 +237,13 @@ ORACLE_GONZALEZ = _oracle_gonzalez()
 # ------------------------- k-means++ roulette via exponential race (§2.6 C7)
 
 
-def _race_key(weight):
-    """The seeded exponential-race key: -ln(hash01(id, seed⊕round)) /
-    weight(D²), infinite for a zero weight. The minimum wins."""
-    def key(centers, r):
-        w = weight(lloyd.min_dist_col(centers, 2.0))  # D², squared L2
-        u = hash01(F.col("id"), f"{SEED}-{r}")
-        return F.when(w > 0, -F.log(u) / w).otherwise(F.lit(float("inf")))
-    return key
-
-
 def q_kmeans_plusplus_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded k-means++ (D² weight): distributed one-pass weighted
-    sampling — winner = argmin -ln(hash01(id, seed⊕round))/D²(x).
-    Replaces the reference's whole-dataset collect + linear roulette
-    scan (SparKMeansGroupByPlusPlus.java:105, SURVEY.md §8.6)."""
-    return _seed_trace(
-        spark, sf_dir, hash01(F.col("id"), SEED),
-        _race_key(lambda d2: d2), desc=False,
-    )
+    """Seeded k-means++ (D² weight), as `KMeans.fit` draws it: the
+    seeded random point, then distributed one-pass weighted sampling —
+    winner = argmin -ln(hash01(id, seed⊕round))/D²(x). Replaces the
+    reference's whole-dataset collect + linear roulette scan
+    (SparKMeansGroupByPlusPlus.java:105, SURVEY.md §8.6)."""
+    return _seed_query(spark, sf_dir, "plusplus", weight="d2")
 
 
 def _oracle_plusplus() -> str:
@@ -305,11 +277,9 @@ ORACLE_PLUSPLUS = _oracle_plusplus()
 def q_kmeans_plusplus_seeds_dweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's exact k-means++ variant — roulette weighted by D
     (distance), not classic D² (SparKMeansGroupByPlusPlus.java:82-114,
-    SURVEY.md §8.4) — as a distributed seeded race."""
-    return _seed_trace(
-        spark, sf_dir, hash01(F.col("id"), SEED),
-        _race_key(F.sqrt), desc=False,
-    )
+    SURVEY.md §8.4) — as the distributed seeded race `KMeans.fit`
+    runs with weight 'd'."""
+    return _seed_query(spark, sf_dir, "plusplus", weight="d")
 
 
 def _oracle_plusplus_dweight() -> str:
@@ -419,26 +389,6 @@ FROM s1, sa, sb
 
 FIT_FIXED_ITERS = 5
 FIT_FIXED_SEED = "fitfix"
-import os as _os  # noqa: E402
-
-FIT_TRAIN_SF_DIR = _os.environ.get("SPARK_GRAFT_TRAIN_SF_DIR", "/root/testdata/sf0.01")
-
-
-def _warn_if_not_fit_train_sf(sf_dir: str) -> None:
-    """ORACLE_KMEANS_FIT_FIXED's center literals are numpy-trained at
-    FIT_TRAIN_SF_DIR; training elsewhere is a valid use of the query
-    but its result will not match the registered oracle — say so
-    loudly instead of letting the mismatch look like an engine bug
-    (same contract as the trained-ANN queries)."""
-    if _os.path.abspath(sf_dir) != _os.path.abspath(FIT_TRAIN_SF_DIR):
-        import sys as _sys
-
-        print(
-            f"[queries_kmeans] NOTE: kmeans_fit_fixed running at "
-            f"sf_dir={sf_dir!r} but its oracle centers were trained at "
-            f"{FIT_TRAIN_SF_DIR!r}; oracle comparison is only valid there",
-            file=_sys.stderr,
-        )
 
 
 def q_kmeans_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,7 +403,7 @@ def q_kmeans_fit_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ann_train.py for the same trainer)."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_fit_train_sf(sf_dir)
+    warn_if_not_train_sf(sf_dir, "kmeans_fit_fixed")
     pts = _pts(spark, sf_dir)
     centers = ANN.ivf_train(pts, K, FIT_FIXED_ITERS, FIT_FIXED_SEED)
     rounded = ANN.round_mat(centers)
@@ -479,7 +429,7 @@ def _oracle_fit_fixed() -> str:
     immune to summation-order boundary flips."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    ids, mat = ANN.load_embeddings_np(FIT_TRAIN_SF_DIR)
+    ids, mat = ANN.load_embeddings_np(TRAIN_SF_DIR)
     rounded = ANN.round_mat(
         ANN.ivf_train_np(ids, mat, K, FIT_FIXED_ITERS, FIT_FIXED_SEED)
     )
@@ -503,13 +453,7 @@ FROM c LEFT JOIN sz ON c.center_id = sz.center_id
 try:
     ORACLE_KMEANS_FIT_FIXED: str | None = _oracle_fit_fixed()
 except (FileNotFoundError, OSError) as _e:
-    import sys as _sys
-
-    print(
-        f"[queries_kmeans] WARNING: kmeans_fit_fixed oracle unavailable "
-        f"(no testdata: {_e!r}); registering rows-only",
-        file=_sys.stderr,
-    )
+    warn_training_fallback("numpy fixed-iteration K-Means", "a rows-only registration", _e)
     ORACLE_KMEANS_FIT_FIXED = None
 
 
@@ -549,7 +493,6 @@ def q_kmeans_fit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant TRUE table, so the driver's hash compare certifies the
     properties themselves."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
-    from apachebeamkmeans_spark.operators.kmeans.init import initial_centers
 
     params = KMeansParams(k=K, seed=SEED, max_iter=10, init="random")
     pts = _pts(spark, sf_dir).cache()

@@ -16,6 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from apachebeamkmeans_spark import fixtures, oraclegen as OG
 from apachebeamkmeans_spark.operators import similarity as SIM
 from apachebeamkmeans_spark.sources import io
+from apachebeamkmeans_spark.trainsf import (
+    TRAIN_SF_DIR,
+    warn_if_not_train_sf,
+    warn_training_fallback,
+)
 
 # Explicit shared-infrastructure list (r17 — the r16 wildcard would
 # eventually hide a shadowing bug; every name this module actually
@@ -45,7 +50,6 @@ from apachebeamkmeans_spark.queries_similarity import (  # noqa: F401
     QUERY_VECS,
     TRAINED_CENTERS,
     TRAINED_CODEBOOKS,
-    TRAIN_SF_DIR,
     _E2,
     _ivf_index_path,
     _knn_quantizer,
@@ -55,9 +59,7 @@ from apachebeamkmeans_spark.queries_similarity import (  # noqa: F401
     _sql_maxsim_score,
     _trained_ca_ctes,
     _train_np,
-    _warn_if_not_train_sf,
     _write_layout_fp,
-    warn_training_fallback,
 )
 
 # this module contributes its own registry entries (merged by
@@ -88,7 +90,7 @@ def q_sim_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_ivf_batch_topk")
+    warn_if_not_train_sf(sf_dir, "sim_ivf_batch_topk")
     path = _ivf_index_path(sf_dir) + "-trained"
     # build only if the mtime-keyed layout isn't already materialized
     # WITH the current trained centers — `sim_ivf_trained_indexed`
@@ -178,7 +180,7 @@ def q_sim_ivfpq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_ivfpq_batch_topk")
+    warn_if_not_train_sf(sf_dir, "sim_ivfpq_batch_topk")
     emb = io.read_table(spark, sf_dir, "embeddings")
     qtab = emb.filter(
         F.col("vec_id") % BATCH_Q_MOD == BATCH_Q_RESIDUE
@@ -335,7 +337,7 @@ def q_stream_embedding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "stream_embedding_gate")
+    warn_if_not_train_sf(sf_dir, "stream_embedding_gate")
     emb = io.read_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     new = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id", "embedding")
@@ -441,7 +443,7 @@ def q_stream_embedding_gate_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_embedding_gate_stream,
     )
 
-    _warn_if_not_train_sf(sf_dir, "stream_embedding_gate_pq")
+    warn_if_not_train_sf(sf_dir, "stream_embedding_gate_pq")
     emb = io.read_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     new = emb.filter(F.col("vec_id") % 10 == 0).select("vec_id", "embedding")
@@ -528,7 +530,7 @@ def q_ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_roundtrip")
+    warn_if_not_train_sf(sf_dir, "ann_index_roundtrip")
     emb = io.read_table(spark, sf_dir, "embeddings")
     path = _ivf_index_path(sf_dir) + "-roundtrip"
     AnnIndex.train(spark, emb, path, k=IVFPQ_K, n_iters=IVFPQ_ITERS)
@@ -564,7 +566,7 @@ def q_ann_index_pq_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_pq_roundtrip")
+    warn_if_not_train_sf(sf_dir, "ann_index_pq_roundtrip")
     emb = io.read_table(spark, sf_dir, "embeddings")
     path = _ivf_index_path(sf_dir) + "-pqroundtrip"
     AnnIndex.train(
@@ -825,7 +827,7 @@ def q_ann_index_batch_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_batch_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_batch_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False)
     idx = AnnIndex.load(spark, path)
     emb = io.read_table(spark, sf_dir, "embeddings")
@@ -852,7 +854,7 @@ def q_ann_index_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries (fingerprint-keyed build-once)."""
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_compact_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_compact_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False, compact=True)
     idx = AnnIndex.load(spark, path)
     return idx.topk(QUERY_VECS, k=IVFPQ_TOPK, nprobe=IVFPQ_NPROBE)
@@ -873,7 +875,7 @@ def q_ann_index_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_cell_stats")
+    warn_if_not_train_sf(sf_dir, "ann_index_cell_stats")
     path = _ensure_serve_index(spark, sf_dir, pq=False)
     idx = AnnIndex.load(spark, path)
     return idx.cell_stats().select(
@@ -919,7 +921,7 @@ def q_ann_index_retrain_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     other serving queries (fingerprint-keyed build-once)."""
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_retrain_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_retrain_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False, retrain=True)
     idx = AnnIndex.load(spark, path)
     return idx.topk(QUERY_VECS, k=IVFPQ_TOPK, nprobe=IVFPQ_NPROBE)
@@ -942,7 +944,7 @@ def q_ann_index_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate stage."""
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_filtered_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_filtered_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False)
     idx = AnnIndex.load(spark, path)
     return idx.topk(
@@ -981,7 +983,7 @@ def q_ann_index_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the other serving queries (fingerprint-keyed build-once)."""
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_delete_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_delete_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False, delete=True)
     idx = AnnIndex.load(spark, path)
     return idx.topk(QUERY_VECS, k=IVFPQ_TOPK, nprobe=IVFPQ_NPROBE)
@@ -1015,7 +1017,7 @@ def q_ann_index_upsert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids) ∪ shifted append ∪ the reversed rows."""
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_upsert_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_upsert_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False, upsert=True)
     idx = AnnIndex.load(spark, path)
     return idx.topk(QUERY_VECS, k=IVFPQ_TOPK, nprobe=IVFPQ_NPROBE)
@@ -1069,7 +1071,7 @@ def q_hybrid_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.ann import AnnIndex
     from apachebeamkmeans_spark import queries_text as QT
 
-    _warn_if_not_train_sf(sf_dir, "hybrid_search_indexed")
+    warn_if_not_train_sf(sf_dir, "hybrid_search_indexed")
     terms = [t for t, _v in HYBRID_QUERIES]
     tranked = QT.TI.bm25_indexed_topk(
         spark, QT._ensure_bm25_index(spark, sf_dir), terms,
@@ -1255,7 +1257,7 @@ def q_sim_maxsim_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "sim_maxsim_indexed")
+    warn_if_not_train_sf(sf_dir, "sim_maxsim_indexed")
     path = _ensure_maxsim_token_index(spark, sf_dir)
     idx = AnnIndex.load(spark, path)
     flat = [list(tok) for q in MAXSIM_QUERIES for tok in q]
@@ -1338,7 +1340,7 @@ except (FileNotFoundError, OSError) as _e:
     # fixture token centers: 8 deterministic dsub-wide literals. The
     # fallback oracle cannot certify — nothing can, on a machine
     # without the driver's tables.
-    warn_training_fallback("maxsim token-center", "fixture", _e)
+    warn_training_fallback("maxsim token-center", "fixture literals", _e)
     _MSIM_TOK_CENTERS_MEMO = [
         [float(v) for v in tok]
         for q in fixtures.maxsim_query_tokens(MSIM_TOK_K, 1, MAXSIM_DSUB)
@@ -1366,7 +1368,7 @@ def q_hybrid_search_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.ann import AnnIndex
     from apachebeamkmeans_spark import queries_text as QT
 
-    _warn_if_not_train_sf(sf_dir, "hybrid_search_filtered")
+    warn_if_not_train_sf(sf_dir, "hybrid_search_filtered")
     terms = [t for t, _v in HYBRID_QUERIES]
     src_list = ", ".join(f"'{s}'" for s in HYBRID_FILTER_SOURCES)
     tranked = QT.TI.bm25_indexed_topk(
@@ -1503,7 +1505,7 @@ def q_hybrid_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark import queries_text as QT
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "hybrid_search_batch")
+    warn_if_not_train_sf(sf_dir, "hybrid_search_batch")
     qdf = spark.createDataFrame(
         [(qid, t) for qid, ts in enumerate(HYBRID_BATCH_TERMS) for t in ts],
         "qid int, term string",
@@ -1619,7 +1621,7 @@ def q_ann_index_tombstone_search(spark: SparkSession,
     `ORACLE_ANN_INDEX_DELETE_SEARCH` verbatim."""
     from apachebeamkmeans_spark.ann import AnnIndex
 
-    _warn_if_not_train_sf(sf_dir, "ann_index_tombstone_search")
+    warn_if_not_train_sf(sf_dir, "ann_index_tombstone_search")
     path = _ensure_serve_index(spark, sf_dir, pq=False, tombstone=True)
     idx = AnnIndex.load(spark, path)
     return idx.topk(QUERY_VECS, k=IVFPQ_TOPK, nprobe=IVFPQ_NPROBE)

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import logging
 import math
 import os
 
@@ -12,6 +11,11 @@ from apachebeamkmeans_spark import fixtures, oraclegen as OG
 from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.operators import similarity as SIM
 from apachebeamkmeans_spark.sources import io
+from apachebeamkmeans_spark.trainsf import (
+    TRAIN_SF_DIR,
+    warn_if_not_train_sf,
+    warn_training_fallback,
+)
 
 DIM = fixtures.EMBEDDING_DIM
 QUERY_VECS = fixtures.query_vectors(5)
@@ -21,21 +25,6 @@ IVF_K = 5
 IVF_NPROBE = 2
 
 _E2 = "(SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)"
-
-log = logging.getLogger(__name__)
-
-
-def warn_training_fallback(what: str, fallback: str, err: Exception) -> None:
-    """Import-time oracle training fell back to `fallback` literals.
-    ONLY the missing-testdata case (FileNotFoundError / OSError) comes
-    here, which keeps imports alive on machines without the tables; a
-    bug in a trainer must propagate — silently certifying the fallback
-    path would mask it (ADVICE r4)."""
-    log.warning(
-        "%s training fell back to %s literals (%r); its oracles are NOT "
-        "data-trained in this environment", what, fallback, err,
-        extra={"training": what, "fallback": fallback, "error": repr(err)},
-    )
 
 
 def q_sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,7 +218,6 @@ FROM {_E2} t
 # oracles (VALUES tables the Spark-trained params must hash-match) and
 # the serving query/oracle pair (same machinery as the fixture path).
 
-TRAIN_SF_DIR = os.environ.get("SPARK_GRAFT_TRAIN_SF_DIR", "/root/testdata/sf0.01")
 # Serving quality at the training sf (recall@5 vs bruteforce, asserted
 # in tests/test_ann_train.py): the r4 config (4 cells, nprobe=2,
 # refine=50) measured 0.64 — half the loss was coarse pruning. At the
@@ -261,25 +249,8 @@ def _train_np() -> tuple[list[list[float]], list[list[list[float]]]]:
 try:
     TRAINED_CENTERS, TRAINED_CODEBOOKS = _train_np()
 except (FileNotFoundError, OSError) as _e:
-    warn_training_fallback("numpy ANN", "fixture", _e)
+    warn_training_fallback("numpy ANN", "fixture literals", _e)
     TRAINED_CENTERS, TRAINED_CODEBOOKS = CENTERS, PQ_CODEBOOKS
-
-
-def _warn_if_not_train_sf(sf_dir: str, name: str) -> None:
-    """The registered training oracles are numpy-trained literals pinned
-    to TRAIN_SF_DIR (the driver's correctness sf). Training at another
-    sf is a legitimate use of the query, but its result will not match
-    the registered oracle — say so loudly instead of letting the
-    mismatch look like an engine bug (ADVICE r4). Not an exception: the
-    empty-input sweep and ad-hoc runs at other sfs are valid."""
-    if os.path.abspath(sf_dir) != os.path.abspath(TRAIN_SF_DIR):
-        log.warning(
-            "%s running at sf_dir=%r but its registered oracle literals "
-            "were trained at %r; oracle comparison is only valid there",
-            name, sf_dir, TRAIN_SF_DIR,
-            extra={"query": name, "sf_dir": sf_dir,
-                   "train_sf_dir": TRAIN_SF_DIR},
-        )
 
 
 _KNN_QUANTIZER_MEMO: dict[tuple[str, int, int, str, str], list[list[float]]] = {}
@@ -397,7 +368,7 @@ def q_sim_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     stronger check than rows-only."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_ivf_train")
+    warn_if_not_train_sf(sf_dir, "sim_ivf_train")
     centers = ANN.ivf_train(
         ANN.l2_normalize(io.load_points(spark, sf_dir)), IVFPQ_K, IVFPQ_ITERS, "ivf"
     )
@@ -416,7 +387,7 @@ def q_sim_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos); oracle = numpy twin."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_pq_train")
+    warn_if_not_train_sf(sf_dir, "sim_pq_train")
     books = ANN.pq_train(
         ANN.l2_normalize(io.load_points(spark, sf_dir)),
         IVFPQ_M, IVFPQ_KSUB, IVFPQ_ITERS, "pq",
@@ -468,7 +439,7 @@ def q_sim_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     bruteforce top-k (recall asserted in tests/test_ann_train.py)."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_ivfpq_trained")
+    warn_if_not_train_sf(sf_dir, "sim_ivfpq_trained")
     return SIM.ivfpq_topk(
         ANN.l2_normalize(io.load_points(spark, sf_dir)),
         NQUERY_VECS, TRAINED_CENTERS, TRAINED_CODEBOOKS,
@@ -695,7 +666,7 @@ def _res_train_np() -> list[list[list[float]]]:
 try:
     TRAINED_RES_CODEBOOKS = _res_train_np()
 except (FileNotFoundError, OSError) as _e:
-    warn_training_fallback("numpy residual-PQ", "fixture", _e)
+    warn_training_fallback("numpy residual-PQ", "fixture literals", _e)
     TRAINED_RES_CODEBOOKS = PQ_CODEBOOKS
 
 
@@ -710,7 +681,7 @@ def q_sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw-vs-residual comparison on this corpus."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_ivfpq_residual")
+    warn_if_not_train_sf(sf_dir, "sim_ivfpq_residual")
     return SIM.ivfpq_residual_topk(
         ANN.l2_normalize(io.load_points(spark, sf_dir)),
         NQUERY_VECS, TRAINED_CENTERS, TRAINED_RES_CODEBOOKS,
@@ -906,7 +877,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.operators import ann_train as ANN
     from apachebeamkmeans_spark.operators.dedup import salted_self_pairs
 
-    _warn_if_not_train_sf(sf_dir, "sim_knn_graph")
+    warn_if_not_train_sf(sf_dir, "sim_knn_graph")
     with staged(ANN.l2_normalize(io.load_points(spark, sf_dir))) as base:
         n = base.count()
         k = knn_cells(n)
@@ -1020,7 +991,7 @@ def _knn_train_np() -> tuple[list[list[float]], int, int]:
 try:
     KNN_TRAINED_CENTERS, KNN_TRAIN_CELLS, KNN_TRAIN_N = _knn_train_np()
 except (FileNotFoundError, OSError) as _e:
-    warn_training_fallback("numpy KNN quantizer", "fixture", _e)
+    warn_training_fallback("numpy KNN quantizer", "fixture literals", _e)
     # n = 0 keeps the derived refine at its floor in the fallback
     KNN_TRAINED_CENTERS, KNN_TRAIN_CELLS, KNN_TRAIN_N = CENTERS, len(CENTERS), 0
 
@@ -1186,7 +1157,7 @@ def q_sim_knn_graph_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ranks agree bit-for-bit."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_knn_graph_pq")
+    warn_if_not_train_sf(sf_dir, "sim_knn_graph_pq")
     base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -1228,7 +1199,7 @@ try:
 except (FileNotFoundError, OSError) as _e:
     # a shape-correct deterministic literal: the m=8 fixture books split
     # into dsub=4 halves
-    warn_training_fallback("numpy KNN-PQ codebook", "fixture-derived", _e)
+    warn_training_fallback("numpy KNN-PQ codebook", "fixture-derived literals", _e)
     KNNPQ_TRAINED_BOOKS = [
         [cent[:4] for cent in book] for book in PQ_CODEBOOKS
     ] + [[cent[4:] for cent in book] for book in PQ_CODEBOOKS]
@@ -1360,7 +1331,7 @@ def q_sim_pca_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sim_ivf_train`/`sim_pq_train` VALUES regime)."""
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_pca_train")
+    warn_if_not_train_sf(sf_dir, "sim_pca_train")
     mean, comps = ANN.pca_train(
         ANN.l2_normalize(io.load_points(spark, sf_dir)), PCA_DIM
     )
@@ -1382,7 +1353,7 @@ def _pca_train_np() -> tuple[list[float], list[list[float]]]:
 try:
     PCA_TRAINED_MEAN, PCA_TRAINED_COMPONENTS = _pca_train_np()
 except (FileNotFoundError, OSError) as _e:
-    warn_training_fallback("numpy PCA", "identity", _e)
+    warn_training_fallback("numpy PCA", "identity literals", _e)
     PCA_TRAINED_MEAN = [0.0] * DIM
     PCA_TRAINED_COMPONENTS = [
         [1.0 if j == c else 0.0 for j in range(DIM)] for c in range(PCA_DIM)
@@ -1411,7 +1382,7 @@ def q_sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_pca_project")
+    warn_if_not_train_sf(sf_dir, "sim_pca_project")
     # cut the normalize tree BEFORE the unrolled projection: HOF
     # lambdas get no CSE, so without the checkpoint the per-row
     # normalization aggregate is inlined into every one of the
@@ -1458,7 +1429,7 @@ def q_sim_pca_project_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_pca_project_arrow")
+    warn_if_not_train_sf(sf_dir, "sim_pca_project_arrow")
     base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -1544,7 +1515,7 @@ def _pca_space_centers_np() -> list[list[float]]:
 try:
     PCA_IVF_CENTERS = _pca_space_centers_np()
 except (FileNotFoundError, OSError) as _e:
-    warn_training_fallback("numpy PCA-space IVF", "identity-ish", _e)
+    warn_training_fallback("numpy PCA-space IVF", "identity-ish literals", _e)
     PCA_IVF_CENTERS = [
         [0.1 if j == c else 0.0 for j in range(PCA_DIM)]
         for c in range(PCA_IVF_K)
@@ -1587,7 +1558,7 @@ def q_sim_pca_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apachebeamkmeans_spark.operators import ann_train as ANN
 
-    _warn_if_not_train_sf(sf_dir, "sim_pca_ivf_topk")
+    warn_if_not_train_sf(sf_dir, "sim_pca_ivf_topk")
     base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -1797,7 +1768,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.operators import ann_train as ANN
     from apachebeamkmeans_spark.operators.similarity import semantic_prune
 
-    _warn_if_not_train_sf(sf_dir, "semantic_dedup")
+    warn_if_not_train_sf(sf_dir, "semantic_dedup")
     base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -1876,7 +1847,7 @@ def q_sim_coverage_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.operators import ann_train as ANN
     from apachebeamkmeans_spark.operators.similarity import coverage_sample
 
-    _warn_if_not_train_sf(sf_dir, "sim_coverage_sample")
+    warn_if_not_train_sf(sf_dir, "sim_coverage_sample")
     base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -1940,27 +1911,18 @@ def q_sim_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.functions import distance as D
     from apachebeamkmeans_spark.operators import ann_train as ANN
     from apachebeamkmeans_spark.operators.dedup import salted_self_pairs
+    from apachebeamkmeans_spark.operators.kmeans import lloyd
 
-    _warn_if_not_train_sf(sf_dir, "sim_curation_pipeline")
+    warn_if_not_train_sf(sf_dir, "sim_curation_pipeline")
     with staged(ANN.l2_normalize(io.load_points(spark, sf_dir))) as base:
         n = base.count()
         k = knn_cells(n)
         centers = _knn_quantizer(base, sf_dir, k)
         pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
-        dfn = lambda c: F.aggregate(  # noqa: E731 — same fold as l2_sq_unrolled
-            F.zip_with(F.col("f"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-        nearest = F.array_min(
-            F.transform(
-                D.lit_array(centers),
-                lambda c, i: F.struct(dfn(c).alias("d"), i.cast("int").alias("i")),
-            )
-        )
         assigned = pts.select(
-            "vec_id", "f", nearest.alias("s")
+            "vec_id", "f", lloyd.nearest_center(centers, 2, "f").alias("s")
         ).select(
-            "vec_id", "f", F.col("s")["i"].alias("cell"), F.col("s")["d"].alias("d2")
+            "vec_id", "f", F.col("s")["idx"].alias("cell"), F.col("s")["dist"].alias("d2")
         ).localCheckpoint(eager=True)
     shadow = (
         salted_self_pairs(assigned, ["cell"], "vec_id")

@@ -4,7 +4,9 @@ The engine runs every Lloyd step, seeding draw and SSE as one numpy
 batch job (`lloyd._lloyd_step`, `lloyd.best_point`, `lloyd.total_sse`).
 These are the same steps written as plain DataFrame plans over the
 Column form (`lloyd.assign`, `lloyd.min_dist_col`), which the tests
-hold the batch jobs to.
+hold the batch jobs to. `farthest_point` and `roulette_point` are the
+only Column-form seeding draws left: the package seeds only through
+`init.seed_picks`, the registered seed-trace queries included.
 """
 
 from __future__ import annotations

@@ -137,15 +137,15 @@ def test_fit_fixed_trainer_matches_numpy(spark):
 
 
 def test_fit_fixed_trainer_matches_numpy_at_oracle_sf(spark):
-    """The SAME check at FIT_TRAIN_SF_DIR — the sf the registered
+    """The SAME check at TRAIN_SF_DIR — the sf the registered
     oracle's center literals are actually trained at. The sf0.001 test
     above is the fast smoke; this one closes the gap where a
     rounding-boundary float exists only in the larger corpus (the
     premise q_kmeans_fit_fixed's docstring relies on)."""
     from apachebeamkmeans_spark import queries_kmeans as QK
 
-    pts = io.load_points(spark, QK.FIT_TRAIN_SF_DIR)
-    ids, mat = ANN.load_embeddings_np(QK.FIT_TRAIN_SF_DIR)
+    pts = io.load_points(spark, QK.TRAIN_SF_DIR)
+    ids, mat = ANN.load_embeddings_np(QK.TRAIN_SF_DIR)
     a = ANN.round_mat(ANN.ivf_train(pts, QK.K, QK.FIT_FIXED_ITERS, QK.FIT_FIXED_SEED))
     b = ANN.round_mat(
         ANN.ivf_train_np(ids, mat, QK.K, QK.FIT_FIXED_ITERS, QK.FIT_FIXED_SEED)

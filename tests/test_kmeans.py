@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansModel, KMeansParams, lloyd
-from apachebeamkmeans_spark.operators.kmeans.init import STRATEGIES, initial_centers
+from apachebeamkmeans_spark.operators.kmeans.init import STRATEGIES, initial_centers, seed_picks
 from apachebeamkmeans_spark.operators.kmeans.mllib import mllib_kmeans_fit
+from apachebeamkmeans_spark.trainsf import TRAIN_SF_DIR
 from job_ledger import jobs_and_stages
 from kmeans_reference import farthest_point, recenter_to_list, roulette_point
 from kmeans_reference import sse as sse_of
@@ -123,7 +124,7 @@ def _kernel_rows(frame, centers, p):
 
 @pytest.mark.parametrize("p", [1.0, 2.0, 3.0])
 def test_batch_kernel_matches_column_form(scatter, p):
-    """The batch kernel's argmin and distance equal `_nearest_center`
+    """The batch kernel's argmin and distance equal `nearest_center`
     (through `assign`): to the last bit for p=1, 2, the tie row
     included; for p=3 numpy's pow may differ from the JVM's in the
     last bits, so `dist` is held to a relative 1e-12."""
@@ -151,7 +152,7 @@ def test_batch_kernel_rejects_non_finite_centers():
 def test_farthest_point_matches_column_reference(scatter, p):
     centers = [TIE_CENTERS[0]]
     for _ in range(4):
-        got = lloyd.farthest_point(scatter, centers, p)
+        _, got = lloyd.best_point(scatter, centers, p)
         assert got == farthest_point(scatter, centers, p)
         centers.append(got)
 
@@ -159,11 +160,12 @@ def test_farthest_point_matches_column_reference(scatter, p):
 @pytest.mark.parametrize("weight", ["d", "d2"])
 @pytest.mark.parametrize("seed", [1, 2, 3, 5, 8, 13])
 def test_roulette_draw_matches_column_reference(scatter, weight, seed):
-    from apachebeamkmeans_spark.operators.kmeans.init import _roulette_next
+    from apachebeamkmeans_spark.operators.kmeans.init import _roulette_draw
 
+    params = KMeansParams(k=4, p=2.0, seed=seed, init="plusplus", weight=weight)
     centers = [TIE_CENTERS[0], TIE_CENTERS[2]]
     for rnd in (1, 2):
-        got = _roulette_next(scatter, centers, 2.0, weight, seed, rnd)
+        _, got = _roulette_draw(scatter, centers, params, rnd, "features")
         assert got == roulette_point(scatter, centers, 2.0, weight, seed, rnd)
         centers.append(got)
 
@@ -175,16 +177,49 @@ def test_draws_keep_the_id_type_and_break_ties_by_id(spark):
         [("b", [5.0, 0.0]), ("a9", [0.0, 5.0]), ("a10", [0.0, -5.0]), ("c", [1.0, 1.0])],
         "id string, features array<double>",
     ).repartition(2)
-    got = lloyd.farthest_point(df, [[0.0, 0.0]], 2.0)
-    assert got == farthest_point(df, [[0.0, 0.0]], 2.0) == [0.0, -5.0]
+    got = lloyd.best_point(df, [[0.0, 0.0]], 2.0)
+    assert got == ("a10", farthest_point(df, [[0.0, 0.0]], 2.0)) == ("a10", [0.0, -5.0])
 
 
 def test_draws_reject_an_empty_frame(spark):
     empty = spark.createDataFrame([], "id long, features array<double>")
     with pytest.raises(ValueError, match="non-empty"):
-        lloyd.farthest_point(empty, TIE_CENTERS, 2.0)
+        lloyd.best_point(empty, TIE_CENTERS, 2.0)
     with pytest.raises(ValueError, match="non-empty"):
         initial_centers(empty, KMeansParams(k=2, init="plusplus"))
+
+
+@pytest.mark.parametrize("init,k", [(name, 4) for name in STRATEGIES]
+                         + [("random", TIE_ROW + 4)])
+def test_seed_picks_carry_their_rows(scatter, init, k):
+    """`initial_centers` is the features of `seed_picks`, and each
+    pick's id names a row that carries exactly those features; with
+    k > n the random picks cycle."""
+    params = KMeansParams(k=k, seed=7, init=init)
+    picks = seed_picks(scatter, params)
+    assert [f for _, f in picks] == initial_centers(scatter, params)
+    rows = {r["id"]: list(r["features"]) for r in scatter.collect()}
+    assert len(picks) == k and all(rows[i] == f for i, f in picks)
+    n = len(rows)
+    assert len({i for i, _ in picks[:n]}) == min(k, n)
+    assert picks[n:] == picks[:k - n]
+
+
+SEED_QUERIES = ["kmeans_gonzalez_seeds", "kmeans_plusplus_seeds",
+                "kmeans_plusplus_seeds_dweight"]
+
+
+@pytest.mark.parametrize("name", SEED_QUERIES)
+def test_seed_queries_job_budget(spark, name):
+    """Each registered seed-trace query at the training sf, through the
+    noop sink, runs 6 jobs: the parquet read's, one per pick of K = 4,
+    and the sink's."""
+    from apachebeamkmeans_spark import queries_kmeans as QK
+
+    query = QK.QUERIES[name][0]
+    jobs, _ = jobs_and_stages(spark, f"{name}.jobs", lambda: query(
+        spark, TRAIN_SF_DIR).write.format("noop").mode("overwrite").save())
+    assert jobs == 6
 
 
 @pytest.mark.parametrize("p", [1.0, 2.0])

@@ -1,7 +1,8 @@
-"""The IVF probe rule, the IVF-PQ layout frame and the ADC sum each
-have one definition: `similarity.probe_cells` is the Column twin of
-`nearest_centers`, the inline IVF-PQ searches prune before they encode,
-and no module re-derives the probe sort or wraps `_adc_expr`."""
+"""The IVF probe rule, the nearest-center struct, the IVF-PQ layout
+frame and the ADC sum each have one definition: `similarity.probe_cells`
+is the Column twin of `nearest_centers`, the inline IVF-PQ searches
+prune before they encode, and no module re-derives the probe sort or
+the nearest center (`lloyd.nearest_center`) or wraps `_adc_expr`."""
 
 from __future__ import annotations
 
@@ -113,13 +114,13 @@ def _is_center_transform(node: ast.AST) -> bool:
     )
 
 
-def probe_sorts(tree: ast.AST) -> list[ast.Call]:
-    """`array_sort` calls over a transform of a center literal, directly
-    or through a name bound to one in the same top-level definition,
-    outside `probe_cells`."""
+def _over_center_literal(tree: ast.AST, fn: str, owner: str | None = None) -> list[ast.Call]:
+    """`fn` calls over a transform of a center literal, directly or
+    through a name bound to one in the same top-level definition,
+    outside the top-level function `owner`."""
     found = []
     for top in getattr(tree, "body", []):
-        if isinstance(top, ast.FunctionDef) and top.name == "probe_cells":
+        if isinstance(top, ast.FunctionDef) and top.name == owner:
             continue
         bound = {
             t.id
@@ -129,12 +130,23 @@ def probe_sorts(tree: ast.AST) -> list[ast.Call]:
             if isinstance(t, ast.Name)
         }
         for n in ast.walk(top):
-            if _is_call(n, "array_sort") and n.args and (
+            if _is_call(n, fn) and n.args and (
                 _is_center_transform(n.args[0])
                 or (isinstance(n.args[0], ast.Name) and n.args[0].id in bound)
             ):
                 found.append(n)
     return found
+
+
+def probe_sorts(tree: ast.AST) -> list[ast.Call]:
+    """Copies of the probe sort outside `probe_cells`."""
+    return _over_center_literal(tree, "array_sort", owner="probe_cells")
+
+
+def nearest_center_copies(tree: ast.AST) -> list[ast.Call]:
+    """Column-form copies of `lloyd.nearest_center`: `array_min` over a
+    transform of a center literal."""
+    return _over_center_literal(tree, "array_min")
 
 
 def adc_closures(tree: ast.AST) -> list[ast.FunctionDef]:
@@ -162,6 +174,12 @@ def _sites(package: Path, finder) -> list[str]:
 def test_probe_rule_has_one_definition():
     sites = _sites(PACKAGE, probe_sorts)
     assert not sites, "probe cells with similarity.probe_cells:\n" + "\n".join(sites)
+
+
+def test_nearest_center_has_one_definition():
+    sites = [s for s in _sites(PACKAGE, nearest_center_copies)
+             if not s.startswith("apachebeamkmeans_spark/operators/kmeans/lloyd.py:")]
+    assert not sites, "find the nearest center with lloyd.nearest_center:\n" + "\n".join(sites)
 
 
 def test_adc_sum_has_no_wrappers():
