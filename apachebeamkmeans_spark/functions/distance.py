@@ -175,10 +175,6 @@ def l2_sq_unrolled(col: Column, center: list[float]) -> Column:
     )
 
 
-def l1_unrolled(col: Column, center: list[float]) -> Column:
-    return _sum_terms([F.abs(col[j] - F.lit(float(c))) for j, c in enumerate(center)])
-
-
 def norm_sq_unrolled(col: Column, dim: int) -> Column:
     return _sum_terms([col[j] * col[j] for j in range(dim)])
 

@@ -159,8 +159,8 @@ def mad_outliers(events: DataFrame, threshold: float = 3.0) -> DataFrame:
     """Per-user robust outlier profile via median absolute deviation —
     pure window/aggregate plan since r18 (guide §4: the grouped-map
     Python boundary removed from the query path; the applyInPandas
-    form survives as `mad_outliers_pandas`, asserted value-identical
-    in tests/test_timeseries.py).
+    form survives only as the test twin `mad_outliers_pandas` in
+    tests/test_timeseries.py, asserted value-identical there).
 
     Medians are SELECTION-based per user (`_partition_median`): rank
     within the user partition, average the two middle order statistics
@@ -198,32 +198,4 @@ def mad_outliers(events: DataFrame, threshold: float = 3.0) -> DataFrame:
                 1,
             ).otherwise(0)
         ).alias("n_outliers"),
-    )
-
-
-def mad_outliers_pandas(events: DataFrame, threshold: float = 3.0) -> DataFrame:
-    """The grouped-map `applyInPandas` twin of `mad_outliers` (each
-    user's rows arrive as one Arrow-backed pandas frame) — kept as the
-    engine's grouped-map API surface and as the bit-identity witness
-    for the window rewrite (all arithmetic is order-independent:
-    selection-based medians, elementwise abs/compare)."""
-    import pandas as pd
-
-    schema = "user_id long, n_events long, median double, mad double, n_outliers long"
-
-    def _profile(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        v = pdf["value"].to_numpy(dtype=np.float64)
-        med = float(np.median(v))
-        ad = np.abs(v - med)
-        mad = float(np.median(ad))
-        n_out = int((ad > threshold * mad).sum()) if mad > 0 else 0
-        return pd.DataFrame(
-            [[int(pdf["user_id"].iloc[0]), len(v), med, mad, n_out]],
-            columns=["user_id", "n_events", "median", "mad", "n_outliers"],
-        )
-
-    return events.select("user_id", "value").groupBy("user_id").applyInPandas(
-        _profile, schema
     )

@@ -502,7 +502,11 @@ def q_kmeans_fit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-iteration jobs with the main loop's so neither trainer's
         # stragglers idle the cluster (r17, guide §2.6). pts.count()
         # materializes the cache once before both loops race on it.
+        # inheritable_thread_target gives the pool thread the caller's
+        # job group, so the twin's jobs are counted with the query's.
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
 
         # the materializing count IS the conservation-property n_pts —
         # the previous second pts.count() after the eval was a whole
@@ -511,7 +515,8 @@ def q_kmeans_fit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_pts = pts.count()
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut_fixed = pool.submit(
-                ANN.ivf_train, pts, K, FIT_FIXED_ITERS, FIT_FIXED_SEED
+                inheritable_thread_target(spark)(ANN.ivf_train),
+                pts, K, FIT_FIXED_ITERS, FIT_FIXED_SEED,
             )
             init = initial_centers(pts, params)
             sse_log: list[float] = []
@@ -600,10 +605,13 @@ def q_mllib_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         # needs (previously a separate job at the end).
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         n_pts = pts.count()
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut_fixed = pool.submit(
-                ANN.ivf_train, pts, K, FIT_FIXED_ITERS, FIT_FIXED_SEED
+                inheritable_thread_target(spark)(ANN.ivf_train),
+                pts, K, FIT_FIXED_ITERS, FIT_FIXED_SEED,
             )
             model, assigned = mllib_kmeans_fit(
                 pts, k=K, seed=SEED, max_iter=20

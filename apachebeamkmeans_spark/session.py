@@ -27,7 +27,9 @@ def worker_conf(installed: str, bundled: str | None, package_parent: str) -> dic
     module, and the directory holding this package on the workers'
     PYTHONPATH so the daemon starts whatever the cwd. Empty unless the
     installed pyspark version equals the one bundled in Spark's worker
-    zip, because the workers then import the installed one."""
+    zip, because the workers then import the installed one. With it
+    empty Spark runs its stock daemon, whose reused workers keep paying
+    a full collection of the unfrozen import heap after every task."""
     if bundled != installed:
         return {}
     return {
@@ -81,7 +83,10 @@ def get_spark(
     — the knobs that matter most at 100 TB.
 
     Python workers start zip-free (`worker_conf`) when the installed
-    pyspark matches the one Spark bundles.
+    pyspark matches the one Spark bundles; their daemon has the Arrow
+    stack imported and frozen, so the collection after each task walks
+    only what the task made. Otherwise the stock daemon keeps the full
+    per-task collection.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus

@@ -21,3 +21,8 @@ def jobs_and_stages(spark, group: str, fn) -> tuple[int, int]:
     stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
     ran = [s for s in stages if (info := tracker.getStageInfo(s)) and info.numCompletedTasks]
     return len(jobs), len(ran)
+
+
+def ungrouped_jobs(spark) -> set[int]:
+    """Ids of the jobs the status tracker holds without a job group."""
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))

@@ -7,11 +7,15 @@ Column form (`lloyd.assign`, `lloyd.min_dist_col`), which the tests
 hold the batch jobs to. `farthest_point` and `roulette_point` are the
 only Column-form seeding draws left: the package seeds only through
 `init.seed_picks`, the registered seed-trace queries included.
+`l1_unrolled` is the p = 1 twin of `distance.l2_sq_unrolled`, which
+the tests hold the parsed center distance to.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.functions.hashing import hash01
@@ -70,3 +74,10 @@ def roulette_point(df: DataFrame, centers, p: float, weight: str, seed: int,
     u = hash01(F.col("id"), f"{seed}-{rnd}")
     t = F.when(w > 0, -F.log(u) / w).otherwise(F.lit(float("inf")))
     return _take1(df.select("id", F.col("features").alias("f"), t.alias("k")), desc=False)
+
+
+def l1_unrolled(col: Column, center: list[float]) -> Column:
+    """Σ_j |col[j] - c_j| with a literal center, left-associated like
+    `distance.l2_sq_unrolled`."""
+    return reduce(lambda acc, t: acc + t,
+                  [F.abs(col[j] - F.lit(float(c))) for j, c in enumerate(center)])

@@ -21,8 +21,8 @@ from apachebeamkmeans_spark.operators.kmeans import KMeans, KMeansModel, KMeansP
 from apachebeamkmeans_spark.operators.kmeans.init import STRATEGIES, initial_centers, seed_picks
 from apachebeamkmeans_spark.operators.kmeans.mllib import mllib_kmeans_fit
 from apachebeamkmeans_spark.trainsf import TRAIN_SF_DIR
-from job_ledger import jobs_and_stages
-from kmeans_reference import farthest_point, recenter_to_list, roulette_point
+from job_ledger import jobs_and_stages, ungrouped_jobs
+from kmeans_reference import farthest_point, l1_unrolled, recenter_to_list, roulette_point
 from kmeans_reference import sse as sse_of
 
 BLOB_CENTERS = [[0.0, 0.0], [10.0, 0.0], [0.0, 10.0], [10.0, 10.0]]
@@ -76,7 +76,7 @@ def test_parsed_min_dist_is_bit_identical(scatter, p):
     mink = F.array_min(F.array(*[D.minkowski(feats, D.lit_array(c), p) for c in TIE_CENTERS]))
     cols = [(F.sqrt(parsed) if p == 2 else parsed).alias("parsed"), mink.alias("mink")]
     if p in (1, 2):
-        unrolled = D.l2_sq_unrolled if p == 2 else D.l1_unrolled
+        unrolled = D.l2_sq_unrolled if p == 2 else l1_unrolled
         cols += [
             parsed.alias("raw"),
             F.array_min(F.array(*[unrolled(feats, c) for c in TIE_CENTERS])).alias("unrolled"),
@@ -98,7 +98,7 @@ def test_assign_matches_argmin_twin(scatter, p):
     if p == 2:
         dists = [D.l2_sq_unrolled(feats, c) for c in TIE_CENTERS]
     elif p == 1:
-        dists = [D.l1_unrolled(feats, c) for c in TIE_CENTERS]
+        dists = [l1_unrolled(feats, c) for c in TIE_CENTERS]
     else:
         dists = [D.minkowski(feats, D.lit_array(c), p) for c in TIE_CENTERS]
     darr = F.array(*dists)
@@ -220,6 +220,21 @@ def test_seed_queries_job_budget(spark, name):
     jobs, _ = jobs_and_stages(spark, f"{name}.jobs", lambda: query(
         spark, TRAIN_SF_DIR).write.format("noop").mode("overwrite").save())
     assert jobs == 6
+
+
+def test_fit_clusters_job_budget(spark):
+    """`kmeans_fit_clusters` at the training sf, through the noop sink,
+    runs 25 jobs, and its job group holds every one of them: the
+    fixed-iteration twin's jobs, started on a pool thread, inherit the
+    caller's group."""
+    from apachebeamkmeans_spark import queries_kmeans as QK
+
+    query = QK.QUERIES["kmeans_fit_clusters"][0]
+    before = ungrouped_jobs(spark)
+    jobs, _ = jobs_and_stages(spark, "kmeans_fit_clusters.jobs", lambda: query(
+        spark, TRAIN_SF_DIR).write.format("noop").mode("overwrite").save())
+    assert not ungrouped_jobs(spark) - before
+    assert jobs == 25
 
 
 @pytest.mark.parametrize("p", [1.0, 2.0])

@@ -1,9 +1,11 @@
-"""Sessionization and as-of join semantics on hand-built event frames."""
+"""Sessionization and as-of join semantics on hand-built event frames,
+and `mad_outliers` held to its grouped-map pandas twin."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apachebeamkmeans_spark.operators import timeseries as TS
@@ -12,6 +14,34 @@ from apachebeamkmeans_spark.operators import timeseries as TS
 def _ev(spark, rows):
     return spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
+    )
+
+
+def mad_outliers_pandas(events: DataFrame, threshold: float = 3.0) -> DataFrame:
+    """The grouped-map `applyInPandas` twin of `TS.mad_outliers` (each
+    user's rows arrive as one Arrow-backed pandas frame): the
+    bit-identity witness for the window form (all arithmetic is
+    order-independent: selection-based medians, elementwise
+    abs/compare)."""
+    import pandas as pd
+
+    schema = "user_id long, n_events long, median double, mad double, n_outliers long"
+
+    def _profile(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        import numpy as np
+
+        v = pdf["value"].to_numpy(dtype=np.float64)
+        med = float(np.median(v))
+        ad = np.abs(v - med)
+        mad = float(np.median(ad))
+        n_out = int((ad > threshold * mad).sum()) if mad > 0 else 0
+        return pd.DataFrame(
+            [[int(pdf["user_id"].iloc[0]), len(v), med, mad, n_out]],
+            columns=["user_id", "n_events", "median", "mad", "n_outliers"],
+        )
+
+    return events.select("user_id", "value").groupBy("user_id").applyInPandas(
+        _profile, schema
     )
 
 
@@ -125,7 +155,7 @@ def test_mad_outliers_window_equals_pandas_twin(spark, sf_dir):
 
     ev = io.read_table(spark, sf_dir, "events")
     a = {r["user_id"]: r for r in TS.mad_outliers(ev, 3.0).collect()}
-    b = {r["user_id"]: r for r in TS.mad_outliers_pandas(ev, 3.0).collect()}
+    b = {r["user_id"]: r for r in mad_outliers_pandas(ev, 3.0).collect()}
     assert set(a) == set(b) and len(a) > 0
     for uid, ra in a.items():
         rb = b[uid]
@@ -155,7 +185,7 @@ def test_mad_outliers_window_equals_pandas_twin(spark, sf_dir):
     ]
     hand = _ev(spark, rows)
     ha = {r["user_id"]: r for r in TS.mad_outliers(hand, 3.0).collect()}
-    hb = {r["user_id"]: r for r in TS.mad_outliers_pandas(hand, 3.0).collect()}
+    hb = {r["user_id"]: r for r in mad_outliers_pandas(hand, 3.0).collect()}
     assert ha.keys() == hb.keys()
     for uid in ha:
         for c in ("n_events", "median", "mad", "n_outliers"):
@@ -180,6 +210,6 @@ def test_mad_outliers_precondition_finite_non_null(spark, sf_dir):
     rows += [(20, t, 3, "x", 1.0), (21, t, 3, "x", None), (22, t, 3, "x", 3.0)]
     hand = _ev(spark, rows)
     a = {r["user_id"]: r for r in TS.mad_outliers(hand, 3.0).collect()}
-    b = {r["user_id"]: r for r in TS.mad_outliers_pandas(hand, 3.0).collect()}
+    b = {r["user_id"]: r for r in mad_outliers_pandas(hand, 3.0).collect()}
     assert a.keys() == b.keys() == {1, 2, 3}
     assert a[1] == b[1] and a[1]["median"] == 6.0
