@@ -274,19 +274,23 @@ class AnnIndex:
             # jobs back-fill the other's stragglers (r17, guide §2.6).
             # vecs is materialized eagerly first so the two threads
             # race on cached blocks, not on checkpoint materialization.
-            # Each trainer is wrapped with inheritable_thread_target so
-            # its jobs carry the caller's job group, local properties
-            # and tags.
+            # Each trainer is wrapped with its own
+            # inheritable_thread_target call so its jobs carry the
+            # caller's job group, local properties and tags, in a copy
+            # of the properties that the other thread does not share.
             from concurrent.futures import ThreadPoolExecutor
 
             from pyspark.util import inheritable_thread_target
 
-            inherit = inheritable_thread_target(vecs.sparkSession)
+            spark = vecs.sparkSession
             vecs.count()  # materialize the lazy checkpoint once, up front
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_c = pool.submit(inherit(ANN.ivf_train), vecs, k, n_iters)
-                fut_b = pool.submit(inherit(ANN.pq_train), vecs, pq_m,
-                                    pq_ksub, n_iters)
+                fut_c = pool.submit(
+                    inheritable_thread_target(spark)(ANN.ivf_train),
+                    vecs, k, n_iters)
+                fut_b = pool.submit(
+                    inheritable_thread_target(spark)(ANN.pq_train),
+                    vecs, pq_m, pq_ksub, n_iters)
                 centers = [
                     [ANN.round_param(v) for v in c] for c in fut_c.result()
                 ]
