@@ -19,28 +19,28 @@ Reference semantics (SURVEY.md §2.3-2.4, §3.1):
   (textbook; the reference's any-match + index bug, SURVEY.md §8.1-8.2,
   is deliberately not reproduced).
 
-Two forms of "nearest center", one per kind of consumer:
+One nearest-center kernel, `_batch_kernel`: numpy over whole Arrow
+batches, folding all k centers at once one dimension per pass, left to
+right from 0.0 — the fold the oracle SQL unrolls — with first-minimum
+ties. It runs in the lazy plans that queries compose (`assign` and
+`assign_probes`, each one `mapInArrow`, and the PQ encoder
+`similarity.pq_encode_lut_arrow`), in the driver-loop steps that
+collect a result — a Lloyd iteration (`_lloyd_step`, run by `lloyd_fit`
+and by the ANN trainers `ann_train.ivf_train` and
+`ann_train.pq_train`), a farthest-point or roulette draw (`best_point`)
+and a model's SSE (`total_sse`), one job each — and on the driver for
+the plan-time probes of literal queries (`similarity.nearest_centers`).
 
-- **Column form** for lazy plans that queries compose (`assign`,
-  `min_dist_col`, the curation cells of `similarity.semantic_prune`,
-  `similarity.coverage_sample` and `q_sim_curation_pipeline`):
-  `nearest_center`, ONE parsed SQL string holding the centers as one
-  folded literal (`distance.sql_array_literal`) and the Minkowski-p
-  fold as a lambda.
-  One py4j call to build, one codegen compile for any center values;
-  its left-to-right sums and first-minimum ties give the same doubles
-  as the unrolled oracle SQL.
-- **Batch kernel** for the driver-loop steps that collect a result —
-  a Lloyd iteration (`_lloyd_step`, run by `lloyd_fit` and by the ANN
-  trainers `ann_train.ivf_train` and `ann_train.pq_train`), a
-  farthest-point or roulette draw (`best_point`) and a model's SSE
-  (`total_sse`): `_batch_kernel`, the
-  same fold in numpy over whole Arrow batches (`mapInArrow`). The
-  higher-order functions of the Column form never compile to Java
-  (`CodegenFallback`) and are interpreted per (row, center); the kernel
-  makes each step one job of vectorized numpy. It gives the Column
-  form's doubles and ties for p ∈ {1, 2}, and `tests/test_kmeans.py`
-  pins the two to each other.
+`assign` keeps one other path, the Column form `nearest_center`, for
+p ∉ {1, 2}: one parsed SQL string holding the centers as one folded
+literal (`distance.sql_array_literal`) and the Minkowski-p fold as a
+lambda. At those p the JVM's `StrictMath.pow` and numpy's `pow`
+disagree in the last bits: on the tie scatter of `tests/test_kmeans.py`
+22 of 61 rows differ at p = 3 and 25 at p = 1.5 (703 and 788 of 2000
+uniform random 16-dim points against 8 centers), and
+`test_assign_matches_argmin_twin` holds `assign` to the JVM's doubles.
+For p ∈ {1, 2} the two forms give the same doubles and ties, which
+`tests/test_kmeans.py` pins.
 
 Centers live on the driver as a k×dim Python list (≤ a few KB); the
 driver receives one partial row per task per step: k·(dim+2) values
@@ -54,6 +54,7 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from apachebeamkmeans_spark.functions import distance as D
 
@@ -63,8 +64,9 @@ log = logging.getLogger(__name__)
 def nearest_center(centers: list[list[float]], p: float,
                    features_col: str = "features"):
     """struct(dist, idx) of the nearest literal center (ties → lowest
-    idx) as ONE parsed SQL expression (see module docstring). `dist`
-    is squared for p=2, plain for p=1, and the 1/p root for other p."""
+    idx) as ONE parsed SQL expression: `assign`'s form for p ∉ {1, 2}
+    (see module docstring). `dist` is squared for p=2, plain for p=1,
+    and the 1/p root for other p."""
     dist = D.sql_pow_sum(features_col, "c", p)
     if p not in (1, 2):
         dist = f"pow({dist}, {1.0 / float(p)!r}D)"
@@ -80,23 +82,75 @@ def assign(df: DataFrame, centers: list[list[float]], p: float = 2.0,
     and with `keep_dist` the distance to it as `dist` (squared for p=2).
 
     J1 in SURVEY.md §2.3 — the reference's only "join", expressed as a
-    narrow map over a plan-time center literal; zero join, zero shuffle.
-    One physical form, the shared `nearest_center` expression: one
-    py4j call to build and one codegen compile for any center values.
+    narrow map over plan-time centers; zero join, zero shuffle. For
+    p ∈ {1, 2} one `mapInArrow` of `_batch_kernel`; other p use the
+    Column form `nearest_center` (see module docstring).
+
+    Precondition: `features_col` holds finite, non-null arrays of
+    len(centers[0]) doubles. For p ∈ {1, 2} a null or wrong-length
+    array raises ValueError when the plan runs.
     """
-    best = nearest_center(centers, p, features_col)
-    out = df.withColumn("center_id", best["idx"])
+    if p not in (1, 2):
+        best = nearest_center(centers, p, features_col)
+        out = df.withColumn("center_id", best["idx"])
+        return out.withColumn("dist", best["dist"]) if keep_dist else out
+    matrix, _, nearest = _batch_kernel(centers, p)
+    fields = [T.StructField("center_id", T.IntegerType())]
     if keep_dist:
-        out = out.withColumn("dist", best["dist"])
-    return out
+        fields.append(T.StructField("dist", T.DoubleType()))
+    ncols = len(fields)
+
+    def columns(X):
+        import pyarrow as pa
+
+        idx, dist = nearest(X)
+        return [pa.array(idx), pa.array(dist)][:ncols]
+
+    return _with_columns(df, features_col, matrix, columns, fields)
 
 
-def min_dist_col(centers: list[list[float]], p: float = 2.0,
-                 features_col: str = "features"):
-    """min over current centers of distance(point, center) — seeding's
-    D(x) quantity (SparKMeansGroupByPlusPlus.java:82-96); squared for
-    p=2."""
-    return nearest_center(centers, p, features_col)["dist"]
+def assign_probes(df: DataFrame, centers: list[list[float]], nprobe: int,
+                  features_col: str = "features") -> DataFrame:
+    """Add `probes`: the `nprobe` nearest centers under squared L2,
+    nearest first (ties → lowest id) — the IVF probe rule, the lazy
+    twin of `similarity.nearest_centers`. Same kernel and precondition
+    as `assign`."""
+    matrix, distances, _ = _batch_kernel(centers, 2.0)
+    width = min(nprobe, len(centers))
+
+    def columns(X):
+        import numpy as np
+        import pyarrow as pa
+
+        cells = np.argsort(distances(X), axis=1, kind="stable")[:, :width]
+        offsets = np.arange(0, cells.size + 1, width, dtype=np.int32)
+        return [pa.ListArray.from_arrays(offsets, cells.astype(np.int32).ravel())]
+
+    probes = T.StructField("probes", T.ArrayType(T.IntegerType(), False), False)
+    return _with_columns(df, features_col, matrix, columns, [probes])
+
+
+def _with_columns(df: DataFrame, features_col: str, matrix, columns,
+                  fields: list) -> DataFrame:
+    """`df` with `fields` appended (replacing same-named columns), set
+    to the Arrow arrays `columns(X)` returns for each batch's features
+    matrix X, as one `mapInArrow`: rows keep their order and every
+    other column passes through with its type."""
+    names = {f.name for f in fields}
+    keep = [i for i, f in enumerate(df.schema.fields) if f.name not in names]
+    schema = T.StructType([df.schema.fields[i] for i in keep] + fields)
+    fpos = df.columns.index(features_col)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            yield pa.RecordBatch.from_arrays(
+                [b.column(i) for i in keep] + columns(matrix(b.column(fpos))),
+                names=schema.names,
+            )
+
+    return df.mapInArrow(run, schema)
 
 
 def movement(old: list[list[float]], new: list[list[float]], p: float = 2.0) -> float:
@@ -113,7 +167,7 @@ def movement(old: list[list[float]], new: list[list[float]], p: float = 2.0) -> 
     return worst
 
 
-# ------------------------------------------------------ batch kernel (driver loops)
+# ------------------------------------------------------------------ batch kernel
 
 
 def _arrow_matrix(dim: int):
@@ -130,45 +184,59 @@ def _arrow_matrix(dim: int):
 
 
 def _batch_kernel(centers: list[list[float]], p: float):
-    """The numpy twin of `nearest_center`, as closures that cloudpickle
-    ships by value (workers of a session not built by `get_spark` cannot
-    import this package; compare `similarity.pq_encode_lut_arrow`). Raises ValueError before any job
-    when a center is NaN or ±inf, as the SQL literal does.
+    """The nearest-center kernel, as closures that cloudpickle ships by
+    value (workers of a session not built by `get_spark` cannot import
+    this package). Raises ValueError before any job when a center is
+    NaN or ±inf, as the SQL literal does.
 
-    Returns (matrix, nearest):
+    Returns (matrix, distances, nearest):
     - `matrix(list_array)`: `_arrow_matrix` at the centers' width;
-    - `nearest(X)`: (idx, dist) per row. For each center the distance
-      accumulates dimension by dimension, left to right, from 0.0 —
-      the fold `sql_pow_sum` runs — and a strict `<` keeps the first
-      minimum, so p ∈ {1, 2} give the same doubles and ties as the
-      Column form. Other p use numpy's `pow`, not the JVM's, and may
-      differ from it in the last bits.
+    - `distances(X)`: the n×k matrix of Σ_j |x_j − c_j|^p (no root),
+      folded over all k centers at once, one dimension per pass, left
+      to right from 0.0 — the fold `sql_pow_sum` runs — reading a
+      contiguous transposed copy of X;
+    - `nearest(X)`: (idx, dist) per row: the first minimum of the
+      matrix row (the Column form's tie rule) and its value, the 1/p
+      root taken for p ∉ {1, 2}.
+
+    p ∈ {1, 2} give the Column form's doubles and ties. Other p use
+    numpy's `pow`, not the JVM's, and may differ from it in the last
+    bits.
     """
     cents = [[float(x) for x in c] for c in centers]
     if not all(math.isfinite(x) for c in cents for x in c):
         raise ValueError("non-finite value in the k-means centers")
     dim, pf = len(cents[0]), float(p)
 
+    def distances(X):
+        import numpy as np
+
+        XT = np.ascontiguousarray(X.T, dtype=np.float64)
+        CT = np.asarray(cents, dtype=np.float64).T.copy()
+        acc = np.zeros((len(X), len(cents)))
+        t = np.empty_like(acc)
+        for j in range(dim):
+            np.subtract(XT[j][:, None], CT[j], out=t)
+            if pf == 2:
+                np.multiply(t, t, out=t)
+            else:
+                np.abs(t, out=t)
+                if pf != 1:
+                    t = t ** pf
+            acc += t
+        return acc
+
     def nearest(X):
         import numpy as np
 
-        best = idx = None
-        for c, cen in enumerate(np.asarray(cents, dtype=np.float64)):
-            t = X - cen
-            t = t * t if pf == 2 else np.abs(t) if pf == 1 else np.abs(t) ** pf
-            acc = np.zeros(len(X))
-            for j in range(dim):
-                acc += t[:, j]
-            if best is None:
-                best, idx = acc, np.zeros(len(X), dtype=np.int32)
-            else:
-                better = acc < best
-                best[better], idx[better] = acc[better], c
+        d = distances(X)
+        idx = d.argmin(axis=1).astype(np.int32)
+        best = d[np.arange(len(d)), idx]
         if pf not in (1, 2):
             best = best ** (1.0 / pf)
         return idx, best
 
-    return _arrow_matrix(dim), nearest
+    return _arrow_matrix(dim), distances, nearest
 
 
 def _lloyd_step(df: DataFrame, center_sets: list[list[list[float]]], p: float,
@@ -189,7 +257,7 @@ def _lloyd_step(df: DataFrame, center_sets: list[list[list[float]]], p: float,
 
     m, k, dsub = len(center_sets), len(center_sets[0]), len(center_sets[0][0])
     matrix = _arrow_matrix(m * dsub)
-    kernels = [_batch_kernel(c, p)[1] for c in center_sets]
+    kernels = [_batch_kernel(c, p)[2] for c in center_sets]
 
     def partials(batches):
         import numpy as np
@@ -241,7 +309,7 @@ def best_point(df: DataFrame, centers: list[list[float]], p: float = 2.0,
     Raises ValueError on an empty frame."""
     import numpy as np
 
-    matrix, nearest = _batch_kernel(centers, p)
+    matrix, _, nearest = _batch_kernel(centers, p)
     cols = [F.col("id"), F.col(features_col).alias("f")]
     largest = race is None
     nlu, weight = race or (None, None)
@@ -309,10 +377,8 @@ def total_sse(df: DataFrame, centers: list[list[float]], p: float = 2.0,
     """Σ over points of the squared L2 distance to the center nearest
     under metric p, as one job: one partial sum per task, summed on the
     driver."""
-    import numpy as np
-
-    matrix, nearest = _batch_kernel(centers, p)
-    cents = np.asarray(centers, dtype=np.float64)
+    matrix, _, nearest = _batch_kernel(centers, p)
+    squared = _batch_kernel(centers, 2.0)[1]
 
     def partial(batches):
         import numpy as np
@@ -323,10 +389,7 @@ def total_sse(df: DataFrame, centers: list[list[float]], p: float = 2.0,
             X = matrix(b.column(0))
             idx, dist = nearest(X)
             if p != 2:
-                t = X - cents[idx]
-                dist = np.zeros(len(X))
-                for j in range(X.shape[1]):
-                    dist += t[:, j] * t[:, j]
+                dist = squared(X)[np.arange(len(X)), idx]
             s += float(dist.sum())
         yield pa.RecordBatch.from_arrays([pa.array([s], pa.float64())], names=["sse"])
 

@@ -61,7 +61,11 @@ class KMeansModel:
 
     def transform(self, df: DataFrame, features_col: str = "features",
                   keep_dist: bool = False) -> DataFrame:
-        """Assign each point to its nearest center (adds `center_id`)."""
+        """Assign each point to its nearest center (adds `center_id`,
+        and with `keep_dist` the distance `dist`) — `lloyd.assign`, with
+        its precondition: `features_col` holds finite, non-null arrays
+        of the centers' width; for p ∈ {1, 2} a null or wrong-length
+        array raises ValueError when the plan runs."""
         return lloyd.assign(df, self.centers, self.params.p, features_col, keep_dist)
 
     def sse(self, df: DataFrame, features_col: str = "features") -> float:

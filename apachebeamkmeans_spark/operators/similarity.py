@@ -18,10 +18,9 @@ trades recall for scan cost exactly like FAISS IVF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from apachebeamkmeans_spark.checkpoints import staged
 from apachebeamkmeans_spark.functions import distance as D
 from apachebeamkmeans_spark.operators.kmeans import lloyd
 
@@ -221,10 +220,9 @@ def pq_encode_lut_arrow(vecs: DataFrame, codebooks: list[list[list[float]]],
 
     Exactness argument: the HOF fold computes
     ((0.0 + t_0) + t_1) + ... left-to-right per (subspace, centroid);
-    the numpy path accumulates column-by-column (s = t_0; s += t_1;
-    ...), the same IEEE additions in the same order (0.0 + t_0 == t_0
-    exactly for the non-negative squared terms), and `argmin` takes
-    the first minimum exactly like array_position(array_min). Asserted
+    each subspace's table is `lloyd._batch_kernel`'s distance matrix,
+    the same IEEE additions in the same order, and `argmin` takes the
+    first minimum exactly like array_position(array_min). Asserted
     against the HOF twin in tests/test_knn_pq.py.
 
     Precondition (r17 ADVICE): inputs must be FINITE. On a NaN
@@ -245,7 +243,7 @@ def pq_encode_lut_arrow(vecs: DataFrame, codebooks: list[list[list[float]]],
         "lut array<array<double>>"
         + "".join(f", {c} {dtypes[c]}" for c in carry)
     )
-    cb = [[list(map(float, cent)) for cent in book] for book in codebooks]
+    tables = [lloyd._batch_kernel(book, 2.0)[1] for book in codebooks]
     fcol, icol, carry_l = features_col, id_col, list(carry)
 
     def _encode(batches):
@@ -253,20 +251,13 @@ def pq_encode_lut_arrow(vecs: DataFrame, codebooks: list[list[list[float]]],
         # numpy loaded once per task, amortized over every batch
         import numpy as np
 
-        books = np.asarray(cb, dtype=np.float64)  # m × ksub × dsub
         for pdf in batches:
             X = np.asarray(pdf[fcol].to_list(), dtype=np.float64)
-            n = X.shape[0]
-            if n == 0:
+            if X.shape[0] == 0:
                 continue
-            luts = np.empty((n, m, books.shape[1]), dtype=np.float64)
-            for s in range(m):
-                sub = X[:, s * dsub:(s + 1) * dsub]       # n × dsub
-                cents = books[s]                          # ksub × dsub
-                d = (sub[:, 0:1] - cents[None, :, 0]) ** 2
-                for j in range(1, dsub):
-                    d = d + (sub[:, j:j + 1] - cents[None, :, j]) ** 2
-                luts[:, s, :] = d
+            luts = np.stack(
+                [tables[s](X[:, s * dsub:(s + 1) * dsub]) for s in range(m)], axis=1
+            )
             codes = luts.argmin(axis=2).astype("int32")   # first-min ties
             out = {
                 "vec_id": pdf[icol].to_numpy(),
@@ -325,11 +316,10 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
     codes rank near-randomly at x10 (recall@3 0.21) while residual
     m=16/ksub=16 with refine=100 holds 0.85–0.93 across sf0.01/x1/x10.
 
-    Shape audit mirrors the flat build: probe assignment checkpointed
-    before the explode (codegen-trap), encode staged once per exploded
-    row (`pq_encode_lut` — the row's dmat is both its codes' source and
-    its query-side LUT), self-join via `salted_self_pairs` (hot cells
-    grid-split), structural dedup by lowest shared probed cell, BOTH
+    Shape audit mirrors the flat build: probes by `lloyd.assign_probes`,
+    encode checkpointed once per exploded row (`pq_encode_lut_arrow` —
+    the row's dmat is both its codes' source and its query-side LUT),
+    self-join via `salted_self_pairs` (hot cells grid-split), structural dedup by lowest shared probed cell, BOTH
     directed ADC distances computed per unordered pair (ADC is
     asymmetric), per-vector shortlist bounded map-side by the
     row_number window, exact re-rank joins the raw vectors back for
@@ -349,34 +339,29 @@ def knn_graph_pq(normed: DataFrame, centers: list[list[float]],
         from apachebeamkmeans_spark.operators.ann_train import knn_refine
 
         refine = knn_refine(pts.count(), nprobe, len(centers))
-    # cut the assign tree before the explode — same 181 s codegen trap
-    # the flat build documents (queries_similarity.q_sim_knn_graph)
-    probes = probe_cells(F.col("f"), centers, nprobe)
-    with staged(pts.select("vec_id", "f", probes.alias("probes")),
-                eager=True) as probed:
-        lit_centers = D.lit_array(centers)
-        ex = probed.select(
-            "vec_id", "probes", F.explode("probes").alias("coarse_id"),
+    lit_centers = D.lit_array(centers)
+    ex = lloyd.assign_probes(pts, centers, nprobe, "f").select(
+        "vec_id", "probes", F.explode("probes").alias("coarse_id"),
+        F.col("f"),
+    ).select(
+        "vec_id", "probes", "coarse_id",
+        F.zip_with(
             F.col("f"),
-        ).select(
-            "vec_id", "probes", "coarse_id",
-            F.zip_with(
-                F.col("f"),
-                F.element_at(lit_centers, F.col("coarse_id") + 1),
-                lambda x, c: x - c,
-            ).alias("r"),
-        )
-        # (vec_id, codes, lut, coarse_id, probes): ~m·ksub doubles per row
-        # instead of the raw vector — checkpointed so the self-join fans
-        # out a materialized table, not the encode tree, to both sides.
-        # Arrow/numpy encode (r17, guide §4.2): this is the one consumer
-        # that encodes the n·nprobe EXPLODED fan-out, where the HOF form's
-        # interpreted m·ksub·dsub ops/row dominate; bit-identical by the
-        # column-order-accumulation argument on pq_encode_lut_arrow.
-        enc = pq_encode_lut_arrow(
-            ex, codebooks, id_col="vec_id", features_col="r",
-            carry=("coarse_id", "probes"),
-        ).localCheckpoint(eager=True)
+            F.element_at(lit_centers, F.col("coarse_id") + 1),
+            lambda x, c: x - c,
+        ).alias("r"),
+    )
+    # (vec_id, codes, lut, coarse_id, probes): ~m·ksub doubles per row
+    # instead of the raw vector — checkpointed so the self-join fans
+    # out a materialized table, not the encode tree, to both sides.
+    # Arrow/numpy encode (r17, guide §4.2): this is the one consumer
+    # that encodes the n·nprobe EXPLODED fan-out, where the HOF form's
+    # interpreted m·ksub·dsub ops/row dominate; bit-identical to it
+    # (see pq_encode_lut_arrow).
+    enc = pq_encode_lut_arrow(
+        ex, codebooks, id_col="vec_id", features_col="r",
+        carry=("coarse_id", "probes"),
+    ).localCheckpoint(eager=True)
 
     from apachebeamkmeans_spark.operators.dedup import SALT_TARGET
 
@@ -510,15 +495,13 @@ def ivfpq_topk(vecs: DataFrame, queries: list[list[float]],
     over raw normalized vectors, not center residuals) — one codebook
     serves all cells, the common memory/simplicity trade.
 
-    The coarse assignment is checkpointed before the encode. Two traps
-    avoided: (a) the probe filter `coarse_id IN (...)` reads the stored
-    column and lands below the encode projection, so unprobed cells are
-    never encoded and the assign tree is never evaluated twice — HOF
-    lambdas get no CSE across the Filter/Project boundary (measured
-    2.2× on the encode stage); (b) the ADC pass and the refine fetch
-    both read this frame — without the checkpoint the assign map would
-    run again for the refine branch. localCheckpoint rather than cache:
-    blocks release when the frame is GC'd."""
+    The coarse assignment is checkpointed before the encode: the probe
+    filter `coarse_id IN (...)` reads the stored column and lands below
+    the encode projection, so unprobed cells are never encoded, and the
+    ADC pass and the refine fetch both read this frame — without the
+    checkpoint the assign map would run again for the refine branch.
+    localCheckpoint rather than cache: blocks release when the frame is
+    GC'd."""
     assigned = coarse_assign(vecs, coarse_centers, id_col, features_col)
     return ivfpq_probe_topk(
         _ivfpq_layout(assigned.localCheckpoint(eager=False), codebooks),
@@ -744,10 +727,9 @@ def _probed_queries(queries: DataFrame, centers: list[list[float]],
                     nprobe: int, qid_col: str, qvec_col: str) -> DataFrame:
     """(qid, __q, probes) of a query TABLE — the prelude of every batch
     search: cast the vectors to doubles, fold-normalize (zero-norm rows
-    drop: no direction, no probe), checkpoint, then the `probe_cells`
-    column. The checkpoint cuts the normalize tree: HOF lambdas get no
-    CSE, so the center-distance transform would inline the per-row
-    normalization into every one of its k×dim distance terms."""
+    drop: no direction, no probe), add the `lloyd.assign_probes` column,
+    then checkpoint, so the probe-cell collect and the search read the
+    probes from one pass."""
     qv = F.col(qvec_col).cast("array<double>")
     nsq = F.aggregate(
         F.transform(qv, lambda x: x * x), F.lit(0.0), lambda a, v: a + v
@@ -764,11 +746,8 @@ def _probed_queries(queries: DataFrame, centers: list[list[float]],
                 F.col("__q"), lambda x: x / F.sqrt(F.col("__nsq"))
             ).alias("__q"),
         )
-        .localCheckpoint(eager=False)
     )
-    return normed.select(
-        "qid", "__q", probe_cells(F.col("__q"), centers, nprobe).alias("probes")
-    )
+    return lloyd.assign_probes(normed, centers, nprobe, "__q").localCheckpoint(eager=False)
 
 
 def _refine_exact_batch(cand: DataFrame, k: int) -> DataFrame:
@@ -1142,33 +1121,12 @@ def binary_hamming_topk(vecs: DataFrame, queries: list[list[float]],
 def nearest_centers(q: list[float], centers: list[list[float]],
                     nprobe: int = 1) -> list[int]:
     """Plan-time coarse-quantizer probe: the `nprobe` nearest cells of a
-    literal query vector, nearest first (ties → lowest cell id)."""
-    scored = sorted(
-        (sum((x - y) ** 2 for x, y in zip(q, c)), i) for i, c in enumerate(centers)
-    )
-    return [i for _, i in scored[:nprobe]]
+    literal query vector, nearest first (ties → lowest cell id) — the
+    driver-side twin of `lloyd.assign_probes`, on the same kernel."""
+    import numpy as np
 
-
-def nearest_center(q: list[float], centers: list[list[float]]) -> int:
-    return nearest_centers(q, centers, 1)[0]
-
-
-def probe_cells(vec: Column, centers: list[list[float]],
-                nprobe: int) -> Column:
-    """The `nprobe` nearest cells of a vector column, nearest first
-    (ties → lowest cell id) — the Column twin of `nearest_centers` and
-    the one probe rule of every in-plan IVF probe: sort (distance,
-    cell) structs over the literal center matrix. The HOF form (one
-    ARRAY<ARRAY> literal + transform) keeps generated code size
-    independent of the cell count. Callers that explode the probes
-    checkpoint this column first: a Generate whose child inlines the
-    (cells × dim × sort) tree sends codegen compilation pathological
-    (queries_similarity.q_sim_knn_graph)."""
-    scored = F.transform(
-        D.lit_array(centers),
-        lambda c, i: F.struct(D.l2_sq(vec, c).alias("d"), i.cast("int").alias("i")),
-    )
-    return F.slice(F.array_sort(scored), 1, nprobe)["i"]
+    d = lloyd._batch_kernel(centers, 2.0)[1](np.asarray([q], dtype=np.float64))[0]
+    return [int(i) for i in np.argsort(d, kind="stable")[:nprobe]]
 
 
 def coarse_assign(vecs: DataFrame, centers: list[list[float]],
@@ -1283,7 +1241,7 @@ def ivf_batch_topk(index: DataFrame, queries: DataFrame,
 
     Plan: normalize each query row and pick its `nprobe` nearest
     coarse cells (`_probed_queries`: zero-norm queries drop — no
-    direction, no probe; cells by `probe_cells`, ties → lowest cell
+    direction, no probe; cells by `lloyd.assign_probes`, ties → lowest cell
     id), explode to (qid, probe_cell), join the index on
     `coarse_id == probe_cell`, then `_refine_exact_batch`: cosine per
     candidate, one per-qid window for rank ≤ k. Output matches
@@ -1474,10 +1432,9 @@ def semantic_prune(normed: DataFrame, centers: list[list[float]], tau: float,
         F.col(id_col).alias("vec_id"), F.col(features_col).alias("f")
     )
     # the nearest center (first minimum: the oracle's (d, c)
-    # tie-break); checkpoint cuts the assign tree out of the plan
-    # before the self-join fans it out to both sides
-    assigned = pts.select(
-        "vec_id", "f", lloyd.nearest_center(centers, 2, "f")["idx"].alias("cell")
+    # tie-break), checkpointed: the self-join reads it on both sides
+    assigned = lloyd.assign(pts, centers, 2.0, "f").withColumnRenamed(
+        "center_id", "cell"
     ).localCheckpoint(eager=True)
     pair_dot = (
         D.dot_cols_unrolled(F.col("a.f"), F.col("b.f"), dim)
@@ -1523,15 +1480,10 @@ def coverage_sample(normed: DataFrame, centers: list[list[float]],
     pts = normed.select(
         F.col(id_col).alias("vec_id"), F.col(features_col).alias("f")
     )
-    # the nearest center (first minimum: the oracle's (d, c)
-    # tie-break), O(k); cut the assign tree out of the plan before the
-    # window stage
-    assigned = pts.select(
-        "vec_id",
-        lloyd.nearest_center(centers, 2, "f").alias("s"),
-    ).select(
-        "vec_id", F.col("s")["idx"].alias("cell"), F.col("s")["dist"].alias("d2")
-    ).localCheckpoint(eager=True)
+    # the nearest center (first minimum: the oracle's (d, c) tie-break)
+    assigned = lloyd.assign(pts, centers, 2.0, "f", keep_dist=True).select(
+        "vec_id", F.col("center_id").alias("cell"), F.col("dist").alias("d2")
+    )
     w = Window.partitionBy("cell").orderBy(F.desc("d2"), F.asc("vec_id"))
     return (
         assigned.withColumn("rank", F.row_number().over(w).cast("int"))

@@ -246,7 +246,9 @@ def q_kmeans_plusplus_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _seed_query(spark, sf_dir, "plusplus", weight="d2")
 
 
-def _oracle_plusplus() -> str:
+def _oracle_plusplus(weight: str) -> str:
+    """The seeded k-means++ race of `_seed_query` as DuckDB SQL; the
+    race weight is D²(x) for 'd2' and its square root D(x) for 'd'."""
     d = OG.sql_l2_sq_cols_unrolled
     ctes = [
         f"e2 AS (SELECT vec_id, e AS emb FROM {_E} t)",
@@ -258,11 +260,12 @@ def _oracle_plusplus() -> str:
         prev = ", ".join(f"s{i}" for i in range(r))
         dists = [d("e2.emb", f"s{i}.emb", DIM) for i in range(r)]
         mind = dists[0] if r == 1 else f"least({', '.join(dists)})"
+        w = mind if weight == "d2" else f"sqrt({mind})"
         u = OG.sql_hash01("e2.vec_id", f"{SEED}-{r}")
         ctes.append(
             f"s{r} AS (SELECT vec_id, emb FROM ("
             f"SELECT e2.vec_id, e2.emb, "
-            f"CASE WHEN {mind} > 0 THEN -ln({u}) / {mind} ELSE 1e308 END AS t "
+            f"CASE WHEN {w} > 0 THEN -ln({u}) / {w} ELSE 1e308 END AS t "
             f"FROM e2, {prev} ORDER BY t ASC, e2.vec_id LIMIT 1))"
         )
     union = " UNION ALL ".join(
@@ -271,7 +274,7 @@ def _oracle_plusplus() -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + union
 
 
-ORACLE_PLUSPLUS = _oracle_plusplus()
+ORACLE_PLUSPLUS = _oracle_plusplus("d2")
 
 
 def q_kmeans_plusplus_seeds_dweight(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,32 +285,7 @@ def q_kmeans_plusplus_seeds_dweight(spark: SparkSession, sf_dir: str) -> DataFra
     return _seed_query(spark, sf_dir, "plusplus", weight="d")
 
 
-def _oracle_plusplus_dweight() -> str:
-    d = OG.sql_l2_sq_cols_unrolled
-    ctes = [
-        f"e2 AS (SELECT vec_id, e AS emb FROM {_E} t)",
-        "s0 AS (SELECT vec_id, emb FROM ("
-        f"SELECT vec_id, emb, {OG.sql_hash01('vec_id', SEED)} AS h FROM e2 "
-        "ORDER BY h ASC, vec_id LIMIT 1))",
-    ]
-    for r in range(1, K):
-        prev = ", ".join(f"s{i}" for i in range(r))
-        dists = [d("e2.emb", f"s{i}.emb", DIM) for i in range(r)]
-        mind = dists[0] if r == 1 else f"least({', '.join(dists)})"
-        u = OG.sql_hash01("e2.vec_id", f"{SEED}-{r}")
-        ctes.append(
-            f"s{r} AS (SELECT vec_id, emb FROM ("
-            f"SELECT e2.vec_id, e2.emb, "
-            f"CASE WHEN sqrt({mind}) > 0 THEN -ln({u}) / sqrt({mind}) ELSE 1e308 END AS t "
-            f"FROM e2, {prev} ORDER BY t ASC, e2.vec_id LIMIT 1))"
-        )
-    union = " UNION ALL ".join(
-        f"SELECT {r} AS seed_rank, vec_id FROM s{r}" for r in range(K)
-    )
-    return "WITH " + ",\n".join(ctes) + "\n" + union
-
-
-ORACLE_PLUSPLUS_DWEIGHT = _oracle_plusplus_dweight()
+ORACLE_PLUSPLUS_DWEIGHT = _oracle_plusplus("d")
 
 
 # ----------------------------------------------- grouped text output (P8/S4)
@@ -526,15 +504,14 @@ def q_kmeans_fit_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             fixed = fut_fixed.result()
         # one pass evaluates BOTH center sets and the conservation
-        # count: per row, min-dist to the converged centers, min-dist
-        # to the twin's, and the argmin id — three expressions over one
-        # cached scan instead of three separate jobs
+        # count: per row, min-dist to the twin's centers, min-dist to
+        # the converged ones, and the argmin id — over one cached scan
+        # instead of three separate jobs
+        twin = lloyd.assign(pts, fixed, params.p, keep_dist=True).select(
+            "features", F.col("dist").alias("__twin_d")
+        )
         row = (
-            lloyd.assign(pts, centers, params.p, keep_dist=True)
-            .withColumn(
-                "__twin_d",
-                lloyd.min_dist_col(fixed, params.p),
-            )
+            lloyd.assign(twin, centers, params.p, keep_dist=True)
             .groupBy("center_id")
             .agg(
                 F.sum("dist").alias("__sse"),
@@ -618,12 +595,11 @@ def q_mllib_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             fixed = fut_fixed.result()
         centers = [list(map(float, c)) for c in model.clusterCenters()]
+        twin = lloyd.assign(pts, fixed, 2.0, keep_dist=True).select(
+            "features", F.col("dist").alias("__twin_d")
+        )
         row = (
-            lloyd.assign(pts, centers, 2.0, keep_dist=True)
-            .withColumn(
-                "__twin_d",
-                lloyd.min_dist_col(fixed, 2.0),
-            )
+            lloyd.assign(twin, centers, 2.0, keep_dist=True)
             .agg(F.sum("dist"), F.sum("__twin_d"))
             .collect()[0]
         )

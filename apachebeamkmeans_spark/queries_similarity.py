@@ -876,6 +876,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apachebeamkmeans_spark.functions import distance as D
     from apachebeamkmeans_spark.operators import ann_train as ANN
     from apachebeamkmeans_spark.operators.dedup import salted_self_pairs
+    from apachebeamkmeans_spark.operators.kmeans import lloyd
 
     warn_if_not_train_sf(sf_dir, "sim_knn_graph")
     with staged(ANN.l2_normalize(io.load_points(spark, sf_dir))) as base:
@@ -889,19 +890,12 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
         # nprobe nearest trained cells per vector — ties break toward the
         # lower cell id, matching the oracle's (d, c) window order.
-        # Materialize the probe assignment BEFORE the explode: a Generate
-        # whose child inlines the (cells × 64-term × sort) assign tree
-        # sends codegen compilation pathological (measured 181 s for the
-        # compile alone vs 0.8 s with the tree cut here), and an eager cut
-        # is also what keeps the tree out of both self-join sides.
-        probed = pts.select(
-            "vec_id", "f",
-            SIM.probe_cells(F.col("f"), centers, nprobe).alias("probes"),
-        ).localCheckpoint(eager=True)
-    # no second checkpoint: `probed` is already the materialized cut
-    # (the codegen trap lives in the assign tree, not the explode), so
-    # fanning the trivial Generate to the join sides beats paying
-    # another eager materialization job (r17, guide §1.2 fewer passes)
+        # Materialized once, before `base` is released: both self-join
+        # sides read it.
+        probed = lloyd.assign_probes(pts, centers, nprobe, "f").localCheckpoint(eager=True)
+    # no second checkpoint: fanning the trivial Generate to the join
+    # sides beats paying another eager materialization job (r17, guide
+    # §1.2 fewer passes)
     a = probed.select(
         "vec_id", "f", "probes", F.explode("probes").alias("coarse_id")
     )
@@ -1387,7 +1381,6 @@ def q_sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lambdas get no CSE, so without the checkpoint the per-row
     # normalization aggregate is inlined into every one of the
     # dim·PCA_DIM projection terms — a 1024-fold expression blowup
-    # (the same codegen trap the KNN builds document)
     base = ANN.l2_normalize(io.load_points(spark, sf_dir)).localCheckpoint(
         eager=False
     )
@@ -1919,10 +1912,8 @@ def q_sim_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         k = knn_cells(n)
         centers = _knn_quantizer(base, sf_dir, k)
         pts = base.select(F.col("id").alias("vec_id"), F.col("features").alias("f"))
-        assigned = pts.select(
-            "vec_id", "f", lloyd.nearest_center(centers, 2, "f").alias("s")
-        ).select(
-            "vec_id", "f", F.col("s")["idx"].alias("cell"), F.col("s")["dist"].alias("d2")
+        assigned = lloyd.assign(pts, centers, 2.0, "f", keep_dist=True).select(
+            "vec_id", "f", F.col("center_id").alias("cell"), F.col("dist").alias("d2")
         ).localCheckpoint(eager=True)
     shadow = (
         salted_self_pairs(assigned, ["cell"], "vec_id")

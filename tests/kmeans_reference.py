@@ -3,7 +3,7 @@
 The engine runs every Lloyd step, seeding draw and SSE as one numpy
 batch job (`lloyd._lloyd_step`, `lloyd.best_point`, `lloyd.total_sse`).
 These are the same steps written as plain DataFrame plans over the
-Column form (`lloyd.assign`, `lloyd.min_dist_col`), which the tests
+Column form (`lloyd.nearest_center`), which the tests
 hold the batch jobs to. `farthest_point` and `roulette_point` are the
 only Column-form seeding draws left: the package seeds only through
 `init.seed_picks`, the registered seed-trace queries included.
@@ -57,14 +57,14 @@ def _take1(df: DataFrame, desc: bool) -> list[float]:
 
 def farthest_point(df: DataFrame, centers, p: float) -> list[float]:
     """argmax_x min_c dist(x, c), ties to the smallest id."""
-    d = lloyd.min_dist_col(centers, p)
+    d = lloyd.nearest_center(centers, p)["dist"]
     return _take1(df.select("id", F.col("features").alias("f"), d.alias("k")), desc=True)
 
 
 def roulette_point(df: DataFrame, centers, p: float, weight: str, seed: int,
                    rnd: int) -> list[float]:
     """The exponential-race winner: min -ln(u)/w, +inf where w = 0."""
-    d = lloyd.min_dist_col(centers, p)
+    d = lloyd.nearest_center(centers, p)["dist"]
     if p == 2 and weight == "d":
         w = F.sqrt(d)
     elif p != 2 and weight == "d2":

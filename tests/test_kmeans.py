@@ -72,7 +72,7 @@ def test_parsed_min_dist_is_bit_identical(scatter, p):
     """The shared parsed-literal D(x) equals, row for row and to the
     last bit, the unrolled form (p=1, 2) and the HOF `D.minkowski`."""
     feats = F.col("features")
-    parsed = lloyd.min_dist_col(TIE_CENTERS, p)
+    parsed = lloyd.nearest_center(TIE_CENTERS, p)["dist"]
     mink = F.array_min(F.array(*[D.minkowski(feats, D.lit_array(c), p) for c in TIE_CENTERS]))
     cols = [(F.sqrt(parsed) if p == 2 else parsed).alias("parsed"), mink.alias("mink")]
     if p in (1, 2):
@@ -117,20 +117,21 @@ def _kernel_rows(frame, centers, p):
     """(id, idx, dist) per row from the batch kernel, run here on the
     collected features as an Arrow column."""
     rows = frame.select("id", "features").collect()
-    matrix, nearest = lloyd._batch_kernel(centers, p)
+    matrix, _, nearest = lloyd._batch_kernel(centers, p)
     idx, dist = nearest(matrix(pa.array([r["features"] for r in rows])))
     return {r["id"]: (int(i), float(d)) for r, i, d in zip(rows, idx, dist)}
 
 
 @pytest.mark.parametrize("p", [1.0, 2.0, 3.0])
 def test_batch_kernel_matches_column_form(scatter, p):
-    """The batch kernel's argmin and distance equal `nearest_center`
-    (through `assign`): to the last bit for p=1, 2, the tie row
-    included; for p=3 numpy's pow may differ from the JVM's in the
-    last bits, so `dist` is held to a relative 1e-12."""
+    """The batch kernel's argmin and distance equal `nearest_center`:
+    to the last bit for p=1, 2, the tie row included; for p=3 numpy's
+    pow may differ from the JVM's in the last bits, so `dist` is held
+    to a relative 1e-12."""
     got = _kernel_rows(scatter, TIE_CENTERS, p)
-    col = {r["id"]: (r["center_id"], r["dist"])
-           for r in lloyd.assign(scatter, TIE_CENTERS, p, keep_dist=True).collect()}
+    best = lloyd.nearest_center(TIE_CENTERS, p).alias("s")
+    col = {r["id"]: (r["s"]["idx"], r["s"]["dist"])
+           for r in scatter.select("id", best).collect()}
     assert got.keys() == col.keys() and len(got) == TIE_ROW + 1
     assert got[TIE_ROW][0] == col[TIE_ROW][0] == 0
     if p in (1, 2):
@@ -146,6 +147,22 @@ def test_batch_kernel_rejects_non_finite_centers():
         lloyd._batch_kernel([[0.0, float("nan")]], 2.0)
     with pytest.raises(ValueError, match="non-finite"):
         lloyd._batch_kernel([[float("inf"), 0.0]], 1.0)
+
+
+@pytest.mark.parametrize("features", [None, [1.0, 2.0]])
+def test_lazy_assign_rejects_null_or_wrong_length_features(spark, features):
+    """The lazy assignment's precondition: non-null arrays of the
+    centers' width. A null or short row raises the kernel's ValueError
+    through `assign` and through `similarity.coarse_assign`."""
+    from pyspark.errors import PythonException
+
+    from apachebeamkmeans_spark.operators.similarity import coarse_assign
+
+    df = spark.createDataFrame([(0, [0.0, 0.0, 0.0]), (1, features)],
+                               "id long, features array<double>")
+    for frame in (lloyd.assign(df, TIE_CENTERS, 2.0), coarse_assign(df, TIE_CENTERS)):
+        with pytest.raises(PythonException, match="ValueError: features must be non-null"):
+            frame.collect()
 
 
 @pytest.mark.parametrize("p", [1.0, 2.0])
@@ -168,6 +185,34 @@ def test_roulette_draw_matches_column_reference(scatter, weight, seed):
         _, got = _roulette_draw(scatter, centers, params, rnd, "features")
         assert got == roulette_point(scatter, centers, 2.0, weight, seed, rnd)
         centers.append(got)
+
+
+# A race seed, found by search over 1..59, for which the D and D² races
+# on `uniform_points` pick different rows (59 and 4); on most seeds
+# they pick the same one, the point with the smallest -ln(u).
+RACE_SEED = 25
+
+
+@pytest.fixture(scope="module")
+def uniform_points(spark):
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(0.0, 1.0) for _ in range(4)]) for i in range(200)]
+    return spark.createDataFrame(rows, "id long, features array<double>")
+
+
+def test_roulette_weight_changes_the_draw(uniform_points):
+    """`weight` reaches the race: 'd' and 'd2' pick different points
+    here, and each pick equals the Column reference's."""
+    from apachebeamkmeans_spark.operators.kmeans.init import _roulette_draw
+
+    centers = [[0.5] * 4]
+    picks = {}
+    for weight in ("d", "d2"):
+        params = KMeansParams(k=4, p=2.0, seed=RACE_SEED, init="plusplus", weight=weight)
+        _, picks[weight] = _roulette_draw(uniform_points, centers, params, 1, "features")
+        assert picks[weight] == roulette_point(uniform_points, centers, 2.0, weight,
+                                               RACE_SEED, 1)
+    assert picks["d"] != picks["d2"]
 
 
 def test_draws_keep_the_id_type_and_break_ties_by_id(spark):

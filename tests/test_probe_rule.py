@@ -1,8 +1,10 @@
-"""The IVF probe rule, the nearest-center struct, the IVF-PQ layout
-frame and the ADC sum each have one definition: `similarity.probe_cells`
-is the Column twin of `nearest_centers`, the inline IVF-PQ searches
-prune before they encode, and no module re-derives the probe sort or
-the nearest center (`lloyd.nearest_center`) or wraps `_adc_expr`."""
+"""The nearest-center kernel, the IVF-PQ layout frame and the ADC sum
+each have one definition: `lloyd.assign_probes` is the lazy twin of
+`similarity.nearest_centers`, the inline IVF-PQ searches prune before
+they encode, and no module re-derives the nearest center — no Column
+fold over a center literal outside `lloyd.nearest_center`, no call of
+`nearest_center` outside `lloyd.assign`, no numpy distance fold outside
+`lloyd._batch_kernel` — or wraps `_adc_expr`."""
 
 from __future__ import annotations
 
@@ -11,10 +13,9 @@ import random
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
-
 import apachebeamkmeans_spark
 from apachebeamkmeans_spark.operators import similarity as SIM
+from apachebeamkmeans_spark.operators.kmeans import lloyd
 
 PACKAGE = Path(apachebeamkmeans_spark.__file__).parent
 
@@ -41,9 +42,7 @@ def test_probe_cells_equals_nearest_centers(spark, nprobe):
     df = spark.createDataFrame(rows, "id long, f array<double>")
     got = {
         r["id"]: list(r["probes"])
-        for r in df.select(
-            "id", SIM.probe_cells(F.col("f"), CENTERS, nprobe).alias("probes")
-        ).collect()
+        for r in lloyd.assign_probes(df, CENTERS, nprobe, "f").collect()
     }
     want = {i: SIM.nearest_centers(v, CENTERS, nprobe) for i, v in rows}
     assert got == want
@@ -105,48 +104,90 @@ def _is_call(node: ast.AST, attr: str) -> bool:
     )
 
 
-def _is_center_transform(node: ast.AST) -> bool:
-    """`F.transform(<lit_array(...)>, ...)`: a map over a center literal."""
+def _is_center_literal(node: ast.AST) -> bool:
+    """`lit_array(...)` or `sql_array_literal(...)` of centers."""
     return (
-        _is_call(node, "transform")
+        (_is_call(node, "lit_array") or _is_call(node, "sql_array_literal"))
         and bool(node.args)
-        and _is_call(node.args[0], "lit_array")
+        and "center" in ast.unparse(node.args[0]).lower()
     )
 
 
-def _over_center_literal(tree: ast.AST, fn: str, owner: str | None = None) -> list[ast.Call]:
-    """`fn` calls over a transform of a center literal, directly or
-    through a name bound to one in the same top-level definition,
-    outside the top-level function `owner`."""
+def _sql_transforms_center(node: ast.JoinedStr) -> bool:
+    """SQL text `transform(<center literal>, ...)` in an f-string."""
+    return any(
+        isinstance(prev, ast.Constant)
+        and str(prev.value).rstrip().endswith("transform(")
+        and isinstance(cur, ast.FormattedValue)
+        and _is_center_literal(cur.value)
+        for prev, cur in zip(node.values, node.values[1:])
+    )
+
+
+def center_folds(top: ast.AST) -> list[ast.AST]:
+    """Column-form nearest-center folds: `transform`, `array_min` or
+    `array_sort` over a center literal — directly, through a transform
+    of one, or through a name bound to either in the same top-level
+    definition — and SQL text that transforms a center literal."""
+
+    def center(n: ast.AST) -> bool:
+        return _is_center_literal(n) or (
+            _is_call(n, "transform") and bool(n.args) and center(n.args[0])
+        )
+
+    bound = {
+        t.id
+        for n in ast.walk(top)
+        if isinstance(n, ast.Assign) and center(n.value)
+        for t in n.targets
+        if isinstance(t, ast.Name)
+    }
+    return [
+        n
+        for n in ast.walk(top)
+        if (
+            any(_is_call(n, fn) for fn in ("transform", "array_min", "array_sort"))
+            and n.args
+            and (center(n.args[0])
+                 or (isinstance(n.args[0], ast.Name) and n.args[0].id in bound))
+        )
+        or (isinstance(n, ast.JoinedStr) and _sql_transforms_center(n))
+    ]
+
+
+def nearest_center_calls(top: ast.AST) -> list[ast.Call]:
+    """Calls of `nearest_center`, the Column form."""
+    return [n for n in ast.walk(top) if _is_call(n, "nearest_center")]
+
+
+def _names(node: ast.AST) -> set[str]:
+    return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+
+def distance_folds(top: ast.AST) -> list[ast.For]:
+    """Per-dimension numpy distance folds: a `for v in range(...)` loop
+    that indexes an array by `v`, indexes an array along several axes
+    (`t[:, j]`, `x[j][:, None]`) and accumulates into a name (`acc +=`
+    or `acc = acc + ...`)."""
     found = []
-    for top in getattr(tree, "body", []):
-        if isinstance(top, ast.FunctionDef) and top.name == owner:
+    for loop in ast.walk(top):
+        if not (isinstance(loop, ast.For) and isinstance(loop.target, ast.Name)
+                and _is_call(loop.iter, "range")):
             continue
-        bound = {
-            t.id
-            for n in ast.walk(top)
-            if isinstance(n, ast.Assign) and _is_center_transform(n.value)
-            for t in n.targets
-            if isinstance(t, ast.Name)
-        }
-        for n in ast.walk(top):
-            if _is_call(n, fn) and n.args and (
-                _is_center_transform(n.args[0])
-                or (isinstance(n.args[0], ast.Name) and n.args[0].id in bound)
-            ):
-                found.append(n)
+        body = [n for stmt in loop.body for n in ast.walk(stmt)]
+        subs = [n for n in body if isinstance(n, ast.Subscript)]
+        accumulates = any(
+            (isinstance(n, ast.AugAssign) and isinstance(n.op, ast.Add))
+            or (isinstance(n, ast.Assign) and len(n.targets) == 1
+                and isinstance(n.targets[0], ast.Name)
+                and isinstance(n.value, ast.BinOp) and isinstance(n.value.op, ast.Add)
+                and n.targets[0].id in _names(n.value.left))
+            for n in body
+        )
+        if (accumulates and any(isinstance(n.slice, ast.Tuple) for n in subs)
+                and any(loop.target.id in _names(n.slice) for n in subs)):
+            found.append(loop)
     return found
-
-
-def probe_sorts(tree: ast.AST) -> list[ast.Call]:
-    """Copies of the probe sort outside `probe_cells`."""
-    return _over_center_literal(tree, "array_sort", owner="probe_cells")
-
-
-def nearest_center_copies(tree: ast.AST) -> list[ast.Call]:
-    """Column-form copies of `lloyd.nearest_center`: `array_min` over a
-    transform of a center literal."""
-    return _over_center_literal(tree, "array_min")
 
 
 def adc_closures(tree: ast.AST) -> list[ast.FunctionDef]:
@@ -163,23 +204,37 @@ def adc_closures(tree: ast.AST) -> list[ast.FunctionDef]:
     return sorted(nested, key=lambda n: n.lineno)
 
 
-def _sites(package: Path, finder) -> list[str]:
-    return [
-        f"{path.relative_to(package.parent)}:{node.lineno}"
-        for path in sorted(package.rglob("*.py"))
-        for node in finder(ast.parse(path.read_text()))
-    ]
+def _sites(package: Path, finder, owner: tuple[str, str] | None = None) -> list[str]:
+    """`path:line` of each node `finder` returns for a top-level
+    statement, skipping the top-level function `owner` = (path, name)."""
+    sites = []
+    for path in sorted(package.rglob("*.py")):
+        rel = path.relative_to(package.parent).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            if owner != (rel, getattr(top, "name", None)):
+                sites += [f"{rel}:{n.lineno}" for n in finder(top)]
+    return sites
+
+
+LLOYD = "apachebeamkmeans_spark/operators/kmeans/lloyd.py"
 
 
 def test_probe_rule_has_one_definition():
-    sites = _sites(PACKAGE, probe_sorts)
-    assert not sites, "probe cells with similarity.probe_cells:\n" + "\n".join(sites)
+    sites = _sites(PACKAGE, center_folds, owner=(LLOYD, "nearest_center"))
+    assert not sites, (
+        "find nearest centers with lloyd.assign or lloyd.assign_probes:\n"
+        + "\n".join(sites)
+    )
 
 
 def test_nearest_center_has_one_definition():
-    sites = [s for s in _sites(PACKAGE, nearest_center_copies)
-             if not s.startswith("apachebeamkmeans_spark/operators/kmeans/lloyd.py:")]
-    assert not sites, "find the nearest center with lloyd.nearest_center:\n" + "\n".join(sites)
+    sites = _sites(PACKAGE, nearest_center_calls, owner=(LLOYD, "assign"))
+    assert not sites, "assign with lloyd.assign:\n" + "\n".join(sites)
+
+
+def test_distance_fold_has_one_definition():
+    sites = _sites(PACKAGE, distance_folds, owner=(LLOYD, "_batch_kernel"))
+    assert not sites, "fold distances with lloyd._batch_kernel:\n" + "\n".join(sites)
 
 
 def test_adc_sum_has_no_wrappers():

@@ -27,7 +27,7 @@ def test_ivf_search_matches_bruteforce_within_cell(spark, sf_dir):
     q = [0.05] * 64
     ivf = SIM.ivf_topk(vecs, [q], centers, k=5).collect()
     assert len(ivf) == 5
-    assert all(r["probe_cell"] == SIM.nearest_center(q, centers) for r in ivf)
+    assert all(r["probe_cell"] == SIM.nearest_centers(q, centers)[0] for r in ivf)
     assert [r["rank"] for r in ivf] == [1, 2, 3, 4, 5]
 
 

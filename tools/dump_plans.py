@@ -12,6 +12,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from apachebeamkmeans_spark.plans import explain as X
+from apachebeamkmeans_spark.queries_events import RETIRED_QUERIES
 from apachebeamkmeans_spark.registry import all_queries
 from apachebeamkmeans_spark.session import get_spark
 
@@ -62,7 +63,7 @@ SHOWCASE = {
     # round 9
     "pipeline_facade": "CurationPipeline library capstone: exact-dedup window + LSH near-dedup + components + lang gate + summary composed into ONE plan — loser sets broadcast into LeftAnti joins, shared one-tokenize signature/set frames, no cartesian anywhere",
     # round 11
-    "sim_ivf_batch_topk": "query-TABLE IVF search: in-plan probe argsort per query row, ONE join on coarse_id against the partitioned layout, per-qid WindowGroupLimit — no Python, no cartesian",
+    "sim_ivf_batch_topk": "query-TABLE IVF search: in-plan probe argsort per query row (one mapInArrow of the nearest-center kernel), ONE join on coarse_id against the partitioned layout, per-qid WindowGroupLimit — no cartesian",
     "sim_ivfpq_batch_topk": "query-TABLE IVF-PQ: each query row's pq_encode_lut distance matrix doubles as its ADC table, candidates ride as m codes vs m*ksub LUT doubles, exact dot for refine rows only",
     "ann_index_pq_roundtrip": "AnnIndex PQ tier end-to-end: partition-pruned ADC scan over stored codes (PartitionFilters on coarse_id), broadcast shortlist, exact refine re-reads raw vectors from the same pruned directories",
     # round 13 second wave
@@ -85,7 +86,8 @@ SHOWCASE = {
 def main() -> None:
     spark = get_spark("dump-plans")
     sf_dir = "/root/testdata/sf0.01"
-    queries = all_queries()
+    # retired queries keep their showcase plans (they stay value-proven)
+    queries = {**all_queries(), **RETIRED_QUERIES}
     out = [
         "# PLANS — physical-plan evidence for the flagship operators",
         "",
